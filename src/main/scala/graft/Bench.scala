@@ -75,26 +75,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Static conf, default 100: the generated-class cache. At 105
-      // queries x several codegen stages each, 100 entries evict
-      // constantly, so iteration 2 re-generates and re-JITs classes that
-      // iteration 1 already compiled — code-cache churn that made two
-      // late-running queries publish ~3x their isolated times in r4.
-      // Size it to hold the whole suite's generated classes.
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        sys.props("java.io.tmpdir") + "/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Graft.silenceKnownBenignWarnings()
+    val spark = graft.core.Graft.session(s"local[$cpus]", cpus.toInt)
     // Steady-state throughput: each query runs `iters` times, min is
     // reported — first runs pay per-query codegen/JIT compilation that a
     // long-running engine amortizes away. Floor-dominated gates always
@@ -415,6 +396,11 @@ object Bench {
       .map { case (k, v, _, _) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
     summaryPrinted = true
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"queries_truncated":false,"n_queries":${adjudicated.size},"n_failed":${failed.size},"failed":$failedJson,"n_contended":${contended.size},"contended":$contendedJson,"n_regressed":${regressed.size},"regressed":$regressedJson$regressedVs,"iters":$iters,$envJson,"sf":"$sfDir"}""")
+    // Last-resort line, totals only (~150 bytes): if a capture window is
+    // too small for the full compact line above, the tail still ends in
+    // one complete JSON object. Its own metric name keeps "total" the
+    // unique full record for parsers that key on it.
+    println(s"""{"metric":"bench_totals","value":$total,"unit":"sec","n_queries":${adjudicated.size},"n_failed":${failed.size},"n_contended":${contended.size},"n_regressed":${regressed.size},"cpus":$cpus}""")
     System.out.flush()
     spark.stop()
   }

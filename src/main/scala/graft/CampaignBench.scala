@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Scale-campaign main: run a registry subset at an arbitrary sf
   * directory and print ONE JSON line per query with wall seconds,
@@ -27,19 +26,7 @@ object CampaignBench {
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "1").toInt.max(1)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
       .getOrElse(sys.error("SPARK_GRAFT_ONLY is required for a campaign"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        sys.props("java.io.tmpdir") + "/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Graft.session(s"local[$cpus]", cpus.toInt)
 
     val shuffleRead = new AtomicLong(0)
     val shuffleWrite = new AtomicLong(0)

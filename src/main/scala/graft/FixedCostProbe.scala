@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Fixed-cost experiment harness (builder tooling, not driver contract):
   * measures the host's per-action floor (the Bench canaries) and a small
@@ -21,20 +20,8 @@ object FixedCostProbe {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val maxPlan = sys.env.get("PROBE_MAXPLANLEN")
-    val b = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        sys.props("java.io.tmpdir") + "/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-    val spark = maxPlan.fold(b)(v =>
-      b.config("spark.sql.maxPlanStringLength", v)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Graft.silenceKnownBenignWarnings()
+    val spark = graft.core.Graft.session(s"local[$cpus]", cpus.toInt)
+    maxPlan.foreach(spark.conf.set("spark.sql.maxPlanStringLength", _))
     def medianMs(n: Int)(f: => Unit): Double = {
       val ts = (1 to n).map { _ =>
         val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e6

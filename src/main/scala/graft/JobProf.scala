@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -17,19 +16,7 @@ object JobProf {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val name = sys.env.getOrElse("PROF_Q", "q1_agg")
     val warms = sys.env.getOrElse("PROF_WARMS", "1").toInt
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        sys.props("java.io.tmpdir") + "/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Graft.silenceKnownBenignWarnings()
+    val spark = graft.core.Graft.session(s"local[$cpus]", cpus.toInt)
     // PROF_Q accepts a comma-separated list (r17): each query warms and
     // profiles inside ONE shared JVM, so a 15-query fixed-cost sample
     // does not pay 15 sbt/JVM startups.

@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-evidence harness for the flagship cleaning pipeline: runs
@@ -33,19 +32,7 @@ object ScaleBench {
     val factors = args.headOption.getOrElse("1,2,5,10")
       .split(",").map(_.trim.toInt).toSeq
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        sys.props("java.io.tmpdir") + "/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Graft.session(s"local[$cpus]", cpus.toInt)
     // clustering scale lever: K ∝ N keeps expected cluster size constant
     // (see queries/Clustering.kOf) — set per replication factor by the
     // sweep driver

@@ -22,21 +22,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        sys.props("java.io.tmpdir") + "/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // keep the driver's captured log tail carrying per-query progress,
-    // not repetitions of documented-benign warnings (r14 postmortem)
-    graft.core.Graft.silenceKnownBenignWarnings()
+    val spark = graft.core.Graft.session(s"local[$cpus]", cpus.toInt)
     // Marks this session as an oracle-gate run: bench-only knobs that
     // would drift gated results away from their static oracles (e.g.
     // spark.graft.kmeans.k) fail fast instead of silently diverging.

@@ -5,11 +5,18 @@ import org.apache.spark.sql.functions._
 
 /** Session + catalog helpers for the graft engine.
   *
-  * Design notes (100 TB target):
+  * [[Graft.session]] is the engine's only session factory: every main,
+  * the test fixture and the benchmark build their session through it,
+  * so they all run under the same settings and the same extensions.
   *   - AQE on: runtime partition coalescing, skew-join splitting, and
   *     dynamic join-strategy switch are the first line of defense at scale.
-  *   - shuffle.partitions is sized for the local harness (32 cores); on a
-  *     real cluster AQE's coalescing makes the initial number mostly a cap.
+  *   - shuffle.partitions is the caller's core count (the mains pass
+  *     SPARK_GRAFT_CPUS); on a real cluster AQE's coalescing makes the
+  *     initial number mostly a cap.
+  *   - The generated-class cache is sized for the whole query registry.
+  *   - [[graft.functions.GraftExtensions]] is installed once, at session
+  *     build: native functions, table functions, the AsOf strategy and
+  *     rules, and the Nativize rules are present from the first query.
   *   - All reads go through `table()` so the scan always carries the
   *     parquet schema and Catalyst can push filters/prune columns.
   */
@@ -19,28 +26,59 @@ object Graft {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
-    val spark = SparkSession.builder()
+  /** The settings every graft session carries, in build order. */
+  def settings(shufflePartitions: Int): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    // Static conf, default 100: the generated-class cache. At hundreds of
+    // registry queries x several codegen stages each, 100 entries evict
+    // constantly, so every later pass re-generates and re-JITs classes
+    // that the previous pass already compiled — code-cache churn that
+    // made two late-running queries publish ~3x their isolated times.
+    // Size it to hold the whole registry's generated classes.
+    "spark.sql.codegen.cache.maxEntries" -> "4000",
+    // Constraint propagation re-canonicalizes every referenced column
+    // expression per inferred predicate — with expression-heavy lambda
+    // columns (minhash/ngram pipelines) the OPTIMIZER itself becomes
+    // O(30 s) per query. Our plans carry their filters explicitly.
+    "spark.sql.constraintPropagation.enabled" -> "false",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.warehouse.dir" -> (sys.props("java.io.tmpdir") + "/graft-warehouse"),
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.ui.enabled" -> "false")
+
+  /** The session factory. `extra` settings are applied after (and so
+    * override) [[settings]] — for contexts that need a special master or
+    * context-level knobs. When `getOrCreate` would return an existing
+    * session built without [[graft.functions.GraftExtensions]], a new
+    * session with the extensions is created on the running context;
+    * if the extensions are still missing, this fails loudly. */
+  def session(master: String = "local[*]", shufflePartitions: Int = 32,
+      extra: Seq[(String, String)] = Nil): SparkSession = {
+    val builder = SparkSession.builder()
       .master(master)
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // Constraint propagation re-canonicalizes every referenced column
-      // expression per inferred predicate — with expression-heavy lambda
-      // columns (minhash/ngram pipelines) the OPTIMIZER itself becomes
-      // O(30 s) per query. Our plans carry their filters explicitly.
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        sys.props("java.io.tmpdir") + "/graft-warehouse")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .withExtensions(new graft.functions.GraftExtensions)
+    (settings(shufflePartitions) ++ extra).foreach { case (k, v) => builder.config(k, v) }
+    val existing = builder.getOrCreate()
+    val spark = if (hasExtensions(existing)) existing else builder.create()
+    if (!hasExtensions(spark))
+      throw new IllegalStateException(
+        "graft session is missing GraftExtensions (graft functions or AsOf strategy)")
     spark.sparkContext.setLogLevel("WARN")
     silenceKnownBenignWarnings()
     spark
+  }
+
+  /** True iff `spark` was built with [[graft.functions.GraftExtensions]]:
+    * its native functions and its planner strategy are present. */
+  def hasExtensions(spark: SparkSession): Boolean = {
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    state.functionRegistry.functionExists(
+      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_charhash")) &&
+      state.planner.strategies.exists(_.isInstanceOf[graft.plans.AsOfJoinStrategy])
   }
 
   /** Silence the handful of per-query Spark warnings that are DOCUMENTED-

@@ -74,11 +74,12 @@ object CharHashExpression {
   }
 }
 
-/** SparkSessionExtensions hook: `SparkSession.builder.withExtensions(new
-  * GraftExtensions)` (or config `spark.sql.extensions=graft.functions.
-  * GraftExtensions`) injects graft's native functions at session build
-  * time — the standard deployment path for the custom-operator tier,
-  * equivalent to the imperative [[GraftFunctions.register]]. */
+/** SparkSessionExtensions hook: injects graft's native functions, the
+  * store's table functions, the AsOf planner strategy and optimizer rule,
+  * and the Nativize rules at session build time. [[graft.core.Graft.session]]
+  * installs it on every session through `withExtensions`; outside the
+  * factory, config `spark.sql.extensions=graft.functions.GraftExtensions`
+  * does the same. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.builders.foreach { case (name, cls, builder) =>
@@ -113,15 +114,15 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
   }
 }
 
-/** Session-level registration + Column access for graft's native
-  * functions (SURVEY §2.2 UDF surface, custom-operator tier (b)). After
-  * [[GraftFunctions.register]], `graft_charhash` is callable from SQL
-  * text and via [[GraftFunctions.charHashNative]] — and, unlike a Scala
-  * UDF, participates in whole-stage codegen and constant folding. */
+/** Column access for graft's native functions (SURVEY §2.2 UDF surface,
+  * custom-operator tier (b)). On a session with [[GraftExtensions]],
+  * `graft_charhash` is callable from SQL text and via
+  * [[GraftFunctions.charHashNative]] — and, unlike a Scala UDF,
+  * participates in whole-stage codegen and constant folding. */
 object GraftFunctions {
 
-  /** (name, implementing class, builder) for every graft native function —
-    * single source of truth for both registration paths. */
+  /** (name, implementing class, builder) for every graft native function,
+    * injected by [[GraftExtensions]]. */
   val builders: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
     ("graft_charhash", classOf[CharHashExpression],
       (c: Seq[Expression]) => CharHashExpression(c.head)),
@@ -177,23 +178,9 @@ object GraftFunctions {
         org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(c(0), c(1))),
   )
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val cls = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    builders.foreach { case (name, impl, builder) =>
-      cls.sessionState.functionRegistry.registerFunction(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(impl.getName, name),
-        builder)
-    }
-    graft.sources.KvTableChanges.register(spark)
-    graft.sources.KvTableHistory.register(spark)
-    graft.sources.KvTableFiles.register(spark)
-  }
-
   import org.apache.spark.sql.functions.{call_function, lit}
 
-  /** Codegen'd drop-in for PortableHash.charHash on hot paths. The
-    * session must have gone through [[register]] first. */
+  /** Codegen'd drop-in for PortableHash.charHash on hot paths. */
   def charHashNative(c: Column): Column =
     call_function("graft_charhash", c)
 

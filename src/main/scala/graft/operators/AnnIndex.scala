@@ -161,7 +161,6 @@ object AnnIndex {
       normalized: Boolean = true): Int = {
     val spark = data.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val k = seedIds.size
     require(k > 0, "ann index needs at least one seed")
 
@@ -309,7 +308,6 @@ object AnnIndex {
       m: Int, residual: Boolean = false): Int = {
     val spark = data.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val k = seedIds.size
     require(k > 0, "ann index needs at least one seed")
     require(m > 0 && dim % m == 0, s"dim $dim not divisible into $m subspaces")
@@ -379,7 +377,6 @@ object AnnIndex {
       asOf: Option[Int] = None): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val (entries, v) = entriesAt(dir, asOf)
     val m = meta(dir, Some(v))
     val cents = centroids(spark, dir, Some(v))
@@ -461,7 +458,6 @@ object AnnIndex {
       dir: String): Int = {
     val spark = delta.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val (entries, latest) = entriesAt(dir, None)
     val m = meta(dir, Some(latest))
     val cents = centroids(spark, dir, Some(latest))
@@ -597,7 +593,6 @@ object AnnIndex {
       nprobe: Int, topK: Int, excludeSelf: Boolean = false,
       asOf: Option[Int] = None): DataFrame = {
     val spark = queries.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val (entries, v) = entriesAt(dir, asOf)
     val m = meta(dir, Some(v))
     val cents = centroids(spark, dir, Some(v))

@@ -293,7 +293,6 @@ object DurableIteration {
       chaosHook: Int => Unit = _ => ()): (DataFrame, Int, Int) = {
     val spark = data.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
 
     def centsOf(round: Int): Seq[Seq[Long]] =
       graft.core.Graft.cachedSchemaParquet(spark, roundPath(ckptDir, round))

@@ -42,8 +42,8 @@ object KMeansQuant {
 
   /** array<float> → array<long>: qround(x·1e6) per element, via the
     * codegen'd graft_quantvec kernel (VecOps.qround is DuckDB-round —
-    * half away from zero on the binary value; the session must have gone
-    * through GraftFunctions.register, which [[fit]] ensures). */
+    * half away from zero on the binary value; `Graft.session` installs
+    * the kernel). */
   def quantize(v: Column): Column =
     graft.functions.GraftFunctions.quantVecNative(v, Scale)
 
@@ -111,7 +111,6 @@ object KMeansQuant {
   def fit(spark: SparkSession, data: DataFrame, qvCol: String,
       init: Seq[Seq[Long]], rounds: Int, dim: Int): (DataFrame, Seq[Seq[Long]]) = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     var cents = init
     for (_ <- 1 until rounds) {
@@ -145,7 +144,6 @@ object KMeansQuant {
       subDim: Int): Seq[Seq[Seq[Long]]] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
-    graft.functions.GraftFunctions.register(spark)
     // Bounded pool, not ExecutionContext.global: each future drives a
     // whole Lloyd chain of blocking Spark jobs, and the global pool's
     // blocking-manager would spawn compensation threads for every

@@ -85,7 +85,6 @@ object SaltedPrefix {
   def withQuantileBuckets(
       df: DataFrame, partCol: String, orderCol: String,
       nb: Int, sampleOneIn: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     // deterministic pseudo-sample: a pure function of the value multiset
     val sampled = df.select(col(partCol), col(orderCol).cast("long").as("__ord"))
       .filter(pmod(xxhash64(col("__ord")), lit(sampleOneIn)) === 0)

@@ -33,7 +33,6 @@ object SparseSimilarity {
   def cosinePairs(
       docs: DataFrame, nDocs: Long, dfCap: Long,
       minCosMicro: Long = 500000L): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val tok = docs
       .withColumn("tl", filter(split(lower(col("text")), " "), x => x =!= ""))
       .select(col("doc_id"),

@@ -55,7 +55,6 @@ object TextIndex {
   private def stage(docs: DataFrame, idCol: String, textCol: String,
       dir: String, member: String): Unit = {
     val spark = docs.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     // ONE corpus pass (r17; r16 had two — a stats aggregation plus the
     // postings write, each tokenizing the full batch):
     //   - the corpus-level BM25 constants ride the postings write itself

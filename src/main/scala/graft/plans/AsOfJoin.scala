@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Filter, LogicalPlan, Project}
@@ -13,9 +13,8 @@ import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Dist
 /** Native as-of join — the whole-operator tier (c) of the custom-operator
   * ladder: a first-class `LogicalPlan` node, an optimizer `Rule`, a planner
   * `SparkStrategy`, and a `SparkPlan` with declared distribution/ordering
-  * requirements, injectable via `SparkSessionExtensions`
-  * ([[graft.functions.GraftExtensions]]) or imperatively
-  * ([[AsOfJoin.register]]).
+  * requirements, installed on every session by
+  * [[graft.functions.GraftExtensions]].
   *
   * Semantics (matches `operators/AsOfRangeJoins.asOfLastBefore`, the
   * union+window lowering, and DuckDB's `ASOF JOIN`): for every left row,
@@ -225,17 +224,6 @@ case class AsOfJoinExec(
 
 object AsOfJoin {
 
-  /** Imperative runtime injection (equivalent to the
-    * SparkSessionExtensions path in [[graft.functions.GraftExtensions]]). */
-  def register(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.exists(_.isInstanceOf[AsOfJoinStrategy]))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ new AsOfJoinStrategy
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[AsOfFilterPushdown]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ new AsOfFilterPushdown
-  }
-
   /** As-of join `probe` against `build`: for each probe row the last build
     * row with build.timeCol <= probe.timeCol on the same key, left-outer.
     * Build-side columns come back `r_`-prefixed (the builder re-aliases
@@ -303,7 +291,6 @@ object AsOfJoin {
       buildTiebreak: Seq[String],
       direction: AsOfDirection): DataFrame = {
     val spark = probe.sparkSession
-    register(spark)
     val lp = probe.queryExecution.analyzed
     // fresh exprIds + r_ prefix on the build side: output names stay
     // unambiguous and probe/build may share a lineage (self as-of)

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -47,14 +46,6 @@ class NativizeCharHash extends Rule[LogicalPlan] {
           agg.dataType == LongType && semanticallyCharHash(agg, strInput) =>
       CharHashExpression(strInput)
   }
-}
-
-object NativizeCharHash {
-  /** Imperative runtime injection (extensions path: GraftExtensions). */
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[NativizeCharHash]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ new NativizeCharHash
 }
 
 /** Auto-nativization for the remaining composed PortableHash kernels:
@@ -325,12 +316,4 @@ class NativizeHashKernels extends Rule[LogicalPlan] {
       hit.getOrElse(d)
     }
   }
-}
-
-object NativizeHashKernels {
-  /** Imperative runtime injection (extensions path: GraftExtensions). */
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[NativizeHashKernels]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ new NativizeHashKernels
 }

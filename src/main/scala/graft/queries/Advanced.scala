@@ -408,8 +408,6 @@ object Advanced extends QueryGroup {
   private val qSqlAutoNative = Q(
     "q_sql_auto_native",
     (s, dir) => {
-      graft.plans.NativizeCharHash.register(s)
-      graft.plans.NativizeHashKernels.register(s)
       table(s, dir, "documents").createOrReplaceTempView("documents_an")
       s.sql(s"""
         WITH t AS (

@@ -196,7 +196,6 @@ object Bpe extends QueryGroup {
   private val qBpeEncode = Q(
     "q_bpe_encode",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions.bpeMergeNative
       var words = table(s, dir, "documents").filter(col("doc_id") < docCapOf(s))
         .select(explode(split(lower(col("text")), " ")).as("w"))
@@ -374,7 +373,6 @@ object Bpe extends QueryGroup {
   private val qBpeEncodeTable = Q(
     "q_bpe_encode_table",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions.bpeMergeAllNative
       val wordFreqs = table(s, dir, "documents")
         .filter(col("doc_id") < docCapOf(s))
@@ -406,7 +404,6 @@ object Bpe extends QueryGroup {
   private val qBpeTrain = Q(
     "q_bpe_train",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions.bpeMergeNative
       var words = table(s, dir, "documents").filter(col("doc_id") < docCapOf(s))
         .select(explode(split(lower(col("text")), " ")).as("w"))

@@ -66,7 +66,6 @@ object Clustering extends QueryGroup {
       normalized: Boolean = false)
       : (org.apache.spark.sql.DataFrame, Seq[Seq[Long]]) = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val e = table(s, dir, "embeddings").select("vec_id", "embedding")
     val qv =
       if (normalized) KMeansQuant.quantizeNormalized(col("embedding"))
@@ -104,7 +103,6 @@ object Clustering extends QueryGroup {
   private val qDedupSemantic = Q(
     "q_dedup_semantic",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions._
       val m = fitted(s, dir)._1
         .withColumn("nq", quantDotNative(col("embedding"), col("embedding")))
@@ -158,7 +156,6 @@ object Clustering extends QueryGroup {
     "q_cluster_kmeans_durable",
     (s, dir) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val e = table(s, dir, "embeddings").select("vec_id", "embedding")
       val data = e.withColumn("qv", KMeansQuant.quantize(col("embedding")))
       val seeds = data.filter(col("vec_id").between(SeedLo, SeedHi))
@@ -442,7 +439,6 @@ object Clustering extends QueryGroup {
     "q_sim_pq_adc",
     (s, dir) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val M = 4
       val SubDim = Dim / M
       val e = table(s, dir, "embeddings").select("vec_id", "embedding")
@@ -536,7 +532,6 @@ object Clustering extends QueryGroup {
     "q_sim_ivfpq",
     (s, dir) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val M = 4
       val SubDim = Dim / M
       val e = table(s, dir, "embeddings").select("vec_id", "embedding")
@@ -696,7 +691,6 @@ object Clustering extends QueryGroup {
     "q_sim_ivfpq_residual",
     (s, dir) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val M = 4
       val SubDim = Dim / M
       // coarse: the trained spherical quantizer (shared with q_sim_ivfpq)

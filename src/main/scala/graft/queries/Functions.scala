@@ -691,7 +691,6 @@ object Functions extends QueryGroup {
   private val qHeavyHitters = Q(
     "q_heavy_hitters",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions.cmsEstimateNative
       val l = table(s, dir, "lineitem").select(col("l_suppkey"))
       val thresh = 21L * l.count() / (20L * table(s, dir, "supplier").count())

@@ -92,7 +92,6 @@ object Llm extends QueryGroup {
   private val qDedupMinhash = Q(
     "q_dedup_minhash",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions._
       val sig = table(s, dir, "documents")
         .withColumn("tl", split(lower(col("text")), " "))
@@ -164,7 +163,6 @@ object Llm extends QueryGroup {
     * q_dedup_clusters and its durable-checkpoint twin so the two gates
     * cannot drift apart on candidate generation. */
   private def dedupClusterGraph(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions._
       val base = table(s, dir, "documents").select("doc_id", "text")
       val first50 = base.orderBy(col("doc_id")).limit(50)
@@ -304,7 +302,6 @@ object Llm extends QueryGroup {
   private val qGraphTriangles = Q(
     "q_graph_triangles",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions._
       val base = table(s, dir, "documents").select("doc_id", "text")
       val first50 = base.orderBy(col("doc_id")).limit(50)
@@ -382,7 +379,6 @@ object Llm extends QueryGroup {
   private val qDedupSimhash = Q(
     "q_dedup_simhash",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       table(s, dir, "documents")
         .withColumn("simhash",
           graft.functions.GraftFunctions.simHashNative(split(lower(col("text")), " ")))
@@ -459,7 +455,6 @@ object Llm extends QueryGroup {
   private val qDedupNgram = Q(
     "q_dedup_ngram",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val t = table(s, dir, "documents")
         .withColumn("tl", split(lower(col("text")), " "))
         .filter(size(col("tl")) >= 2)
@@ -549,7 +544,6 @@ object Llm extends QueryGroup {
   private val qDedupEmbedding = Q(
     "q_dedup_embedding",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions._
       val e = table(s, dir, "embeddings")
         .withColumn("bucket", lshBucketNative(col("embedding"), 6))
@@ -605,7 +599,6 @@ object Llm extends QueryGroup {
   private val qSimTopk = Q(
     "q_sim_topk",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val e = table(s, dir, "embeddings").select("vec_id", "embedding")
       val q = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
@@ -641,7 +634,6 @@ object Llm extends QueryGroup {
   private val qSimLsh = Q(
     "q_sim_lsh",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions._
       val e = table(s, dir, "embeddings")
         .withColumn("bucket", lshBucketNative(col("embedding"), 4))
@@ -1178,7 +1170,6 @@ object Llm extends QueryGroup {
   private val qSearchHybridRrf = Q(
     "q_search_hybrid_rrf",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val docs = table(s, dir, "documents")
       val tok = docs
         .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("term"))
@@ -1302,7 +1293,6 @@ object Llm extends QueryGroup {
   private val qSearchMmr = Q(
     "q_search_mmr",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       import s.implicits._
       val e = table(s, dir, "embeddings").select("vec_id", "embedding")
       val q = e.filter(col("vec_id") < 2)
@@ -1616,7 +1606,6 @@ object Llm extends QueryGroup {
   private val qSimKnnJoin = Q(
     "q_sim_knn_join",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions._
       val e = table(s, dir, "embeddings")
         .withColumn("bucket", lshBucketNative(col("embedding"), 4))
@@ -1661,7 +1650,6 @@ object Llm extends QueryGroup {
   private val qSimIvf = Q(
     "q_sim_ivf",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions._
       val e = table(s, dir, "embeddings").select("vec_id", "embedding")
       val cent = e.filter(col("vec_id") >= 100 && col("vec_id") <= 115)
@@ -1733,7 +1721,6 @@ object Llm extends QueryGroup {
   private val qTextLangId = Q(
     "q_text_lang_id",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       // per-language stop hits from the single-pass tokstats kernel (the
       // count/char fields are discarded; the stop probe dominates)
       def hits(stops: Seq[String]) =
@@ -1776,7 +1763,6 @@ object Llm extends QueryGroup {
   private val qTextQuality = Q(
     "q_text_quality",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val toks = split(lower(col("text")), " ")
       table(s, dir, "documents")
         .withColumn("ts", graft.functions.GraftFunctions.tokStatsNative(
@@ -1847,7 +1833,6 @@ object Llm extends QueryGroup {
   private val qTextFingerprint = Q(
     "q_text_fingerprint",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions._
       table(s, dir, "documents")
         .filter(col("n_chars") >= 8)
@@ -1889,7 +1874,6 @@ object Llm extends QueryGroup {
   private val qLlmCleanPipeline = Q(
     "q_llm_clean_pipeline",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions._
       val toks = split(lower(col("text")), " ")
       val meanLen = aggregate(transform(toks, t => length(t).cast("long")),
@@ -1992,7 +1976,6 @@ object Llm extends QueryGroup {
   private val qLlmCleanPipelineStaged = Q(
     "q_llm_clean_pipeline_staged",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions._
       val stageRoot = sys.props("java.io.tmpdir") + "/graft-stages/clean_pipeline"
       def materialize(df: DataFrame, name: String): DataFrame = {
@@ -2054,7 +2037,6 @@ object Llm extends QueryGroup {
   private val qSqlNativeFns = Q(
     "q_sql_native_fns",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       table(s, dir, "documents").createOrReplaceTempView("documents_nf")
       s.sql("""SELECT doc_id,
                  graft_charhash(text) AS content_hash,
@@ -2299,7 +2281,6 @@ object Llm extends QueryGroup {
   private val qDedupSubstrTrim = Q(
     "q_dedup_substr_trim",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val k = 6
       val w = Window.partitionBy(col("doc_id")).orderBy(col("i"))
       val toks = table(s, dir, "documents")
@@ -2950,7 +2931,6 @@ object Llm extends QueryGroup {
   private val qDecontaminate = Q(
     "q_decontaminate",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions._
       val docs = table(s, dir, "documents")
         .withColumn("tl", split(lower(col("text")), " "))
@@ -3019,7 +2999,6 @@ object Llm extends QueryGroup {
   private val qDecontamSemantic = Q(
     "q_decontam_semantic",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions._
       val e = table(s, dir, "embeddings")
       val bench = e.filter(col("vec_id") < 40)

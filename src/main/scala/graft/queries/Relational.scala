@@ -874,7 +874,6 @@ object Relational extends QueryGroup {
   private val qJoinBloomPrune = Q(
     "q_join_bloom_prune",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val p = table(s, dir, "part").filter(col("p_size") === 15)
         .select("p_partkey", "p_type")
       val bf = p.agg(call_function("graft_bloom_agg",

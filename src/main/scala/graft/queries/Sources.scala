@@ -720,7 +720,6 @@ object Sources extends QueryGroup {
   private val qZorderLayout = Q(
     "q_zorder_layout",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       table(s, dir, "orders")
         .select(col("o_orderkey"),
           call_function("graft_zorder",
@@ -1141,7 +1140,6 @@ object Sources extends QueryGroup {
   private val qStoreDpo = Q(
     "q_store_dpo",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions.charHashNative
       val stage = sys.props("java.io.tmpdir") + "/graft-stages/dpo"
       val docs = table(s, dir, "documents").select("doc_id", "lang", "text")

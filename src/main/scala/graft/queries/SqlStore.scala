@@ -475,7 +475,6 @@ object SqlStore extends QueryGroup {
   private val qSqlStoreCdf = Q(
     "q_sql_store_cdf",
     (s, dir) => {
-      graft.sources.KvTableChanges.register(s)
       cat(s)
       fresh(s, "t_cdf")
       s.sql("CREATE TABLE graftkv.cat.t_cdf (o BIGINT, cust BIGINT, price4 BIGINT)")
@@ -569,7 +568,6 @@ object SqlStore extends QueryGroup {
     "q_sql_store_history",
     (s, dir) => {
       cat(s)
-      graft.sources.KvTableHistory.register(s)
       fresh(s, "t_hist")
       s.sql("CREATE TABLE graftkv.cat.t_hist (k BIGINT, cust BIGINT)")
       table(s, dir, "orders").createOrReplaceTempView("orders_hist_v")
@@ -705,7 +703,6 @@ object SqlStore extends QueryGroup {
     "q_sql_store_files",
     (s, dir) => {
       cat(s)
-      graft.sources.KvTableFiles.register(s)
       fresh(s, "t_files")
       s.sql("CREATE TABLE graftkv.cat.t_files (k BIGINT, cust BIGINT)")
       table(s, dir, "orders").createOrReplaceTempView("orders_files_v")

@@ -47,7 +47,6 @@ object Training extends QueryGroup {
   private val qTextRepetition = Q(
     "q_text_repetition",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val toks = split(lower(col("text")), " ")
       val base = table(s, dir, "documents")
         .withColumn("tl", toks)
@@ -146,7 +145,6 @@ object Training extends QueryGroup {
   private val qMixWeighted = Q(
     "q_mix_weighted",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val rate = graft.functions.GraftFunctions.charHashNative(col("source")) % 500 + 250
       table(s, dir, "documents")
         .withColumn("rate_pm", rate)
@@ -262,7 +260,6 @@ object Training extends QueryGroup {
   private val qLinesDedup = Q(
     "q_lines_dedup",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val base = table(s, dir, "documents").select("doc_id", "text")
       val dup = base.orderBy("doc_id").limit(50)
         .withColumn("doc_id", col("doc_id") + 100000)
@@ -315,7 +312,6 @@ object Training extends QueryGroup {
   private val qChunkDocs = Q(
     "q_chunk_docs",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       table(s, dir, "documents")
         .withColumn("tl", split(lower(col("text")), " "))
         .withColumn("n", size(col("tl")))
@@ -363,7 +359,6 @@ object Training extends QueryGroup {
   private val qChunkRoundtrip = Q(
     "q_chunk_roundtrip",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions.charHashNative
       val t = table(s, dir, "documents")
         .withColumn("tl", split(lower(col("text")), " "))
@@ -505,7 +500,6 @@ object Training extends QueryGroup {
   private val qTableDiff = Q(
     "q_table_diff",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions.charHashNative
       val base = table(s, dir, "documents").select(col("doc_id"),
         charHashNative(col("text")).as("h"))
@@ -898,7 +892,6 @@ object Training extends QueryGroup {
     * (doc_id, lang, bk) — 4 band-key rows per sig-able document. */
   private[queries] def bandedDocs(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     import graft.functions.GraftFunctions._
     df.withColumn("tl", split(lower(col("text")), " "))
       .filter(size(col("tl")) >= 3)

@@ -639,7 +639,6 @@ object KvStore {
   private def zLayout(spark: SparkSession, cols: (String, String),
       targetFiles: Int): DataFrame => DataFrame = {
     import org.apache.spark.sql.functions.col
-    graft.functions.GraftFunctions.register(spark) // idempotent
     val z = graft.functions.GraftFunctions.zorderNative(
       col(cols._1).cast(LongType), col(cols._2).cast(LongType))
     df => df.withColumn("__z", z)

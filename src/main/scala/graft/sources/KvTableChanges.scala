@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.connector.catalog.{Identifier, TableCatalog}
@@ -112,11 +111,4 @@ object KvTableChanges {
           s"(got ${other.getClass.getSimpleName})")
     }
   }
-
-  /** Imperative twin of the extensions path, mirroring
-    * [[graft.functions.GraftFunctions.register]]. */
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.tableFunctionRegistry.registerFunction(
-        FunctionIdentifier(name), info, builder)
 }

@@ -3,7 +3,6 @@ package graft.sources
 import java.nio.file.Paths
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.connector.catalog.{Identifier, TableCatalog}
@@ -80,10 +79,4 @@ object KvTableFiles {
     rows.toDF("file", "rows", "bytes", "dv_rows", "dvs",
       "stat_cols", "bloom_cols").queryExecution.logical
   }
-
-  /** Imperative twin of the extensions path. */
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.tableFunctionRegistry.registerFunction(
-        FunctionIdentifier(name), info, builder)
 }

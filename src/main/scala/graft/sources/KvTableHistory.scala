@@ -3,7 +3,6 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.connector.catalog.{Identifier, TableCatalog}
@@ -106,11 +105,4 @@ object KvTableHistory {
     rows.toDF("version", "kind", "files_added", "files_removed",
       "dvs_attached", "rows_added", "txn").queryExecution.logical
   }
-
-  /** Imperative twin of the extensions path ([[KvTableChanges.register]]
-    * discipline). */
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.tableFunctionRegistry.registerFunction(
-        FunctionIdentifier(name), info, builder)
 }

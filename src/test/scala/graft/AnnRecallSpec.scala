@@ -25,7 +25,6 @@ class AnnRecallSpec extends AnyFunSuite with SparkSessionFixture {
   private val NP = 4 // hyperplanes → 16 buckets
 
   private lazy val emb: DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     graft.core.Graft.table(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding")).cache()
   }

@@ -12,7 +12,6 @@ class BloomPruneSpec extends AnyFunSuite with SparkSessionFixture {
   private val sf = "/root/testdata/sf0.01"
 
   test("bloom filter prunes the probe side; result equals the plain join") {
-    graft.functions.GraftFunctions.register(spark)
     val p = graft.core.Graft.table(spark, sf, "part")
       .filter(col("p_size") === 15).select("p_partkey")
     val bf = p.agg(call_function("graft_bloom_agg",
@@ -35,7 +34,6 @@ class BloomPruneSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("empty build side yields an empty join, not a crash") {
-    graft.functions.GraftFunctions.register(spark)
     val p = graft.core.Graft.table(spark, sf, "part")
       .filter(col("p_size") === -1).select("p_partkey")
     val row = p.agg(call_function("graft_bloom_agg",

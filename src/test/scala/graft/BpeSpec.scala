@@ -83,7 +83,6 @@ class BpeSpec extends AnyFunSuite with SparkSessionFixture {
     val corpus = Gen.chooseNum(5, 40).flatMap(n => Gen.listOfN(n, word))
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val prop = Prop.forAll(corpus, Gen.chooseNum(1, 3)) { (words, rounds) =>
       val expect = trainLocal(words, rounds)
       var df = words.map(w => w.mkString(" ", " ", " ")).toDF("s")
@@ -129,7 +128,6 @@ class BpeSpec extends AnyFunSuite with SparkSessionFixture {
       "two-phase aggregate, not a full sort") {
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val words = Seq(" a b c ", " a b d ", " b c a ").toDF("s")
     val top = words.select(split(trim(col("s")), " ").as("syms"))
       .filter(size(col("syms")) >= 2)

@@ -32,7 +32,6 @@ class BpeTrainerSpec extends AnyFunSuite with SparkSessionFixture {
   /** The gated distributed formulation, replicated: instance-level pair
     * counting + top-1 collect per round + kernel merge pass. */
   private def distributedTrain(cap: Long, rounds: Int): Seq[(String, String, Long)] = {
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.GraftFunctions.bpeMergeNative
     var words = graft.core.Graft.table(spark, sf, "documents")
       .filter(col("doc_id") < cap)
@@ -78,7 +77,6 @@ class BpeTrainerSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("whole-table encode kernel == stacked per-merge kernel passes") {
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.GraftFunctions.{bpeMergeAllNative, bpeMergeNative}
     val merges = BpeTrainer.train(wordFreqs(100), budget = 16)
     val base = graft.core.Graft.table(spark, sf, "documents")

@@ -13,7 +13,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class CmsPruneSpec extends AnyFunSuite with SparkSessionFixture {
 
   test("zipf fixture: tail pruned below the shuffle, heavies exact") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     // 5 heavy keys x 2000 rows + 5000 tail keys x 4 rows = 30k rows
     val heavy = (0L until 5L).flatMap(k => Seq.fill(2000)(k))
@@ -45,7 +44,6 @@ class CmsPruneSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("estimate is one-sided: never below the true count") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = (0L until 200L).flatMap(k => Seq.fill((k % 7 + 1).toInt)(k)).toDF("key")
     val cmsBytes = df

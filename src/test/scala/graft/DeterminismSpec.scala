@@ -59,7 +59,6 @@ class DeterminismSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("native function type errors fail analysis, not execution") {
-    graft.functions.GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     docs.createOrReplaceTempView("docs_typecheck")
     Seq(

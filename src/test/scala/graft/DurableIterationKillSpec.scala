@@ -51,14 +51,8 @@ class DurableIterationKillSpec extends AnyFunSuite with BeforeAndAfterAll {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .foreach(_.stop())
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    spark = SparkSession.builder()
-      .master("local-cluster[2,1,1024]")
-      .appName("graft-durable-kill-test")
-      .config("spark.executor.memory", "512m")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.core.Graft.session("local-cluster[2,1,1024]", 4,
+      Seq("spark.executor.memory" -> "512m"))
     spark.sparkContext.setLogLevel("ERROR")
     super.beforeAll()
   }

@@ -51,7 +51,6 @@ class KMeansSpec extends AnyFunSuite with SparkSessionFixture {
       rounds: Int): (Map[Long, (Long, Long)], Seq[Seq[Long]]) = {
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val df = data.toDF("vec_id", "embedding")
       .withColumn("qv", KMeansQuant.quantize(col("embedding")))
     val (assigned, cents) = KMeansQuant.fit(s, df, "qv", init, rounds, dim)
@@ -115,7 +114,6 @@ class KMeansSpec extends AnyFunSuite with SparkSessionFixture {
   test("durable k-means == in-memory fit, and crash-resumes") {
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val data = (0L until 30L).map(i =>
       (i, Seq.tabulate(dim)(d => ((i % 5) * 0.2f + d * 0.01f))))
       .toDF("vec_id", "embedding")

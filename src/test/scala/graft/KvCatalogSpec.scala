@@ -579,7 +579,6 @@ class KvCatalogSpec extends AnyFunSuite with SparkSessionFixture {
 
   test("table_changes TVF: per-version deltas from SQL; guardrails") {
     init()
-    graft.sources.KvTableChanges.register(spark)
     spark.sql("DROP TABLE IF EXISTS kcs.ns.tvf")
     spark.sql("CREATE TABLE kcs.ns.tvf (k BIGINT, v BIGINT)")
     spark.sql("INSERT INTO kcs.ns.tvf SELECT id, id * 2 FROM range(0, 10)")

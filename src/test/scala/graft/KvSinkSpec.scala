@@ -21,14 +21,7 @@ class KvSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .foreach(_.stop())
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    spark = SparkSession.builder()
-      .master("local[4, 2]")
-      .appName("graft-kvsink-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.core.Graft.session("local[4, 2]", 4)
     spark.sparkContext.setLogLevel("ERROR")
     super.beforeAll()
   }

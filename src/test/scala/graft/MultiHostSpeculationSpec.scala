@@ -74,20 +74,15 @@ class MultiHostSpeculationSpec extends AnyFunSuite with BeforeAndAfterAll {
     cluster = handle
     val testClasses = Seq("target/scala-2.13/test-classes", "target/scala-2.13/classes")
       .map(p => new java.io.File(p).getAbsolutePath).mkString(":")
-    spark = SparkSession.builder()
-      .master(masterUrl)
-      .appName("graft-multihost-speculation-test")
-      .config("spark.executor.extraClassPath", testClasses)
-      .config("spark.executor.memory", "512m")
-      .config("spark.executor.cores", "2")
-      .config("spark.cores.max", "4")
-      .config("spark.speculation", "true")
-      .config("spark.speculation.interval", "50ms")
-      .config("spark.speculation.multiplier", "1.2")
-      .config("spark.speculation.quantile", "0.25")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.core.Graft.session(masterUrl, 8, Seq(
+      "spark.executor.extraClassPath" -> testClasses,
+      "spark.executor.memory" -> "512m",
+      "spark.executor.cores" -> "2",
+      "spark.cores.max" -> "4",
+      "spark.speculation" -> "true",
+      "spark.speculation.interval" -> "50ms",
+      "spark.speculation.multiplier" -> "1.2",
+      "spark.speculation.quantile" -> "0.25"))
     spark.sparkContext.setLogLevel("ERROR")
     super.beforeAll()
   }

@@ -9,8 +9,17 @@ class PlanPropertiesSpec extends AnyFunSuite with SparkSessionFixture {
 
   private val dir = "/root/testdata/sf0.001"
 
+  /** The IsNotNull filters these plan strings pin are inferred by
+    * constraint propagation, which `Graft.session` turns off; the pushdown
+    * tests keep checking the plans Spark makes with it on. */
+  private def withConstraintPropagation() = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.constraintPropagation.enabled", "true")
+    s
+  }
+
   test("filters push down to the parquet scan; projection prunes columns") {
-    val df = graft.core.Graft.table(spark, dir, "lineitem")
+    val df = graft.core.Graft.table(withConstraintPropagation(), dir, "lineitem")
       .filter(col("l_quantity") >= 45)
       .select("l_orderkey", "l_quantity")
     val plan = df.queryExecution.executedPlan.toString
@@ -24,7 +33,8 @@ class PlanPropertiesSpec extends AnyFunSuite with SparkSessionFixture {
     val out = java.nio.file.Files.createTempDirectory("graft_prune").toString
     graft.core.Graft.table(spark, dir, "orders")
       .write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
-    val df = spark.read.parquet(out).filter(col("o_orderstatus") === "F")
+    val df = withConstraintPropagation().read.parquet(out)
+      .filter(col("o_orderstatus") === "F")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [isnotnull(o_orderstatus"),
       s"no partition filter:\n$plan")

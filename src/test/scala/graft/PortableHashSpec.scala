@@ -26,7 +26,6 @@ class PortableHashSpec extends AnyFunSuite with SparkSessionFixture {
   test("native graft_charhash == HOF charHash == JVM fold, and is SQL-callable") {
     implicit val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val inputs = Seq("hello", "a", "spark sql engine", "zz 99 !?", "The Quick")
     val rows = inputs.toDF("s")
       .select(
@@ -42,16 +41,9 @@ class PortableHashSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("GraftExtensions injects graft_charhash at session build") {
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    // getOrCreate may return the already-running session (extensions are
-    // applied only on fresh builds), so register defensively and assert
-    // the SQL surface works either way.
-    graft.functions.GraftFunctions.register(s2)
+    // the factory installs the extensions on every session it returns,
+    // including the already-running one: no registration call needed
+    val s2 = graft.core.Graft.session("local[2]", 2)
     val got = s2.sql("SELECT graft_charhash('hello') AS h").collect().head.getLong(0)
     assert(got == graft.functions.CharHashExpression.hash("hello"))
   }

@@ -3,20 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
-/** Shared local SparkSession for ScalaTest suites. */
+/** Shared local SparkSession for ScalaTest suites, built by the engine's
+  * session factory so tests run under the settings and extensions that
+  * Bench and Verify use. */
 trait SparkSessionFixture extends BeforeAndAfterAll { self: Suite =>
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      sys.props("java.io.tmpdir") + "/graft-warehouse")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Graft.session("local[4]", 4)
 
   override def afterAll(): Unit = {
     // Session is shared across suites in one forked JVM — don't stop it.

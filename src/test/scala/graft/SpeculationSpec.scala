@@ -91,18 +91,13 @@ class SpeculationSpec extends AnyFunSuite with BeforeAndAfterAll {
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
     val testClasses = Seq("target/scala-2.13/test-classes", "target/scala-2.13/classes")
       .map(p => new java.io.File(p).getAbsolutePath).mkString(":")
-    spark = SparkSession.builder()
-      .master("local-cluster[2,2,1024]")
-      .appName("graft-speculation-test")
+    spark = graft.core.Graft.session("local-cluster[2,2,1024]", 8, Seq(
       // ship graft classes to the executor processes
-      .config("spark.executor.extraClassPath", testClasses)
-      .config("spark.speculation", "true")
-      .config("spark.speculation.interval", "50ms")
-      .config("spark.speculation.multiplier", "1.2")
-      .config("spark.speculation.quantile", "0.25")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      "spark.executor.extraClassPath" -> testClasses,
+      "spark.speculation" -> "true",
+      "spark.speculation.interval" -> "50ms",
+      "spark.speculation.multiplier" -> "1.2",
+      "spark.speculation.quantile" -> "0.25"))
     spark.sparkContext.setLogLevel("ERROR")
     super.beforeAll()
   }

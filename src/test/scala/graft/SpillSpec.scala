@@ -50,20 +50,13 @@ class SpillSpec extends AnyFunSuite with SparkSessionFixture {
       .foreach(_.stop())
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
 
-    val tiny = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-spill")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        sys.props("java.io.tmpdir") + "/graft-warehouse-spill")
-      .config("spark.ui.enabled", "false")
+    val tiny = graft.core.Graft.session("local[2]", 2, Seq(
+      "spark.sql.warehouse.dir" ->
+        (sys.props("java.io.tmpdir") + "/graft-warehouse-spill"),
       // force both spill paths long before the ~20k-row groups fit:
       // the window's row buffer and the sorter feeding it
-      .config("spark.sql.windowExec.buffer.spill.threshold", "1000")
-      .config("spark.shuffle.spill.numElementsForceSpillThreshold", "5000")
-      .getOrCreate()
+      "spark.sql.windowExec.buffer.spill.threshold" -> "1000",
+      "spark.shuffle.spill.numElementsForceSpillThreshold" -> "5000"))
     try {
       val spilled = new AtomicLong(0)
       tiny.sparkContext.addSparkListener(new SparkListener {

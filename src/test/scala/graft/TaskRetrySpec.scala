@@ -51,14 +51,8 @@ class TaskRetrySpec extends AnyFunSuite with BeforeAndAfterAll {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .foreach(_.stop())
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    spark = SparkSession.builder()
-      .master("local[4, 2]") // maxFailures=2: one free retry per task
-      .appName("graft-retry-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // maxFailures=2: one free retry per task
+    spark = graft.core.Graft.session("local[4, 2]", 4)
     spark.sparkContext.setLogLevel("ERROR")
     super.beforeAll()
   }

@@ -81,7 +81,6 @@ class TrainingPropertySpec extends AnyFunSuite with SparkSessionFixture {
     // corpus DOES contain natural cross-doc duplicate lines, so originals
     // may legitimately lose lines to earlier docs — only the total is
     // invariant)
-    graft.functions.GraftFunctions.register(spark)
     val base = docs.select(col("doc_id"), col("text"))
     val dup = base.orderBy("doc_id").limit(50)
       .withColumn("doc_id", col("doc_id") + 100000)

@@ -14,7 +14,6 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkSessionFixture {
   private val sf = "/root/testdata/sf0.001"
 
   private def emb = {
-    GraftFunctions.register(spark)
     spark.read.parquet(s"$sf/embeddings.parquet")
   }
 
@@ -78,7 +77,6 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("simHashNative equals the per-bit sign-aggregation reference") {
-    GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val native = docs
       .withColumn("sh", GraftFunctions.simHashNative(split(lower(col("text")), " ")))
@@ -99,7 +97,6 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("gramHashes + minhashSig equal the composed PortableHash forms") {
-    GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .withColumn("tl", split(lower(col("text")), " "))
       .filter(size(col("tl")) >= 3)
@@ -120,7 +117,6 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("tokStatsNative equals the composed HOF token statistics") {
-    GraftFunctions.register(spark)
     val stops = Seq("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
     val litArr = array(stops.map(lit): _*)
     val docs = spark.read.parquet(s"$sf/documents.parquet")
@@ -145,7 +141,6 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("null-element contracts: minhashSig skips null slots, tokStats nulls out") {
-    GraftFunctions.register(spark)
     // minhash over a null-slotted set == the composed array_min form,
     // which skips nulls (and so does DuckDB's list_min)
     val r = spark.sql(

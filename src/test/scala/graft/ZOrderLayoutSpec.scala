@@ -38,7 +38,6 @@ class ZOrderLayoutSpec extends AnyFunSuite with SparkSessionFixture {
 
   test("z-order stays selective in both dimensions; a single-column sort does not") {
     val s2 = spark.newSession()
-    graft.functions.GraftFunctions.register(s2)
     val n = 200000L
     // two independent uniform dimensions in [0, 10000)
     val data = s2.range(0, n).select(
