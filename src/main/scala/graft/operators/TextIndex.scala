@@ -1,6 +1,10 @@
 package graft.operators
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -42,6 +46,9 @@ object TextIndex {
 
   /** Term-hash partition buckets per member. */
   val Buckets = 64
+
+  /** How long staging waits for the write's observed metrics. */
+  private val ObservedMetricsWait = 2.minutes
 
   private def genName(v: Int) = s"gen-$v"
   private def deltaName(v: Int) = s"delta-$v"
@@ -88,7 +95,17 @@ object TextIndex {
       .parquet(s"$dir/$member/postings")
     // an all-empty batch can plan to ZERO tasks, in which case the
     // CollectMetrics accumulator never fires and the metrics map comes
-    // back empty — which is itself the empty-batch signal
+    // back empty — which is itself the empty-batch signal. The metrics
+    // arrive through the listener bus; a report that never comes fails
+    // the stage instead of blocking it forever.
+    try Await.ready(obs.future, ObservedMetricsWait)
+    catch {
+      case _: TimeoutException =>
+        rmTreeLocal(Paths.get(s"$dir/$member"))
+        throw new IllegalStateException(
+          s"no observed metrics for text-index member $member at $dir " +
+            s"within $ObservedMetricsWait; the member was not staged")
+    }
     val st = obs.get
     val ndocs = st.get("ndocs").map(_.asInstanceOf[Long]).getOrElse(0L)
     val ttokens = st.get("ttokens").map(_.asInstanceOf[Long]).getOrElse(0L)

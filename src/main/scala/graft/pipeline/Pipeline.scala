@@ -1,6 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Dataset, Encoder, KeyValueGroupedDataset, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.encoderFor
 import org.apache.spark.sql.functions.col
 
 /** Typed pipeline compat API — the reference's user surface
@@ -12,13 +15,19 @@ import org.apache.spark.sql.functions.col
   *     lowered to `ds.flatMap` (whole-partition `concatMap`, exactly the
   *     reference's `toM` lift at MapReduceC.hs:31-33).
   *   - reference `Reducer k v1 v2 = k -> [v1] -> [v2]` (multi-output!) →
-  *     [[Pipeline.reducer]] lowered to `groupByKey(_._1).flatMapGroups` —
-  *     the only faithful mapping, since SQL agg can't emit 0..n rows per key.
+  *     [[Pipeline.reducer]] lowered to a grouping on the key column,
+  *     `groupBy(col(_1)).as[K, (K, V)].flatMapGroups` — the only faithful
+  *     mapping, since SQL agg can't emit 0..n rows per key.
+  *   - [[Pipeline.combiner]] (no reference counterpart) lowered to a
+  *     bounded per-task hash fold, then the same key-column grouping's
+  *     `reduceGroups` (partial + final aggregation).
   *   - GADT `:>` composition → method chaining; the output type of each
   *     stage is the input type of the next, checked by scalac like the
   *     reference's `Serializable2 k2 v2 =>` constraint chain.
   *   - the hash-shuffle between stages (Partition.hs:53-57) is implicit in
-  *     `groupByKey`; [[Pipeline.repartitionByKey]] exposes it explicitly.
+  *     the key-column grouping; [[Pipeline.repartitionByKey]] hashes on
+  *     that same column, so when it precedes a reducer or combiner it *is*
+  *     that stage's shuffle and the grouping adds none.
   *
   * Each pipeline also carries its own naive evaluator ([[Pipeline.runLocal]])
   * — the analog of the reference's `naiveEvaluator` (MapReduceC.hs:65-74),
@@ -50,7 +59,7 @@ final class Pipeline[K1, V1, K2, V2] private (
   def reducer[V3](f: (K2, Seq[V2]) => Seq[V3])(
       implicit enc: Encoder[(K2, V3)], kenc: Encoder[K2]): Pipeline[K1, V1, K2, V3] =
     new Pipeline(length + 1,
-      ds => runDs(ds).groupByKey(_._1)
+      ds => Pipeline.groupOnKey(runDs(ds))
         .flatMapGroups((k, it) => f(k, it.map(_._2).toSeq).iterator.map((k, _))),
       xs => {
         // Stable grouping in first-encounter key order; value order is
@@ -63,19 +72,26 @@ final class Pipeline[K1, V1, K2, V2] private (
   /** Append an associative-commutative combine stage: one value per key,
     * folded MAP-SIDE before the shuffle — the combiner the reference's
     * surface lacks (its reducers only ever run post-shuffle,
-    * MapReduceC.hs:35-40, so every value crosses the network). Lowered to
-    * `groupByKey.reduceGroups`, which Spark plans as a typed aggregation
+    * MapReduceC.hs:35-40, so every value crosses the network). Each task
+    * first folds its records in a hash table of at most
+    * [[Pipeline.FoldCap]] entries; the folded rows then go to a
+    * key-column `reduceGroups`, which Spark plans as a typed aggregation
     * with partial merge: the shuffle carries one pre-folded value per
-    * (partition, key) instead of every record. `f` must be associative
+    * (partition, key) instead of every record. The in-task fold keeps
+    * the map side cheap past the 128 keys at which Spark's object hash
+    * aggregate falls back to sorting every record. `f` must be associative
     * and commutative; the naive evaluator folds in encounter order, so
     * the ScalaCheck distributed-vs-naive differential flags an `f` that
     * isn't (order then differs run-to-run). */
   def combiner(f: (V2, V2) => V2)(
       implicit enc: Encoder[(K2, V2)], kenc: Encoder[K2]): Pipeline[K1, V1, K2, V2] =
     new Pipeline(length + 1,
-      ds => runDs(ds).groupByKey(_._1)
-        .reduceGroups((a, b) => (a._1, f(a._2, b._2)))
-        .map(_._2),
+      ds => {
+        val d = runDs(ds)
+        Pipeline.groupOnKey(d.mapPartitions(Pipeline.foldInTask(f))(d.encoder))
+          .reduceGroups((a, b) => (a._1, f(a._2, b._2)))
+          .map(_._2)
+      },
       xs => {
         val ys = local(xs)
         val keys = ys.map(_._1).distinct
@@ -106,6 +122,45 @@ final class Pipeline[K1, V1, K2, V2] private (
 }
 
 object Pipeline {
+
+  /** Entries the in-task combiner fold holds before it flushes. */
+  val FoldCap: Int = 1 << 12
+
+  /** Group on the Dataset's first column, the key itself: no per-row key
+    * lambda, no appended key column, and a preceding hash repartition on
+    * that column already satisfies the grouping's distribution. A key
+    * the encoder writes as top-level columns (a tuple or case class) is
+    * grouped on its fields, the columns its deserializer reads. */
+  private def groupOnKey[K, V](d: Dataset[(K, V)])(
+      implicit kenc: Encoder[K]): KeyValueGroupedDataset[K, (K, V)] = {
+    val key = col(d.columns.head)
+    val keyCols =
+      if (encoderFor(kenc).isSerializedAsStructForTopLevel)
+        kenc.schema.fieldNames.toSeq.map(n => key.getField(n).as(n))
+      else Seq(key)
+    d.groupBy(keyCols: _*).as[K, (K, V)](kenc, d.encoder)
+  }
+
+  /** A key's running fold. The table holds cells, not values, so a key
+    * costs one lookup per record and a null value or fold result stays a
+    * value (`java.util.HashMap.merge` rejects nulls). */
+  private final class Folded[V](var value: V)
+
+  /** The combiner's map-side fold: folds one task's records per key in a
+    * hash table of at most [[FoldCap]] entries, emitting it and starting
+    * a new one when full and at the end. Any flush point is safe because
+    * `f` is associative and commutative. */
+  private def foldInTask[K, V](f: (V, V) => V)(
+      records: Iterator[(K, V)]): Iterator[(K, V)] =
+    Iterator.continually {
+      val acc = new java.util.HashMap[K, Folded[V]]()
+      while (records.hasNext && acc.size < FoldCap) {
+        val (k, v) = records.next()
+        val cell = acc.get(k)
+        if (cell == null) acc.put(k, new Folded(v)) else cell.value = f(cell.value, v)
+      }
+      acc.entrySet.iterator.asScala.map(e => (e.getKey, e.getValue.value))
+    }.takeWhile(_.hasNext).flatten
 
   /** The identity pipeline — the reference's `MrOut` terminator. */
   def apply[K, V](): Pipeline[K, V, K, V] =

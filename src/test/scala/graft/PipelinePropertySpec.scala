@@ -81,4 +81,32 @@ class PipelinePropertySpec extends AnyFunSuite with SparkSessionFixture {
       got == exp
     })
   }
+
+  test("combiner past the in-task fold cap: Spark == naive evaluator") {
+    implicit val s = spark
+    import s.implicits._
+    // one partition holding 3.5 caps of distinct keys, each seen twice:
+    // the fold flushes several times and re-meets keys it already emitted
+    val keys = (0 until Pipeline.FoldCap * 7 / 2).map(i => s"k$i")
+    val data = keys.map(k => (k, 1)) ++ keys.reverse.map(k => (k, 2))
+    val pipe = Pipeline[String, Int]().combiner(_ + _)
+    val got = pipe(spark.createDataset(data).coalesce(1)).collect().toSeq.sorted
+    assert(got == pipe.runLocal(data).sorted)
+    assert(got.size == keys.size && got.forall(_._2 == 3))
+  }
+
+  test("combiner over null values: Spark == naive evaluator (sorted)") {
+    implicit val s = spark
+    import s.implicits._
+    // null-tolerant max: associative and commutative, null is its identity
+    val maxOrNull: (String, String) => String = (a, b) =>
+      if (a == null) b else if (b == null) a else if (a >= b) a else b
+    val genNullable: Gen[List[(String, String)]] = genData.map(_.map {
+      case (k, v) => (k, if (v.length % 3 == 0) null else v)
+    })
+    val pipe = Pipeline[String, String]().combiner(maxOrNull)
+    check(Prop.forAll(genNullable) { data =>
+      pipe.run(data).sorted == pipe.runLocal(data).sorted
+    })
+  }
 }

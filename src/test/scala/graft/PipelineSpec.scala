@@ -48,6 +48,12 @@ class PipelineSpec extends AnyFunSuite with SparkSessionFixture {
       .reducer[Int]((_, vs) => Seq(vs.sum))
     val got = p.run(Seq(("", "hello"), ("", "hello"))).sorted
     assert(got == Seq(("e", 2), ("h", 2), ("l", 4), ("o", 2)))
+    // the repartition hashes on the key column the reducer groups on, so
+    // it is the stage's only shuffle
+    val plan = p(spark.createDataset(Seq(("", "hello")))).queryExecution
+      .executedPlan.toString
+    assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1,
+      s"expected exactly one hash exchange in:\n$plan")
   }
 
   test("empty input yields empty output") {
@@ -84,7 +90,34 @@ class PipelineSpec extends AnyFunSuite with SparkSessionFixture {
     assert(aggs >= 2, s"no partial+final aggregation in:\n$plan")
     assert(!plan.contains("FlatMapGroups"),
       s"combiner fell back to whole-group iteration:\n$plan")
+    assert(!plan.contains("AppendColumns"),
+      s"combiner groups on an appended key column:\n$plan")
     assert(ds.collect().sorted.toSeq ==
       Seq(("d", 1), ("e", 1), ("h", 1), ("l", 3), ("o", 2), ("r", 1), ("w", 1)))
+  }
+
+  test("reducer groups on the key column, not an appended one") {
+    implicit val s = spark
+    import s.implicits._
+    val p = Pipeline
+      .mapper[String, String, String, Int](WordCount.runLength)
+      .reducer[Int]((_, vs) => Seq(vs.sum))
+    val ds = p(spark.createDataset(Seq(("", "hello"), ("", "world"))))
+    val plan = ds.queryExecution.executedPlan.toString
+    assert(!plan.contains("AppendColumns"),
+      s"reducer groups on an appended key column:\n$plan")
+    assert(ds.collect().sorted.toSeq ==
+      Seq(("d", 1), ("e", 1), ("h", 1), ("l", 3), ("o", 2), ("r", 1), ("w", 1)))
+  }
+
+  test("reducer and combiner group tuple keys") {
+    implicit val s = spark
+    import s.implicits._
+    val input = Seq(((1, "a"), 2), ((1, "a"), 3), ((2, "b"), 5), ((1, "b"), 7))
+    val reduced = Pipeline[(Int, String), Int]().reducer[Int]((_, vs) => Seq(vs.sum))
+    val combined = Pipeline[(Int, String), Int]().combiner(_ + _)
+    val expected = Seq(((1, "a"), 5), ((1, "b"), 7), ((2, "b"), 5))
+    assert(reduced.run(input).sorted == expected)
+    assert(combined.run(input).sorted == expected)
   }
 }
