@@ -103,25 +103,22 @@ object Graft {
       Level.ERROR)
   }
 
-  /** Scan one TESTDATA table. Column pruning + predicate pushdown reach the
-    * parquet reader because this is a plain DataSource v2 relation.
-    *
-    * events.ts encoding has varied across testdata generations: older data
-    * is parquet TIMESTAMP(NANOS) (arriving as epoch-nanos LongType under
-    * spark.sql.legacy.parquet.nanosAsLong), newer data is timestamp[us]
-    * (arriving as a timestamp directly). The conditional below normalizes
-    * the legacy long encoding to a µs timestamp — matching DuckDB's own
-    * ns→µs truncation — and passes native timestamps through unchanged. */
-  /** Parquet schema per corpus table path, inferred ONCE per JVM (r17):
+  /** Parquet schema per path, inferred ONCE per JVM (r17):
     * `spark.read.parquet` with no schema runs a footer-reading Spark job
     * on EVERY call — one fixed-cost job per `table()` call per query
-    * execution, times 302 registry queries. The corpus tables are
-    * immutable inputs, so the inferred schema is cached (the KvMetaCache
-    * discipline: metadata of immutable files, never data) and every
+    * execution, times 302 registry queries. The inferred schema is
+    * cached (the KvMetaCache discipline: metadata, never data) and every
     * later scan passes it explicitly. A production engine gets the same
-    * effect from its catalog; a path-read engine must cache. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+    * effect from its catalog; a path-read engine must cache.
+    *
+    * Contract: only paths whose schema is stable for the life of the
+    * process go through it — an entry is never invalidated, so a path
+    * rewritten with another schema would read under the stale one. The
+    * map is LRU-capped at [[SchemaCacheEntries]], so per-run temp paths
+    * cannot grow it without limit; an evicted path is re-inferred. */
+  private[graft] val SchemaCacheEntries = 4096
+  private[graft] val schemaCache =
+    new LruMap[String, org.apache.spark.sql.types.StructType](SchemaCacheEntries)
 
   /** Parquet read with the path's schema inferred once per JVM — for
     * paths whose SCHEMA is stable for the life of the process (immutable
@@ -132,11 +129,19 @@ object Graft {
     * results are byte-identical; only the per-call footer-inference job
     * is gone. */
   def cachedSchemaParquet(spark: SparkSession, path: String): DataFrame = {
-    val schema = schemaCache.computeIfAbsent(path,
-      _ => spark.read.parquet(path).schema)
+    val schema = schemaCache.getOrElseUpdate(path)(spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
 
+  /** Scan one TESTDATA table. Column pruning + predicate pushdown reach the
+    * parquet reader because this is a plain DataSource v2 relation.
+    *
+    * events.ts encoding has varied across testdata generations: older data
+    * is parquet TIMESTAMP(NANOS) (arriving as epoch-nanos LongType under
+    * spark.sql.legacy.parquet.nanosAsLong), newer data is timestamp[us]
+    * (arriving as a timestamp directly). The conditional below normalizes
+    * the legacy long encoding to a µs timestamp — matching DuckDB's own
+    * ns→µs truncation — and passes native timestamps through unchanged. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = cachedSchemaParquet(spark, s"$dir/$name.parquet")
     df.schema.fields.find(f =>

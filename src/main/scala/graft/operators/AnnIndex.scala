@@ -1,12 +1,8 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.sources.KvCommitLog
 
 /** Persistent IVF index — BUILD ONCE, PROBE MANY (the FAISS lifecycle
   * the inline `q_sim_ivf_kmeans` query lacks: there the coarse
@@ -16,20 +12,20 @@ import graft.sources.KvCommitLog
   * probed by thousands of independent query batches).
   *
   * On-disk layout under `dir` — versioned GENERATIONS published through
-  * the Store's commit log ([[graft.sources.KvCommitLog]], the same
+  * [[MemberStore]] (the Store's commit log underneath, the same
   * Delta-in-miniature discipline the KV sink uses):
   *
   * {{{
   *   dir/gen-N/meta.json        index descriptor (k, dim, rounds, …)
   *   dir/gen-N/centroids/       parquet (cid, cv)         — K·dim longs
   *   dir/gen-N/lists/cid=…/     parquet, PARTITIONED BY cid
-  *   dir/_commit-N              manifest naming "gen-N"   — the commit
+  *   dir/_commit-N              manifest: "#format,ann,1" and "gen-N"
   * }}}
   *
-  * A build stages everything inside `gen-N` and appends the manifest
-  * LAST (atomic temp+rename): a crash mid-build leaves an orphan
-  * generation no reader can see; a committed generation is always
-  * complete. Rebuilds append `gen-(N+1)` without touching `gen-N`, so
+  * A build stages everything under a hidden name and appends the
+  * manifest LAST (atomic no-clobber publish): a crash mid-build leaves
+  * an orphan generation no reader can see; a committed generation is
+  * always complete. Rebuilds append `gen-(N+1)` without touching `gen-N`, so
   * in-flight probes pinned to an older version keep reading a frozen
   * snapshot — index time travel for free, same as the Store's
   * `asOfCommit`.
@@ -67,88 +63,27 @@ object AnnIndex {
       k: Int, dim: Int, rounds: Int, normalized: Boolean, count: Long,
       residual: Boolean = false)
 
-  private def metaJson(m: IndexMeta): String =
-    s"""{"k":${m.k},"dim":${m.dim},"rounds":${m.rounds},""" +
-      s""""normalized":${m.normalized},"count":${m.count},""" +
-      s""""residual":${m.residual}}"""
+  /** Test-only chaos hook: runs after a member is fully staged and
+    * before its manifest commits — the window where a concurrent commit
+    * forces the OCC rebase (or, for a re-fit, the staleness abort). */
+  @volatile var chaosHook: () => Unit = () => ()
 
-  private def parseMeta(s: String): IndexMeta = {
-    def field(name: String): String = {
-      val p = (s"""\"$name\":([^,}]+)""").r
-      p.findFirstMatchIn(s).map(_.group(1)).getOrElse(
-        throw new IllegalStateException(s"ann index meta missing '$name': $s"))
-    }
-    def optField(name: String, dflt: String): String = {
-      val p = (s"""\"$name\":([^,}]+)""").r
-      p.findFirstMatchIn(s).map(_.group(1)).getOrElse(dflt)
-    }
-    IndexMeta(field("k").toInt, field("dim").toInt, field("rounds").toInt,
-      field("normalized").toBoolean, field("count").toLong,
-      optField("residual", "false").toBoolean)
+  private val store = new MemberStore("ann", 1, "ann index", () => chaosHook())
+
+  private def writeMeta(dir: String, member: String, m: IndexMeta): Unit =
+    store.writeMeta(dir, member, "k" -> m.k, "dim" -> m.dim,
+      "rounds" -> m.rounds, "normalized" -> m.normalized,
+      "count" -> m.count, "residual" -> m.residual)
+
+  private def readMeta(dir: String, member: String): IndexMeta = {
+    val f = store.readMeta(dir, member)
+    IndexMeta(f("k").toInt, f("dim").toInt, f("rounds").toInt,
+      f("normalized").toBoolean, f("count").toLong,
+      f.getOrElse("residual", "false").toBoolean)
   }
-
-  private def genName(v: Int) = s"gen-$v"
-
-  /** Unique dot-hidden staging name: invisible to [[entriesAt]] (only
-    * manifests name members) and collision-free across concurrent
-    * writers, so no two builders ever write into the same directory. */
-  private def stagingName(): String =
-    s".staging-${System.nanoTime}-${Thread.currentThread.getId}"
 
   /** Latest committed generation version, 0 when none. */
-  def latestVersion(dir: String): Int =
-    KvCommitLog.latestVersion(Paths.get(dir))
-
-  /** Row count of a just-staged parquet directory from its footers,
-    * summed on the DRIVER (r16: replaces a `spark.read.parquet(…).count()`
-    * whose only purpose was the meta row count — a full Spark action per
-    * build). Footer metadata is O(files) local reads; the staging dir is
-    * always on the builder's filesystem. */
-  private[operators] def stagedRowCount(spark: SparkSession, dir: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
-    val it = fs.listFiles(root, true)
-    var n = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile && f.getPath.getName.endsWith(".parquet")) {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(f, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try n += r.getRecordCount finally r.close()
-      }
-    }
-    n
-  }
-
-  private def rmTreeLocal(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try s.forEach(c => rmTreeLocal(c)) finally s.close()
-    }
-    Files.deleteIfExists(p): Unit
-  }
-
-  /** Recursive byte-identical directory copy on the driver — for
-    * carrying committed driver-sized artifacts (centroids, pq
-    * codebooks) into a new generation without a Spark job. */
-  private def copyDirLocal(src: java.nio.file.Path,
-      dst: java.nio.file.Path): Unit = {
-    Files.createDirectories(dst)
-    val s = Files.list(src)
-    try s.forEach { c =>
-      val t = dst.resolve(c.getFileName)
-      if (Files.isDirectory(c)) copyDirLocal(c, t)
-      else Files.copy(c, t,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-    } finally s.close()
-  }
-
-  /** Test-only chaos hook: runs after a delta is fully staged and before
-    * its manifest commits — the window where a concurrent commit forces
-    * the OCC rebase (or, for a re-fit, the staleness abort). */
-  @volatile var chaosHook: () => Unit = () => ()
+  def latestVersion(dir: String): Int = store.latestVersion(dir)
 
   /** Fit the coarse quantizer on `data` and commit a new index
     * generation under `dir`. `data` must carry `idCol: long` and
@@ -159,66 +94,75 @@ object AnnIndex {
   def build(data: DataFrame, idCol: String, embCol: String,
       seedIds: Seq[Long], rounds: Int, dim: Int, dir: String,
       normalized: Boolean = true): Int = {
-    val spark = data.sparkSession
-    import spark.implicits._
-    val k = seedIds.size
-    require(k > 0, "ann index needs at least one seed")
-
     val qv =
       if (normalized) KMeansQuant.quantizeNormalized(col(embCol))
       else KMeansQuant.quantize(col(embCol))
+    val (assigned, cents) =
+      fitCoarse(data, idCol, embCol, seedIds, rounds, dim, qv)
+    commitFit(dir, cents,
+      assigned.select(col("cluster").as("cid"), col(idCol), col(embCol)),
+      IndexMeta(seedIds.size, dim, rounds, normalized, count = 0L))(_ => ())
+  }
+
+  /** The coarse fit [[build]] and [[buildPq]] share: `data`'s id and
+    * embedding with the quantized `__qv` and each row's `cluster`, plus
+    * the fitted centroids. */
+  private def fitCoarse(data: DataFrame, idCol: String, embCol: String,
+      seedIds: Seq[Long], rounds: Int, dim: Int,
+      qv: Column): (DataFrame, Seq[Seq[Long]]) = {
+    val spark = data.sparkSession
+    import spark.implicits._
+    require(seedIds.nonEmpty, "ann index needs at least one seed")
     val corpus = data.select(col(idCol), col(embCol)).withColumn("__qv", qv)
     val init = corpus.filter(col(idCol).isin(seedIds: _*))
       .orderBy(idCol).select("__qv").as[Seq[Long]].collect().toSeq
-    require(init.size == k,
-      s"seed ids missing from corpus: wanted $k, found ${init.size}")
-    val (assigned, cents) =
-      KMeansQuant.fit(spark, corpus, "__qv", init, rounds, dim)
+    require(init.size == seedIds.size,
+      s"seed ids missing from corpus: wanted ${seedIds.size}, found ${init.size}")
+    KMeansQuant.fit(spark, corpus, "__qv", init, rounds, dim)
+  }
 
-    val base = Paths.get(dir)
-    Files.createDirectories(base)
-    val staged = stagingName()
-    val gen = s"$dir/$staged"
-    // stage the whole generation under a hidden unique name,
-    // commit-manifest LAST (OCC: the rename + publish are no-clobber)
+  /** Stage a fit generation under a hidden unique name — centroids,
+    * whatever `stageMore` writes into the staged member directory, the
+    * cid-partitioned `lists` and `meta` with the staged row count — and
+    * commit its manifest LAST (OCC: the rename + publish are
+    * no-clobber). */
+  private def commitFit(dir: String, cents: Seq[Seq[Long]], lists: DataFrame,
+      meta: IndexMeta)(stageMore: String => Unit): Int = {
+    val spark = lists.sparkSession
+    import spark.implicits._
+    val staged = store.newStaging(dir)
     cents.zipWithIndex.map { case (cv, cid) => (cid.toLong, cv) }
-      .toDF("cid", "cv")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$gen/centroids")
-    assigned
-      .select(col("cluster").as("cid"), col(idCol), col(embCol))
-      .write.mode("overwrite").partitionBy("cid")
-      .parquet(s"$gen/lists")
-    val count = stagedRowCount(spark, s"$gen/lists")
-    Files.writeString(Paths.get(s"$gen/meta.json"),
-      metaJson(IndexMeta(k, dim, rounds, normalized, count)))
-    KvCommitLog.commitMember(base, staged, genName,
-      (_, name) => Seq(name))
+      .toDF("cid", "cv").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/$staged/centroids")
+    stageMore(s"$dir/$staged")
+    lists.write.mode("overwrite").partitionBy("cid")
+      .parquet(s"$dir/$staged/lists")
+    writeMeta(dir, staged,
+      meta.copy(count = store.rowCount(spark, dir, staged, "lists")))
+    store.commitGeneration(dir, staged)
   }
 
-  /** The manifest AT version v lists this version's member directories:
-    * a fit generation publishes `[gen-N]`; a delta append publishes the
-    * previous members PLUS its `delta-M` — so every version names its
-    * complete list set, older versions stay frozen, and the head entry
-    * is always the fit generation that owns centroids + meta. */
-  private def entriesAt(dir: String, asOf: Option[Int]): (Seq[String], Int) = {
-    val vs = KvCommitLog.versions(Paths.get(dir))
-    require(vs.nonEmpty, s"no committed ann index at $dir " +
-      "(an uncommitted generation directory is not an index)")
-    val latest = vs.last._1
-    val v = asOf.getOrElse(latest)
-    require(v >= 1 && v <= latest,
-      s"ann index version $v out of committed range [1, $latest] at $dir")
-    val manifest = vs.find(_._1 == v).getOrElse(
-      throw new IllegalStateException(s"ann index manifest $v missing at $dir"))._2
-    val entries = Files.readAllLines(manifest)
-      .toArray(Array.empty[String]).toSeq.filter(_.nonEmpty)
-    require(entries.nonEmpty, s"ann index manifest $v at $dir is empty")
-    (entries, v)
-  }
+  /** The coarse residual `__qv` − the centroid that `cidCol` names
+    * (codegen'd vecsub against the literal centroid table). */
+  private def residualTo(cents: Seq[Seq[Long]], cidCol: String): Column =
+    graft.functions.GraftFunctions.vecSubNative(col("__qv"),
+      element_at(typedlit(cents), (col(cidCol) + 1L).cast("int")))
 
-  /** The version's fit generation (manifest lines are stored sorted, so
-    * the owner is found by prefix, not position). */
+  /** `df` plus `code0 … code(M-1)`: the nearest codeword of each
+    * `subDim`-wide `__pqv` subvector in its subspace's codebook. */
+  private def withCodes(df: DataFrame, subCents: Seq[Seq[Seq[Long]]],
+      subDim: Int): DataFrame =
+    subCents.indices.foldLeft(df) { (d, mm) =>
+      val dists = KMeansQuant.distArray(
+        slice(col("__pqv"), mm * subDim + 1, subDim), subCents(mm))
+      d.withColumn(s"code$mm", array_position(dists, array_min(dists)) - 1L)
+    }
+
+  /** The version's fit generation, owner of centroids + meta. A fit
+    * publishes `[gen-N]`; a delta append publishes the previous members
+    * PLUS its `delta-M` — so every version names its complete list set
+    * and exactly one fit generation (manifest lines are stored sorted,
+    * so the owner is found by prefix, not position). */
   private def fitEntry(dir: String, entries: Seq[String]): String =
     entries.filter(_.startsWith("gen-")) match {
       case Seq(one) => one
@@ -229,11 +173,8 @@ object AnnIndex {
 
   /** Descriptor of the committed generation (latest or `asOf`) — owned
     * by the version's fit generation. */
-  def meta(dir: String, asOf: Option[Int] = None): IndexMeta = {
-    val (entries, _) = entriesAt(dir, asOf)
-    parseMeta(Files.readString(
-      Paths.get(s"$dir/${fitEntry(dir, entries)}/meta.json")))
-  }
+  def meta(dir: String, asOf: Option[Int] = None): IndexMeta =
+    readMeta(dir, fitEntry(dir, store.members(dir, asOf)))
 
   /** Committed centroids in cid order — K·dim longs, driver-sized.
     * Parsed ONCE per JVM per committed generation (r16): the table is an
@@ -242,48 +183,25 @@ object AnnIndex {
     * file — a stat per probe instead of a Spark read+collect job per
     * probe (streaming serve gates probe every micro-batch). */
   def centroids(spark: SparkSession, dir: String,
-      asOf: Option[Int] = None): Seq[Seq[Long]] = {
-    val (entries, _) = entriesAt(dir, asOf)
-    cachedLongVecTable(spark, s"$dir/${fitEntry(dir, entries)}/centroids",
-      Seq("cid", "cv"))
+      asOf: Option[Int] = None): Seq[Seq[Long]] =
+    centroidsOf(spark, dir, fitEntry(dir, store.members(dir, asOf)))
+
+  private def centroidsOf(spark: SparkSession, dir: String,
+      fit: String): Seq[Seq[Long]] =
+    store.collectTable(spark, dir, fit, "centroids", Seq("cid", "cv"))
       .map(row => (row(0).asInstanceOf[Long], longVec(row(1))))
       .sortBy(_._1).map(_._2)
-  }
 
   /** Row array cell → immutable Seq[Long] (Spark hands back a mutable
     * ArraySeq for array columns). */
   private def longVec(cell: Any): Seq[Long] =
     cell.asInstanceOf[scala.collection.Seq[Long]].toSeq
 
-  /** One committed single-part parquet table collected to the driver,
-    * served through the immutable-metadata cache: the parse happens once
-    * per JVM per file identity (generation dirs are never rewritten).
-    * Falls back to an uncached read if the directory does not hold
-    * exactly one part file (never true for coalesce(1) writers). */
-  private def cachedLongVecTable(spark: SparkSession, dir: String,
-      cols: Seq[String]): Seq[Seq[Any]] = {
-    def readAll(): Seq[Seq[Any]] =
-      spark.read.parquet(dir).select(cols.map(col): _*)
-        .collect().toSeq.map(r => cols.indices.map(r.get))
-    val parts = {
-      val s = Files.list(Paths.get(dir))
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
-          .toList
-      } finally s.close()
-    }
-    parts match {
-      case Seq(one) =>
-        graft.sources.KvMetaCache.cached(one)(_ => readAll())
-      case _ => readAll()
-    }
-  }
-
-  /** Committed PQ codebooks, cached like [[centroids]]: per subspace in
-    * m order, codewords in cid order. */
-  private def pqCodebooks(spark: SparkSession, dir: String): Seq[Seq[Seq[Long]]] =
-    cachedLongVecTable(spark, dir, Seq("m", "cid", "cv"))
+  /** Committed PQ codebooks of fit generation `fit`, cached like
+    * [[centroids]]: per subspace in m order, codewords in cid order. */
+  private def pqCodebooks(spark: SparkSession, dir: String,
+      fit: String): Seq[Seq[Seq[Long]]] =
+    store.collectTable(spark, dir, fit, "pq", Seq("m", "cid", "cv"))
       .map(row => (row(0).asInstanceOf[Int], row(1).asInstanceOf[Long],
         longVec(row(2))))
       .groupBy(_._1).toSeq.sortBy(_._1)
@@ -308,62 +226,33 @@ object AnnIndex {
       m: Int, residual: Boolean = false): Int = {
     val spark = data.sparkSession
     import spark.implicits._
-    val k = seedIds.size
-    require(k > 0, "ann index needs at least one seed")
     require(m > 0 && dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val subDim = dim / m
 
     // coarse: spherical fit (cosine retrieval), as build()
-    val corpus = data.select(col(idCol), col(embCol))
-      .withColumn("__qv", KMeansQuant.quantizeNormalized(col(embCol)))
-      .withColumn("__pqv", KMeansQuant.quantize(col(embCol)))
-    val init = corpus.filter(col(idCol).isin(seedIds: _*))
-      .orderBy(idCol).select("__qv").as[Seq[Long]].collect().toSeq
-    require(init.size == k,
-      s"seed ids missing from corpus: wanted $k, found ${init.size}")
-    val (assigned0, cents) =
-      KMeansQuant.fit(spark, corpus, "__qv", init, rounds, dim)
+    val (coarse, cents) = fitCoarse(data, idCol, embCol, seedIds, rounds,
+      dim, KMeansQuant.quantizeNormalized(col(embCol)))
     // code input: raw quantized subvectors, or the coarse residual in
-    // the normalized space (codegen'd vecsub against the literal
-    // centroid table)
-    val assigned =
-      if (!residual) assigned0
-      else assigned0.withColumn("__pqv",
-        graft.functions.GraftFunctions.vecSubNative(col("__qv"),
-          element_at(typedlit(cents), (col("cluster") + 1L).cast("int"))))
+    // the normalized space
+    val assigned = coarse.withColumn("__pqv",
+      if (residual) residualTo(cents, "cluster")
+      else KMeansQuant.quantize(col(embCol)))
     // PQ codebooks — the m independent fits run concurrently
     // (fitSubspaces keys on `vec_id`)
     val subCents = KMeansQuant.fitSubspaces(
       spark, assigned.withColumnRenamed(idCol, "vec_id"), "__pqv",
       seedIds, rounds, m, subDim)
-    val coded = (0 until m).foldLeft(assigned) { (df, mm) =>
-      val dists = KMeansQuant.distArray(
-        slice(col("__pqv"), mm * subDim + 1, subDim), subCents(mm))
-      df.withColumn(s"code$mm", array_position(dists, array_min(dists)) - 1L)
+    commitFit(dir, cents,
+      withCodes(assigned, subCents, subDim)
+        .select(col("cluster").as("cid") +: col(idCol) +: col(embCol) +:
+          (0 until m).map(mm => col(s"code$mm")): _*),
+      IndexMeta(seedIds.size, dim, rounds, normalized = true, count = 0L,
+        residual = residual)) { gen =>
+      subCents.zipWithIndex.flatMap { case (cb, mm) =>
+        cb.zipWithIndex.map { case (cv, cid) => (mm, cid.toLong, cv) }
+      }.toDF("m", "cid", "cv").coalesce(1)
+        .write.mode("overwrite").parquet(s"$gen/pq")
     }
-
-    val base = Paths.get(dir)
-    Files.createDirectories(base)
-    val staged = stagingName()
-    val gen = s"$dir/$staged"
-    cents.zipWithIndex.map { case (cv, cid) => (cid.toLong, cv) }
-      .toDF("cid", "cv").coalesce(1)
-      .write.mode("overwrite").parquet(s"$gen/centroids")
-    subCents.zipWithIndex.flatMap { case (cb, mm) =>
-      cb.zipWithIndex.map { case (cv, cid) => (mm, cid.toLong, cv) }
-    }.toDF("m", "cid", "cv").coalesce(1)
-      .write.mode("overwrite").parquet(s"$gen/pq")
-    coded
-      .select(col("cluster").as("cid") +: col(idCol) +: col(embCol) +:
-        (0 until m).map(mm => col(s"code$mm")): _*)
-      .write.mode("overwrite").partitionBy("cid")
-      .parquet(s"$gen/lists")
-    val count = stagedRowCount(spark, s"$gen/lists")
-    Files.writeString(Paths.get(s"$gen/meta.json"),
-      metaJson(IndexMeta(k, dim, rounds, normalized = true, count,
-        residual = residual)))
-    KvCommitLog.commitMember(base, staged, genName,
-      (_, name) => Seq(name))
   }
 
   /** Probe a [[buildPq]] index with ADC scoring: list ranking exactly
@@ -376,15 +265,14 @@ object AnnIndex {
       nprobe: Int, topK: Int, excludeSelf: Boolean = false,
       asOf: Option[Int] = None): DataFrame = {
     val spark = queries.sparkSession
-    import spark.implicits._
-    val (entries, v) = entriesAt(dir, asOf)
-    val m = meta(dir, Some(v))
-    val cents = centroids(spark, dir, Some(v))
+    val entries = store.members(dir, asOf)
     val fit = fitEntry(dir, entries)
-    require(Files.exists(Paths.get(s"$dir/$fit/pq")),
+    val m = readMeta(dir, fit)
+    val cents = centroidsOf(spark, dir, fit)
+    require(store.has(dir, fit, "pq"),
       s"index at $dir was built without PQ codebooks (AnnIndex.build) — " +
         "probe it with AnnIndex.probe, or rebuild with buildPq")
-    val subCents: Seq[Seq[Seq[Long]]] = pqCodebooks(spark, s"$dir/$fit/pq")
+    val subCents: Seq[Seq[Seq[Long]]] = pqCodebooks(spark, dir, fit)
     val pqM = subCents.size
     require(pqM > 0 && m.dim % pqM == 0,
       s"index at $dir has no usable pq codebooks")
@@ -408,9 +296,7 @@ object AnnIndex {
     // codes (each candidate's codes are vs its own list's centroid)
     val ranked =
       if (!m.residual) ranked0
-      else ranked0.withColumn("__pqv",
-        graft.functions.GraftFunctions.vecSubNative(col("__qv"),
-          element_at(typedlit(cents), (col("cid") + 1L).cast("int"))))
+      else ranked0.withColumn("__pqv", residualTo(cents, "cid"))
     val probes = (0 until pqM).foldLeft(ranked) { (df, mm) =>
       df.withColumn(s"qd$mm", KMeansQuant.distArray(
         slice(col("__pqv"), mm * subDim + 1, subDim), subCents(mm)))
@@ -419,12 +305,10 @@ object AnnIndex {
 
     val probeCids = probes.select("cid").distinct()
       .collect().map(_.getLong(0)).sorted
-    val lists = entries.map(e =>
-        graft.core.Graft.cachedSchemaParquet(spark, s"$dir/$e/lists")
-          .filter(col("cid").isin(probeCids: _*))
-          .select(col("cid") +: col(idCol) +:
-            (0 until pqM).map(mm => col(s"code$mm")): _*))
-      .reduce(_ unionAll _)
+    val lists = store.union(spark, dir, entries, "lists")
+      .filter(col("cid").isin(probeCids: _*))
+      .select(col("cid") +: col(idCol) +:
+        (0 until pqM).map(mm => col(s"code$mm")): _*)
 
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("distq"), col(idCol))
@@ -457,10 +341,10 @@ object AnnIndex {
   def appendDelta(delta: DataFrame, idCol: String, embCol: String,
       dir: String): Int = {
     val spark = delta.sparkSession
-    import spark.implicits._
-    val (entries, latest) = entriesAt(dir, None)
-    val m = meta(dir, Some(latest))
-    val cents = centroids(spark, dir, Some(latest))
+    val entries = store.members(dir)
+    val fit = fitEntry(dir, entries)
+    val m = readMeta(dir, fit)
+    val cents = centroidsOf(spark, dir, fit)
     val qv =
       if (m.normalized) KMeansQuant.quantizeNormalized(col(embCol))
       else KMeansQuant.quantize(col(embCol))
@@ -470,31 +354,20 @@ object AnnIndex {
     // a PQ-carrying fit generation ⇒ deltas must carry codes too, or
     // probePq's list union would miss columns; codes come from the SAME
     // frozen codebooks
-    val fit = fitEntry(dir, entries)
-    val pqPath = Paths.get(s"$dir/$fit/pq")
-    val (withCodes, codeCols) =
-      if (!Files.exists(pqPath)) (assigned, Seq.empty[String])
+    val (coded, codeCols) =
+      if (!store.has(dir, fit, "pq")) (assigned, Seq.empty[String])
       else {
-        val subCents: Seq[Seq[Seq[Long]]] = pqCodebooks(spark, pqPath.toString)
-        val subDim = m.dim / subCents.size
+        val subCents: Seq[Seq[Seq[Long]]] = pqCodebooks(spark, dir, fit)
         // residual index ⇒ delta codes encode the residual vs the
         // FROZEN assigned centroid, exactly as the fit generation did
-        val withPv =
-          if (m.residual) assigned.withColumn("__pqv",
-            graft.functions.GraftFunctions.vecSubNative(col("__qv"),
-              element_at(typedlit(cents), (col("cluster") + 1L).cast("int"))))
-          else assigned.withColumn("__pqv", KMeansQuant.quantize(col(embCol)))
-        val coded = subCents.indices.foldLeft(withPv) {
-          (df, mm) =>
-            val dists = KMeansQuant.distArray(
-              slice(col("__pqv"), mm * subDim + 1, subDim), subCents(mm))
-            df.withColumn(s"code$mm",
-              array_position(dists, array_min(dists)) - 1L)
-        }
-        (coded, subCents.indices.map(mm => s"code$mm"))
+        val withPv = assigned.withColumn("__pqv",
+          if (m.residual) residualTo(cents, "cluster")
+          else KMeansQuant.quantize(col(embCol)))
+        (withCodes(withPv, subCents, m.dim / subCents.size),
+          subCents.indices.map(mm => s"code$mm"))
       }
-    val staged = stagingName()
-    val rows = withCodes
+    val staged = store.newStaging(dir)
+    val rows = coded
       .select(col("cluster").as("cid") +: col(idCol) +: col(embCol) +:
         codeCols.map(col): _*)
     rows.write.mode("overwrite").partitionBy("cid")
@@ -505,28 +378,19 @@ object AnnIndex {
     // staged write instead of cache+count+write+unpersist — the staging
     // dir is invisible to readers either way, so rejecting post-write is
     // equally safe) and the count comes from the staged footers.
-    val count = stagedRowCount(spark, s"$dir/$staged/lists")
-    if (count == 0) {
-      rmTreeLocal(Paths.get(s"$dir/$staged"))
-      throw new IllegalArgumentException(
-        "appendDelta: delta is empty — nothing to commit")
-    }
-    Files.writeString(Paths.get(s"$dir/$staged/meta.json"),
-      metaJson(m.copy(count = count)))
-    chaosHook()
+    val count = store.rowCount(spark, dir, staged, "lists")
+    if (count == 0)
+      store.reject(dir, staged, new IllegalArgumentException(
+        "appendDelta: delta is empty — nothing to commit"))
+    writeMeta(dir, staged, m.copy(count = count))
     // OCC rebase folds a concurrent delta's members into this manifest;
     // it is only sound while the delta's assignments/codes still match
     // the committed fit — a concurrent RE-FIT (new gen generation)
     // invalidates them, so that conflict aborts instead of rebasing
-    KvCommitLog.commitMember(Paths.get(dir), staged,
-      v => s"delta-$v",
-      (_, name) => {
-        val (now, _) = entriesAt(dir, None)
-        require(fitEntry(dir, now) == fit,
-          s"ann index at $dir was re-fit concurrently; this delta's " +
-            "assignments/codes target the old quantizer — re-run appendDelta")
-        now :+ name
-      })
+    store.commitDelta(dir, staged, head =>
+      require(fitEntry(dir, head) == fit,
+        s"ann index at $dir was re-fit concurrently; this delta's " +
+          "assignments/codes target the old quantizer — re-run appendDelta"))
   }
 
   /** COMPACT the committed member set into one generation. Each
@@ -542,43 +406,34 @@ object AnnIndex {
     * Older versions keep their frozen member sets (`asOf`).
     * Returns the committed version. */
   def compact(spark: SparkSession, dir: String): Int = {
-    val (entries, latest) = entriesAt(dir, None)
+    val (entries, latest) = store.snapshot(dir, None)
     val fit = fitEntry(dir, entries)
-    val m = meta(dir, Some(latest))
-    val total = entries.map(e => parseMeta(
-      Files.readString(Paths.get(s"$dir/$e/meta.json"))).count).sum
-    val staged = stagingName()
-    val gen = s"$dir/$staged"
+    val total = entries.map(readMeta(dir, _).count).sum
+    val staged = store.newStaging(dir)
     // centroids/pq are carried forward UNFITTED — a byte-identical file
-    // copy on the driver (r17; was a Spark read + coalesce(1) + write
-    // job per table whose only purpose was duplicating a single
+    // copy on the driver (a Spark job would only duplicate a single
     // driver-sized committed part file into the new generation)
-    copyDirLocal(Paths.get(s"$dir/$fit/centroids"),
-      Paths.get(s"$gen/centroids"))
-    if (Files.exists(Paths.get(s"$dir/$fit/pq")))
-      copyDirLocal(Paths.get(s"$dir/$fit/pq"), Paths.get(s"$gen/pq"))
-    entries.map(e => graft.core.Graft.cachedSchemaParquet(spark, s"$dir/$e/lists"))
-      .reduce(_ unionAll _)
+    store.copyTable(dir, fit, staged, "centroids")
+    if (store.has(dir, fit, "pq")) store.copyTable(dir, fit, staged, "pq")
+    store.union(spark, dir, entries, "lists")
       .write.mode("overwrite").partitionBy("cid")
-      .parquet(s"$gen/lists")
-    Files.writeString(Paths.get(s"$gen/meta.json"),
-      metaJson(m.copy(count = total)))
+      .parquet(s"$dir/$staged/lists")
+    writeMeta(dir, staged, readMeta(dir, fit).copy(count = total))
     // CAS at latest+1: the rewritten generation was derived from the
     // version-`latest` snapshot — any concurrent commit supersedes it,
     // so the compaction must abort (and rerun), never publish over it
-    KvCommitLog.commitMember(Paths.get(dir), staged, genName,
-      (_, name) => Seq(name), expectedBase = Some(latest))
+    store.commitCompaction(dir, staged, latest)
   }
 
   /** Member directories named by the version's manifest (public for
     * specs measuring read amplification). */
   def members(dir: String, asOf: Option[Int] = None): Seq[String] =
-    entriesAt(dir, asOf)._1
+    store.members(dir, asOf)
 
   /** Reclaim history: drop versions below `keepFrom` and delete member
     * directories only they referenced. Returns the deleted names. */
   def vacuum(dir: String, keepFrom: Int): Seq[String] =
-    KvCommitLog.vacuum(Paths.get(dir), keepFrom)
+    store.vacuum(dir, keepFrom)
 
   /** Probe the committed index: for each row of `queries`
     * (`idCol: long`, `embCol: array<float>`), rank the `nprobe`
@@ -593,9 +448,10 @@ object AnnIndex {
       nprobe: Int, topK: Int, excludeSelf: Boolean = false,
       asOf: Option[Int] = None): DataFrame = {
     val spark = queries.sparkSession
-    val (entries, v) = entriesAt(dir, asOf)
-    val m = meta(dir, Some(v))
-    val cents = centroids(spark, dir, Some(v))
+    val entries = store.members(dir, asOf)
+    val fit = fitEntry(dir, entries)
+    val m = readMeta(dir, fit)
+    val cents = centroidsOf(spark, dir, fit)
     require(cents.size == m.k,
       s"index corrupt: ${cents.size} centroids vs meta k=${m.k}")
 
@@ -624,11 +480,9 @@ object AnnIndex {
       .collect().map(_.getLong(0)).sorted
     // union of the version's member list dirs (fit generation + any
     // appended deltas), each scan pruned to the probed partitions
-    val lists = entries.map(e =>
-        graft.core.Graft.cachedSchemaParquet(spark, s"$dir/$e/lists")
-          .filter(col("cid").isin(probeCids: _*))
-          .select(col("cid"), col(idCol), col(embCol)))
-      .reduce(_ unionAll _)
+    val lists = store.union(spark, dir, entries, "lists")
+      .filter(col("cid").isin(probeCids: _*))
+      .select(col("cid"), col(idCol), col(embCol))
 
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col(idCol))

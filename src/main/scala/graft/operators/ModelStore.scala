@@ -1,12 +1,8 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.sources.KvCommitLog
 
 /** Store-committed COUNT-BASED text models — the TRAIN ONCE / SCORE MANY
   * lifecycle for the multinomial-Naive-Bayes family, the model-artifact
@@ -25,12 +21,16 @@ import graft.sources.KvCommitLog
   *   - scoring merges member tables with ONE model-sized group-by — the
   *     corpus is never re-read.
   *
-  * Commit protocol (shared with [[AnnIndex]] / the Kv sink): stage the
-  * member directory fully, append the commit-log manifest LAST — a crash
-  * mid-build leaves an invisible orphan, never a readable half-model.
-  * Each manifest names its version's COMPLETE member set (a fit publishes
-  * `[gen-N]`; a delta publishes the previous members plus `delta-M`), so
-  * older versions stay frozen and `asOf` scoring time-travels exactly.
+  * Commit protocol: [[MemberStore]] (shared with [[AnnIndex]] and
+  * [[TextIndex]]) — stage the member directory fully, append the
+  * manifest LAST, so a crash mid-build leaves an invisible orphan, never
+  * a readable half-model. Each manifest names its version's COMPLETE
+  * member set (a fit publishes `[gen-N]`; a delta publishes the previous
+  * members plus `delta-M`), so older versions stay frozen and `asOf`
+  * scoring time-travels exactly. Manifests carry `#format,model,2`: the
+  * layout below is the second one (the first kept a separate `classes`
+  * table), and a manifest without that line is refused rather than
+  * scored with missing class priors.
   *
   * Layout per member (r17): ONE table, `counts` (cls, w, cwc) — the
   * (class, word) token counts plus one MARKER row per (class, document)
@@ -50,17 +50,15 @@ import graft.sources.KvCommitLog
   */
 object ModelStore {
 
-  private def genName(v: Int) = s"gen-$v"
-  private def deltaName(v: Int) = s"delta-$v"
-
-  /** Latest committed model version, 0 when none. */
-  def latestVersion(dir: String): Int =
-    KvCommitLog.latestVersion(Paths.get(dir))
-
   /** Test-only chaos hook: runs after a member directory is fully staged
     * and before its manifest commits — the crash window the manifest-last
     * protocol must make invisible. */
   @volatile var chaosHook: () => Unit = () => ()
+
+  private val store = new MemberStore("model", 2, "model", () => chaosHook())
+
+  /** Latest committed model version, 0 when none. */
+  def latestVersion(dir: String): Int = store.latestVersion(dir)
 
   private def stage(docs: DataFrame, labelCol: String, textCol: String,
       dir: String, member: String): Unit = {
@@ -84,40 +82,19 @@ object ModelStore {
         array(lit(null).cast("string")))).as("w"))
     tok.groupBy("cls", "w").agg(count(lit(1)).as("cwc"))
       .write.mode("overwrite").parquet(s"$dir/$member/counts")
-    if (AnnIndex.stagedRowCount(docs.sparkSession,
-        s"$dir/$member/counts") == 0L) {
-      rmTreeLocal(Paths.get(s"$dir/$member"))
-      throw new IllegalArgumentException(
+    if (store.rowCount(docs.sparkSession, dir, member, "counts") == 0L)
+      store.reject(dir, member, new IllegalArgumentException(
         s"refusing to stage an EMPTY batch as model member $member at " +
-          s"$dir — empty members would break every subsequent score")
-    }
+          s"$dir — empty members would break every subsequent score"))
   }
-
-  private def rmTreeLocal(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try s.forEach(c => rmTreeLocal(c)) finally s.close()
-    }
-    Files.deleteIfExists(p): Unit
-  }
-
-  /** Unique dot-hidden staging name: invisible to [[membersAt]] (only
-    * manifests name members) and collision-free across concurrent
-    * writers, so no two trainers ever write into the same directory. */
-  private def stagingName(): String =
-    s".staging-${System.nanoTime}-${Thread.currentThread.getId}"
 
   /** Train on `docs` and commit a NEW model generation (manifest names
     * only it — a retrain, not an extension). Returns the version. */
   def train(docs: DataFrame, labelCol: String, textCol: String,
       dir: String): Int = {
-    val base = Paths.get(dir)
-    Files.createDirectories(base)
-    val staged = stagingName()
+    val staged = store.newStaging(dir)
     stage(docs, labelCol, textCol, dir, staged)
-    chaosHook()
-    KvCommitLog.commitMember(base, staged, genName,
-      (_, name) => Seq(name))
+    store.commitGeneration(dir, staged)
   }
 
   /** Extend the committed model with `docs`' statistics: stages a delta
@@ -127,17 +104,14 @@ object ModelStore {
     * documents already absorbed into the model are never re-read. */
   def appendDelta(docs: DataFrame, labelCol: String, textCol: String,
       dir: String): Int = {
-    membersAt(dir, None) // fail fast: a delta needs a committed model
-    val base = Paths.get(dir)
-    val staged = stagingName()
+    store.members(dir) // fail fast: a delta needs a committed model
+    val staged = store.newStaging(dir)
     stage(docs, labelCol, textCol, dir, staged)
-    chaosHook()
     // OCC rebase: on a lost race the manifest is recomputed from the
     // winner's member set, so a concurrent delta's statistics are folded
     // in rather than lost (count-mergeability makes any interleaving
     // score-identical to the sequential order)
-    KvCommitLog.commitMember(base, staged, deltaName,
-      (_, name) => membersAt(dir, None) :+ name)
+    store.commitDelta(dir, staged)
   }
 
   /** COMPACT the committed member set into one generation: merge the
@@ -151,50 +125,26 @@ object ModelStore {
   def compact(spark: org.apache.spark.sql.SparkSession, dir: String): Int = {
     // pin the snapshot: members AT base, so the CAS below can reject a
     // commit that lands between this read and the manifest publish
-    val base0 = latestVersion(dir)
-    val members = membersAt(dir, Some(base0))
-    val staged = stagingName()
+    val (members, base) = store.snapshot(dir, None)
+    val staged = store.newStaging(dir)
     // one merged table, one job: the marker rows (w = NULL) sum like any
     // other (cls, w) group, so the compacted member carries exactly the
     // statistics the member set did
-    members.map(m => graft.core.Graft.cachedSchemaParquet(spark, s"$dir/$m/counts"))
-      .reduce(_ unionAll _)
+    store.union(spark, dir, members, "counts")
       .groupBy("cls", "w").agg(sum(col("cwc")).as("cwc"))
       .write.mode("overwrite").parquet(s"$dir/$staged/counts")
-    chaosHook()
-    // CAS at base0+1: the merged member was derived from the snapshot
-    // at base0 — a concurrent commit supersedes it, so abort + rerun
-    KvCommitLog.commitMember(Paths.get(dir), staged, genName,
-      (_, name) => Seq(name), expectedBase = Some(base0))
+    store.commitCompaction(dir, staged, base)
   }
 
   /** Member directories named by the version's manifest (public for
     * specs measuring read amplification). */
   def members(dir: String, asOf: Option[Int] = None): Seq[String] =
-    membersAt(dir, asOf)
+    store.members(dir, asOf)
 
   /** Reclaim history: drop versions below `keepFrom` and delete member
     * directories only they referenced. Returns the deleted names. */
   def vacuum(dir: String, keepFrom: Int): Seq[String] =
-    KvCommitLog.vacuum(Paths.get(dir), keepFrom)
-
-  /** Member directories of the committed model at `asOf` (default
-    * latest). */
-  private def membersAt(dir: String, asOf: Option[Int]): Seq[String] = {
-    val vs = KvCommitLog.versions(Paths.get(dir))
-    require(vs.nonEmpty, s"no committed model at $dir " +
-      "(an uncommitted member directory is not a model)")
-    val latest = vs.last._1
-    val v = asOf.getOrElse(latest)
-    require(v >= 1 && v <= latest,
-      s"model version $v out of committed range [1, $latest] at $dir")
-    val manifest = vs.find(_._1 == v).getOrElse(
-      throw new IllegalStateException(s"model manifest $v missing at $dir"))._2
-    val entries = Files.readAllLines(manifest)
-      .toArray(Array.empty[String]).toSeq.filter(_.nonEmpty)
-    require(entries.nonEmpty, s"model manifest $v at $dir is empty")
-    entries
-  }
+    store.vacuum(dir, keepFrom)
 
   /** Score `test` against the committed model (latest or `asOf`):
     * argmin-bits multinomial NB over the MERGED member statistics.
@@ -209,14 +159,13 @@ object ModelStore {
   def score(test: DataFrame, idCol: String, textCol: String, dir: String,
       asOf: Option[Int] = None): DataFrame = {
     val spark = test.sparkSession
-    val members = membersAt(dir, asOf)
+    val members = store.members(dir, asOf)
     // merged member statistics: real (cls, w) rows feed the token join;
     // per-class totals come from the same merged table (totc = Σ cwc
     // over real words ≡ tokens per class, ndocs = the w-NULL marker's
     // cwc ≡ docs per class; classes with no tokens or a NULL label are
     // dropped, exactly as the old token-side ⋈ doc-side inner join did)
-    val cnt0 = members.map(m => graft.core.Graft.cachedSchemaParquet(spark, s"$dir/$m/counts"))
-      .reduce(_ unionAll _)
+    val cnt0 = store.union(spark, dir, members, "counts")
       .groupBy("cls", "w").agg(sum(col("cwc")).as("cwc"))
     val cnt = cnt0.filter(col("w").isNotNull)
     val clsTab = cnt0.groupBy("cls").agg(

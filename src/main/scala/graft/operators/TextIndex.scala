@@ -1,6 +1,5 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
 import java.util.concurrent.TimeoutException
 
 import scala.concurrent.Await
@@ -9,16 +8,15 @@ import scala.concurrent.duration._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.KvCommitLog
-
 /** Store-committed INVERTED TEXT INDEX — build once / search many for
   * lexical (BM25) retrieval, completing the persisted-artifact triple
   * next to [[AnnIndex]] (vectors) and [[ModelStore]] (models): at 100 TB
   * a text corpus is indexed once and then served to thousands of term
   * queries, none of which may re-tokenize the corpus.
   *
-  * Layout per member (same manifest-last commit protocol as its
-  * siblings — a crash while staging leaves an invisible orphan):
+  * Layout per member, committed through [[MemberStore]] (the
+  * manifest-last protocol its siblings share — a crash while staging
+  * leaves an invisible orphan; manifests carry `#format,text,1`):
   *   - `postings/` — (term, doc_id, tf, dl), PARTITIONED BY `tb` (the
   *     term's portable-hash bucket, [[PortableHash.charHashLocal]] % 64):
   *     a search computes its query terms' buckets ON THE DRIVER and
@@ -50,14 +48,13 @@ object TextIndex {
   /** How long staging waits for the write's observed metrics. */
   private val ObservedMetricsWait = 2.minutes
 
-  private def genName(v: Int) = s"gen-$v"
-  private def deltaName(v: Int) = s"delta-$v"
-
-  def latestVersion(dir: String): Int =
-    KvCommitLog.latestVersion(Paths.get(dir))
-
   /** Test-only chaos hook: runs after staging, before the manifest. */
   @volatile var chaosHook: () => Unit = () => ()
+
+  private val store =
+    new MemberStore("text", 1, "text index", () => chaosHook())
+
+  def latestVersion(dir: String): Int = store.latestVersion(dir)
 
   private def stage(docs: DataFrame, idCol: String, textCol: String,
       dir: String, member: String): Unit = {
@@ -101,49 +98,27 @@ object TextIndex {
     try Await.ready(obs.future, ObservedMetricsWait)
     catch {
       case _: TimeoutException =>
-        rmTreeLocal(Paths.get(s"$dir/$member"))
-        throw new IllegalStateException(
+        store.reject(dir, member, new IllegalStateException(
           s"no observed metrics for text-index member $member at $dir " +
-            s"within $ObservedMetricsWait; the member was not staged")
+            s"within $ObservedMetricsWait; the member was not staged"))
     }
     val st = obs.get
     val ndocs = st.get("ndocs").map(_.asInstanceOf[Long]).getOrElse(0L)
     val ttokens = st.get("ttokens").map(_.asInstanceOf[Long]).getOrElse(0L)
-    if (ndocs == 0L) {
-      rmTreeLocal(Paths.get(s"$dir/$member"))
-      throw new IllegalArgumentException(
+    if (ndocs == 0L)
+      store.reject(dir, member, new IllegalArgumentException(
         s"refusing to stage an EMPTY batch as text-index member $member " +
-          s"at $dir — empty members would break every subsequent search")
-    }
-    Files.writeString(Paths.get(s"$dir/$member/meta.json"),
-      s"""{"ndocs":$ndocs,"ttokens":$ttokens}""")
+          s"at $dir — empty members would break every subsequent search"))
+    store.writeMeta(dir, member, "ndocs" -> ndocs, "ttokens" -> ttokens)
   }
-
-  private def rmTreeLocal(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try s.forEach(c => rmTreeLocal(c)) finally s.close()
-    }
-    Files.deleteIfExists(p): Unit
-  }
-
-  /** Unique dot-hidden staging name: invisible to [[membersAt]] (only
-    * manifests name members) and collision-free across concurrent
-    * writers, so no two stores ever write into the same directory. */
-  private def stagingName(): String =
-    s".staging-${System.nanoTime}-${Thread.currentThread.getId}"
 
   /** Index `docs` and commit a NEW generation (a full rebuild).
     * Returns the committed version. */
   def build(docs: DataFrame, idCol: String, textCol: String,
       dir: String): Int = {
-    val base = Paths.get(dir)
-    Files.createDirectories(base)
-    val staged = stagingName()
+    val staged = store.newStaging(dir)
     stage(docs, idCol, textCol, dir, staged)
-    chaosHook()
-    KvCommitLog.commitMember(base, staged, genName,
-      (_, name) => Seq(name))
+    store.commitGeneration(dir, staged)
   }
 
   /** Extend the committed index with `docs` (doc-disjoint from every
@@ -155,13 +130,10 @@ object TextIndex {
     * ingest contract as across batches). */
   def appendDelta(docs: DataFrame, idCol: String, textCol: String,
       dir: String): Int = {
-    membersAt(dir, None) // fail fast: a delta needs a committed index
-    val base = Paths.get(dir)
-    val staged = stagingName()
+    store.members(dir) // fail fast: a delta needs a committed index
+    val staged = store.newStaging(dir)
     stage(docs, idCol, textCol, dir, staged)
-    chaosHook()
-    KvCommitLog.commitMember(base, staged, deltaName,
-      (_, name) => membersAt(dir, None) :+ name)
+    store.commitDelta(dir, staged)
   }
 
   /** COMPACT the committed member set into one generation. Incremental
@@ -177,62 +149,36 @@ object TextIndex {
     * their own frozen member sets ([[search]] `asOf`); the superseded
     * member directories stay on disk for them. Returns the version. */
   def compact(spark: SparkSession, dir: String): Int = {
-    // pin the snapshot: members AT base, so the CAS below can reject a
+    // pin the snapshot: members AT base, so the CAS commit can reject a
     // commit that lands between this read and the manifest publish
-    val base0 = latestVersion(dir)
-    val members = membersAt(dir, Some(base0))
-    val staged = stagingName()
-    val (nDocs, tTokens) = members.map(metaOf(dir, _))
-      .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
-    members.map(m => graft.core.Graft.cachedSchemaParquet(spark, s"$dir/$m/postings"))
-      .reduce(_ unionAll _)
+    val (members, base) = store.snapshot(dir, None)
+    val staged = store.newStaging(dir)
+    val (nDocs, tTokens) = corpusConstants(dir, members)
+    store.union(spark, dir, members, "postings")
       .write.mode("overwrite").partitionBy("tb")
       .parquet(s"$dir/$staged/postings")
-    Files.writeString(Paths.get(s"$dir/$staged/meta.json"),
-      s"""{"ndocs":$nDocs,"ttokens":$tTokens}""")
-    chaosHook()
-    // CAS at base0+1: the rewritten generation was derived from the
-    // version-base0 snapshot — any concurrent commit supersedes it, so
-    // the compaction must abort (and rerun), never publish over it
-    KvCommitLog.commitMember(Paths.get(dir), staged, genName,
-      (_, name) => Seq(name), expectedBase = Some(base0))
+    store.writeMeta(dir, staged, "ndocs" -> nDocs, "ttokens" -> tTokens)
+    store.commitCompaction(dir, staged, base)
   }
 
   /** Member directories named by the version's manifest (public for
     * specs measuring read amplification). */
   def members(dir: String, asOf: Option[Int] = None): Seq[String] =
-    membersAt(dir, asOf)
+    store.members(dir, asOf)
 
   /** Reclaim history: drop versions below `keepFrom` and delete member
     * directories only they referenced (typically the pre-compaction
     * members). Time travel within [keepFrom, latest] is untouched.
     * Returns the deleted member names. */
   def vacuum(dir: String, keepFrom: Int): Seq[String] =
-    KvCommitLog.vacuum(Paths.get(dir), keepFrom)
+    store.vacuum(dir, keepFrom)
 
-  private def membersAt(dir: String, asOf: Option[Int]): Seq[String] = {
-    val vs = KvCommitLog.versions(Paths.get(dir))
-    require(vs.nonEmpty, s"no committed text index at $dir " +
-      "(an uncommitted member directory is not an index)")
-    val latest = vs.last._1
-    val v = asOf.getOrElse(latest)
-    require(v >= 1 && v <= latest,
-      s"text index version $v out of committed range [1, $latest] at $dir")
-    val manifest = vs.find(_._1 == v).getOrElse(
-      throw new IllegalStateException(s"text index manifest $v missing at $dir"))._2
-    val entries = Files.readAllLines(manifest)
-      .toArray(Array.empty[String]).toSeq.filter(_.nonEmpty)
-    require(entries.nonEmpty, s"text index manifest $v at $dir is empty")
-    entries
-  }
-
-  private def metaOf(dir: String, member: String): (Long, Long) = {
-    val s = Files.readString(Paths.get(s"$dir/$member/meta.json"))
-    def f(n: String): Long = (s"""\"$n\":(\\d+)""").r.findFirstMatchIn(s)
-      .map(_.group(1).toLong).getOrElse(
-        throw new IllegalStateException(s"text index meta missing '$n': $s"))
-    (f("ndocs"), f("ttokens"))
-  }
+  /** Corpus-level BM25 constants (ndocs, ttokens): member meta sums. */
+  private def corpusConstants(dir: String, members: Seq[String]): (Long, Long) =
+    members.map { m =>
+      val meta = store.readMeta(dir, m)
+      (meta("ndocs").toLong, meta("ttokens").toLong)
+    }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
 
   /** BM25 top-k over the committed index (latest or `asOf`): returns
     * (doc_id, score) for the `terms` disjunction, score = the exact
@@ -246,14 +192,12 @@ object TextIndex {
   def search(spark: SparkSession, dir: String, terms: Seq[String],
       topK: Int, asOf: Option[Int] = None): DataFrame = {
     require(terms.nonEmpty, "text index search needs at least one term")
-    val members = membersAt(dir, asOf)
-    val (nDocs, tTokens) = members.map(metaOf(dir, _))
-      .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+    val members = store.members(dir, asOf)
+    val (nDocs, tTokens) = corpusConstants(dir, members)
     val buckets = terms.map(t =>
       java.lang.Math.floorMod(PortableHash.charHashLocal(t), Buckets.toLong))
       .distinct
-    val post = members.map(m => graft.core.Graft.cachedSchemaParquet(spark, s"$dir/$m/postings"))
-      .reduce(_ unionAll _)
+    val post = store.union(spark, dir, members, "postings")
       .filter(col("tb").isin(buckets: _*))
       .filter(col("term").isin(terms: _*))
     val dfT = post.groupBy("term").agg(count(lit(1)).as("df"))

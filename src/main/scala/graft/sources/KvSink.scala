@@ -472,13 +472,7 @@ private[graft] object KvMetaCache {
   private final case class Entry(key: AnyRef, size: Long, mtime: Long,
       value: AnyRef)
 
-  private val MaxEntries = 16384
-  private val cache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, Entry](256, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Entry]): Boolean =
-        size() > MaxEntries
-    })
+  private val cache = new graft.core.LruMap[String, Entry](16384)
 
   /** `read(p)` parsed once per distinct file identity; re-validated by
     * stat on every access. Throws whatever `read` throws on a miss. */
@@ -486,12 +480,14 @@ private[graft] object KvMetaCache {
     val k = p.toAbsolutePath.toString
     val attrs = Files.readAttributes(p, classOf[BasicFileAttributes])
     val id = (attrs.fileKey(), attrs.size(), attrs.lastModifiedTime().toMillis)
-    val hit = cache.get(k)
-    if (hit != null && (hit.key, hit.size, hit.mtime) == id)
-      return hit.value.asInstanceOf[T]
-    val v = read(p)
-    cache.put(k, Entry(id._1, id._2, id._3, v))
-    v
+    cache.get(k) match {
+      case Some(hit) if (hit.key, hit.size, hit.mtime) == id =>
+        hit.value.asInstanceOf[T]
+      case _ =>
+        val v = read(p)
+        cache.put(k, Entry(id._1, id._2, id._3, v))
+        v
+    }
   }
 }
 
@@ -501,7 +497,7 @@ object KvCommitLog {
 
   /** All non-empty lines of one committed manifest/checkpoint, through
     * the immutable-metadata cache — a stat per access, not a read. */
-  private def linesOf(p: java.nio.file.Path): Seq[String] =
+  private[graft] def linesOf(p: java.nio.file.Path): Seq[String] =
     KvMetaCache.cached(p)(q =>
       Files.readAllLines(q).asScala.filter(_.nonEmpty).toSeq)
 
@@ -1048,8 +1044,8 @@ object KvCommitLog {
     * within [keepFrom, latest] is untouched and only genuinely
     * unreachable history is reclaimed. Deliberately touches nothing it
     * cannot account for — entries never named by a dropped manifest
-    * (checkpoints, metas, staging dirs) are left alone. Returns the
-    * deleted entry names. */
+    * (checkpoints, metas, staging dirs) are left alone, and `#` control
+    * lines name no entry. Returns the deleted entry names. */
   def vacuum(dir: java.nio.file.Path, keepFrom: Int): Seq[String] = {
     val vs = versions(dir)
     require(vs.nonEmpty, s"no commit log at $dir — nothing to vacuum")
@@ -1058,20 +1054,22 @@ object KvCommitLog {
       s"vacuum keepFrom $keepFrom out of committed range [1, $latest] at $dir")
     val (dropped, kept) = vs.partition(_._1 < keepFrom)
     def names(ms: Seq[(Int, java.nio.file.Path)]): Set[String] =
-      ms.flatMap { case (_, p) => linesOf(p) }.toSet
+      ms.flatMap { case (_, p) => linesOf(p).filterNot(isCtlLine) }.toSet
     val doomed = (names(dropped) -- names(kept)).toSeq.sorted
-    def rm(f: File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty[File]).foreach(rm)
-      Files.deleteIfExists(f.toPath): Unit
-    }
     doomed.foreach { n =>
-      rm(dir.resolve(n).toFile)
+      rmTree(dir.resolve(n).toFile)
       // reclaim the entry's zone-map sidecar with it (absent for
       // artifact-store members — deleteIfExists is the no-op then)
       Files.deleteIfExists(dir.resolve(KvZoneMap.sidecarName(n))): Unit
     }
     dropped.foreach { case (_, p) => Files.deleteIfExists(p): Unit }
     doomed
+  }
+
+  /** Delete `f` and, for a directory, everything under it. */
+  private[graft] def rmTree(f: File): Unit = {
+    Option(f.listFiles()).getOrElse(Array.empty[File]).foreach(rmTree)
+    Files.deleteIfExists(f.toPath): Unit
   }
 }
 

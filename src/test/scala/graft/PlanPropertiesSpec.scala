@@ -11,7 +11,8 @@ class PlanPropertiesSpec extends AnyFunSuite with SparkSessionFixture {
 
   /** The IsNotNull filters these plan strings pin are inferred by
     * constraint propagation, which `Graft.session` turns off; the pushdown
-    * tests keep checking the plans Spark makes with it on. */
+    * tests check the plans Spark makes with it on, then the plans a
+    * `Graft.session` makes. */
   private def withConstraintPropagation() = {
     val s = spark.newSession()
     s.conf.set("spark.sql.constraintPropagation.enabled", "true")
@@ -27,6 +28,16 @@ class PlanPropertiesSpec extends AnyFunSuite with SparkSessionFixture {
       s"filter not pushed:\n$plan")
     assert(plan.contains("ReadSchema: struct<l_orderkey:bigint,l_quantity:double>"),
       s"columns not pruned:\n$plan")
+    // the plan a Graft.session makes: the predicate itself is pushed,
+    // with no inferred IsNotNull beside it
+    val prod = graft.core.Graft.table(spark, dir, "lineitem")
+      .filter(col("l_quantity") >= 45)
+      .select("l_orderkey", "l_quantity")
+      .queryExecution.executedPlan.toString
+    assert(prod.contains("PushedFilters: [GreaterThanOrEqual(l_quantity,45.0)]"),
+      s"filter not pushed:\n$prod")
+    assert(prod.contains("ReadSchema: struct<l_orderkey:bigint,l_quantity:double>"),
+      s"columns not pruned:\n$prod")
   }
 
   test("partition pruning: reading one partition of a partitioned sink") {
@@ -38,6 +49,12 @@ class PlanPropertiesSpec extends AnyFunSuite with SparkSessionFixture {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [isnotnull(o_orderstatus"),
       s"no partition filter:\n$plan")
+    // the plan a Graft.session makes: the partition filter is the
+    // predicate alone, with no inferred isnotnull
+    val prod = spark.read.parquet(out).filter(col("o_orderstatus") === "F")
+      .queryExecution.executedPlan.toString
+    assert("""PartitionFilters: \[\(o_orderstatus#\d+ = F\)\]""".r
+      .findFirstIn(prod).isDefined, s"no partition filter:\n$prod")
   }
 
   test("global top-k plans as TakeOrderedAndProject, not a full sort") {
