@@ -174,6 +174,21 @@ object Graft {
     else df
   }
 
+  /** A registry query's per-run artifact directory,
+    * `<java.io.tmpdir>/graft_<kind>/<applicationId>/<query>`, deleted
+    * recursively before it is returned. Scoped by applicationId so two
+    * concurrent registry runs on one machine never share (and wipe) each
+    * other's indexes, models or mid-fixpoint state; wiped per run
+    * because resume and version history belong to one logical job,
+    * never to a previous corpus. */
+  def artifactDir(spark: SparkSession, kind: String, query: String): String = {
+    val dir = s"${sys.props("java.io.tmpdir")}/graft_$kind/" +
+      s"${spark.sparkContext.applicationId}/$query"
+    val path = new org.apache.hadoop.fs.Path(dir)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
+    dir
+  }
+
   /** Run `body` with the session's shuffle-partition count scoped to a
     * workload whose per-round cardinality the CALLER knows (fixpoint
     * loops over bounded graphs, stateful streams keyed by a few thousand

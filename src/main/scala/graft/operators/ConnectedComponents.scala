@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   * for near-dup graphs components are tiny (a handful of variants of one
   * document), so 2-4 rounds in practice; a hard cap guards pathological
   * inputs. Each round is ONE shuffle (edge join + min-agg) over the
-  * label table; `localCheckpoint` truncates lineage so the plan does not
-  * grow with iterations. The big-graph refinements (large-star/small-star
+  * label table, run by the [[Fixpoint]] round driver, whose policy
+  * materializes the labels each round so the plan does not grow with
+  * iterations. The big-graph refinements (large-star/small-star
   * alternation, Graphframes-style) keep the same outer loop and swap the
   * propagation step; unnecessary at near-dup component sizes.
   *
@@ -27,62 +28,41 @@ object ConnectedComponents {
 
   /** Returns (id LONG, component LONG): `component` = min vertex id
     * reachable from `id`. `vertices` must cover every id in `edges`
-    * (isolated vertices come out as their own component). */
+    * (isolated vertices come out as their own component). Fails when
+    * the labels still move after `maxIters` rounds. */
   def components(
       vertices: DataFrame, // column: id
       edges: DataFrame, // columns: src, dst
-      maxIters: Int = 20): DataFrame = {
-    val sym = edges.select(col("src"), col("dst"))
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint()
-    var labels = vertices.select(col("id"), col("id").as("component"))
-      .localCheckpoint()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      val prop = sym.join(labels, sym("src") === labels("id"))
-        .select(col("dst").as("id"), col("component"),
-          lit(null).cast("long").as("__old"))
-      val self = labels.select(col("id"), col("component"),
-        col("component").as("__old"))
-      // The stability check rides the round's own materialization as an
-      // observed metric instead of a second pass: each id's group holds
-      // exactly one self row (labels is keyed by id; every propagated id
-      // is a vertex), so max(__old) recovers the previous label and
-      // "component < __old" marks a shrink. One SQL execution per round
-      // instead of two — at high per-job latency (1000-executor clusters,
-      // virtualized drivers) the round cost halves, and the extra join
-      // the old count() needed disappears entirely.
-      val obs = org.apache.spark.sql.Observation()
-      val next = self.unionAll(prop)
-        .groupBy("id").agg(min("component").as("component"),
-          max("__old").as("__old"))
-        .observe(obs, sum(when(col("component") < col("__old"), 1L)
-          .otherwise(0L)).as("changed"))
-        .select("id", "component")
-        .localCheckpoint()
-      val changed = obs.get("changed") match {
-        case l: java.lang.Long => l.longValue
-        case _ => 0L // empty vertex set: sum over zero rows is null
-      }
-      // `next` is materialized (eager checkpoint), and its production was
-      // the last reader of the previous round's blocks — free them NOW.
-      // Leaving superseded checkpoints to the async ContextCleaner let
-      // blocks pile up across rounds/reruns: measured on the sf0.1 bench,
-      // repeated runs degraded 2.6s -> 5.5s and inflated UNRELATED
-      // queries sharing the JVM up to 5x. Must go through the shim:
-      // Dataset.unpersist no-ops on checkpoint storage.
-      org.apache.spark.sql.classic.GraftDatasetShim.unpersistCheckpoint(labels)
-      labels = next
-      converged = changed == 0
-      iter += 1
+      maxIters: Int = 20,
+      policy: Fixpoint.Policy = Fixpoint.Local): DataFrame =
+    componentsRun(vertices, edges, maxIters, policy)._1
+
+  /** [[components]] with the run's round figures: (labels, rounds run
+    * by this call, committed round it resumed from). */
+  def componentsRun(vertices: DataFrame, edges: DataFrame, maxIters: Int,
+      policy: Fixpoint.Policy): (DataFrame, Int, Int) = {
+    // The stability check rides the round's own materialization: each
+    // id's group holds exactly one self row (labels is keyed by id; every
+    // propagated id is a vertex), so max(__old) recovers the previous
+    // label and "component < __old" marks a shrink.
+    val changed = sum(when(col("component") < col("__old"), 1L).otherwise(0L))
+    val r = Fixpoint.run(vertices.sparkSession, policy, maxIters, Some(changed)) { in =>
+      val sym = in("sym", edges.select(col("src"), col("dst"))
+        .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct())
+      Fixpoint.Rounds(
+        vertices.select(col("id"), col("id").as("component")),
+        labels => {
+          val prop = sym.join(labels, sym("src") === labels("id"))
+            .select(col("dst").as("id"), col("component"),
+              lit(null).cast("long").as("__old"))
+          labels.select(col("id"), col("component"), col("component").as("__old"))
+            .unionAll(prop)
+            .groupBy("id").agg(min("component").as("component"),
+              max("__old").as("__old"))
+        })
     }
-    require(converged, s"connected components did not converge in $maxIters rounds")
-    org.apache.spark.sql.classic.GraftDatasetShim.unpersistCheckpoint(sym)
-    // the final `labels` checkpoint stays persisted: it IS the result's
-    // storage (lineage is truncated); its blocks are reaped by the
-    // ContextCleaner once the caller drops the reference.
-    labels
+    require(r.converged, s"connected components did not converge in $maxIters rounds")
+    (r.state, r.rounds, r.resumedFrom)
   }
 }

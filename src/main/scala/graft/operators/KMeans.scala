@@ -107,26 +107,62 @@ object KMeansQuant {
     * consecutive passes (so `fit(_, _, 1)` is pure seed assignment).
     * Returns the final assignment frame (input columns + cluster/distq)
     * and the centroids that produced it. Empty clusters keep their prior
-    * centroid. */
+    * centroid. The update rounds run on the [[Fixpoint]] driver under
+    * `policy`; the per-round state is the K×dim centroid table, held on
+    * the driver (so [[Fixpoint.Local]] spends no job on it) or committed
+    * through the store under [[Fixpoint.Durable]] — durability cannot
+    * change a single assignment. */
   def fit(spark: SparkSession, data: DataFrame, qvCol: String,
-      init: Seq[Seq[Long]], rounds: Int, dim: Int): (DataFrame, Seq[Seq[Long]]) = {
+      init: Seq[Seq[Long]], rounds: Int, dim: Int,
+      policy: Fixpoint.Policy = Fixpoint.Local): (DataFrame, Seq[Seq[Long]]) = {
+    val (cents, _) = lloyd(spark, data, qvCol, init, rounds, dim, policy)
+    (withAssignment(data, qvCol, cents), cents)
+  }
+
+  /** [[fit]] with the run's round figures: (assignment frame, update
+    * rounds run by this call, committed round it resumed from). */
+  def fitRun(spark: SparkSession, data: DataFrame, qvCol: String,
+      init: Seq[Seq[Long]], rounds: Int, dim: Int,
+      policy: Fixpoint.Policy): (DataFrame, Int, Int) = {
+    val (cents, r) = lloyd(spark, data, qvCol, init, rounds, dim, policy)
+    (withAssignment(data, qvCol, cents), r.rounds, r.resumedFrom)
+  }
+
+  private def lloyd(spark: SparkSession, data: DataFrame, qvCol: String,
+      init: Seq[Seq[Long]], rounds: Int, dim: Int,
+      policy: Fixpoint.Policy): (Seq[Seq[Long]], Fixpoint.Result) = {
     import spark.implicits._
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    var cents = init
-    for (_ <- 1 until rounds) {
-      val assigned = withAssignment(data, qvCol, cents)
-      val sums = assigned
-        .select(col("cluster"), col(qvCol))
-        .as[(Long, Seq[Long])]
-        .groupByKey(_._1).mapValues(_._2)
-        .agg(TypedAggregates.LongVectorSum(dim).toColumn)
-        .collect()
-      val updated = sums.map { case (cid, (s, n)) =>
-        cid -> s.map(x => graft.functions.VecOps.qround(x.toDouble / n)).toSeq
-      }.toMap
-      cents = cents.indices.map(c => updated.getOrElse(c.toLong, cents(c)))
+    // the last table built here and its rows: the driver-side state is
+    // read back without a query; a resumed durable round is collected
+    var built: (DataFrame, Seq[Seq[Long]]) = (null, Nil)
+    def table(cents: Seq[Seq[Long]]): DataFrame = {
+      val df = cents.zipWithIndex.map { case (cv, cid) => (cid.toLong, cv) }
+        .toDF("cid", "cv")
+      built = (df, cents)
+      df
     }
-    (withAssignment(data, qvCol, cents), cents)
+    def centroids(state: DataFrame): Seq[Seq[Long]] =
+      if (state eq built._1) built._2
+      else state.select("cid", "cv").as[(Long, Seq[Long])]
+        .collect().sortBy(_._1).map(_._2).toSeq
+    // the last assignment pass has no update: rounds-1 fixed update rounds
+    val r = Fixpoint.run(spark, policy, rounds - 1) { _ =>
+      Fixpoint.Rounds(table(init), state => {
+        val cents = centroids(state)
+        val sums = withAssignment(data, qvCol, cents)
+          .select(col("cluster"), col(qvCol))
+          .as[(Long, Seq[Long])]
+          .groupByKey(_._1).mapValues(_._2)
+          .agg(TypedAggregates.LongVectorSum(dim).toColumn)
+          .collect()
+        val updated = sums.map { case (cid, (s, n)) =>
+          cid -> s.map(x => graft.functions.VecOps.qround(x.toDouble / n)).toSeq
+        }.toMap
+        table(cents.indices.map(c => updated.getOrElse(c.toLong, cents(c))))
+      })
+    }
+    (centroids(r.state), r)
   }
 
   /** Fit the `m` per-subspace PQ codebooks CONCURRENTLY: the Lloyd

@@ -77,8 +77,8 @@ final class MemberStore(kind: String, format: Int, noun: String,
 
   /** Commit `staged`, derived from the snapshot at version `from`, as
     * `gen-(from+1)` naming only it — CAS: any commit after `from`
-    * supersedes the derivation, so the commit throws (the staged member
-    * stays an unnamed orphan) and the caller re-runs. */
+    * supersedes the derivation, so the commit deletes the staged member
+    * and throws, and the caller re-runs. */
   def commitCompaction(dir: String, staged: String, from: Int): Int =
     commit(dir, staged, v => s"gen-$v", name => Seq(name), Some(from))
 

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Graft._
-import graft.operators.{AsOfRangeJoins, TypedAggregates}
+import graft.operators.{AsOfRangeJoins, Fixpoint, TypedAggregates}
 import graft.operators.PortableHash.{charHashSql, minhashSigSql, P}
 
 /** Range/as-of joins and typed custom aggregates (SURVEY §2.2 Joins +
@@ -634,12 +634,12 @@ object Advanced extends QueryGroup {
 
   /** Convergence-driven fixpoint variant of [[integerPageRank]]: iterate
     * until NO node's rank changes, with a hard round cap — the
-    * production loop shape (ConnectedComponents' outer loop applied to
-    * message passing). Per round: one equi-join + one hash aggregation,
-    * then `localCheckpoint` truncates lineage so plan depth stays O(1)
+    * production loop shape, run by the [[graft.operators.Fixpoint]]
+    * round driver under `policy`. Per round: one equi-join + one hash
+    * aggregation, materialized by the policy so plan depth stays O(1)
     * across rounds. The convergence check is an OBSERVED metric on the
-    * checkpoint materialization itself (the previous rank rides along as
-    * a column and `r != __prev` is summed map-side) — zero extra jobs.
+    * round's materialization itself (the previous rank rides along as a
+    * column and `r != __prev` is summed map-side) — zero extra jobs.
     * Returns (ranks, roundsRun).
     *
     * The exact-integer fixpoint is ABSORBING: once r_k == r_{k-1} every
@@ -648,69 +648,48 @@ object Advanced extends QueryGroup {
     * is what lets a fixed-depth unrolled SQL oracle gate this query. */
   def integerPageRankFixpoint(
       edges: DataFrame, maxRounds: Int,
+      policy: Fixpoint.Policy = Fixpoint.Local,
       broadcastNodeLimit: Long = 1000000L): (DataFrame, Int) = {
-    val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    // out-degree folded onto each edge ONCE; rounds reuse the blocks
-    val ed = edges.join(outdeg, "src")
-      .select(col("src"), col("dst"), col("deg")).localCheckpoint()
-    val nodes = ed.select(col("src").as("node"))
-      .union(ed.select(col("dst").as("node"))).distinct().localCheckpoint()
-    // a bounded rank vector broadcasts: the per-round message join then
-    // streams the edge list map-side with NO edge shuffle (measured 3.6×
-    // on the sf0.1 supplier-part graph). Past the limit — web-scale node
-    // counts — every side hash-partitions on the key instead, the
-    // message-passing shape that survives any node count.
-    val bcast = nodes.count() <= broadcastNodeLimit
-    def maybeB(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
-    var ranks = nodes.withColumn("r", lit(1000000L))
-    var rounds = 0
-    var stable = false
-    // superseded per-round checkpoints are unpersisted as soon as the
-    // next round's checkpoint is materialized — same block-leak
-    // discipline as ConnectedComponents.components (async ContextCleaner
-    // reaping measurably degraded repeated runs).
-    var prevCk: Option[DataFrame] = None
-    while (!stable && rounds < maxRounds) {
-      val contrib = ed
-        .join(maybeB(ranks.withColumnRenamed("node", "src")), "src")
-        .select(col("dst").as("node"), expr("r div deg").as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("s"))
-      // stability observed DURING the checkpoint materialization — one
-      // SQL execution per round instead of two (the old limit(1) count
-      // re-read the checkpointed blocks as a separate job; per-job fixed
-      // cost is what dominates small-round fixpoints on high-latency
-      // schedulers)
-      val obs = org.apache.spark.sql.Observation()
-      val next = nodes.join(maybeB(contrib), Seq("node"), "left")
-        .join(maybeB(ranks.withColumnRenamed("r", "__prev")), "node")
-        .select(col("node"),
-          expr("CAST(150000 + (850 * coalesce(s, 0)) div 1000 AS BIGINT)").as("r"),
-          col("__prev"))
-        .observe(obs, sum(when(col("r") =!= col("__prev"), 1L)
-          .otherwise(0L)).as("changed"))
-        .localCheckpoint()
-      stable = (obs.get("changed") match {
-        case l: java.lang.Long => l.longValue
-        case _ => 0L // empty graph: sum over zero rows is null
-      }) == 0
-      // through the shim — Dataset.unpersist no-ops on checkpoint storage
-      prevCk.foreach(
-        org.apache.spark.sql.classic.GraftDatasetShim.unpersistCheckpoint)
-      prevCk = Some(next)
-      ranks = next.select("node", "r")
-      rounds += 1
-    }
-    // When no round ran (maxRounds == 0, or an instantly-stable graph
-    // before the first iteration), the RETURNED ranks still derives from
-    // the `nodes` checkpoint — unpersisting it here would destroy live
-    // blocks with no recovery (localCheckpoint truncates lineage). Only
-    // release ed/nodes once at least one round has superseded them with
-    // its own checkpoint.
-    if (rounds > 0) {
-      org.apache.spark.sql.classic.GraftDatasetShim.unpersistCheckpoint(ed)
-      org.apache.spark.sql.classic.GraftDatasetShim.unpersistCheckpoint(nodes)
-    }
+    val (ranks, rounds, _) =
+      integerPageRankRun(edges, maxRounds, policy, broadcastNodeLimit)
     (ranks, rounds)
+  }
+
+  /** [[integerPageRankFixpoint]] with the run's round figures: (ranks,
+    * rounds run by this call, committed round it resumed from). */
+  def integerPageRankRun(edges: DataFrame, maxRounds: Int,
+      policy: Fixpoint.Policy,
+      broadcastNodeLimit: Long = 1000000L): (DataFrame, Int, Int) = {
+    val changed = sum(when(col("r") =!= col("__prev"), 1L).otherwise(0L))
+    val res = Fixpoint.run(edges.sparkSession, policy, maxRounds, Some(changed)) { in =>
+      val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      // out-degree folded onto each edge ONCE; rounds reuse the input
+      val ed = in("edges",
+        edges.join(outdeg, "src").select(col("src"), col("dst"), col("deg")))
+      val nodes = in("nodes", ed.select(col("src").as("node"))
+        .union(ed.select(col("dst").as("node"))).distinct())
+      // a bounded rank vector broadcasts: the per-round message join then
+      // streams the edge list map-side with NO edge shuffle (measured 3.6×
+      // on the sf0.1 supplier-part graph). Past the limit — web-scale node
+      // counts — every side hash-partitions on the key instead, the
+      // message-passing shape that survives any node count.
+      val bcast = nodes.count() <= broadcastNodeLimit
+      def maybeB(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
+      Fixpoint.Rounds(
+        nodes.withColumn("r", lit(1000000L)),
+        ranks => {
+          val contrib = ed
+            .join(maybeB(ranks.withColumnRenamed("node", "src")), "src")
+            .select(col("dst").as("node"), expr("r div deg").as("c"))
+            .groupBy(col("node")).agg(sum(col("c")).as("s"))
+          nodes.join(maybeB(contrib), Seq("node"), "left")
+            .join(maybeB(ranks.withColumnRenamed("r", "__prev")), "node")
+            .select(col("node"),
+              expr("CAST(150000 + (850 * coalesce(s, 0)) div 1000 AS BIGINT)").as("r"),
+              col("__prev"))
+        })
+    }
+    (res.state, res.rounds, res.resumedFrom)
   }
 
   /** Fixed-iteration integer PageRank over the supplier↔part bipartite
@@ -831,10 +810,10 @@ object Advanced extends QueryGroup {
     },
     Some(pagerankUnrolledSql(PrFixpointCap)))
 
-  /** The same fixpoint gate through DURABLE round checkpoints
-    * (operators/DurableIteration.pageRankFixpointDurable): round state
-    * commits through the store each iteration, so executor loss is a
-    * stage retry and driver loss resumes at the last committed round —
+  /** The same fixpoint gate under the DURABLE round policy
+    * (`Fixpoint.Durable`): round state commits through the store each
+    * iteration, so executor loss is a stage retry and driver loss
+    * resumes at the last committed round —
     * the posture an hours-long 100 TB fixpoint needs
     * (DurableIterationKillSpec kills real executors mid-iteration and
     * hash-matches). Checkpoint dir wiped per run: resume belongs to one
@@ -843,17 +822,11 @@ object Advanced extends QueryGroup {
   private val qGraphPagerankDurable = Q(
     "q_graph_pagerank_durable",
     (s, dir) => {
-      // applicationId-scoped: two concurrent registry runs on one machine
-      // must never share (and wipe) each other's mid-fixpoint state
-      val ckpt = s"${sys.props("java.io.tmpdir")}/graft_ckpt/" +
-        s"${s.sparkContext.applicationId}/q_graph_pagerank_durable"
-      val fs = new org.apache.hadoop.fs.Path(ckpt)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
+      val ckpt = artifactDir(s, "ckpt", "q_graph_pagerank_durable")
       // small-graph rounds: shuffle partitions scoped to key count
       graft.core.Graft.withShufflePartitions(s, 8) {
-        graft.operators.DurableIteration
-          .pageRankFixpointDurable(supplierPartEdges(s, dir), PrFixpointCap, ckpt)._1
+        integerPageRankFixpoint(supplierPartEdges(s, dir), PrFixpointCap,
+          Fixpoint.Durable(ckpt))._1
       }.orderBy(col("r").desc, col("node")).limit(25)
     },
     Some(pagerankUnrolledSql(PrFixpointCap)))

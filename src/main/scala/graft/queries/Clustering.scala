@@ -146,10 +146,10 @@ object Clustering extends QueryGroup {
              FROM pairs WHERE cosine >= 0.3
              GROUP BY vec_b, cluster ORDER BY vec_b"""))
 
-  /** Durable-round k-means twin: same three Lloyd passes, centroid table
-    * committed through the store each round (the ML-training-loop member
-    * of the DurableIteration family — crash between rounds resumes from
-    * the last committed centroids instead of re-paying the scans).
+  /** Durable-round k-means: same three Lloyd passes under the
+    * `Fixpoint.Durable` policy, centroid table committed through the
+    * store each round (crash between rounds resumes from the last
+    * committed centroids instead of re-paying the scans).
     * Durability must not change a single assignment: same oracle as
     * q_cluster_kmeans. */
   private val qClusterKmeansDurable = Q(
@@ -161,15 +161,9 @@ object Clustering extends QueryGroup {
       val seeds = data.filter(col("vec_id").between(SeedLo, SeedHi))
         .orderBy("vec_id")
         .select("qv").as[Seq[Long]].collect().toSeq
-      // applicationId-scoped: two concurrent registry runs on one machine
-      // must never share (and wipe) each other's mid-fixpoint state
-      val ckpt = s"${sys.props("java.io.tmpdir")}/graft_ckpt/" +
-        s"${s.sparkContext.applicationId}/q_cluster_kmeans_durable"
-      val fs = new org.apache.hadoop.fs.Path(ckpt)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-      val (assigned, _, _) = graft.operators.DurableIteration.kMeansDurable(
-        data, "qv", seeds, Rounds, Dim, ckpt)
+      val ckpt = artifactDir(s, "ckpt", "q_cluster_kmeans_durable")
+      val (assigned, _) = KMeansQuant.fit(s, data, "qv", seeds, Rounds, Dim,
+        graft.operators.Fixpoint.Durable(ckpt))
       assigned.select(col("vec_id"), col("cluster"), col("distq"))
         .orderBy("vec_id")
     },
@@ -262,11 +256,7 @@ object Clustering extends QueryGroup {
   private val qSimIvfPersisted = Q(
     "q_sim_ivf_persisted",
     (s, dir) => {
-      val idx = s"${sys.props("java.io.tmpdir")}/graft_ann/" +
-        s"${s.sparkContext.applicationId}/q_sim_ivf_persisted"
-      val fs = new org.apache.hadoop.fs.Path(idx)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(idx), true)
+      val idx = artifactDir(s, "ann", "q_sim_ivf_persisted")
       val e = table(s, dir, "embeddings").select("vec_id", "embedding")
       graft.operators.AnnIndex.build(e, "vec_id", "embedding",
         (SeedLo until SeedLo + K).toSeq, Rounds, Dim, idx)
@@ -364,11 +354,7 @@ object Clustering extends QueryGroup {
   private val qSimIvfIncremental = Q(
     "q_sim_ivf_incremental",
     (s, dir) => {
-      val idx = s"${sys.props("java.io.tmpdir")}/graft_ann/" +
-        s"${s.sparkContext.applicationId}/q_sim_ivf_incremental"
-      val fs = new org.apache.hadoop.fs.Path(idx)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(idx), true)
+      val idx = artifactDir(s, "ann", "q_sim_ivf_incremental")
       val e = table(s, dir, "embeddings").select("vec_id", "embedding")
       graft.operators.AnnIndex.build(
         e.filter(!col("vec_id").between(300, 399)), "vec_id", "embedding",
@@ -392,11 +378,7 @@ object Clustering extends QueryGroup {
   private val qSimIvfCompacted = Q(
     "q_sim_ivf_compacted",
     (s, dir) => {
-      val idx = s"${sys.props("java.io.tmpdir")}/graft_ann/" +
-        s"${s.sparkContext.applicationId}/q_sim_ivf_compacted"
-      val fs = new org.apache.hadoop.fs.Path(idx)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(idx), true)
+      val idx = artifactDir(s, "ann", "q_sim_ivf_compacted")
       val e = table(s, dir, "embeddings").select("vec_id", "embedding")
       graft.operators.AnnIndex.build(
         e.filter(!col("vec_id").between(300, 399)), "vec_id", "embedding",
@@ -651,11 +633,7 @@ object Clustering extends QueryGroup {
   private val qSimIvfPqPersisted = Q(
     "q_sim_ivfpq_persisted",
     (s, dir) => {
-      val idx = s"${sys.props("java.io.tmpdir")}/graft_ann/" +
-        s"${s.sparkContext.applicationId}/q_sim_ivfpq_persisted"
-      val fs = new org.apache.hadoop.fs.Path(idx)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(idx), true)
+      val idx = artifactDir(s, "ann", "q_sim_ivfpq_persisted")
       val e = table(s, dir, "embeddings").select("vec_id", "embedding")
       graft.operators.AnnIndex.buildPq(e, "vec_id", "embedding",
         (SeedLo until SeedLo + K).toSeq, Rounds, Dim, idx, m = 4)
@@ -817,11 +795,7 @@ object Clustering extends QueryGroup {
   private val qSimIvfPqResidualPersisted = Q(
     "q_sim_ivfpq_residual_persisted",
     (s, dir) => {
-      val idx = s"${sys.props("java.io.tmpdir")}/graft_ann/" +
-        s"${s.sparkContext.applicationId}/q_sim_ivfpq_residual_persisted"
-      val fs = new org.apache.hadoop.fs.Path(idx)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(idx), true)
+      val idx = artifactDir(s, "ann", "q_sim_ivfpq_residual_persisted")
       val e = table(s, dir, "embeddings").select("vec_id", "embedding")
       graft.operators.AnnIndex.buildPq(e, "vec_id", "embedding",
         (SeedLo until SeedLo + K).toSeq, Rounds, Dim, idx, m = 4,
@@ -856,11 +830,7 @@ object Clustering extends QueryGroup {
   private val qSearchHybridPersisted = Q(
     "q_search_hybrid_persisted",
     (s, dir) => {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_hybrid/" +
-        s"${s.sparkContext.applicationId}/q_search_hybrid_persisted"
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
+      val base = artifactDir(s, "hybrid", "q_search_hybrid_persisted")
       graft.operators.TextIndex.build(
         table(s, dir, "documents"), "doc_id", "text", s"$base/text")
       val e = table(s, dir, "embeddings").select("vec_id", "embedding")

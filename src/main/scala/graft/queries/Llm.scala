@@ -208,31 +208,24 @@ object Llm extends QueryGroup {
     },
     Some(dedupClustersOracle))
 
-  /** The same clustering gate through the DURABLE-round fixpoint
-    * (operators/DurableIteration.componentsDurable): every label-
-    * propagation round commits through the store, so a lost executor is
-    * a stage retry and a lost driver resumes from the last committed
-    * round — the 100 TB posture for iteration depth × fleet size (see
-    * DurableIterationKillSpec for the executor-massacre proof). The
-    * checkpoint dir is wiped per run: resume semantics belong to a
-    * single logical job, and stale converged markers from a previous
-    * corpus must never short-circuit a fresh one. Same oracle as
-    * q_dedup_clusters — durability must not change a single row. */
+  /** The same clustering gate under the DURABLE round policy
+    * (`Fixpoint.Durable`): every label-propagation round commits through
+    * the store, so a lost executor is a stage retry and a lost driver
+    * resumes from the last committed round — the 100 TB posture for
+    * iteration depth × fleet size (see DurableIterationKillSpec for the
+    * executor-massacre proof). The checkpoint dir is wiped per run
+    * ([[graft.core.Graft.artifactDir]]): stale converged markers from a
+    * previous corpus must never short-circuit a fresh one. Same oracle
+    * as q_dedup_clusters — durability must not change a single row. */
   private val qDedupClustersDurable = Q(
     "q_dedup_clusters_durable",
     (s, dir) => {
       val (verts, edges) = dedupClusterGraph(s, dir)
-      // applicationId-scoped: two concurrent registry runs on one machine
-      // must never share (and wipe) each other's mid-fixpoint state
-      val ckpt = s"${sys.props("java.io.tmpdir")}/graft_ckpt/" +
-        s"${s.sparkContext.applicationId}/q_dedup_clusters_durable"
-      val fs = new org.apache.hadoop.fs.Path(ckpt)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-      val (labels, _, _) = graft.core.Graft.withShufflePartitions(s, 8) {
-        graft.operators.DurableIteration.componentsDurable(verts, edges, 20, ckpt)
-      }
-      clusterSizes(labels)
+      val ckpt = artifactDir(s, "ckpt", "q_dedup_clusters_durable")
+      clusterSizes(graft.core.Graft.withShufflePartitions(s, 8) {
+        graft.operators.ConnectedComponents.components(verts, edges, 20,
+          graft.operators.Fixpoint.Durable(ckpt))
+      })
     },
     Some(dedupClustersOracle))
 
@@ -1081,11 +1074,7 @@ object Llm extends QueryGroup {
   private val qTextBm25Persisted = Q(
     "q_text_bm25_persisted",
     (s, dir) => {
-      val idx = s"${sys.props("java.io.tmpdir")}/graft_textindex/" +
-        s"${s.sparkContext.applicationId}/q_text_bm25_persisted"
-      val fs = new org.apache.hadoop.fs.Path(idx)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(idx), true)
+      val idx = artifactDir(s, "textindex", "q_text_bm25_persisted")
       graft.operators.TextIndex.build(
         table(s, dir, "documents"), "doc_id", "text", idx)
       graft.operators.TextIndex.search(s, idx,
@@ -1104,11 +1093,7 @@ object Llm extends QueryGroup {
   private val qTextBm25Incremental = Q(
     "q_text_bm25_incremental",
     (s, dir) => {
-      val idx = s"${sys.props("java.io.tmpdir")}/graft_textindex/" +
-        s"${s.sparkContext.applicationId}/q_text_bm25_incremental"
-      val fs = new org.apache.hadoop.fs.Path(idx)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(idx), true)
+      val idx = artifactDir(s, "textindex", "q_text_bm25_incremental")
       val docs = table(s, dir, "documents")
       graft.operators.TextIndex.build(
         docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", idx)
@@ -1135,11 +1120,7 @@ object Llm extends QueryGroup {
   private val qTextBm25Compacted = Q(
     "q_text_bm25_compacted",
     (s, dir) => {
-      val idx = s"${sys.props("java.io.tmpdir")}/graft_textindex/" +
-        s"${s.sparkContext.applicationId}/q_text_bm25_compacted"
-      val fs = new org.apache.hadoop.fs.Path(idx)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(idx), true)
+      val idx = artifactDir(s, "textindex", "q_text_bm25_compacted")
       val docs = table(s, dir, "documents")
       graft.operators.TextIndex.build(
         docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", idx)

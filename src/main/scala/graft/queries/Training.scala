@@ -1273,11 +1273,7 @@ object Training extends QueryGroup {
   private val qClassifyNbPersisted = Q(
     "q_classify_nb_persisted",
     (s, dir) => {
-      val mdl = s"${sys.props("java.io.tmpdir")}/graft_model/" +
-        s"${s.sparkContext.applicationId}/q_classify_nb_persisted"
-      val fs = new org.apache.hadoop.fs.Path(mdl)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(mdl), true)
+      val mdl = artifactDir(s, "model", "q_classify_nb_persisted")
       val docs = table(s, dir, "documents")
       graft.operators.ModelStore.train(
         docs.filter(col("doc_id") % 5 =!= 0), "lang", "text", mdl)
@@ -1300,11 +1296,7 @@ object Training extends QueryGroup {
   private val qClassifyNbIncremental = Q(
     "q_classify_nb_incremental",
     (s, dir) => {
-      val mdl = s"${sys.props("java.io.tmpdir")}/graft_model/" +
-        s"${s.sparkContext.applicationId}/q_classify_nb_incremental"
-      val fs = new org.apache.hadoop.fs.Path(mdl)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(mdl), true)
+      val mdl = artifactDir(s, "model", "q_classify_nb_incremental")
       val docs = table(s, dir, "documents")
       graft.operators.ModelStore.train(
         docs.filter(col("doc_id") % 5 === 1 || col("doc_id") % 5 === 2),
@@ -1331,11 +1323,7 @@ object Training extends QueryGroup {
   private val qClassifyNbCompacted = Q(
     "q_classify_nb_compacted",
     (s, dir) => {
-      val mdl = s"${sys.props("java.io.tmpdir")}/graft_model/" +
-        s"${s.sparkContext.applicationId}/q_classify_nb_compacted"
-      val fs = new org.apache.hadoop.fs.Path(mdl)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(mdl), true)
+      val mdl = artifactDir(s, "model", "q_classify_nb_compacted")
       val docs = table(s, dir, "documents")
       graft.operators.ModelStore.train(
         docs.filter(col("doc_id") % 5 === 1 || col("doc_id") % 5 === 2),

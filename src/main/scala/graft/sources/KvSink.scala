@@ -760,21 +760,25 @@ object KvCommitLog {
     *   - `Some(base)` (CAS — compaction, whose staged member is DERIVED
     *     from the snapshot at `base`): publish exactly at `base + 1`;
     *     any conflict (member name taken, or the manifest slot won by
-    *     someone else) throws — the staged member stays on disk as an
-    *     orphan no manifest names, the same crash-window shape every
-    *     store already tolerates, and the caller re-runs against the
-    *     new snapshot.
+    *     someone else) throws, and the caller re-runs against the new
+    *     snapshot. Before it throws, the loser deletes the directory it
+    *     staged or claimed: no manifest names it, and under a claimed
+    *     `gen-N` name it would otherwise look committed while `vacuum`
+    *     (which reclaims only names dropped manifests referenced) never
+    *     reclaims it.
     *
     * Returns the committed version. */
   def commitMember(dir: java.nio.file.Path, stagedName: String,
       nameOf: Int => String, manifestOf: (Int, String) => Seq[String],
       expectedBase: Option[Int] = None): Int = {
-    def conflict(what: String): Nothing =
+    def conflict(what: String, held: String): Nothing = {
+      rmTree(dir.resolve(held).toFile)
       throw new IllegalStateException(
         s"concurrent commit at $dir superseded the version-" +
           s"${expectedBase.getOrElse(-1)} snapshot this member was " +
-          s"derived from ($what); staged member left unpublished — " +
+          s"derived from ($what); staged member removed — " +
           "re-run the operation against the new head")
+    }
     // claim a committed member name (atomic no-clobber rename)
     var n = expectedBase.map(_ + 1).getOrElse(latestVersion(dir) + 1)
     var name = stagedName
@@ -785,7 +789,7 @@ object KvCommitLog {
       } catch {
         case _: java.nio.file.FileAlreadyExistsException =>
           if (expectedBase.isDefined)
-            conflict(s"member name ${nameOf(n)} already claimed")
+            conflict(s"member name ${nameOf(n)} already claimed", stagedName)
           n += 1
       }
     }
@@ -794,7 +798,7 @@ object KvCommitLog {
     var v = expectedBase.map(_ + 1).getOrElse(latestVersion(dir) + 1)
     while (true) {
       if (tryAppendAt(dir, v, manifestOf(v, name))) return v
-      if (expectedBase.isDefined) conflict(s"version $v already committed")
+      if (expectedBase.isDefined) conflict(s"version $v already committed", name)
       v = math.max(v + 1, latestVersion(dir) + 1)
     }
     throw new IllegalStateException("unreachable")

@@ -12,7 +12,7 @@ import graft.operators.AnnIndex
   * build (no re-fit, no corpus aggregation in the probe plan),
   * partition-pruned list scans, versioned rebuild with asOf time
   * travel, and rejection of uncommitted (orphan) generations. */
-class AnnIndexSpec extends AnyFunSuite with SparkSessionFixture {
+class AnnIndexSpec extends AnyFunSuite with SparkSessionFixture with TempDirs {
 
   private val sfDir = "/root/testdata/sf0.001"
   private def corpus = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -20,7 +20,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSessionFixture {
 
   private def freshDir(tag: String): String = {
     val d = s"${sys.props("java.io.tmpdir")}/graft_ann_spec/$tag-${System.nanoTime()}"
-    d
+    tempDir(d)
   }
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int, Long, Long)] =

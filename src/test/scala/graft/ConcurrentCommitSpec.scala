@@ -26,7 +26,7 @@ import graft.sources.KvCommitLog
   *     assignments/codes target the dead quantizer;
   *   - genuinely parallel delta writers all land, versions stay dense,
   *     and the converged artifact equals the one-shot build. */
-class ConcurrentCommitSpec extends AnyFunSuite with SparkSessionFixture {
+class ConcurrentCommitSpec extends AnyFunSuite with SparkSessionFixture with TempDirs {
 
   private val sfDir = "/root/testdata/sf0.001"
   private def docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -35,7 +35,7 @@ class ConcurrentCommitSpec extends AnyFunSuite with SparkSessionFixture {
     .select("vec_id", "embedding")
 
   private def freshDir(tag: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_occ_spec/$tag-${System.nanoTime()}"
+    tempDir(s"${sys.props("java.io.tmpdir")}/graft_occ_spec/$tag-${System.nanoTime()}")
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -112,9 +112,15 @@ class ConcurrentCommitSpec extends AnyFunSuite with SparkSessionFixture {
     assert(e.getMessage.contains("concurrent commit"))
 
     // the concurrent delta is the head — nothing was lost to the
-    // aborted compaction, whose member stays an unreferenced orphan
+    // aborted compaction, which removed the member directory it claimed
     assert(TextIndex.latestVersion(dir) == 3)
     assert(TextIndex.members(dir).size == 3)
+    val memberDirs = Files.list(Paths.get(dir)).toArray
+      .map(_.asInstanceOf[java.nio.file.Path]).filter(Files.isDirectory(_))
+      .map(_.getFileName.toString).toSet
+    assert(memberDirs == TextIndex.members(dir).toSet,
+      s"member directories the head manifest does not name: " +
+        s"${memberDirs -- TextIndex.members(dir)}")
     val before = rows(TextIndex.search(spark, dir, terms, 10))
     // rerun against the new snapshot: collapses to one member, same scores
     assert(TextIndex.compact(spark, dir) == 4)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** EXECUTOR-LOSS recovery proof for operators/DurableIteration — the
+/** EXECUTOR-LOSS recovery proof for the `Fixpoint.Durable` policy — the
   * named 100 TB residual of the iterative operators: `localCheckpoint`
   * truncates lineage into executor-local blocks, so at 1000 executors a
   * mid-fixpoint executor death (the expected case, not the edge case)
@@ -28,7 +28,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *      executor massacre and still produces the exact fixpoint;
   *   3. so does the durable pagerank, bit-identical to the clean run.
   */
-class DurableIterationKillSpec extends AnyFunSuite with BeforeAndAfterAll {
+class DurableIterationKillSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
 
   private var spark: SparkSession = _
 
@@ -114,11 +114,11 @@ class DurableIterationKillSpec extends AnyFunSuite with BeforeAndAfterAll {
     // strictly mid-fixpoint with real rounds before AND after it
     val verts = (0L until 8L).toDF("id")
     val edges = (0L until 7L).map(i => (i, i + 1)).toDF("src", "dst")
-    val dir = Files.createTempDirectory("graft_kill_cc").toString
+    val dir = tempDir(Files.createTempDirectory("graft_kill_cc").toString)
     val (labels, rounds, resumedFrom) =
-      graft.operators.DurableIteration.componentsDurable(
-        verts, edges, 30, dir,
-        chaosHook = r => if (r == 2) { killAllExecutors(); () })
+      graft.operators.ConnectedComponents.componentsRun(
+        verts, edges, 30, graft.operators.Fixpoint.Durable(dir,
+        chaosHook = r => if (r == 2) { killAllExecutors(); () }))
     assert(resumedFrom == 0 && rounds >= 7,
       s"full fixpoint must run in this single invocation (rounds=$rounds)")
     assert(removed.get() > 0, "chaos was vacuous — no executor was removed")
@@ -132,12 +132,14 @@ class DurableIterationKillSpec extends AnyFunSuite with BeforeAndAfterAll {
     awaitExecutors(1)
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 1L),
       (4L, 5L), (5L, 6L), (6L, 4L)).toDF("src", "dst")
-    val clean = graft.operators.DurableIteration.pageRankFixpointDurable(
-      edges, 6, Files.createTempDirectory("graft_kill_pr_clean").toString)
+    val clean = graft.queries.Advanced.integerPageRankRun(
+      edges, 6, graft.operators.Fixpoint.Durable(
+        tempDir(Files.createTempDirectory("graft_kill_pr_clean").toString)))
       ._1.orderBy("node").collect().toSeq
-    val (ranks, _, _) = graft.operators.DurableIteration.pageRankFixpointDurable(
-      edges, 6, Files.createTempDirectory("graft_kill_pr").toString,
-      chaosHook = r => if (r == 2) { killAllExecutors(); () })
+    val (ranks, _, _) = graft.queries.Advanced.integerPageRankRun(
+      edges, 6, graft.operators.Fixpoint.Durable(
+        tempDir(Files.createTempDirectory("graft_kill_pr").toString),
+        chaosHook = r => if (r == 2) { killAllExecutors(); () }))
     assert(ranks.orderBy("node").collect().toSeq == clean,
       "executor loss changed the pagerank fixpoint — durability broken")
   }

@@ -11,7 +11,7 @@ import graft.functions.VecOps
   * plus a ScalaCheck differential against a Scala-collections Lloyd
   * implementation over random corpora/seeds — the reference's
   * naive-evaluator discipline (MapReduceC.hs:51-69). */
-class KMeansSpec extends AnyFunSuite with SparkSessionFixture {
+class KMeansSpec extends AnyFunSuite with SparkSessionFixture with TempDirs {
 
   private val dim = 4
 
@@ -121,7 +121,8 @@ class KMeansSpec extends AnyFunSuite with SparkSessionFixture {
     val init = (0L until 3L).map(i =>
       quantizeLocal(Seq.tabulate(dim)(d => ((i % 5) * 0.2f + d * 0.01f))))
     val rounds = 4
-    val ckpt = s"${sys.props("java.io.tmpdir")}/graft_ckpt_test/kmeans-${System.nanoTime()}"
+    val ckpt = tempDir(
+      s"${sys.props("java.io.tmpdir")}/graft_ckpt_test/kmeans-${System.nanoTime()}")
 
     val (memAssigned, memCents) = KMeansQuant.fit(s, data, "qv", init, rounds, dim)
     val want = memAssigned.select("vec_id", "cluster", "distq")
@@ -129,15 +130,15 @@ class KMeansSpec extends AnyFunSuite with SparkSessionFixture {
 
     // crash inside round 2 (after rounds 0→1 and 1→2 updates committed)
     val boom = intercept[RuntimeException] {
-      graft.operators.DurableIteration.kMeansDurable(
-        data, "qv", init, rounds, dim, ckpt,
-        chaosHook = r => if (r == 2) throw new RuntimeException("chaos"))
+      KMeansQuant.fitRun(s,
+        data, "qv", init, rounds, dim, graft.operators.Fixpoint.Durable(ckpt,
+        chaosHook = r => if (r == 2) throw new RuntimeException("chaos")))
       ()
     }
     assert(boom.getMessage == "chaos")
 
     val (resAssigned, ranHere, resumedFrom) =
-      graft.operators.DurableIteration.kMeansDurable(data, "qv", init, rounds, dim, ckpt)
+      KMeansQuant.fitRun(s, data, "qv", init, rounds, dim, graft.operators.Fixpoint.Durable(ckpt))
     assert(resumedFrom == 2, s"expected resume from round 2, got $resumedFrom")
     assert(ranHere == 1)
     val got = resAssigned.select("vec_id", "cluster", "distq")
@@ -146,21 +147,21 @@ class KMeansSpec extends AnyFunSuite with SparkSessionFixture {
 
     // converged marker: re-invocation is an idempotent no-op pass
     val (_, ranAgain, from) =
-      graft.operators.DurableIteration.kMeansDurable(data, "qv", init, rounds, dim, ckpt)
+      KMeansQuant.fitRun(s, data, "qv", init, rounds, dim, graft.operators.Fixpoint.Durable(ckpt))
     assert(ranAgain == 0 && from == rounds - 1)
 
     // resume with a DIFFERENT rounds must fail fast, not silently return
     // centroids from the original training length (both the converged
     // marker and a committed-round-past-the-request path)
     val tooFew = intercept[IllegalStateException] {
-      graft.operators.DurableIteration.kMeansDurable(
-        data, "qv", init, rounds - 1, dim, ckpt)
+      KMeansQuant.fitRun(s,
+        data, "qv", init, rounds - 1, dim, graft.operators.Fixpoint.Durable(ckpt))
       ()
     }
     assert(tooFew.getMessage.contains("converged after"))
     val tooMany = intercept[IllegalStateException] {
-      graft.operators.DurableIteration.kMeansDurable(
-        data, "qv", init, rounds + 2, dim, ckpt)
+      KMeansQuant.fitRun(s,
+        data, "qv", init, rounds + 2, dim, graft.operators.Fixpoint.Durable(ckpt))
       ()
     }
     assert(tooMany.getMessage.contains("converged after"))

@@ -13,7 +13,7 @@ import graft.operators.{AnnIndex, ModelStore, TextIndex}
   * read refuses a manifest whose line is missing (a legacy artifact) or
   * names another kind or version — an artifact written under another
   * member layout fails loudly instead of mis-reading. */
-class MemberStoreSpec extends AnyFunSuite with SparkSessionFixture {
+class MemberStoreSpec extends AnyFunSuite with SparkSessionFixture with TempDirs {
 
   private def docs = {
     import spark.implicits._
@@ -28,7 +28,7 @@ class MemberStoreSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   private def freshDir(tag: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_member_spec/$tag-${System.nanoTime()}"
+    tempDir(s"${sys.props("java.io.tmpdir")}/graft_member_spec/$tag-${System.nanoTime()}")
 
   /** A copy of `dir`'s member directories under a fresh path, published
     * by one hand-written manifest (fresh path: no cached manifest). */

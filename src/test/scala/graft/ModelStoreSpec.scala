@@ -12,14 +12,14 @@ import graft.operators.ModelStore
   * can't see: scoring never re-reads the training documents, crash
   * before the manifest leaves an invisible orphan, delta merging is
   * bit-identical to one-shot training, and asOf pins frozen versions. */
-class ModelStoreSpec extends AnyFunSuite with SparkSessionFixture {
+class ModelStoreSpec extends AnyFunSuite with SparkSessionFixture with TempDirs {
 
   private val sfDir = "/root/testdata/sf0.001"
   private def docs = spark.read.parquet(s"$sfDir/documents.parquet")
     .select("doc_id", "lang", "text")
 
   private def freshDir(tag: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_model_spec/$tag-${System.nanoTime()}"
+    tempDir(s"${sys.props("java.io.tmpdir")}/graft_model_spec/$tag-${System.nanoTime()}")
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, String, Long)] =
     df.select("doc_id", "pred_cls", "total_bits")

@@ -13,14 +13,14 @@ import graft.operators.TextIndex
   * the manifest leaves an invisible orphan, asOf pins frozen versions,
   * and the driver-side bucket hash agrees with the executor-side kernel
   * (a disagreement would silently DROP postings, not just slow down). */
-class TextIndexSpec extends AnyFunSuite with SparkSessionFixture {
+class TextIndexSpec extends AnyFunSuite with SparkSessionFixture with TempDirs {
 
   private val sfDir = "/root/testdata/sf0.001"
   private def docs = spark.read.parquet(s"$sfDir/documents.parquet")
     .select("doc_id", "text")
 
   private def freshDir(tag: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_textindex_spec/$tag-${System.nanoTime()}"
+    tempDir(s"${sys.props("java.io.tmpdir")}/graft_textindex_spec/$tag-${System.nanoTime()}")
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
