@@ -69,7 +69,33 @@ object Graft {
         "graft session is missing GraftExtensions (graft functions or AsOf strategy)")
     spark.sparkContext.setLogLevel("WARN")
     silenceKnownBenignWarnings()
+    removeAppDirsAtEnd(spark.sparkContext)
     spark
+  }
+
+  /** Application ids whose context already carries the listener of
+    * [[removeAppDirsAtEnd]]. */
+  private val cleanedApps = scala.collection.concurrent.TrieMap.empty[String, Unit]
+
+  /** Once per SparkContext: when the application ends, delete every
+    * `<java.io.tmpdir>/graft_<kind>/<applicationId>` directory it left —
+    * the per-run artifact dirs of [[artifactDir]] and the live drip
+    * harness's staging cache. `SparkContext.stop` (and so the JVM's
+    * shutdown hook) drains the listener bus, so the directories are gone
+    * once `stop` returns. */
+  private def removeAppDirsAtEnd(sc: org.apache.spark.SparkContext): Unit = {
+    val app = sc.applicationId
+    if (cleanedApps.putIfAbsent(app, ()).isEmpty)
+      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onApplicationEnd(
+            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
+          val kinds = Option(new java.io.File(sys.props("java.io.tmpdir")).listFiles())
+            .getOrElse(Array.empty[java.io.File])
+            .filter(k => k.getName.startsWith("graft_") && k.isDirectory)
+          kinds.foreach(k =>
+            graft.sources.KvCommitLog.rmTree(new java.io.File(k, app)))
+        }
+      })
   }
 
   /** True iff `spark` was built with [[graft.functions.GraftExtensions]]:
@@ -174,6 +200,12 @@ object Graft {
     else df
   }
 
+  /** `<java.io.tmpdir>/graft_<kind>/<applicationId>`: this application's
+    * directory for one kind of artifact. Nothing is deleted here; the
+    * whole directory goes when the application ends. */
+  def appDir(spark: SparkSession, kind: String): String =
+    s"${sys.props("java.io.tmpdir")}/graft_$kind/${spark.sparkContext.applicationId}"
+
   /** A registry query's per-run artifact directory,
     * `<java.io.tmpdir>/graft_<kind>/<applicationId>/<query>`, deleted
     * recursively before it is returned. Scoped by applicationId so two
@@ -182,29 +214,35 @@ object Graft {
     * because resume and version history belong to one logical job,
     * never to a previous corpus. */
   def artifactDir(spark: SparkSession, kind: String, query: String): String = {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_$kind/" +
-      s"${spark.sparkContext.applicationId}/$query"
+    val dir = s"${appDir(spark, kind)}/$query"
     val path = new org.apache.hadoop.fs.Path(dir)
     path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
     dir
   }
 
+  /** Run `body` with each `key -> value` set on the session. Afterwards
+    * each key gets back the value it had, or is unset if it had none, so
+    * a value the caller's session already carried survives the scope. */
+  def withConf[T](spark: SparkSession, conf: (String, String)*)(body: => T): T = {
+    val saved = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Run `body` with the session's shuffle-partition count scoped to a
     * workload whose per-round cardinality the CALLER knows (fixpoint
-    * loops over bounded graphs, stateful streams keyed by a few thousand
-    * windows). Each shuffle partition pays fixed per-task cost every
-    * round, so a small-keyspace iterative body should run with
-    * partitions ~ keys/target, not the session default sized for the
-    * big relational shuffles — measured 1.4× on the sf0.1 pagerank round
-    * shape (AQE coalescing recovers some, not all, of the gap). The
-    * same rule holds at 100 TB with larger numbers; this is the knob an
-    * operator would raise. Restores the previous value afterwards. */
-  def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
-  }
+    * loops over bounded graphs). Each shuffle partition pays fixed
+    * per-task cost every round, so a small-keyspace iterative body
+    * should run with partitions ~ keys/target, not the session default
+    * sized for the big relational shuffles — measured 1.4× on the sf0.1
+    * pagerank round shape (AQE coalescing recovers some, not all, of the
+    * gap). The same rule holds at 100 TB with larger numbers; this is
+    * the knob an operator would raise. */
+  def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T =
+    withConf(spark, "spark.sql.shuffle.partitions" -> n.toString)(body)
 
   // ---------------------------------------------------------------------
   // Deterministic-arithmetic helpers.

@@ -133,11 +133,7 @@ object Sources extends QueryGroup {
     s.sql(s"DROP TABLE IF EXISTS $name")
     val loc = new java.io.File(
       s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), name)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
-    if (loc.exists()) rm(loc)
+    graft.sources.KvCommitLog.rmTree(loc)
   }
 
   private val qSourceBucketedJoin = Q(
@@ -230,16 +226,8 @@ object Sources extends QueryGroup {
             FROM (SELECT unnest(range(89999993, 90000000)) AS i)
             ORDER BY id DESC"""))
 
-  private def cleanDir(out: String): Unit = {
-    val dirF = new java.io.File(out)
-    if (dirF.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(): Unit
-      }
-      rm(dirF)
-    }
-  }
+  private def cleanDir(out: String): Unit =
+    graft.sources.KvCommitLog.rmTree(new java.io.File(out))
 
   /** Custom DataSource V2 SINK + SOURCE round trip (sources/KvSink →
     * sources/KvSource): per-nation customer counts written through the
@@ -560,11 +548,9 @@ object Sources extends QueryGroup {
         .write.format("graft.sources.KvSinkProvider")
         .option("path", outS).option("partitionColumn", "k")
         .mode("append").save()
-      val oldB = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-      val oldT = s.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
+      withConf(s,
+          "spark.sql.sources.v2.bucketing.enabled" -> "true",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         def rd(p: String, vc: String) =
           s.read.format("graft.sources.KvSourceProvider")
             .option("path", p).option("schema", s"k LONG, $vc LONG")
@@ -576,15 +562,6 @@ object Sources extends QueryGroup {
           .orderBy(col("k"))
           // settle the plan inside the conf window; the gate hashes rows
           .localCheckpoint()
-      } finally {
-        oldB match {
-          case Some(v) => s.conf.set("spark.sql.sources.v2.bucketing.enabled", v)
-          case None => s.conf.unset("spark.sql.sources.v2.bucketing.enabled")
-        }
-        oldT match {
-          case Some(v) => s.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
-          case None => s.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        }
       }
     },
     Some("""SELECT c_nationkey AS k, count(*) AS n_pairs,
@@ -624,16 +601,13 @@ object Sources extends QueryGroup {
         .write.format("graft.sources.KvSinkProvider")
         .option("path", outL).option("partitionColumn", "b")
         .mode("append").save()
-      val oldB = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-      val oldT = s.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
       // join keys {k, b} are a SUPERSET of partition keys {b}: sound
       // (equal b => same split pair) but gated by a planner conf that
       // defaults to requiring the full key match
-      val oldR = s.conf.getOption("spark.sql.requireAllClusterKeysForCoPartition")
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      s.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      try {
+      withConf(s,
+          "spark.sql.sources.v2.bucketing.enabled" -> "true",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.requireAllClusterKeysForCoPartition" -> "false") {
         def rd(p: String, vc: String) =
           s.read.format("graft.sources.KvSourceProvider")
             .option("path", p).option("schema", s"k LONG, b LONG, $vc LONG")
@@ -644,19 +618,6 @@ object Sources extends QueryGroup {
             max(col("cust")).as("cust_max"))
           .orderBy(col("b"))
           .localCheckpoint()
-      } finally {
-        oldB match {
-          case Some(v) => s.conf.set("spark.sql.sources.v2.bucketing.enabled", v)
-          case None => s.conf.unset("spark.sql.sources.v2.bucketing.enabled")
-        }
-        oldT match {
-          case Some(v) => s.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
-          case None => s.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        }
-        oldR match {
-          case Some(v) => s.conf.set("spark.sql.requireAllClusterKeysForCoPartition", v)
-          case None => s.conf.unset("spark.sql.requireAllClusterKeysForCoPartition")
-        }
       }
     },
     Some("""SELECT o_orderkey % 32 AS b, count(*) AS n_lines,
@@ -1146,12 +1107,8 @@ object Sources extends QueryGroup {
       docs.write.partitionBy("lang").mode("overwrite").parquet(stage)
       val delta = docs.filter(col("lang") === "en" && col("doc_id") % 2 === 0)
         .withColumn("text", upper(col("text")))
-      val saved = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try delta.write.partitionBy("lang").mode("overwrite").parquet(stage)
-      finally saved match {
-        case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
+      withConf(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+        delta.write.partitionBy("lang").mode("overwrite").parquet(stage)
       }
       graft.core.Graft.cachedSchemaParquet(s, stage)
         .groupBy(col("lang"))

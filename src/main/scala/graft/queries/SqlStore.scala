@@ -528,9 +528,9 @@ object SqlStore extends QueryGroup {
       table(s, dir, "orders").createOrReplaceTempView("orders_dv_v")
       s.sql("""INSERT INTO graftkv.cat.t_dvdel
                SELECT o_orderkey, o_custkey, o_orderpriority FROM orders_dv_v""")
-      s.conf.set("spark.graft.store.deleteMode", "dv")
-      try s.sql("DELETE FROM graftkv.cat.t_dvdel WHERE k >= 1000 AND k < 3000")
-      finally s.conf.unset("spark.graft.store.deleteMode")
+      withConf(s, "spark.graft.store.deleteMode" -> "dv") {
+        s.sql("DELETE FROM graftkv.cat.t_dvdel WHERE k >= 1000 AND k < 3000")
+      }
       val merged = s.sql( // merge-on-read view, pinned by version
         "SELECT CAST(2 AS BIGINT) AS snap, * FROM graftkv.cat.t_dvdel VERSION AS OF 2")
       s.sql("CALL graftkv.system.purge_dvs('cat.t_dvdel')").collect()
@@ -575,9 +575,9 @@ object SqlStore extends QueryGroup {
       s.sql("""INSERT INTO graftkv.cat.t_hist
                SELECT /*+ REPARTITION(4) */ o_orderkey, o_custkey
                FROM orders_hist_v""")
-      s.conf.set("spark.graft.store.deleteMode", "dv")
-      try s.sql("DELETE FROM graftkv.cat.t_hist WHERE k >= 1000 AND k < 3000")
-      finally s.conf.unset("spark.graft.store.deleteMode")
+      withConf(s, "spark.graft.store.deleteMode" -> "dv") {
+        s.sql("DELETE FROM graftkv.cat.t_hist WHERE k >= 1000 AND k < 3000")
+      }
       s.sql("CALL graftkv.system.compact('cat.t_hist', 2)").collect()
       s.sql("""SELECT CAST(version AS BIGINT) AS version, kind, rows_added,
                  dvs_attached > 0 AS attached
@@ -658,9 +658,9 @@ object SqlStore extends QueryGroup {
       table(s, dir, "orders").createOrReplaceTempView("orders_rest_v")
       s.sql("""INSERT INTO graftkv.cat.t_rest
                SELECT o_orderkey, o_custkey FROM orders_rest_v""") // v1
-      s.conf.set("spark.graft.store.deleteMode", "dv")
-      try s.sql("DELETE FROM graftkv.cat.t_rest WHERE k >= 1000 AND k < 3000") // v2
-      finally s.conf.unset("spark.graft.store.deleteMode")
+      withConf(s, "spark.graft.store.deleteMode" -> "dv") {
+        s.sql("DELETE FROM graftkv.cat.t_rest WHERE k >= 1000 AND k < 3000") // v2
+      }
       // v3: UNDO the vector delete — live set identical, vectors detach
       s.sql("CALL graftkv.system.restore('cat.t_rest', 1)").collect()
       s.sql("DELETE FROM graftkv.cat.t_rest WHERE k >= 500 AND k < 800") // v4 (CoW)
@@ -709,9 +709,9 @@ object SqlStore extends QueryGroup {
       s.sql("""INSERT INTO graftkv.cat.t_files
                SELECT /*+ REPARTITION(4) */ o_orderkey, o_custkey
                FROM orders_files_v""")
-      s.conf.set("spark.graft.store.deleteMode", "dv")
-      try s.sql("DELETE FROM graftkv.cat.t_files WHERE k >= 1000 AND k < 3000")
-      finally s.conf.unset("spark.graft.store.deleteMode")
+      withConf(s, "spark.graft.store.deleteMode" -> "dv") {
+        s.sql("DELETE FROM graftkv.cat.t_files WHERE k >= 1000 AND k < 3000")
+      }
       s.sql("""SELECT count(*) AS files, CAST(sum(rows) AS BIGINT) AS rows,
                  CAST(sum(dv_rows) AS BIGINT) AS dv_rows,
                  CAST(sum(rows) - sum(dv_rows) AS BIGINT) AS live_rows,

@@ -1,18 +1,26 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Graft._
-import graft.streaming.EventStreams
+import graft.streaming.{Drip, EventStreams}
 
 /** Batch twins of the Structured-Streaming operators (unified API: the
   * exact same transform functions run on readStream in
   * graft.StreamingSpec). These rows are what the streaming versions
   * converge to on the bounded events table, so gating them gates the
-  * shared logic.
+  * shared logic. The `_live`, ingest and serving gates run the real
+  * streaming runtime on the drip harness ([[graft.streaming.Drip]]);
+  * each supplies its feed, its transform or `foreachBatch` body, its
+  * sink and its read-back.
   */
 object Streaming extends QueryGroup {
+
+  /** The state store provider that transformWithState needs: its typed
+    * state variables are column-family backed. */
+  private val RocksDbProvider = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   private val qStreamTumbling = Q(
     "q_stream_tumbling",
@@ -103,19 +111,11 @@ object Streaming extends QueryGroup {
       // report throws RpcEndpointNotFoundException out of the task, so
       // the coordinator is force-created first (shim).
       org.apache.spark.sql.classic.GraftDatasetShim.ensureStateStoreCoordinator(s)
-      val confs = Seq(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val saved = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try EventStreams.userLedger(
-          EventStreams.toTyped(table(s, dir, "events")))
-        .toDF()
-        .localCheckpoint()
-        .orderBy(col("user_id"))
-      finally saved.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
+      withConf(s, RocksDbProvider) {
+        EventStreams.userLedger(EventStreams.toTyped(table(s, dir, "events")))
+          .toDF()
+          .localCheckpoint()
+          .orderBy(col("user_id"))
       }
     },
     Some("""WITH tc AS (
@@ -184,95 +184,42 @@ object Streaming extends QueryGroup {
              AND s.ts <= p.ts AND s.ts >= p.ts - INTERVAL 7 DAY
             ORDER BY p.user_id, purchase_id, s_ts"""))
 
-  /** The LIVE left-outer stream-stream join under the driver gate — the
-    * real streaming runtime (file-source drips, per-side watermarks,
-    * state eviction), landed in chronological order with watermark-flush
-    * sentinels:
-    *  - real events arrive as 3 ts-range-partitioned drops, so no real
-    *    row is ever behind the watermark;
-    *  - drop 4 carries one far-future purchase and one far-future signup
-    *    sentinel (reserved user ids -100/-200 that can never match a
-    *    real row or each other) — BOTH side watermarks must advance,
-    *    because the global watermark is their min;
-    *  - drop 5 repeats the sentinels at the SAME event time: null
-    *    emission happens in the first batch whose watermark (set by the
-    *    PREVIOUS batch) clears the purchases, so the gate does not rely
-    *    on no-data micro-batches — and because the sentinel time never
-    *    advances past drop 4's, the final watermark (sentinel − 1 h)
-    *    never clears the sentinels themselves.
-    * The sentinels therefore never surface (signup sentinels produce no
-    * left rows at all), and the converged sink equals the batch twin —
-    * same oracle as q_stream_join_outer, produced by the bounded-state
-    * append path. */
-  /** Shared live driver for the outer-join family: drip the staged
-    * ts-range drops plus the two-sided watermark-flush sentinels through
-    * a parquet file source into `joinFn`'s append stream. The sentinel
-    * reasoning in [[qStreamJoinOuterLive]]'s doc applies to BOTH outer
-    * variants: sentinel users −100/−200 can never match anything, drop 5
-    * repeats drop 4's event time so the final watermark (sentinel − 1 h)
-    * never clears the sentinels — left-side sentinel null rows never
-    * emit, and in the FULL variant the signup sentinel's eviction bound
-    * (s_ts + 7 d) is further still, so it never surfaces either. */
-  private def outerJoinLive(s: SparkSession, dir: String, variant: String,
-      joinFn: DataFrame => DataFrame): DataFrame = {
-    {
-      val events = table(s, dir, "events")
-      val root = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft-stream-join-$variant")
-      // staged drops AND sentinels are a pure function of the source dir
-      // — cache the whole set per dir, repeated runs pay zero staging
-      val cache = root.resolve("cache2-" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-      val staged = cache.resolve("staged")
-      val flushA = cache.resolve("flush_a")
-      val flushB = cache.resolve("flush_b")
-      if (!staged.resolve("_SUCCESS").toFile.exists() ||
-          !flushB.resolve("_SUCCESS").toFile.exists()) {
-        events.repartitionByRange(2, col("ts"))
-          .write.mode("overwrite").parquet(staged.toString)
-        val mx = events.agg(
-          max(unix_micros(col("ts").cast("timestamp")))).collect()(0).getLong(0)
-        def sentinel(path: java.nio.file.Path, tsUs: Long): Unit = {
-          import s.implicits._
-          Seq((-100L, tsUs, "purchase"), (-200L, tsUs, "signup"))
-            .toDF("user_id", "ts_us", "event_type")
-            .select(lit(-1L).as("event_id"),
-              timestamp_micros(col("ts_us")).cast("timestamp_ntz").as("ts"),
-              col("user_id"), col("event_type"),
-              lit(0.0).as("value"), lit("").as("props"))
-            .coalesce(1).write.mode("overwrite").parquet(path.toString)
-        }
-        val flushUs = mx + 30L * 24 * 3600 * 1000000L
-        sentinel(flushA, flushUs)
-        sentinel(flushB, flushUs)
-      }
-      val srcRoot = root.resolve("src")
-      if (srcRoot.toFile.exists()) rmTree(srcRoot.toFile)
-      java.nio.file.Files.createDirectories(srcRoot)
-      def files(p: java.nio.file.Path) = new java.io.File(p.toString)
-        .listFiles().filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      val sink = s"graft_stream_join_${variant}_sink"
-      withStatePartitions(s, 4) {
-        val q = joinFn(
-            s.readStream.schema(events.schema).parquet(srcRoot.toString))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try {
-          (files(staged) ++ files(flushA) ++ files(flushB))
-            .zipWithIndex.foreach { case (f, i) =>
-              dropAtomic(f, srcRoot, s"drop_$i.parquet")
-              q.processAllAvailable()
-            }
-        } finally q.stop()
-      }
-      s.table(sink)
-        .orderBy(col("user_id"), col("purchase_id"), col("s_ts"))
-    }
+  /** The outer-join family's two flush drops, both with one purchase
+    * and one signup sentinel (reserved users −100/−200) a month past
+    * max(ts), at the SAME event time. Why they never surface: the
+    * outer-join paragraph of [[graft.streaming.Drip]]. */
+  private def joinFlush(events: DataFrame): Seq[DataFrame] = {
+    import events.sparkSession.implicits._
+    val mx = events.agg(
+      max(unix_micros(col("ts").cast("timestamp")))).collect()(0).getLong(0)
+    val flushUs = mx + 30L * 24 * 3600 * 1000000L
+    val sentinels = Seq((-100L, flushUs, "purchase"), (-200L, flushUs, "signup"))
+      .toDF("user_id", "ts_us", "event_type")
+      .select(lit(-1L).as("event_id"),
+        timestamp_micros(col("ts_us")).cast("timestamp_ntz").as("ts"),
+        col("user_id"), col("event_type"),
+        lit(0.0).as("value"), lit("").as("props"))
+    Seq(sentinels, sentinels)
   }
 
+  /** The LIVE left-outer stream-stream join under the driver gate — the
+    * real streaming runtime (file-source drips, per-side watermarks,
+    * state eviction): the events land as ts-range drops, then the
+    * two-sided flush drops ([[joinFlush]]). The sentinels never surface
+    * (signup sentinels produce no left rows at all), so the converged
+    * sink equals the batch twin — same oracle as q_stream_join_outer,
+    * produced by the bounded-state append path. */
   private val qStreamJoinOuterLive = Q(
     "q_stream_join_outer_live",
-    (s, dir) =>
-      outerJoinLive(s, dir, "outer", EventStreams.purchaseSignupLeftJoin),
+    (s, dir) => {
+      val events = table(s, dir, "events")
+      Drip(s, "q_stream_join_outer_live").run(dir, events, "ts", joinFlush(events))(
+        df => EventStreams.purchaseSignupLeftJoin(df)
+          .writeStream.format("memory").queryName("graft_stream_join_outer_sink")
+          .outputMode("append").start())
+      s.table("graft_stream_join_outer_sink")
+        .orderBy(col("user_id"), col("purchase_id"), col("s_ts"))
+    },
     Some("""SELECT p.user_id, p.event_id AS purchase_id,
               p.ts AS p_ts, s.ts AS s_ts
             FROM (SELECT * FROM events WHERE event_type = 'purchase') p
@@ -302,8 +249,15 @@ object Streaming extends QueryGroup {
     * passes s_ts + 7 days. Converged sink == batch twin. */
   private val qStreamJoinFullLive = Q(
     "q_stream_join_full_live",
-    (s, dir) =>
-      outerJoinLive(s, dir, "full", EventStreams.purchaseSignupFullJoin),
+    (s, dir) => {
+      val events = table(s, dir, "events")
+      Drip(s, "q_stream_join_full_live").run(dir, events, "ts", joinFlush(events))(
+        df => EventStreams.purchaseSignupFullJoin(df)
+          .writeStream.format("memory").queryName("graft_stream_join_full_sink")
+          .outputMode("append").start())
+      s.table("graft_stream_join_full_sink")
+        .orderBy(col("user_id"), col("purchase_id"), col("s_ts"))
+    },
     Some("""SELECT coalesce(p.user_id, s.user_id) AS user_id,
               p.event_id AS purchase_id, p.ts AS p_ts, s.ts AS s_ts
             FROM (SELECT * FROM events WHERE event_type = 'purchase') p
@@ -327,41 +281,10 @@ object Streaming extends QueryGroup {
     "q_stream_live",
     (s, dir) => {
       val events = table(s, dir, "events")
-      // staged drops cached per source dir (pure function of the input;
-      // complete mode is chunking-independent anyway), COPIED into a
-      // fresh source dir per run — repeated invocations (bench warmup +
-      // iters) pay the staging write once
-      val cache = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), "graft-stream-live",
-        "cache2-" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-      val staged = cache.resolve("staged")
-      if (!staged.resolve("_SUCCESS").toFile.exists())
-        events.repartition(2).write.mode("overwrite").parquet(staged.toString)
-      val srcDir = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), "graft-stream-live", "src")
-      val srcF = srcDir.toFile
-      if (srcF.exists()) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete(): Unit
-        }
-        rm(srcF)
-      }
-      java.nio.file.Files.createDirectories(srcDir)
-      val drops = new java.io.File(staged.toString).listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      withStatePartitions(s, 4) {
-        val q = EventStreams.tumbling(
-            s.readStream.schema(events.schema).parquet(srcDir.toString))
+      Drip(s, "q_stream_live").run(dir, events, "ts")(
+        df => EventStreams.tumbling(df)
           .writeStream.format("memory").queryName("graft_stream_live_sink")
-          .outputMode("complete").start()
-        try {
-          drops.zipWithIndex.foreach { case (f, i) =>
-            dropAtomic(f, srcDir, s"drop_$i.parquet")
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-      }
+          .outputMode("complete").start())
       s.table("graft_stream_live_sink").orderBy(col("ws"), col("event_type"))
     },
     Some(s"""SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS ws,
@@ -370,172 +293,25 @@ object Streaming extends QueryGroup {
                ${moneySumSql("value")} AS value_sum
              FROM events GROUP BY 1, 2, 3 ORDER BY ws, event_type"""))
 
-  /** The APPEND-MODE live stream — the 100 TB streaming shape under the
-    * driver gate. Like q_stream_live the events table is drip-fed through
-    * a parquet file source, but the aggregation carries a 1-hour
-    * watermark and writes in append mode: each window is emitted exactly
-    * once after the watermark passes its end, then its state is evicted —
-    * bounded state, unlike complete mode.
-    *
-    * Determinism engineering (append output depends on watermark
-    * advancement, so the landing order is part of the contract):
-    *  - the staged drops are RANGE-partitioned on ts and landed in
-    *    chronological order, so no real row is ever behind the watermark;
-    *  - a far-future flush sentinel (zz_flush, max ts + 30 d) advances
-    *    the watermark past every real window; a SECOND drop with the same
-    *    sentinel timestamp forces the data batch that emits them (window
-    *    closure is detected one batch after the watermark advances), so
-    *    the gate does not rely on no-data micro-batches; both sentinels
-    *    share one window which never closes → zz_flush never appears;
-    *  - the second flush drop also carries a deliberately LATE row
-    *    (zz_late, at the global min ts, far behind the watermark) which
-    *    the stream must DROP — if append mode failed to drop it, or
-    *    emitted the open flush window, or double-emitted a closed window,
-    *    the sentinel row would surface and the oracle hash would mismatch.
-    * The converged sink therefore equals the plain tumbling aggregation
-    * over events — the same oracle as q_stream_tumbling — but produced by
-    * the bounded-state append path. */
-  /** Publish one drip file ATOMICALLY into a watched stream-source
-    * directory: copy to a dot-hidden temp (hidden names are outside the
-    * file stream source's listing discipline) and rename into place.
-    * A plain copy raced the always-on micro-batch trigger at large SF —
-    * a multi-hundred-MB staged file takes seconds to copy and the
-    * source's listing thread picked up the torn file (FAILED_READ_FILE;
-    * caught by the r13 sf10 full-registry gate — invisible at sf0.01
-    * where the copy wins the race). */
-  private def dropAtomic(src: java.io.File, dstDir: java.nio.file.Path,
-      name: String): Unit = {
-    val tmp = dstDir.resolve(s".$name.tmp")
-    java.nio.file.Files.copy(src.toPath, tmp,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    java.nio.file.Files.move(tmp, dstDir.resolve(name),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
-  }
-
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rmTree)
-    f.delete(): Unit
-  }
-
-  /** Run `body` with the session's shuffle-partition count scoped to the
-    * STATEFUL key cardinality of the live streams (720 hour-windows × 5
-    * event types ≈ 3.6 k keys): each state-store partition pays per-batch
-    * fixed cost (delta file, commit, snapshot bookkeeping), so a stateful
-    * query's partition count should track its key count, not the session
-    * default sized for the big relational shuffles. The same sizing rule
-    * holds at 100 TB — there the key count (and thus the right partition
-    * count) is larger, and this is exactly the knob an operator would
-    * raise. Restores the previous value afterwards. */
-  private def withStatePartitions[T](
-      s: org.apache.spark.sql.SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    // Spark 4.1 writes a companion checksum file for every checkpoint
-    // file (offsets/commits/state deltas) by default — integrity
-    // insurance for long-lived checkpoints on unreliable stores. These
-    // gated streams use EPHEMERAL per-run checkpoints on local disk
-    // (wiped at query start), where the checksums only double the
-    // per-batch small-file count; with ~6 micro-batches and 8 state
-    // partitions that is pure fixed-cost, so scope them off here. A
-    // production deployment with durable checkpoints should leave the
-    // default on.
-    val ckKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    // No-data micro-batches exist to flush event-time state when the
-    // watermark advances without new input. EVERY drip gate here is
-    // engineered to not need them (documented per gate): the second
-    // flush-sentinel drop forces a DATA batch after the watermark
-    // advance, so emission/eviction happens there and a trailing no-data
-    // batch recomputes an empty delta. Measured at sf0.1 they were ~half
-    // the micro-batch count (7 batches for 4 drops on the outer-join
-    // gate), each paying full incremental planning + per-partition state
-    // commits — pure fixed cost, so scope them off for the drip run. The
-    // converged sink is unchanged (oracle-gated; StreamingSpec
-    // differentials run with the default ON, pinning that the transforms
-    // never depend on this knob).
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = s.conf.get(key)
-    val prevCk = s.conf.get(ckKey)
-    val prevNd = s.conf.get(ndKey)
-    // Scale knob (r17): the caller's n is the LOCAL-GATE default; a real
-    // deployment sizes state partitions to its key cardinality via conf
-    // (the same parameterization rule as spark.graft.merge.keyCollectMax).
-    val eff = s.conf.getOption("spark.graft.stream.statePartitions")
-      .map(_.toInt).getOrElse(n)
-    s.conf.set(key, eff.toString)
-    s.conf.set(ckKey, "false")
-    s.conf.set(ndKey, "false")
-    try body finally {
-      s.conf.set(key, prev); s.conf.set(ckKey, prevCk); s.conf.set(ndKey, prevNd)
-    }
-  }
-
-  /** Shared drip-runner for the append-mode live stream: stages (cached
-    * per source dir — a pure function of the input) the chronological
-    * range-partitioned drops + the two flush-sentinel drops, starts the
-    * caller's sink over the watermarked tumbling aggregation, and lands
-    * the drops one micro-batch at a time. */
-  private def runLiveAppend(
-      s: org.apache.spark.sql.SparkSession, dir: String, tag: String)(
-      start: org.apache.spark.sql.DataFrame =>
-        org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    runLiveDrip(s, dir, tag, EventStreams.tumblingAppend)(start)
-
-  /** The drip loop itself, with the streaming transform as a parameter —
-    * runLiveAppend's machinery reused by the event-time-timer
-    * sessionization live gate (any watermarked append-mode transform of
-    * the raw events stream works; the flush sentinels advance the
-    * watermark far past max(ts), so both closed windows AND expired
-    * timers flush before the final drop). */
-  private def runLiveDrip(
-      s: org.apache.spark.sql.SparkSession, dir: String, tag: String,
-      transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)(
-      start: org.apache.spark.sql.DataFrame =>
-        org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val events = table(s, dir, "events")
-    val cache = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-stream-live-append",
-      "cache2-" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-    val staged = cache.resolve("staged")
-    val flushA = cache.resolve("flush_a")
-    val flushB = cache.resolve("flush_b")
-    if (!staged.resolve("_SUCCESS").toFile.exists() ||
-        !flushB.resolve("_SUCCESS").toFile.exists()) {
-      events.repartitionByRange(2, col("ts"))
-        .write.mode("overwrite").parquet(staged.toString)
-      // sentinel drops: scalar min/max only (no data collected)
-      val b = events.agg(
-        min(unix_micros(col("ts").cast("timestamp"))).as("mn"),
-        max(unix_micros(col("ts").cast("timestamp"))).as("mx")).collect()(0)
-      val (mnUs, mxUs) = (b.getLong(0), b.getLong(1))
-      val flushUs = mxUs + 30L * 24 * 3600 * 1000000L
-      def sentinel(path: java.nio.file.Path, rows: Seq[(Long, Long, String)]): Unit = {
-        import s.implicits._
-        rows.toDF("event_id", "ts_us", "event_type")
-          .select(col("event_id"),
-            timestamp_micros(col("ts_us")).cast("timestamp_ntz").as("ts"),
-            lit(-1L).as("user_id"), col("event_type"),
-            lit(0.0).as("value"), lit("").as("props"))
-          .coalesce(1).write.mode("overwrite").parquet(path.toString)
-      }
-      sentinel(flushA, Seq((-1L, flushUs, "zz_flush")))
-      sentinel(flushB, Seq((-2L, flushUs, "zz_flush"), (-3L, mnUs, "zz_late")))
-    }
-    val srcRoot = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-stream-live-append", s"src-$tag")
-    if (srcRoot.toFile.exists()) rmTree(srcRoot.toFile)
-    java.nio.file.Files.createDirectories(srcRoot)
-    def files(p: java.nio.file.Path) = new java.io.File(p.toString)
-      .listFiles().filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    withStatePartitions(s, 4) {
-      val q = start(transform(
-        s.readStream.schema(events.schema).parquet(srcRoot.toString)))
-      try {
-        (files(staged) ++ files(flushA) ++ files(flushB))
-          .zipWithIndex.foreach { case (f, i) =>
-            dropAtomic(f, srcRoot, s"drop_$i.parquet")
-            q.processAllAvailable()
-          }
-      } finally q.stop()
-    }
+  /** The append family's two flush drops: a `zz_flush` sentinel a month
+    * past max(ts), then the same sentinel again beside a `zz_late` row at
+    * min(ts). Why neither surfaces: the append paragraph of
+    * [[graft.streaming.Drip]]. Scalar min/max only; no data is collected. */
+  private def appendFlush(events: DataFrame): Seq[DataFrame] = {
+    import events.sparkSession.implicits._
+    val b = events.agg(
+      min(unix_micros(col("ts").cast("timestamp"))).as("mn"),
+      max(unix_micros(col("ts").cast("timestamp"))).as("mx")).collect()(0)
+    val (mnUs, mxUs) = (b.getLong(0), b.getLong(1))
+    val flushUs = mxUs + 30L * 24 * 3600 * 1000000L
+    def sentinel(rows: Seq[(Long, Long, String)]): DataFrame =
+      rows.toDF("event_id", "ts_us", "event_type")
+        .select(col("event_id"),
+          timestamp_micros(col("ts_us")).cast("timestamp_ntz").as("ts"),
+          lit(-1L).as("user_id"), col("event_type"),
+          lit(0.0).as("value"), lit("").as("props"))
+    Seq(sentinel(Seq((-1L, flushUs, "zz_flush"))),
+      sentinel(Seq((-2L, flushUs, "zz_flush"), (-3L, mnUs, "zz_late"))))
   }
 
   /** LIVE event-time-timer sessionization — the timer half of
@@ -545,8 +321,8 @@ object Streaming extends QueryGroup {
     * open session arms one timer at last-event + gap, and the session
     * closes exactly once when the WATERMARK passes that instant (or
     * inline when a later batch straddles the gap). Chronological drops
-    * land one micro-batch at a time through runLiveDrip; the flush
-    * sentinels push the watermark a month past max(ts), firing every
+    * land one micro-batch at a time through the drip harness; the
+    * [[appendFlush]] sentinels push the watermark a month past max(ts), firing every
     * remaining timer, so the converged emission set equals the one-shot
     * gaps-and-islands sessionization of the whole table — which is
     * exactly the oracle (same 2 h gap as q_stream_session, emitted as
@@ -555,22 +331,17 @@ object Streaming extends QueryGroup {
   private val qStreamSessionTimersLive = Q(
     "q_stream_session_timers_live",
     (s, dir) => {
-      val pk = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(pk)
-      s.conf.set(pk,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        runLiveDrip(s, dir, "timers",
-            df => EventStreams.sessionTimeoutsAppend(df, gapMinutes = 120))(df =>
-          df.writeStream.format("memory")
+      val events = table(s, dir, "events")
+      withConf(s, RocksDbProvider) {
+        Drip(s, "q_stream_session_timers_live").run(dir, events, "ts",
+            appendFlush(events))(
+          df => EventStreams.sessionTimeoutsAppend(df, gapMinutes = 120)
+            .writeStream.format("memory")
             .queryName("graft_stream_session_timers_sink")
             .outputMode("append").start())
         s.table("graft_stream_session_timers_sink")
           .filter(col("user_id") >= 0)
           .orderBy(col("user_id"), col("start_us"))
-      } finally prev match {
-        case Some(v) => s.conf.set(pk, v)
-        case None => s.conf.unset(pk)
       }
     },
     Some("""WITH o AS (
@@ -594,11 +365,21 @@ object Streaming extends QueryGroup {
             FROM g GROUP BY user_id, sid
             ORDER BY user_id, start_us"""))
 
+  /** The APPEND-MODE live stream — the 100 TB streaming shape under the
+    * driver gate. Like q_stream_live the events table is drip-fed through
+    * a parquet file source, but the aggregation carries a 1-hour
+    * watermark and writes in append mode: each window is emitted exactly
+    * once after the watermark passes its end, then its state is evicted —
+    * bounded state, unlike complete mode. The chronological ts-range drops
+    * and the [[appendFlush]] drops make the converged sink equal the
+    * plain tumbling aggregation over events — the same oracle as
+    * q_stream_tumbling — produced by the bounded-state append path. */
   private val qStreamLiveAppend = Q(
     "q_stream_live_append",
     (s, dir) => {
-      runLiveAppend(s, dir, "mem")(df =>
-        df.writeStream.format("memory")
+      val events = table(s, dir, "events")
+      Drip(s, "q_stream_live_append").run(dir, events, "ts", appendFlush(events))(
+        df => EventStreams.tumblingAppend(df).writeStream.format("memory")
           .queryName("graft_stream_live_append_sink")
           .outputMode("append").start())
       s.table("graft_stream_live_append_sink").orderBy(col("ws"), col("event_type"))
@@ -627,26 +408,21 @@ object Streaming extends QueryGroup {
   private val qStreamKvSink = Q(
     "q_stream_kv_sink",
     (s, dir) => {
-      val out = sys.props("java.io.tmpdir") + "/graft-kvsink/q_stream_kv_sink"
-      val outF = new java.io.File(out)
-      if (outF.exists()) rmTree(outF)
-      runLiveAppend(s, dir, "kv")(df =>
-        df.select(
+      val events = table(s, dir, "events")
+      val drip = Drip(s, "q_stream_kv_sink")
+      drip.run(dir, events, "ts", appendFlush(events))(df =>
+        EventStreams.tumblingAppend(df)
+          .select(
             unix_micros(col("ws").cast("timestamp")).as("ws_us"),
             unix_micros(col("we").cast("timestamp")).as("we_us"),
             col("event_type"), col("n"), col("value_sum"))
           .writeStream.outputMode("append")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-            batch.write.format("graft.sources.KvSinkProvider")
-              .option("path", s"$out/batch=$id").option("txnId", s"b$id")
-              .mode("append").save()
+          .foreachBatch { (batch: Dataset[Row], id: Long) =>
+            drip.commit(batch.toDF(), "out", id)
           }
           .start())
-      s.read.format("graft.sources.KvSourceProvider")
-        .option("path", out).option("recursive", "true")
-        .option("schema",
+      drip.committed("out",
           "ws_us LONG, we_us LONG, event_type STRING, n LONG, value_sum DOUBLE")
-        .load()
         .select(
           timestamp_micros(col("ws_us")).cast("timestamp_ntz").as("ws"),
           timestamp_micros(col("we_us")).cast("timestamp_ntz").as("we"),
@@ -680,43 +456,19 @@ object Streaming extends QueryGroup {
   private val qStreamIngest = Q(
     "q_stream_ingest",
     (s, dir) => {
-      val tmp = sys.props("java.io.tmpdir")
-      val root = new java.io.File(s"$tmp/graft-stream-ingest")
-      if (root.exists()) rmTree(root)
-      val store = s"$root/store"
-      val out = s"$root/accepted"
-      val docs = table(s, dir, "documents")
-      val staged = root.toPath.resolve("staged")
-      docs.repartitionByRange(2, col("doc_id"))
-        .write.mode("overwrite").parquet(staged.toString)
-      val srcRoot = root.toPath.resolve("src")
-      java.nio.file.Files.createDirectories(srcRoot)
-      val stream = s.readStream.schema(docs.schema).parquet(srcRoot.toString)
-        .select(col("doc_id"), col("lang"),
-          graft.operators.PortableHash.charHash(col("text")).as("fp"))
-      withStatePartitions(s, 4) {
-        val q = stream.writeStream.outputMode("append")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-            graft.operators.IncrementalIngest
+      val drip = Drip(s, "q_stream_ingest")
+      val store = drip.path("store")
+      drip.run(dir, table(s, dir, "documents"), "doc_id")(
+        _.select(col("doc_id"), col("lang"),
+            graft.operators.PortableHash.charHash(col("text")).as("fp"))
+          .writeStream.outputMode("append")
+          .foreachBatch { (batch: Dataset[Row], id: Long) =>
+            drip.commit(graft.operators.IncrementalIngest
               .ingest(batch.sparkSession, store, id, batch.toDF(),
-                txn = Some(s"b$id"))
-              .write.format("graft.sources.KvSinkProvider")
-              .option("path", s"$out/batch=$id").option("txnId", s"b$id")
-              .mode("append").save()
+                txn = Some(s"b$id")), "accepted", id)
           }
-          .start()
-        try {
-          new java.io.File(staged.toString).listFiles()
-            .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-            .zipWithIndex.foreach { case (f, i) =>
-              dropAtomic(f, srcRoot, s"drop_$i.parquet")
-              q.processAllAvailable()
-            }
-        } finally q.stop()
-      }
-      s.read.format("graft.sources.KvSourceProvider")
-        .option("path", out).option("recursive", "true")
-        .option("schema", "doc_id LONG, lang STRING, fp LONG").load()
+          .start())
+      drip.committed("accepted", "doc_id LONG, lang STRING, fp LONG")
         .orderBy("doc_id")
     },
     Some(s"""WITH fps AS (
@@ -727,7 +479,7 @@ object Streaming extends QueryGroup {
 
   /** LIVE near-dup ingestion: the q_ingest_neardup rounds run as a real
     * stream — the historical crawl's band keys bootstrap the Store
-    * before the stream starts, the delta lands as three doc_id-ranged
+    * before the stream starts, the delta lands as two doc_id-ranged
     * drops, and every micro-batch is one ingestNearDup round (snapshot
     * filter → first-wins → band append) via foreachBatch. Because the
     * all-seen contract makes doc_id-ordered round decomposition
@@ -736,56 +488,32 @@ object Streaming extends QueryGroup {
   private val qStreamIngestNeardup = Q(
     "q_stream_ingest_neardup",
     (s, dir) => {
-      val tmp = sys.props("java.io.tmpdir")
-      val root = new java.io.File(s"$tmp/graft-stream-ingest-neardup")
-      if (root.exists()) rmTree(root)
-      val store = s"$root/store"
-      val out = s"$root/accepted"
+      val drip = Drip(s, "q_stream_ingest_neardup")
+      val store = drip.path("store")
       val docs = table(s, dir, "documents")
       Training.bandedDocs(docs.filter(col("doc_id") % 3 =!= 0))
         .select("bk").distinct()
         .write.format("graft.sources.KvSinkProvider")
         .option("path", s"$store/batch=0").mode("append").save()
-      val delta = docs.filter(col("doc_id") % 3 === 0)
-      val staged = root.toPath.resolve("staged")
-      delta.repartitionByRange(2, col("doc_id"))
-        .write.mode("overwrite").parquet(staged.toString)
-      val srcRoot = root.toPath.resolve("src")
-      java.nio.file.Files.createDirectories(srcRoot)
-      val stream = s.readStream.schema(docs.schema).parquet(srcRoot.toString)
-      withStatePartitions(s, 4) {
-        val q = stream.writeStream.outputMode("append")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+      drip.run(dir, docs.filter(col("doc_id") % 3 === 0), "doc_id")(
+        _.writeStream.outputMode("append")
+          .foreachBatch { (batch: Dataset[Row], id: Long) =>
             val banded = Training.bandedDocs(batch.toDF())
-            graft.operators.IncrementalIngest
+            drip.commit(graft.operators.IncrementalIngest
               .ingestNearDup(batch.sparkSession, store, id + 1,
                 banded.select("doc_id", "lang").distinct(),
-                banded.select("doc_id", "bk"), txn = Some(s"b${id + 1}"))
-              .write.format("graft.sources.KvSinkProvider")
-              .option("path", s"$out/batch=$id").option("txnId", s"b$id")
-              .mode("append").save()
+                banded.select("doc_id", "bk"), txn = Some(s"b${id + 1}")),
+              "accepted", id)
           }
-          .start()
-        try {
-          new java.io.File(staged.toString).listFiles()
-            .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-            .zipWithIndex.foreach { case (f, i) =>
-              dropAtomic(f, srcRoot, s"drop_$i.parquet")
-              q.processAllAvailable()
-            }
-        } finally q.stop()
-      }
-      s.read.format("graft.sources.KvSourceProvider")
-        .option("path", out).option("recursive", "true")
-        .option("schema", "doc_id LONG, lang STRING").load()
-        .orderBy("doc_id")
+          .start())
+      drip.committed("accepted", "doc_id LONG, lang STRING").orderBy("doc_id")
     },
     Some(Training.nearDupIngestOracle))
 
   /** LIVE visual near-dup ingestion — q_ingest_neardup_phash's rounds
     * run as a real stream, the image twin of q_stream_ingest_neardup:
     * the historical crawl's pHash bands bootstrap the Store before the
-    * stream starts, the delta documents land as three doc_id-ranged
+    * stream starts, the delta documents land as two doc_id-ranged
     * drops, and every micro-batch DECODES its images and runs one
     * ingestNearDup round (snapshot band filter → first-wins → band
     * append) via foreachBatch. The all-seen contract makes the
@@ -794,48 +522,25 @@ object Streaming extends QueryGroup {
   private val qStreamIngestNeardupPhash = Q(
     "q_stream_ingest_neardup_phash",
     (s, dir) => {
-      val tmp = sys.props("java.io.tmpdir")
-      val root = new java.io.File(s"$tmp/graft-stream-ingest-neardup-phash")
-      if (root.exists()) rmTree(root)
-      val store = s"$root/store"
-      val out = s"$root/accepted"
+      val drip = Drip(s, "q_stream_ingest_neardup_phash")
+      val store = drip.path("store")
       val docs = table(s, dir, "documents")
       Llm.phashBandedDocs(docs.filter(col("doc_id") % 3 =!= 0))
         .select("bk").distinct()
         .write.format("graft.sources.KvSinkProvider")
         .option("path", s"$store/batch=0").mode("append").save()
-      val delta = docs.filter(col("doc_id") % 3 === 0)
-      val staged = root.toPath.resolve("staged")
-      delta.repartitionByRange(2, col("doc_id"))
-        .write.mode("overwrite").parquet(staged.toString)
-      val srcRoot = root.toPath.resolve("src")
-      java.nio.file.Files.createDirectories(srcRoot)
-      val stream = s.readStream.schema(docs.schema).parquet(srcRoot.toString)
-      withStatePartitions(s, 4) {
-        val q = stream.writeStream.outputMode("append")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+      drip.run(dir, docs.filter(col("doc_id") % 3 === 0), "doc_id")(
+        _.writeStream.outputMode("append")
+          .foreachBatch { (batch: Dataset[Row], id: Long) =>
             val banded = Llm.phashBandedDocs(batch.toDF())
-            graft.operators.IncrementalIngest
+            drip.commit(graft.operators.IncrementalIngest
               .ingestNearDup(batch.sparkSession, store, id + 1,
                 banded.select("doc_id", "ahash_lo", "ahash_hi").distinct(),
-                banded.select("doc_id", "bk"), txn = Some(s"b${id + 1}"))
-              .write.format("graft.sources.KvSinkProvider")
-              .option("path", s"$out/batch=$id").option("txnId", s"b$id")
-              .mode("append").save()
+                banded.select("doc_id", "bk"), txn = Some(s"b${id + 1}")),
+              "accepted", id)
           }
-          .start()
-        try {
-          new java.io.File(staged.toString).listFiles()
-            .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-            .zipWithIndex.foreach { case (f, i) =>
-              dropAtomic(f, srcRoot, s"drop_$i.parquet")
-              q.processAllAvailable()
-            }
-        } finally q.stop()
-      }
-      s.read.format("graft.sources.KvSourceProvider")
-        .option("path", out).option("recursive", "true")
-        .option("schema", "doc_id LONG, ahash_lo LONG, ahash_hi LONG").load()
+          .start())
+      drip.committed("accepted", "doc_id LONG, ahash_lo LONG, ahash_hi LONG")
         .select(col("doc_id").as("media_id"), col("ahash_lo"), col("ahash_hi"))
         .orderBy("media_id")
     },
@@ -844,7 +549,7 @@ object Streaming extends QueryGroup {
   /** LIVE ANN SERVING — the probe-many lifecycle actually served from a
     * stream: the persisted IVF index ([[graft.operators.AnnIndex]]) is
     * built ONCE before the stream starts; query vectors then arrive as
-    * three vec_id-ranged drops and every micro-batch probes the
+    * two vec_id-ranged drops and every micro-batch probes the
     * COMMITTED index via foreachBatch (no re-fit ever — the probe plan
     * is aggregate-free and partition-pruned, AnnIndexSpec). Probes are
     * per-query independent, so the converged result set equals a
@@ -856,46 +561,21 @@ object Streaming extends QueryGroup {
   private val qStreamAnnProbe = Q(
     "q_stream_ann_probe",
     (s, dir) => {
-      val tmp = sys.props("java.io.tmpdir")
-      val root = new java.io.File(s"$tmp/graft-stream-ann-probe")
-      if (root.exists()) rmTree(root)
-      val idx = s"$root/index"
-      val out = s"$root/results"
+      val drip = Drip(s, "q_stream_ann_probe")
+      val idx = drip.path("index")
       val e = table(s, dir, "embeddings").select("vec_id", "embedding")
       graft.operators.AnnIndex.build(e, "vec_id", "embedding",
         (200L until 208L).toSeq, 3, 64, idx)
-      val queries = e.filter(col("vec_id") < 24)
-      val staged = root.toPath.resolve("staged")
-      queries.repartitionByRange(2, col("vec_id"))
-        .write.mode("overwrite").parquet(staged.toString)
-      val srcRoot = root.toPath.resolve("src")
-      java.nio.file.Files.createDirectories(srcRoot)
-      val stream = s.readStream.schema(queries.schema).parquet(srcRoot.toString)
-      withStatePartitions(s, 4) {
-        val q = stream.writeStream.outputMode("append")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-            graft.operators.AnnIndex.probe(batch.toDF(), idx,
+      drip.run(dir, e.filter(col("vec_id") < 24), "vec_id")(
+        _.writeStream.outputMode("append")
+          .foreachBatch { (batch: Dataset[Row], id: Long) =>
+            drip.commit(graft.operators.AnnIndex.probe(batch.toDF(), idx,
                 "vec_id", "embedding", nprobe = 2, topK = 3,
-                excludeSelf = true)
-              .write.format("graft.sources.KvSinkProvider")
-              .option("path", s"$out/batch=$id").option("txnId", s"b$id")
-              .mode("append").save()
+                excludeSelf = true), "results", id)
           }
-          .start()
-        try {
-          new java.io.File(staged.toString).listFiles()
-            .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-            .zipWithIndex.foreach { case (f, i) =>
-              dropAtomic(f, srcRoot, s"drop_$i.parquet")
-              q.processAllAvailable()
-            }
-        } finally q.stop()
-      }
-      s.read.format("graft.sources.KvSourceProvider")
-        .option("path", out).option("recursive", "true")
-        .option("schema",
+          .start())
+      drip.committed("results",
           "query_id LONG, rk INT, vec_id LONG, list_id LONG, cosine DOUBLE")
-        .load()
         .orderBy("query_id", "rk")
     },
     Some(s"""WITH ${graft.operators.KMeansQuant.oracleCtesSql(200L, 207L, 3, 64,
@@ -927,7 +607,7 @@ object Streaming extends QueryGroup {
   /** LIVE CLASSIFIER SERVING — the model-store twin of
     * q_stream_ann_probe: the NB model ([[graft.operators.ModelStore]])
     * is trained and committed ONCE before the stream starts; held-out
-    * documents then arrive as three doc_id-ranged drops and every
+    * documents then arrive as two doc_id-ranged drops and every
     * micro-batch scores against the COMMITTED count tables via
     * foreachBatch (training documents never re-read — ModelStoreSpec
     * pins the score plan's scan set). Scores are per-document
@@ -939,43 +619,20 @@ object Streaming extends QueryGroup {
   private val qStreamClassify = Q(
     "q_stream_classify",
     (s, dir) => {
-      val tmp = sys.props("java.io.tmpdir")
-      val root = new java.io.File(s"$tmp/graft-stream-classify")
-      if (root.exists()) rmTree(root)
-      val mdl = s"$root/model"
-      val out = s"$root/results"
+      val drip = Drip(s, "q_stream_classify")
+      val mdl = drip.path("model")
       val docs = table(s, dir, "documents").select("doc_id", "lang", "text")
       graft.operators.ModelStore.train(
         docs.filter(col("doc_id") % 5 =!= 0), "lang", "text", mdl)
       val test = docs.filter(col("doc_id") % 5 === 0)
-      val staged = root.toPath.resolve("staged")
-      test.repartitionByRange(2, col("doc_id"))
-        .write.mode("overwrite").parquet(staged.toString)
-      val srcRoot = root.toPath.resolve("src")
-      java.nio.file.Files.createDirectories(srcRoot)
-      val stream = s.readStream.schema(test.schema).parquet(srcRoot.toString)
-      withStatePartitions(s, 4) {
-        val q = stream.writeStream.outputMode("append")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-            graft.operators.ModelStore.score(batch.toDF(), "doc_id", "text", mdl)
-              .write.format("graft.sources.KvSinkProvider")
-              .option("path", s"$out/batch=$id").option("txnId", s"b$id")
-              .mode("append").save()
+      drip.run(dir, test, "doc_id")(
+        _.writeStream.outputMode("append")
+          .foreachBatch { (batch: Dataset[Row], id: Long) =>
+            drip.commit(graft.operators.ModelStore.score(
+              batch.toDF(), "doc_id", "text", mdl), "results", id)
           }
-          .start()
-        try {
-          new java.io.File(staged.toString).listFiles()
-            .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-            .zipWithIndex.foreach { case (f, i) =>
-              dropAtomic(f, srcRoot, s"drop_$i.parquet")
-              q.processAllAvailable()
-            }
-        } finally q.stop()
-      }
-      s.read.format("graft.sources.KvSourceProvider")
-        .option("path", out).option("recursive", "true")
-        .option("schema", "doc_id LONG, pred_cls STRING, total_bits LONG")
-        .load()
+          .start())
+      drip.committed("results", "doc_id LONG, pred_cls STRING, total_bits LONG")
         .join(test.select(col("doc_id"), col("lang")), "doc_id")
         .select(col("doc_id"), col("lang").as("true_lang"),
           col("pred_cls").as("pred_lang"), col("total_bits").as("bits"))
@@ -1001,30 +658,21 @@ object Streaming extends QueryGroup {
     "q_stream_bm25_serve",
     (s, dir) => {
       import s.implicits._
-      val tmp = sys.props("java.io.tmpdir")
-      val root = new java.io.File(s"$tmp/graft-stream-bm25")
-      if (root.exists()) rmTree(root)
-      val idx = s"$root/index"
-      val out = s"$root/results"
+      val drip = Drip(s, "q_stream_bm25_serve")
+      val idx = drip.path("index")
       graft.operators.TextIndex.build(
         table(s, dir, "documents"), "doc_id", "text", idx)
       val queries = Seq(
         (0L, Seq("hash", "join", "vector")),
         (1L, Seq("stream", "window")),
         (2L, Seq("merge", "sort", "filter"))).toDF("query_id", "terms")
-      val staged = root.toPath.resolve("staged")
-      queries.repartitionByRange(2, col("query_id"))
-        .write.mode("overwrite").parquet(staged.toString)
-      val srcRoot = root.toPath.resolve("src")
-      java.nio.file.Files.createDirectories(srcRoot)
-      val stream = s.readStream.schema(queries.schema).parquet(srcRoot.toString)
-      withStatePartitions(s, 4) {
-        val q = stream.writeStream.outputMode("append")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+      drip.run(dir, queries, "query_id")(
+        _.writeStream.outputMode("append")
+          .foreachBatch { (batch: Dataset[Row], id: Long) =>
             val reqs = batch.collect() // a batch of query REQUESTS — driver-sized by definition
             if (reqs.nonEmpty) {
               val w = Window.orderBy(col("score").desc, col("doc_id"))
-              reqs.toSeq.map { r =>
+              drip.commit(reqs.toSeq.map { r =>
                   val qid = r.getLong(r.fieldIndex("query_id"))
                   val terms = r.getSeq[String](r.fieldIndex("terms"))
                   graft.operators.TextIndex.search(s, idx, terms, topK = 10)
@@ -1032,26 +680,11 @@ object Streaming extends QueryGroup {
                     .withColumn("rk", row_number().over(w))
                     .select("query_id", "rk", "doc_id", "score")
                 }
-                .reduce(_ unionAll _)
-                .write.format("graft.sources.KvSinkProvider")
-                .option("path", s"$out/batch=$id").option("txnId", s"b$id")
-                .mode("append").save()
+                .reduce(_ unionAll _), "results", id)
             }
           }
-          .start()
-        try {
-          new java.io.File(staged.toString).listFiles()
-            .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-            .zipWithIndex.foreach { case (f, i) =>
-              dropAtomic(f, srcRoot, s"drop_$i.parquet")
-              q.processAllAvailable()
-            }
-        } finally q.stop()
-      }
-      s.read.format("graft.sources.KvSourceProvider")
-        .option("path", out).option("recursive", "true")
-        .option("schema", "query_id LONG, rk INT, doc_id LONG, score LONG")
-        .load()
+          .start())
+      drip.committed("results", "query_id LONG, rk INT, doc_id LONG, score LONG")
         .orderBy("query_id", "rk")
     },
     Some("""WITH raw AS (
@@ -1089,7 +722,7 @@ object Streaming extends QueryGroup {
 
   /** LIVE INDEX INGESTION — the maintenance half of the text-index
     * lifecycle as a real stream (q_stream_bm25_serve is the read half):
-    * document batches arrive as three doc_id-ranged drops and every
+    * document batches arrive as two doc_id-ranged drops and every
     * micro-batch extends the committed index via
     * [[graft.operators.TextIndex.appendDelta]] (first batch bootstraps
     * with build) — absorbed documents are never re-tokenized, each
@@ -1102,20 +735,11 @@ object Streaming extends QueryGroup {
   private val qStreamTextIndexIngest = Q(
     "q_stream_text_index_ingest",
     (s, dir) => {
-      val tmp = sys.props("java.io.tmpdir")
-      val root = new java.io.File(s"$tmp/graft-stream-text-ingest")
-      if (root.exists()) rmTree(root)
-      val idx = s"$root/index"
-      val docs = table(s, dir, "documents").select("doc_id", "text")
-      val staged = root.toPath.resolve("staged")
-      docs.repartitionByRange(2, col("doc_id"))
-        .write.mode("overwrite").parquet(staged.toString)
-      val srcRoot = root.toPath.resolve("src")
-      java.nio.file.Files.createDirectories(srcRoot)
-      val stream = s.readStream.schema(docs.schema).parquet(srcRoot.toString)
-      withStatePartitions(s, 4) {
-        val q = stream.writeStream.outputMode("append")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      val drip = Drip(s, "q_stream_text_index_ingest")
+      val idx = drip.path("index")
+      drip.run(dir, table(s, dir, "documents").select("doc_id", "text"), "doc_id")(
+        _.writeStream.outputMode("append")
+          .foreachBatch { (batch: Dataset[Row], _: Long) =>
             if (!batch.isEmpty) {
               if (graft.operators.TextIndex.latestVersion(idx) == 0)
                 graft.operators.TextIndex.build(
@@ -1125,16 +749,7 @@ object Streaming extends QueryGroup {
                   batch.toDF(), "doc_id", "text", idx): Unit
             }
           }
-          .start()
-        try {
-          new java.io.File(staged.toString).listFiles()
-            .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-            .zipWithIndex.foreach { case (f, i) =>
-              dropAtomic(f, srcRoot, s"drop_$i.parquet")
-              q.processAllAvailable()
-            }
-        } finally q.stop()
-      }
+          .start())
       graft.operators.TextIndex.search(s, idx,
         Seq("hash", "join", "vector"), topK = 10)
     },
@@ -1142,7 +757,7 @@ object Streaming extends QueryGroup {
 
   /** LIVE INCREMENTAL TRAINING — the maintenance half of the model
     * lifecycle as a real stream (q_stream_classify is the serving
-    * half): labeled training batches arrive as three doc_id-ranged
+    * half): labeled training batches arrive as two doc_id-ranged
     * drops and every micro-batch folds its sufficient statistics into
     * the committed model via [[graft.operators.ModelStore.appendDelta]]
     * (first batch bootstraps with train). Count statistics merge
@@ -1152,21 +767,12 @@ object Streaming extends QueryGroup {
   private val qStreamClassifyTrain = Q(
     "q_stream_classify_train",
     (s, dir) => {
-      val tmp = sys.props("java.io.tmpdir")
-      val root = new java.io.File(s"$tmp/graft-stream-classify-train")
-      if (root.exists()) rmTree(root)
-      val mdl = s"$root/model"
+      val drip = Drip(s, "q_stream_classify_train")
+      val mdl = drip.path("model")
       val docs = table(s, dir, "documents").select("doc_id", "lang", "text")
-      val train = docs.filter(col("doc_id") % 5 =!= 0)
-      val staged = root.toPath.resolve("staged")
-      train.repartitionByRange(2, col("doc_id"))
-        .write.mode("overwrite").parquet(staged.toString)
-      val srcRoot = root.toPath.resolve("src")
-      java.nio.file.Files.createDirectories(srcRoot)
-      val stream = s.readStream.schema(train.schema).parquet(srcRoot.toString)
-      withStatePartitions(s, 4) {
-        val q = stream.writeStream.outputMode("append")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      drip.run(dir, docs.filter(col("doc_id") % 5 =!= 0), "doc_id")(
+        _.writeStream.outputMode("append")
+          .foreachBatch { (batch: Dataset[Row], _: Long) =>
             if (!batch.isEmpty) {
               if (graft.operators.ModelStore.latestVersion(mdl) == 0)
                 graft.operators.ModelStore.train(
@@ -1176,16 +782,7 @@ object Streaming extends QueryGroup {
                   batch.toDF(), "lang", "text", mdl): Unit
             }
           }
-          .start()
-        try {
-          new java.io.File(staged.toString).listFiles()
-            .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-            .zipWithIndex.foreach { case (f, i) =>
-              dropAtomic(f, srcRoot, s"drop_$i.parquet")
-              q.processAllAvailable()
-            }
-        } finally q.stop()
-      }
+          .start())
       val test = docs.filter(col("doc_id") % 5 === 0)
       graft.operators.ModelStore.score(test, "doc_id", "text", mdl)
         .join(test.select(col("doc_id"), col("lang")), "doc_id")
@@ -1207,38 +804,20 @@ object Streaming extends QueryGroup {
   private val qStreamAnnIngest = Q(
     "q_stream_ann_ingest",
     (s, dir) => {
-      val tmp = sys.props("java.io.tmpdir")
-      val root = new java.io.File(s"$tmp/graft-stream-ann-ingest")
-      if (root.exists()) rmTree(root)
-      val idx = s"$root/index"
+      val drip = Drip(s, "q_stream_ann_ingest")
+      val idx = drip.path("index")
       val e = table(s, dir, "embeddings").select("vec_id", "embedding")
       graft.operators.AnnIndex.build(
         e.filter(!col("vec_id").between(300, 399)), "vec_id", "embedding",
         (200L until 208L).toSeq, 3, 64, idx)
-      val delta = e.filter(col("vec_id").between(300, 399))
-      val staged = root.toPath.resolve("staged")
-      delta.repartitionByRange(2, col("vec_id"))
-        .write.mode("overwrite").parquet(staged.toString)
-      val srcRoot = root.toPath.resolve("src")
-      java.nio.file.Files.createDirectories(srcRoot)
-      val stream = s.readStream.schema(delta.schema).parquet(srcRoot.toString)
-      withStatePartitions(s, 4) {
-        val q = stream.writeStream.outputMode("append")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      drip.run(dir, e.filter(col("vec_id").between(300, 399)), "vec_id")(
+        _.writeStream.outputMode("append")
+          .foreachBatch { (batch: Dataset[Row], _: Long) =>
             if (!batch.isEmpty)
               graft.operators.AnnIndex.appendDelta(
                 batch.toDF(), "vec_id", "embedding", idx): Unit
           }
-          .start()
-        try {
-          new java.io.File(staged.toString).listFiles()
-            .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-            .zipWithIndex.foreach { case (f, i) =>
-              dropAtomic(f, srcRoot, s"drop_$i.parquet")
-              q.processAllAvailable()
-            }
-        } finally q.stop()
-      }
+          .start())
       graft.operators.AnnIndex.probe(
         e.filter(col("vec_id") < 8), idx, "vec_id", "embedding",
         nprobe = 2, topK = 3, excludeSelf = true)
@@ -1278,10 +857,8 @@ object Streaming extends QueryGroup {
   private val qStreamStoreSource = Q(
     "q_stream_store_source",
     (s, dir) => {
-      val tmp = sys.props("java.io.tmpdir")
-      val root = new java.io.File(s"$tmp/graft-stream-store-source")
-      if (root.exists()) rmTree(root)
-      java.nio.file.Files.createDirectories(root.toPath)
+      val root = artifactDir(s, "stream", "q_stream_store_source")
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
       val storeA = s"$root/a"
       val storeB = s"$root/b"
       val ckpt = s"$root/ckpt"
@@ -1299,7 +876,7 @@ object Streaming extends QueryGroup {
         .select(col("doc_id"), col("lang"), (col("len") * 2).as("len2"))
         .writeStream.outputMode("append")
         .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        .foreachBatch { (b: Dataset[Row], id: Long) =>
           b.write.format("graft.sources.KvSinkProvider")
             .option("path", storeB).option("txnId", s"b$id")
             .mode("append").save()
@@ -1335,10 +912,8 @@ object Streaming extends QueryGroup {
   private val qStreamStoreCdf = Q(
     "q_stream_store_cdf",
     (s, dir) => {
-      val tmp = sys.props("java.io.tmpdir")
-      val root = new java.io.File(s"$tmp/graft-stream-store-cdf")
-      if (root.exists()) rmTree(root)
-      java.nio.file.Files.createDirectories(root.toPath)
+      val root = artifactDir(s, "stream", "q_stream_store_cdf")
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
       val store = s"$root/store"
       val ckpt = s"$root/ckpt"
       val eventsDir = s"$root/events"

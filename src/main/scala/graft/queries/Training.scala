@@ -800,11 +800,6 @@ object Training extends QueryGroup {
                 sum(CASE WHEN n_chars <> length(text) THEN 1 ELSE 0 END) = 0
               FROM documents) t ORDER BY rule"""))
 
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-    f.delete(): Unit
-  }
-
   /** INCREMENTAL corpus ingestion through the Store — the pattern a
     * continuously-crawled 100 TB corpus actually runs: the fingerprints
     * of everything already ingested live in the kv Store; each incoming
@@ -826,7 +821,7 @@ object Training extends QueryGroup {
     "q_ingest_incremental",
     (s, dir) => {
       val store = sys.props("java.io.tmpdir") + "/graft-kvsink/q_ingest_incremental"
-      rmTree(new java.io.File(store))
+      graft.sources.KvCommitLog.rmTree(new java.io.File(store))
       val docs = table(s, dir, "documents")
       val fp = graft.operators.PortableHash.charHash(col("text"))
       // bootstrap the Store with the historical fingerprint set
@@ -909,7 +904,7 @@ object Training extends QueryGroup {
     "q_ingest_neardup",
     (s, dir) => {
       val store = sys.props("java.io.tmpdir") + "/graft-kvsink/q_ingest_neardup"
-      rmTree(new java.io.File(store))
+      graft.sources.KvCommitLog.rmTree(new java.io.File(store))
       val docs = table(s, dir, "documents")
       bandedDocs(docs.filter(col("doc_id") % 3 =!= 0))
         .select("bk").distinct()
@@ -991,7 +986,7 @@ object Training extends QueryGroup {
     "q_store_compact",
     (s, dir) => {
       val root = sys.props("java.io.tmpdir") + "/graft-kvsink/q_store_compact"
-      rmTree(new java.io.File(root))
+      graft.sources.KvCommitLog.rmTree(new java.io.File(root))
       val docs = table(s, dir, "documents")
       val fp = graft.operators.PortableHash.charHash(col("text"))
       // three ingestion-era batches (disjoint thirds of the corpus)
@@ -1038,7 +1033,7 @@ object Training extends QueryGroup {
     "q_store_forget",
     (s, dir) => {
       val root = sys.props("java.io.tmpdir") + "/graft-forget/q_store_forget"
-      rmTree(new java.io.File(root))
+      graft.sources.KvCommitLog.rmTree(new java.io.File(root))
       val docs = table(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("text"))
       graft.operators.ZoneMaps.writeLayout(docs, "doc_id", 8, s"$root/layout")
@@ -1073,7 +1068,7 @@ object Training extends QueryGroup {
     "q_agg_incremental_view",
     (s, dir) => {
       val state = sys.props("java.io.tmpdir") + "/graft-view/q_agg_incremental_view"
-      rmTree(new java.io.File(state))
+      graft.sources.KvCommitLog.rmTree(new java.io.File(state))
       val o = table(s, dir, "orders")
       def partials(df: org.apache.spark.sql.DataFrame) =
         df.groupBy(col("o_orderstatus"))

@@ -420,7 +420,7 @@ class KvCatalog extends TableCatalog with SupportsNamespaces
   override def dropTable(ident: Identifier): Boolean = {
     val dir = dirFor(ident)
     if (!metaOf(dir).isFile) false
-    else { rmTree(dir); true }
+    else { KvCommitLog.rmTree(dir); true }
   }
 
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit = {
@@ -467,14 +467,9 @@ class KvCatalog extends TableCatalog with SupportsNamespaces
       val empty = Option(d.listFiles()).forall(_.isEmpty)
       require(empty || cascade,
         s"graft kv catalog: namespace ${namespace.mkString(".")} is not empty")
-      rmTree(d)
+      KvCommitLog.rmTree(d)
       true
     }
-  }
-
-  private def rmTree(f: File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty[File]).foreach(rmTree)
-    Files.deleteIfExists(f.toPath): Unit
   }
 }
 

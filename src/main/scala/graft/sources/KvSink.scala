@@ -195,12 +195,27 @@ class KvBatchWrite(path: String, schema: StructType,
     }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
+  /** Discard every staged file of THIS write: the ones the messages name,
+    * and any other staged file carrying this write's nonce. When one task
+    * fails the job, a sibling that commits afterwards sends no message
+    * here, so its staged file is found by name. Other writes' staged
+    * files (other nonces) are left alone. */
+  override def abort(messages: Array[WriterCommitMessage]): Unit = {
     messages.foreach {
       case KvCommit(files) =>
         files.foreach(sf => Files.deleteIfExists(Paths.get(sf.stagedFile)))
       case _ => ()
     }
+    // staged names are part-<partition>-<task>-<nonce>[-p<key>].csv
+    def ours(name: String): Boolean = name.split("-", 4) match {
+      case Array("part", _, _, rest) =>
+        rest.startsWith(s"$nonce.") || rest.startsWith(s"$nonce-")
+      case _ => false
+    }
+    Option(new File(path, "_staging").listFiles()).getOrElse(Array.empty[File])
+      .filter(f => ours(f.getName))
+      .foreach(f => Files.deleteIfExists(f.toPath))
+  }
 }
 
 /** WRITE-TIME CONSTRAINTS (r15): NOT NULL and bounded CHECK, enforced at
@@ -1012,12 +1027,8 @@ object KvCommitLog {
     val allDvs = dvNames(msLines.map(_._2) ++ ckLines.map(_._2))
     val doomedDvs = (allDvs -- reachableDvs).toSeq.sorted
     val doomed = (addsIn(_ => true) -- reachable).toSeq.sorted ++ doomedDvs
-    def rm(f: File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty[File]).foreach(rm)
-      Files.deleteIfExists(f.toPath): Unit
-    }
     doomed.foreach { n =>
-      rm(dir.resolve(n).toFile)
+      rmTree(dir.resolve(n).toFile)
       Files.deleteIfExists(dir.resolve(KvZoneMap.sidecarName(n))): Unit
     }
     // checkpoint replaces the manifests it folds; only after it is

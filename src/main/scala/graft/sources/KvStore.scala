@@ -422,7 +422,7 @@ object KvStore {
       Files.move(scratch.resolve(n), dirPath.resolve(n))
       n
     }
-    rmTree(scratch.toFile)
+    KvCommitLog.rmTree(scratch.toFile)
     if (hit.isEmpty && addNames.isEmpty)
       return Mutation(base, 0, 0, live.size, 0L, 0L)
     val stagingDir = dirPath.resolve("_staging")
@@ -685,7 +685,7 @@ object KvStore {
       Files.move(scratch.resolve(n), dirPath.resolve(n))
       n
     }
-    rmTree(scratch.toFile)
+    KvCommitLog.rmTree(scratch.toFile)
     if (!KvCommitLog.tryReplaceAt(dirPath, base, adopted, live)) {
       adopted.foreach { n =>
         Files.deleteIfExists(dirPath.resolve(n)): Unit
@@ -804,7 +804,7 @@ object KvStore {
         Files.move(scratch.resolve(n), dirPath.resolve(n))
         n
       }
-      rmTree(scratch.toFile)
+      KvCommitLog.rmTree(scratch.toFile)
     }
 
     // publish replacements: sidecar, then data file (same order as the sink)
@@ -1010,10 +1010,5 @@ object KvStore {
           (schema.fields(bloomIdx(j)).name, b.k, b.m, b.bits)
         }.toSeq,
       dvSkipped)
-  }
-
-  private def rmTree(f: File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty[File]).foreach(rmTree)
-    Files.deleteIfExists(f.toPath): Unit
   }
 }

@@ -88,4 +88,22 @@ class KvSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(committed.isEmpty,
       s"aborted job left committed files: ${committed.map(_.getName).mkString(", ")}")
   }
+
+  test("abort discards this write's staged files, a straggler's included") {
+    val out = freshDir()
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("k LONG, v LONG")
+    def stage(w: graft.sources.KvBatchWrite, part: Int) = {
+      val dw = w.createBatchWriterFactory(null).createWriter(part, part.toLong)
+      dw.write(org.apache.spark.sql.catalyst.InternalRow(part.toLong, 1L))
+      dw.commit()
+    }
+    val failed = new graft.sources.KvBatchWrite(out, schema)
+    val other = new graft.sources.KvBatchWrite(out, schema)
+    val reported = stage(failed, 0)
+    stage(failed, 1) // committed after its job failed: no message reaches abort
+    stage(other, 2) // a concurrent write into the same store
+    failed.abort(Array(reported))
+    val left = new java.io.File(out, "_staging").listFiles().map(_.getName).toSeq
+    assert(left.size == 1 && left.head.startsWith("part-2-2-"), left.mkString(", "))
+  }
 }

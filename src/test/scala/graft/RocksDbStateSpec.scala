@@ -8,9 +8,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The 100 TB state-store knob for the live append streams (VERDICT r6
-  * item 7): beyond scoping state partitions to key cardinality
-  * (Streaming.withStatePartitions), long-running stateful queries move
-  * per-key state OFF the executor heap into RocksDB. This spec runs the
+  * item 7): beyond scoping state partitions to key cardinality (the
+  * drip harness's scope, streaming/Drip.scala), long-running stateful
+  * queries move per-key state OFF the executor heap into RocksDB. This spec runs the
   * q_stream_live_append twin — watermarked tumbling aggregation, append
   * mode, late-row drops — under BOTH state store providers and asserts:
   *

@@ -93,4 +93,18 @@ class SessionFactorySpec extends AnyFunSuite with SparkSessionFixture {
     }
     assert(hits == Seq("src/main/scala/graft/core/Graft.scala"), hits)
   }
+
+  test("a scoped setting gives back the value the session already had") {
+    // the DV-delete gate scopes spark.graft.store.deleteMode to "dv"; a
+    // session that chose a mode itself must keep it afterwards
+    val key = "spark.graft.store.deleteMode"
+    spark.conf.set(key, "cow")
+    try {
+      SparkEntry.queries("q_sql_store_delete_dv")(spark, "/root/testdata/sf0.001")
+        .collect()
+      assert(spark.conf.getOption(key).contains("cow"))
+    } finally spark.conf.unset(key)
+    Graft.withConf(spark, key -> "dv")(assert(spark.conf.get(key) == "dv"))
+    assert(spark.conf.getOption(key).isEmpty, "an unset key stays unset")
+  }
 }
