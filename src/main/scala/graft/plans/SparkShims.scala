@@ -18,12 +18,16 @@ object GraftDatasetShim {
     * counts `sc.getPersistentRDDs` across the iterative loops. Without
     * this, superseded per-round checkpoints linger until the async
     * ContextCleaner notices the dropped reference after a GC — measured
-    * on the sf0.1 bench as 2-5× degradation across reruns sharing a JVM. */
+    * on the sf0.1 bench as 2-5× degradation across reruns sharing a JVM.
+    * The blocks go through `SparkContext.unpersistRDD`, the call
+    * `RDD.unpersist` makes after its WARN that a locally checkpointed
+    * RDD cannot be recomputed — true, and the point of a deliberate
+    * release, so that WARN would be noise on every release. */
   def unpersistCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
     df.asInstanceOf[Dataset[org.apache.spark.sql.Row]]
       .queryExecution.analyzed.foreach {
         case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false): Unit
+          lr.rdd.sparkContext.unpersistRDD(lr.rdd.id, blocking = false)
         case _ => ()
       }
 

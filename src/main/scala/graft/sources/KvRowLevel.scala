@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.io.File
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.MetadataColumn
@@ -42,11 +42,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *    file names — only those groups are rewritten, the CDC shape at
   *    100 TB (rewrite set ∝ change batch, never the store).
   *  - **one OCC commit.** The operation pins the snapshot version at
-  *    construction; the write publishes removes(scanned files) +
-  *    adds(rewritten files) as ONE manifest CASed at exactly `base+1`
-  *    ([[KvCommitLog.tryReplaceAt]]). Any concurrent commit aborts this
-  *    mutation with its staged adds cleaned up — the [[KvStore.mutate]]
-  *    conflict discipline, because the rewrite is derived from `base`.
+  *    construction; the write is the sink's own [[KvBatchWrite]], whose
+  *    replace target is (base, scanned files): it publishes
+  *    removes(scanned files) + adds(rewritten files) as ONE
+  *    [[KvCommitLog.publish]] at exactly `base+1`. Any concurrent commit
+  *    aborts this mutation with its staged adds cleaned up — the
+  *    [[KvStore]] conflict discipline, because the rewrite is derived
+  *    from `base`.
   *    Time travel below the mutation keeps answering (removed files stay
   *    on disk until [[KvCommitLog.vacuumDelta]]).
   *
@@ -94,6 +96,14 @@ class KvRowLevelOperation(dir: String, schema: StructType,
     * guess (removing unscanned files would drop their rows). */
   @volatile private[sources] var scannedFiles: Seq[String] = _
 
+  /** What the replacement write replaces: the scanned groups at `base`. */
+  private[sources] def replaced: (Int, Seq[String]) = {
+    require(scannedFiles != null,
+      s"graft kv catalog: row-level write at $dir committed before the " +
+        "operation scan planned — cannot determine the replaced group set")
+    (base, scannedFiles)
+  }
+
   override def command(): RowLevelOperation.Command = cmd
 
   override def requiredMetadataAttributes(): Array[NamedReference] =
@@ -118,9 +128,10 @@ class KvRowLevelOperation(dir: String, schema: StructType,
           // null-fill in the rewritten file — invisible at every
           // readable version (the rewrite exists only at versions ≥ the
           // drop era; time travel below reads the ORIGINAL files)
-          new KvCoWBatchWrite(KvRowLevelOperation.this, dir,
+          new KvBatchWrite(dir,
             view.map(_.physical).getOrElse(StructType(dataFields)),
-            partCol, bloomCols, view, constraints)
+            partCol, bloomCols = bloomCols, expandFrom = view,
+            constraints = constraints, group = Some(KvRowLevelOperation.this))
       }
     }
   }
@@ -231,63 +242,4 @@ class KvCoWScan(op: KvRowLevelOperation, dir: String,
   override def createReaderFactory(): PartitionReaderFactory =
     // pushed = empty: the group scan NEVER drops rows connector-side
     new KvReaderFactory(dataSchema, required.fieldNames, Array.empty)
-}
-
-/** The replacement write: staged files through the sink's own 2PC writer
-  * (full zone-map/stats discipline), committed as removes(scanned) +
-  * adds(staged) in ONE manifest CASed at `base+1`. */
-class KvCoWBatchWrite(op: KvRowLevelOperation, dir: String,
-    schema: StructType, partCol: Option[String], bloomCols: Seq[String] = Nil,
-    view: Option[KvColView] = None, constraints: Seq[KvConstraint] = Nil)
-    extends BatchWrite {
-
-  private val nonce: String =
-    java.lang.Long.toUnsignedString(
-      java.util.concurrent.ThreadLocalRandom.current().nextLong(), 36)
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val inner = KvWriterFactory(dir, schema, partCol, nonce, bloomCols,
-      constraints)
-    view match {
-      case Some(v) => KvExpandingWriterFactory(inner,
-        schema.fields.map(_.dataType), v.writeMapping)
-      case None => inner
-    }
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val dirPath = Paths.get(dir)
-    val removed = op.scannedFiles
-    require(removed != null,
-      s"graft kv catalog: row-level write at $dir committed before the " +
-        "operation scan planned — cannot determine the replaced group set")
-    val published = messages.flatMap { case KvCommit(files) =>
-      files.map { sf =>
-        val src = Paths.get(sf.stagedFile)
-        KvZoneMap.write(dirPath, src.getFileName.toString, sf.rows, sf.stats,
-          sf.dstats, sf.sstats, sf.sums, sf.nulls, sf.blooms)
-        Files.move(src, dirPath.resolve(src.getFileName),
-          StandardCopyOption.REPLACE_EXISTING)
-        src.getFileName.toString
-      }
-    }
-    if (removed.isEmpty && published.isEmpty) return // nothing matched
-    if (!KvCommitLog.tryReplaceAt(dirPath, op.base, published.toSeq, removed)) {
-      published.foreach { n =>
-        Files.deleteIfExists(dirPath.resolve(KvZoneMap.sidecarName(n))): Unit
-        Files.deleteIfExists(dirPath.resolve(n)): Unit
-      }
-      throw new IllegalStateException(
-        s"concurrent commit at $dir superseded the version-${op.base} " +
-          "snapshot this row-level operation was derived from; staged " +
-          "changes rolled back — re-run against the new head")
-    }
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case KvCommit(files) =>
-        files.foreach(sf => Files.deleteIfExists(Paths.get(sf.stagedFile)))
-      case _ => ()
-    }
 }

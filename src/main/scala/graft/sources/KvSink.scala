@@ -27,9 +27,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   2. a successful attempt's [[DataWriter.commit]] returns a message
   *      naming its staged file; a failed attempt's abort() deletes it;
   *   3. the driver's [[BatchWrite.commit]] — called once, with exactly
-  *      one message per partition — MOVEs the named files into the
-  *      target directory. Orphaned stragglers stay in `_staging`, which
-  *      readers ignore (underscore-prefixed paths are hidden).
+  *      one message per partition — hands the named files to
+  *      [[KvCommitLog.publish]], which moves them into the target
+  *      directory and names them in one manifest. That publish is the one
+  *      every store write goes through (the [[KvStore]] verbs and SQL
+  *      row-level rewrites included). A failed job's abort() deletes
+  *      every staged file of the write, a straggler's included.
   *
   * Rows are written as CSV (long/int/double/string fields). String
   * fields PERCENT-ESCAPE the three characters that would break line/field
@@ -107,21 +110,22 @@ class KvTable(path: String, writeSchema: StructType,
   * catalog tables). With `expandFrom` ([[KvColView]]) the incoming rows
   * are the view's LOGICAL shape and each is expanded to the physical
   * layout before the task writer sees it — null at dropped positions,
-  * birth-name sidecar keys throughout. */
+  * birth-name sidecar keys throughout. With `group` the write is the
+  * replacement half of a SQL row-level operation: it replaces the
+  * groups that operation scanned at its pinned base. */
 class KvBatchWrite(path: String, schema: StructType,
     partCol: Option[String] = None, replace: Boolean = false,
     txnId: Option[String] = None, bloomCols: Seq[String] = Nil,
     expandFrom: Option[KvColView] = None,
-    constraints: Seq[KvConstraint] = Nil)
+    constraints: Seq[KvConstraint] = Nil,
+    group: Option[KvRowLevelOperation] = None)
     extends BatchWrite {
   /** Per-write nonce folded into staged/published file names: partitionId
     * and taskId are only unique within one SparkContext, and with
     * overwrite + time travel an old version's file must NEVER be clobbered
     * by a later write that happens to reuse the same task numbering (a
     * fresh JVM writing to an existing store). */
-  private val nonce: String =
-    java.lang.Long.toUnsignedString(
-      java.util.concurrent.ThreadLocalRandom.current().nextLong(), 36)
+  private val nonce: String = KvCommitLog.nonce()
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     val inner = KvWriterFactory(path, schema, partCol, nonce, bloomCols,
@@ -133,66 +137,35 @@ class KvBatchWrite(path: String, schema: StructType,
     }
   }
 
-  /** Driver-side atomic publish: exactly one staged file per partition
-    * (Spark's OutputCommitCoordinator guarantees one committed attempt),
-    * moved into the readable directory. Each file's ZONE MAP (per-column
-    * min/max gathered while the task wrote, [[KvZoneMap]]) is published
-    * first, as a hidden sidecar — so a data file is never visible without
-    * its stats, and readers can skip whole files on static or runtime
-    * (join-key) predicates without opening them.
+  /** Driver-side atomic publish of exactly one staged file per partition
+    * (Spark's OutputCommitCoordinator guarantees one committed attempt)
+    * through [[KvCommitLog.publish]].
     *
-    * With `replace` (INSERT OVERWRITE / SaveMode.Overwrite through
-    * SupportsTruncate) the manifest also carries REMOVE lines for every
-    * previously-live file — overwrite is one new log version, old
-    * snapshots stay readable, nothing is physically deleted.
+    * A REPLACE commit — INSERT OVERWRITE / SaveMode.Overwrite through
+    * SupportsTruncate, or a row-level rewrite (`group`) — removes a file
+    * set read at a specific base version: the live set at the head for an
+    * overwrite, the operation's scanned groups for a row-level rewrite.
+    * It publishes at exactly base+1, so a concurrent commit aborts it;
+    * append()'s blind retry would let two racing overwrites both land,
+    * yielding the union of their write sets. Old snapshots stay readable,
+    * nothing is physically deleted.
     *
-    * With `txnId` (streaming foreachBatch exactly-once) the id is first
-    * checked against the log — a replayed batch discards its staged files
-    * and publishes NOTHING — and otherwise recorded in the manifest, so
-    * at-least-once replay becomes exactly-once output without the
-    * wipe-before-write the pre-r12 ingest twins used. */
+    * With `txnId` (streaming foreachBatch exactly-once) the id is
+    * recorded in the manifest, and a replayed batch whose id the log
+    * already holds discards its staged files and publishes NOTHING. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val dir = Paths.get(path)
     Files.createDirectories(dir)
-    if (txnId.exists(KvCommitLog.txnCommitted(dir, _))) {
-      abort(messages) // replay of an already-committed txn: discard staging
-      return
-    }
-    // a REPLACE commit's remove list is the live set of a SPECIFIC base
-    // version, so it must publish at exactly base+1 (OCC, like
-    // KvStore.mutate) — append()'s blind retry would let two racing
-    // overwrites both land, yielding the union of their write sets
-    val base = if (replace) Some(KvCommitLog.latestVersion(dir)) else None
-    val removed = base.map(KvCommitLog.filesAsOf(dir, _).toSeq).getOrElse(Nil)
-    val published = messages.flatMap { case KvCommit(files) =>
-      files.map { sf =>
-        val src = Paths.get(sf.stagedFile)
-        KvZoneMap.write(dir, src.getFileName.toString, sf.rows, sf.stats,
-          sf.dstats, sf.sstats, sf.sums, sf.nulls, sf.blooms)
-        Files.move(src, dir.resolve(src.getFileName),
-          StandardCopyOption.REPLACE_EXISTING)
-        src.getFileName.toString
-      }
-    }
-    base match {
-      case Some(b) =>
-        if (!KvCommitLog.tryReplaceAt(dir, b, published.toSeq, removed,
-            txnId)) {
-          // conflict: another commit moved the head past the snapshot our
-          // remove list was read from — clean up and surface it, the same
-          // discipline as KvStore.mutate (the files we moved in are named
-          // by no manifest, so readers never saw them)
-          published.foreach { n =>
-            Files.deleteIfExists(dir.resolve(KvZoneMap.sidecarName(n))): Unit
-            Files.deleteIfExists(dir.resolve(n)): Unit
-          }
-          throw new IllegalStateException(
-            s"concurrent commit at $dir superseded the version-$b snapshot " +
-              "this overwrite replaces — re-run against the new head")
-        }
-      case None =>
-        KvCommitLog.append(dir, published.toSeq, Nil, txnId): Unit
-    }
+    val target = group.map(_.replaced).orElse(
+      if (!replace) None
+      else {
+        val b = KvCommitLog.latestVersion(dir)
+        Some((b, KvCommitLog.filesAsOf(dir, b).toSeq))
+      })
+    val staged = messages.toSeq.flatMap { case KvCommit(files) => files }
+    val v = KvCommitLog.publish(dir, target.map(_._1), staged,
+      target.map(_._2).getOrElse(Nil), txn = txnId)
+    if (v == 0) abort(messages) // replay of an already-committed txn
   }
 
   /** Discard every staged file of THIS write: the ones the messages name,
@@ -306,9 +279,14 @@ object KvConstraint {
     }
 }
 
-/** One staged file with its write-time statistics. A task commits one of
-  * these per output file: exactly one in the default layout, one per
-  * partition value present in its input for `partitionColumn` writes. */
+/** One entry a [[KvCommitLog.publish]] brings into a store directory. */
+sealed trait KvMember
+
+/** One staged file with its write-time statistics, written by a task (the
+  * sink's or a copy-on-write rewrite's) under `_staging`; publish writes
+  * its sidecar from these stats. A sink task commits one of these per
+  * output file: exactly one in the default layout, one per partition value
+  * present in its input for `partitionColumn` writes. */
 case class KvStagedFile(
     stagedFile: String,
     rows: Long,
@@ -318,6 +296,22 @@ case class KvStagedFile(
     sums: Seq[(String, Long)] = Seq.empty,
     nulls: Seq[(String, Long)] = Seq.empty,
     blooms: Seq[(String, Int, Int, Array[Long])] = Seq.empty)
+    extends KvMember {
+  def name: String = Paths.get(stagedFile).getFileName.toString
+}
+
+/** A file committed in a scratch store (a merge's insert half, a
+  * maintenance rewrite): it moves in with the sidecar it already has. */
+final case class KvAdopted(from: java.nio.file.Path) extends KvMember
+
+/** A deletion vector staged for live data file `data` ([[KvDv]]): it
+  * moves in and attaches to `data`. */
+final case class KvStagedDv(data: String, from: java.nio.file.Path)
+    extends KvMember
+
+/** A file already in the directory that the commit adds again (a restore
+  * re-adds an earlier snapshot's files): nothing moves. */
+final case class KvPresent(name: String) extends KvMember
 
 case class KvCommit(files: Seq[KvStagedFile]) extends WriterCommitMessage
 
@@ -363,19 +357,13 @@ object KvZoneMap {
     def nullsTracked: Boolean = nulls.nonEmpty
   }
 
-  /** Publish atomically: fully-written dot-hidden temp, then move. Runs
-    * BEFORE the data file move, so a visible file always has its stats.
-    * Lines: `#rows,N`, then `col,min,max` per integer column,
+  /** Write `sf`'s sidecar atomically: fully-written dot-hidden temp,
+    * then move ([[KvCommitLog.publish]] orders it before the data). Lines: `#rows,N`, then `col,min,max` per integer column,
     * `#d,col,min,max` per double column, `#s,col,min,max` per string
     * column (name and string bounds percent-escaped). */
-  def write(dir: java.nio.file.Path, file: String, rows: Long,
-      stats: Seq[(String, Long, Long)],
-      dstats: Seq[(String, Double, Double)] = Seq.empty,
-      sstats: Seq[(String, String, String)] = Seq.empty,
-      sums: Seq[(String, Long)] = Seq.empty,
-      nulls: Seq[(String, Long)] = Seq.empty,
-      blooms: Seq[(String, Int, Int, Array[Long])] = Seq.empty): Unit = {
-    val tmp = dir.resolve(s".zm-tmp-$file")
+  def write(dir: java.nio.file.Path, sf: KvStagedFile): Unit = {
+    import sf._
+    val tmp = dir.resolve(s".zm-tmp-$name")
     val lines = (s"#rows,$rows" +:
       stats.map { case (c, mn, mx) => s"${KvEscape.escape(c)},$mn,$mx" }) ++
       dstats.map { case (c, mn, mx) => s"#d,${KvEscape.escape(c)},$mn,$mx" } ++
@@ -392,7 +380,7 @@ object KvZoneMap {
         s"#bf,${KvEscape.escape(c)},$k,$m,${KvBloom.encode(bits)}"
       }
     Files.write(tmp, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-    Files.move(tmp, dir.resolve(sidecarName(file)),
+    Files.move(tmp, dir.resolve(sidecarName(name)),
       StandardCopyOption.REPLACE_EXISTING)
   }
 
@@ -449,9 +437,123 @@ object KvZoneMap {
   }
 }
 
+/** One store file's zone-map statistics, accumulated value by value —
+  * the one accumulator behind every sidecar, fed by the sink's task
+  * writer ([[KvDataWriter]]) and the copy-on-write rewrite
+  * ([[KvStore]]) through the typed per-column adders. Per family:
+  *  - integer columns: [min, max] and the sum in Long ring arithmetic
+  *    (wrapping + is associative, so per-file partials fold to exactly
+  *    what Spark's own non-ANSI sum produces); a sum that OVERFLOWS is
+  *    withheld from the sidecar, and readers then parse the file, which
+  *    is always sound;
+  *  - double columns: [min, max] with -0.0 normalized to 0.0 (Spark
+  *    comparison semantics equate them); a NaN makes the bounds
+  *    meaningless under Spark's NaN equality, so that column publishes
+  *    none;
+  *  - string columns: [min, max] in code-point order (= Spark's
+  *    UTF8String order), NOT Java compareTo;
+  *  - every column: its null count (`#n` lines keep count(col)
+  *    stats-answered once schema evolution makes nulls real);
+  *  - `bloomCols` (integer or string): the distinct value hashes, in a
+  *    [[KvBloom.HashAcc]] so memory is ∝ distincts, with the filter
+  *    dropped past [[KvBloom.MaxTrackedDistinct]] where it could not
+  *    prune anyway.
+  * Nulls are counted and excluded from bounds, sums and blooms. The
+  * adders allocate nothing. */
+final class KvZoneAcc(schema: StructType, bloomCols: Seq[String]) {
+  private val n = schema.length
+  private val mins = Array.fill(n)(Long.MaxValue)
+  private val maxs = Array.fill(n)(Long.MinValue)
+  private val sums = new Array[Long](n)
+  private val sumBad = new Array[Boolean](n)
+  private val dMins = Array.fill(n)(Double.MaxValue)
+  private val dMaxs = Array.fill(n)(Double.MinValue)
+  private val dNaN = new Array[Boolean](n)
+  private val sMins = new Array[String](n)
+  private val sMaxs = new Array[String](n)
+  private val nulls = new Array[Long](n)
+  private val bloomIdx: Array[Int] = bloomCols.map { c =>
+    val i = schema.fieldNames.indexOf(c)
+    require(i >= 0, s"graft kv sink: bloomColumns column '$c' not in schema")
+    i
+  }.toArray
+  private val hashes = new Array[KvBloom.HashAcc](n)
+  bloomIdx.foreach(i => hashes(i) = new KvBloom.HashAcc)
+  private var rows = 0L
+
+  def row(): Unit = rows += 1
+  def nullAt(c: Int): Unit = nulls(c) += 1
+
+  /** An integer (INT or BIGINT) value of column `c`. */
+  def long(c: Int, v: Long): Unit = {
+    if (v < mins(c)) mins(c) = v
+    if (v > maxs(c)) maxs(c) = v
+    if (!sumBad(c)) {
+      try sums(c) = Math.addExact(sums(c), v)
+      catch { case _: ArithmeticException => sumBad(c) = true }
+    }
+    if (hashes(c) != null) hashes(c).add(KvBloom.hashLong(v))
+  }
+
+  def double(c: Int, raw: Double): Unit = {
+    val v = if (raw == 0.0) 0.0 else raw
+    if (java.lang.Double.isNaN(v)) dNaN(c) = true
+    else {
+      if (v < dMins(c)) dMins(c) = v
+      if (v > dMaxs(c)) dMaxs(c) = v
+    }
+  }
+
+  def string(c: Int, v: String): Unit = {
+    if (sMins(c) == null || KvEscape.cpCompare(v, sMins(c)) < 0) sMins(c) = v
+    if (sMaxs(c) == null || KvEscape.cpCompare(v, sMaxs(c)) > 0) sMaxs(c) = v
+    if (hashes(c) != null) hashes(c).add(KvBloom.hashString(v))
+  }
+
+  // a column outside a family never leaves that family's initial empty
+  // range, so the bounds need no type test
+  private def intBounds(c: Int) =
+    if (mins(c) <= maxs(c)) Some((mins(c), maxs(c))) else None
+  private def dblBounds(c: Int) =
+    if (dMins(c) <= dMaxs(c)) Some((dMins(c), dMaxs(c))) else None
+  private def strBounds(c: Int) =
+    if (sMins(c) != null) Some((sMins(c), sMaxs(c))) else None
+
+  /** The write-time constraint gate's evidence for `k` — the statistics
+    * already kept for the sidecar, so enforcement costs nothing per row. */
+  def violation(k: KvConstraint): Option[String] = {
+    val c = schema.fieldNames.indexOf(k.col)
+    KvConstraint.violation(k, schema, nulls(c), intBounds(c), dblBounds(c),
+      dNaN(c), strBounds(c))
+  }
+
+  /** The staged file's statistics. Bounds and sums publish only for
+    * columns with >=1 non-null value (an all-null column has no bounds;
+    * its absence plus the `#n` line is what the stats-answered aggregates
+    * fold on), blooms likewise and only under the distinct ceiling. */
+  def finish(stagedFile: String): KvStagedFile = {
+    val cs = 0 until n
+    def name(c: Int) = schema.fields(c).name
+    if (rows == 0L) return KvStagedFile(stagedFile, 0L, Nil)
+    KvStagedFile(stagedFile, rows,
+      cs.flatMap(c => intBounds(c).map { case (mn, mx) => (name(c), mn, mx) }),
+      cs.filterNot(dNaN(_)).flatMap(c =>
+        dblBounds(c).map { case (mn, mx) => (name(c), mn, mx) }),
+      cs.flatMap(c => strBounds(c).map { case (mn, mx) => (name(c), mn, mx) }),
+      cs.filter(c => intBounds(c).isDefined && !sumBad(c))
+        .map(c => (name(c), sums(c))),
+      cs.map(c => (name(c), nulls(c))),
+      bloomIdx.toSeq.filter(c => !hashes(c).isEmpty && !hashes(c).overflowed)
+        .map { c =>
+          val b = KvBloom.build(hashes(c).toArray)
+          (name(c), b.k, b.m, b.bits)
+        })
+  }
+}
+
 /** The Store's COMMIT LOG — a Delta/Iceberg-style transaction log in
-  * miniature: every successful [[KvBatchWrite.commit]] appends a hidden
-  * manifest `_commit-N` naming exactly the files it published, so the
+  * miniature: every successful [[publish]] appends a hidden manifest
+  * `_commit-N` naming exactly the files it published, so the
   * directory carries its own write history. Readers that pass
   * `asOfCommit=N` to [[KvSourceProvider]] plan splits from the manifests
   * with version ≤ N — SNAPSHOT TIME TRAVEL over the same committed
@@ -611,9 +713,10 @@ object KvCommitLog {
   }
 
   /** Record one commit's published (and optionally removed) file names as
-    * the next free version and return it. Lost races bump and retry, which
-    * is EXACT for this log's delta semantics — each manifest names only
-    * its own adds/removes and commit order commutes (adds and removes in
+    * the next free version and return it: a [[publish]] of names already
+    * in place, with no base. Lost races bump and retry, which is EXACT
+    * for this log's delta semantics — each manifest names only its own
+    * adds/removes and commit order commutes (adds and removes in
     * concurrent manifests touch disjoint files by construction: a writer
     * only removes files it read from a committed snapshot, see KvStore).
     * Snapshot-style manifests (full member lists) must NOT use this
@@ -623,44 +726,112 @@ object KvCommitLog {
     * is already in the log the commit is a NO-OP returning 0 — an
     * at-least-once replay publishes nothing twice ([[txnCommitted]]). */
   def append(dir: java.nio.file.Path, published: Seq[String],
-      removed: Seq[String] = Nil, txn: Option[String] = None): Int = {
-    published.foreach(checkName)
-    removed.foreach(checkName)
-    txn.foreach(t => require(!t.contains("\n") && !t.contains("\r"),
-      s"graft commit log: illegal txn id '$t'"))
-    if (txn.exists(txnCommitted(dir, _))) return 0
-    val lines = txn.map(t => s"#txn,$t").toSeq ++
-      removed.sorted.map("-" + _) ++ published.sorted
-    var v = latestVersion(dir) + 1
-    while (!tryAppendAt(dir, v, lines)) {
-      // a lost race may have been our own txn's earlier (crashed-after-
-      // publish) attempt or a concurrent replica — re-check before retrying
-      if (txn.exists(txnCommitted(dir, _))) return 0
-      v = math.max(v + 1, latestVersion(dir) + 1)
-    }
-    v
-  }
+      removed: Seq[String] = Nil, txn: Option[String] = None): Int =
+    publish(dir, None, published.map(KvPresent(_)), removed, txn = txn)
 
-  /** OCC publish for a REPLACE commit (INSERT OVERWRITE /
-    * SaveMode.Overwrite): the new snapshot lands at exactly `base + 1`,
-    * where `base` is the version whose live set the writer captured as
-    * `removed`. Unlike [[append]]'s blind retry — exact only for deltas
-    * whose adds/removes are disjoint by construction — a lost race here
-    * means another commit changed the live set after it was read, and the
-    * union of two overwrites is last-writer-wins for NEITHER, so the
-    * caller must abort and re-run (the KvStore.mutate discipline).
-    * Returns false on conflict; the txn no-op check mirrors [[append]]. */
-  def tryReplaceAt(dir: java.nio.file.Path, base: Int,
-      published: Seq[String], removed: Seq[String],
-      txn: Option[String] = None): Boolean = {
-    published.foreach(checkName)
-    removed.foreach(checkName)
+  /** A fresh per-write nonce for staged and published file names: task
+    * and partition ids repeat across SparkContexts, and a later write
+    * must never clobber a file an earlier version still names. */
+  private[sources] def nonce(): String = java.lang.Long.toUnsignedString(
+    java.util.concurrent.ThreadLocalRandom.current().nextLong(), 36)
+
+  /** THE publish of every KV store data write — the sink's batch write
+    * (appends, overwrites, SQL row-level rewrites) and every [[KvStore]]
+    * verb. One commit's `members` move into `dir` first, each SIDECAR
+    * BEFORE ITS DATA FILE (a visible file always has its stats:
+    * [[KvStagedFile]]s get theirs written from their stats, [[KvAdopted]]
+    * files bring theirs), then one manifest names them with the
+    * `removes`, the deletion-vector `attach`ments to files already in
+    * place (plus one per [[KvStagedDv]]) and the `txn` marker.
+    *
+    * `base` selects the conflict policy:
+    *   - `Some(b)` — the commit was DERIVED from the snapshot at `b` (its
+    *     removes, vectors or rewrites were read there), so it lands at
+    *     exactly `b + 1`. A concurrent commit that won that slot makes
+    *     this one throw, after everything it moved in is deleted again
+    *     (no manifest names those files, so no reader saw them) — the
+    *     caller re-runs against the new head. A commit that changes
+    *     nothing publishes no manifest and returns `b` (a store that does
+    *     not exist yet still gets its first version).
+    *   - `None` — a blind delta append: it takes the next free version
+    *     and bumps and retries on a lost race ([[append]]).
+    *
+    * Every line is checked against the manifest grammar, and every vector
+    * must attach to a file live once this commit's removes and adds
+    * apply. With a `txn` the log already holds, nothing is published and
+    * nothing stays moved in; the result is 0. Otherwise the result is
+    * the committed version. */
+  def publish(dir: java.nio.file.Path, base: Option[Int],
+      members: Seq[KvMember], removes: Seq[String] = Nil,
+      attach: Seq[(String, String)] = Nil,
+      txn: Option[String] = None): Int = {
+    val adds = members.collect {
+      case sf: KvStagedFile => sf.name
+      case KvAdopted(from) => from.getFileName.toString
+      case KvPresent(name) => name
+    }
+    val dvs = attach ++ members.collect {
+      case KvStagedDv(data, from) => (data, from.getFileName.toString)
+    }
+    adds.foreach(checkName)
+    removes.foreach(checkName)
     txn.foreach(t => require(!t.contains("\n") && !t.contains("\r"),
       s"graft commit log: illegal txn id '$t'"))
-    if (txn.exists(txnCommitted(dir, _))) return true
-    val lines = txn.map(t => s"#txn,$t").toSeq ++
-      removed.sorted.map("-" + _) ++ published.sorted
-    tryAppendAt(dir, base + 1, lines)
+    if (dvs.nonEmpty) {
+      val at = base.getOrElse(latestVersion(dir))
+      val live = filesAsOf(dir, at) -- removes ++ adds
+      dvs.foreach { case (data, vec) =>
+        checkName(data); checkName(vec)
+        require(!data.contains(",") && !vec.contains(","),
+          s"graft commit log: dv entry names may not contain ',' ($data, $vec)")
+        require(live(data),
+          s"graft commit log: cannot attach dv to $data — not live at $at")
+      }
+    }
+    val lines = txn.map(t => s"#txn,$t").toSeq ++ removes.map("-" + _) ++
+      adds ++ dvs.map { case (data, vec) => s"#dv,$data,$vec" }
+    if (lines.isEmpty && base.exists(_ > 0)) return base.get
+    if (txn.exists(txnCommitted(dir, _))) return 0
+    val moved = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+    def moveIn(from: java.nio.file.Path): Unit = {
+      val to = dir.resolve(from.getFileName)
+      Files.move(from, to, StandardCopyOption.REPLACE_EXISTING)
+      moved += to
+    }
+    def rollback(): Unit =
+      moved.reverseIterator.foreach(p => Files.deleteIfExists(p): Unit)
+    try members.foreach {
+      case sf: KvStagedFile =>
+        KvZoneMap.write(dir, sf)
+        moved += dir.resolve(KvZoneMap.sidecarName(sf.name))
+        moveIn(Paths.get(sf.stagedFile))
+      case KvAdopted(from) =>
+        moveIn(from.resolveSibling(
+          KvZoneMap.sidecarName(from.getFileName.toString)))
+        moveIn(from)
+      case KvStagedDv(_, from) => moveIn(from)
+      case KvPresent(_) => ()
+    } catch { case e: Throwable => rollback(); throw e }
+    base match {
+      case Some(b) =>
+        if (tryAppendAt(dir, b + 1, lines)) b + 1
+        else {
+          rollback()
+          throw new IllegalStateException(
+            s"concurrent commit at $dir superseded the version-$b snapshot " +
+              "this commit was derived from; what it staged was rolled " +
+              "back — re-run against the new head")
+        }
+      case None =>
+        var v = latestVersion(dir) + 1
+        while (!tryAppendAt(dir, v, lines)) {
+          // a lost race may have been our own txn's earlier (crashed-after-
+          // publish) attempt or a concurrent replica — re-check first
+          if (txn.exists(txnCommitted(dir, _))) { rollback(); return 0 }
+          v = math.max(v + 1, latestVersion(dir) + 1)
+        }
+        v
+    }
   }
 
   /** Has a commit carrying `#txn,<txn>` already been published? One
@@ -899,27 +1070,6 @@ object KvCommitLog {
           "vacuumed — snapshot no longer reconstructible")
     ms.foreach { case (_, p) => fold(linesOf(p)) }
     (live.toSet, dvs.toMap)
-  }
-
-  /** CAS-publish deletion-vector attachments as EXACTLY `base + 1` —
-    * the vectors were computed from the version-`base` live-ordinal
-    * state (already-deleted rows excluded), so ANY concurrent commit
-    * invalidates them: a lost race returns false and the caller cleans
-    * up its staged vectors ([[KvStore.deleteWhereDV]] discipline).
-    * Every named data file must be live at `base`. */
-  def tryAttachDvsAt(dir: java.nio.file.Path, base: Int,
-      attachments: Seq[(String, String)]): Boolean = {
-    require(attachments.nonEmpty, "graft commit log: no dv attachments")
-    val live = filesAsOf(dir, base)
-    attachments.foreach { case (data, vec) =>
-      checkName(data); checkName(vec)
-      require(!data.contains(",") && !vec.contains(","),
-        s"graft commit log: dv entry names may not contain ',' ($data, $vec)")
-      require(live(data),
-        s"graft commit log: cannot attach dv to $data — not live at $base")
-    }
-    tryAppendAt(dir, base + 1,
-      attachments.map { case (d, v) => s"#dv,$d,$v" }.sorted)
   }
 
   /** The latest live view — what a reader without `asOfCommit` plans. */
@@ -1165,21 +1315,15 @@ class KvDataWriter(path: String, schema: StructType, partitionId: Int,
     s"graft kv sink: constraint '${c.name}' references unknown column " +
       s"'${c.col}'"))
 
-  private val statIdx: Array[Int] = schema.fields.zipWithIndex.collect {
-    case (f, i) if f.dataType == LongType || f.dataType == IntegerType => i
-  }
-  // opt-in Bloom columns: validated int/long/string field indices
-  private val bloomIdx: Array[Int] = bloomCols.map { c =>
-    val i = schema.fieldNames.indexOf(c)
-    require(i >= 0, s"graft kv sink: bloomColumns column '$c' not in schema")
-    i
-  }.toArray
-  private val dStatIdx: Array[Int] = schema.fields.zipWithIndex.collect {
-    case (f, i) if f.dataType == DoubleType => i
-  }
-  private val sStatIdx: Array[Int] = schema.fields.zipWithIndex.collect {
-    case (f, i) if f.dataType == StringType => i
-  }
+  // per-column field kind, resolved once: 0 long, 1 int, 2 double,
+  // 3 string, -1 unsupported (rejected when a row arrives)
+  private val kinds: Array[Int] = schema.fields.map(_.dataType match {
+    case LongType => 0
+    case IntegerType => 1
+    case DoubleType => 2
+    case StringType => 3
+    case _ => -1
+  })
   private val partIdx: Option[Int] = partCol.map { c =>
     val i = schema.fieldNames.indexOf(c)
     require(i >= 0, s"graft kv sink: partitionColumn '$c' not in schema")
@@ -1188,8 +1332,9 @@ class KvDataWriter(path: String, schema: StructType, partitionId: Int,
       s"graft kv sink: partitionColumn '$c' must be integer-typed")
     i
   }
+  private val line = new java.lang.StringBuilder
 
-  /** One staged file + its zone-map accumulators. The writer handle is
+  /** One staged file + its zone-map accumulator. The writer handle is
     * LAZY and re-openable (append mode), so a high-cardinality
     * `partitionColumn` degrades to open/close churn past [[MaxOpenWriters]]
     * instead of exhausting file descriptors mid-write (r11 ADVICE). */
@@ -1211,33 +1356,7 @@ class KvDataWriter(path: String, schema: StructType, partitionId: Int,
     }
     def isOpen: Boolean = w != null
     def closeWriter(): Unit = if (w != null) { w.close(); w = null }
-    val mins: Array[Long] = Array.fill(statIdx.length)(Long.MaxValue)
-    val maxs: Array[Long] = Array.fill(statIdx.length)(Long.MinValue)
-    // integer column sums in Long ring arithmetic — wrapping + is
-    // associative, so per-file partials fold to exactly what Spark's own
-    // (non-ANSI) sum over the rows would produce. A sum that OVERFLOWS is
-    // withheld from the sidecar instead (sumBad) — readers then parse the
-    // file for sums, which is always sound (same discipline as NaN and
-    // double bounds).
-    val sums: Array[Long] = Array.fill(statIdx.length)(0L)
-    val sumBad: Array[Boolean] = Array.fill(statIdx.length)(false)
-    val dMins: Array[Double] = Array.fill(dStatIdx.length)(Double.MaxValue)
-    val dMaxs: Array[Double] = Array.fill(dStatIdx.length)(Double.MinValue)
-    // a NaN makes [min,max] meaningless under Spark's NaN-equality
-    // semantics — that column publishes no double bounds for this file
-    val dNaN: Array[Boolean] = Array.fill(dStatIdx.length)(false)
-    val sMins: Array[String] = Array.fill(sStatIdx.length)(null)
-    val sMaxs: Array[String] = Array.fill(sStatIdx.length)(null)
-    // per-column null counts (r13: schema evolution makes nulls real) —
-    // published as `#n` sidecar lines so count(col) stays stats-answered
-    val nullCnt: Array[Long] = Array.fill(schema.fields.length)(0L)
-    // distinct primary hashes per Bloom column — an open-addressing set
-    // so task memory is ∝ distincts, not rows (r13 advice), with an
-    // explicit drop past KvBloom.MaxTrackedDistinct where the capped
-    // filter couldn't prune anyway
-    val bloomHashes: Array[KvBloom.HashAcc] =
-      Array.fill(bloomIdx.length)(new KvBloom.HashAcc)
-    var nRows = 0L
+    val zone = new KvZoneAcc(schema, bloomCols)
   }
 
   /** Simultaneously-open writer cap: past it the least-recently-USED open
@@ -1283,87 +1402,33 @@ class KvDataWriter(path: String, schema: StructType, partitionId: Int,
         s"graft kv sink: null value for partition column " +
           s"'${schema.fields(i).name}' — partition routing needs a value")
     }
-    val line = schema.fields.zipWithIndex.map { case (f, i) =>
-      if (row.isNullAt(i)) f.dataType match {
-        case StringType => KvEscape.NullToken
-        case _ => ""
-      }
-      else f.dataType match {
-        case LongType => row.getLong(i).toString
-        case IntegerType => row.getInt(i).toString
-        case DoubleType => row.getDouble(i).toString
-        case StringType => KvEscape.escape(row.getUTF8String(i).toString)
-        case dt => throw new IllegalArgumentException(
-          s"graft kv sink: unsupported field type ${dt.catalogString}")
-      }
-    }.mkString(",")
     val acc = accFor(row)
+    val zone = acc.zone
+    line.setLength(0)
     var c = 0
-    while (c < schema.fields.length) {
-      if (row.isNullAt(c)) acc.nullCnt(c) += 1
+    while (c < kinds.length) {
+      if (c > 0) line.append(',')
+      if (row.isNullAt(c)) {
+        zone.nullAt(c)
+        if (kinds(c) == 3) line.append(KvEscape.NullToken)
+      } else kinds(c) match {
+        case 0 => val v = row.getLong(c); zone.long(c, v); line.append(v)
+        case 1 => val v = row.getInt(c); zone.long(c, v); line.append(v)
+        case 2 => val v = row.getDouble(c); zone.double(c, v); line.append(v)
+        case 3 =>
+          val v = row.getUTF8String(c).toString
+          zone.string(c, v)
+          line.append(KvEscape.escape(v))
+        case _ => throw new IllegalArgumentException(
+          "graft kv sink: unsupported field type " +
+            schema.fields(c).dataType.catalogString)
+      }
       c += 1
     }
-    var j = 0
-    while (j < statIdx.length) {
-      val i = statIdx(j)
-      if (!row.isNullAt(i)) {
-        val v = schema.fields(i).dataType match {
-          case LongType => row.getLong(i)
-          case _ => row.getInt(i).toLong
-        }
-        if (v < acc.mins(j)) acc.mins(j) = v
-        if (v > acc.maxs(j)) acc.maxs(j) = v
-        if (!acc.sumBad(j)) {
-          try acc.sums(j) = Math.addExact(acc.sums(j), v)
-          catch { case _: ArithmeticException => acc.sumBad(j) = true }
-        }
-      }
-      j += 1
-    }
-    j = 0
-    while (j < dStatIdx.length) {
-      if (!row.isNullAt(dStatIdx(j))) {
-        val raw = row.getDouble(dStatIdx(j))
-        // -0.0 normalizes to 0.0 (Spark comparison semantics equate them,
-        // so bounds must not distinguish them either)
-        val v = if (raw == 0.0) 0.0 else raw
-        if (java.lang.Double.isNaN(v)) acc.dNaN(j) = true
-        else {
-          if (v < acc.dMins(j)) acc.dMins(j) = v
-          if (v > acc.dMaxs(j)) acc.dMaxs(j) = v
-        }
-      }
-      j += 1
-    }
-    j = 0
-    while (j < sStatIdx.length) {
-      if (!row.isNullAt(sStatIdx(j))) {
-        val v = row.getUTF8String(sStatIdx(j)).toString
-        // code-point order (= Spark's UTF8String order), NOT Java compareTo
-        if (acc.sMins(j) == null || KvEscape.cpCompare(v, acc.sMins(j)) < 0)
-          acc.sMins(j) = v
-        if (acc.sMaxs(j) == null || KvEscape.cpCompare(v, acc.sMaxs(j)) > 0)
-          acc.sMaxs(j) = v
-      }
-      j += 1
-    }
-    j = 0
-    while (j < bloomIdx.length) {
-      val i = bloomIdx(j)
-      if (!row.isNullAt(i)) {
-        val h = schema.fields(i).dataType match {
-          case LongType => KvBloom.hashLong(row.getLong(i))
-          case IntegerType => KvBloom.hashLong(row.getInt(i).toLong)
-          case _ => KvBloom.hashString(row.getUTF8String(i).toString)
-        }
-        acc.bloomHashes(j).add(h)
-      }
-      j += 1
-    }
-    acc.nRows += 1
+    zone.row()
     val out = acc.writer()
     touch(acc)
-    out.write(line)
+    out.append(line)
     out.newLine()
   }
 
@@ -1373,18 +1438,7 @@ class KvDataWriter(path: String, schema: StructType, partitionId: Int,
     * BEFORE this task returns its staged files — the job aborts, the
     * driver's abort() discards all staging, nothing publishes. */
   private def enforceConstraints(acc: FileAcc): Unit = constraints.foreach { c =>
-    val ci = schema.fieldNames.indexOf(c.col)
-    val ji = statIdx.indexOf(ci)
-    val jd = dStatIdx.indexOf(ci)
-    val js = sStatIdx.indexOf(ci)
-    val intB = if (ji >= 0 && acc.mins(ji) <= acc.maxs(ji))
-      Some((acc.mins(ji), acc.maxs(ji))) else None
-    val dblB = if (jd >= 0 && acc.dMins(jd) <= acc.dMaxs(jd))
-      Some((acc.dMins(jd), acc.dMaxs(jd))) else None
-    val strB = if (js >= 0 && acc.sMins(js) != null)
-      Some((acc.sMins(js), acc.sMaxs(js))) else None
-    KvConstraint.violation(c, schema, acc.nullCnt(ci), intB, dblB,
-      jd >= 0 && acc.dNaN(jd), strB).foreach { ev =>
+    acc.zone.violation(c).foreach { ev =>
       throw new IllegalArgumentException(
         s"graft kv sink: CONSTRAINT '${c.name}' (${c.describe}) violated " +
           s"by this write — $ev; nothing was published (2PC: the job " +
@@ -1399,52 +1453,7 @@ class KvDataWriter(path: String, schema: StructType, partitionId: Int,
     accs.values.foreach(enforceConstraints)
     KvCommit(accs.values.toSeq.map { acc =>
       acc.closeWriter()
-      val empty = acc.nRows == 0L
-      // bounds and sums publish only for columns with >=1 NON-NULL value
-      // (an all-null column has no bounds; its absence + the #n line is
-      // what the stats-answered aggregates fold on)
-      val stats =
-        if (empty) Seq.empty
-        else statIdx.indices
-          .filter(j => acc.mins(j) <= acc.maxs(j))
-          .map { j =>
-            (schema.fields(statIdx(j)).name, acc.mins(j), acc.maxs(j))
-          }.toSeq
-      val dstats =
-        if (empty) Seq.empty
-        else dStatIdx.indices
-          .filter(j => !acc.dNaN(j) && acc.dMins(j) <= acc.dMaxs(j))
-          .map { j =>
-            (schema.fields(dStatIdx(j)).name, acc.dMins(j), acc.dMaxs(j))
-          }.toSeq
-      val sstats =
-        if (empty) Seq.empty
-        else sStatIdx.indices
-          .filter(j => acc.sMins(j) != null)
-          .map { j =>
-            (schema.fields(sStatIdx(j)).name, acc.sMins(j), acc.sMaxs(j))
-          }.toSeq
-      val sums =
-        if (empty) Seq.empty
-        else statIdx.indices
-          .filter(j => !acc.sumBad(j) && acc.mins(j) <= acc.maxs(j))
-          .map(j => (schema.fields(statIdx(j)).name, acc.sums(j))).toSeq
-      val nulls =
-        if (empty) Seq.empty
-        else schema.fields.indices
-          .map(c => (schema.fields(c).name, acc.nullCnt(c))).toSeq
-      // Bloom publishes only for columns with >=1 non-null value (same
-      // presence discipline as bounds: absence never prunes) and only
-      // when the distinct count stayed under the useful-FPP ceiling
-      val blooms = bloomIdx.indices
-        .filter(j => !acc.bloomHashes(j).isEmpty &&
-          !acc.bloomHashes(j).overflowed)
-        .map { j =>
-          val b = KvBloom.build(acc.bloomHashes(j).toArray)
-          (schema.fields(bloomIdx(j)).name, b.k, b.m, b.bits)
-        }.toSeq
-      KvStagedFile(acc.staged.getAbsolutePath, acc.nRows, stats, dstats,
-        sstats, sums, nulls, blooms)
+      acc.zone.finish(acc.staged.getAbsolutePath)
     })
   }
 

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.io.File
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.sources._
@@ -22,12 +22,11 @@ import org.apache.spark.sql.types._
   *  - **distributed rewrite**: candidate files are rewritten by
   *    EXECUTORS (one task per file — the store's parallelism unit),
   *    surviving lines re-emitted verbatim, fresh zone-map stats
-  *    accumulated with the sink's exact discipline (code-point string
-  *    bounds, NaN/-0.0 normalization, overflow-withheld sums);
+  *    accumulated by the sink's own [[KvZoneAcc]];
   *  - **one atomic version**: the whole mutation — removes of rewritten/
   *    emptied files, adds of their replacements (and, for MERGE, of the
-  *    upsert batch) — is ONE manifest published by compare-and-swap at
-  *    exactly `base+1` ([[KvCommitLog.tryAppendAt]]). A concurrent
+  *    upsert batch) — is ONE [[KvCommitLog.publish]] at exactly `base+1`,
+  *    the same publish every store write goes through. A concurrent
   *    commit wins the slot → this mutation ABORTS with its staged adds
   *    cleaned up, and the caller re-runs against the new head — the
   *    compaction CAS discipline, because the rewrite is DERIVED from the
@@ -122,6 +121,100 @@ object KvStore {
     }
   }
 
+  /** The version a mutation derives from: `expected`, or the head. */
+  private def baseOf(dir: String, expected: Option[Int] = None): Int = {
+    val base = expected.getOrElse(KvCommitLog.latestVersion(Paths.get(dir)))
+    require(base > 0, s"graft kv store: no commit log at $dir — not a store")
+    base
+  }
+
+  /** Zone-map targeting: the files of `live` whose sidecar does not PROVE
+    * that no row can match `filters` and `keys` — a file without a
+    * sidecar is always a candidate (never guess). Vector-carrying files'
+    * sidecars describe a SUPERSET of their live rows, so "cannot match"
+    * stays proven. */
+  private def candidates(dir: String, live: Seq[String],
+      filters: Seq[Filter], keys: Map[String, Set[Long]] = Map.empty): Seq[String] =
+    live.filter(n => KvZoneMap.read(new File(dir, n))
+      .forall(KvZonePrune.keeps(_, filters, keys)))
+
+  /** Scan one store file's LIVE rows: `f(ordinal, line)` for every
+    * non-empty line its deletion vectors `dvNames` do not delete (the
+    * ordinal is the physical line number from 0). Returns how many rows
+    * the vectors deleted. */
+  private def liveLines(dir: String, name: String, dvNames: Seq[String])(
+      f: (Long, String) => Unit): Long = {
+    val cursor = new KvDv.Cursor(
+      KvDv.merged(dvNames.map(v => Paths.get(dir).resolve(v))))
+    var ord = -1L
+    var dvDeleted = 0L
+    val src = scala.io.Source.fromFile(new File(dir, name), "UTF-8")
+    try src.getLines().foreach { line =>
+      ord += 1
+      if (line.nonEmpty) {
+        if (cursor.deleted(ord)) dvDeleted += 1 else f(ord, line)
+      }
+    } finally src.close()
+    dvDeleted
+  }
+
+  /** The delete condition over one parsed row: key ∈ the merge key set
+    * when `keys` is given — a NULL key matches no merge key (SQL null
+    * semantics) — else every filter true. */
+  private def doomedBy(schema: StructType, filters: Seq[Filter],
+      keys: Option[(String, Set[Long])]): Array[Any] => Boolean = {
+    val idx = schema.fieldNames.zipWithIndex.toMap
+    keys match {
+      case Some((c, ks)) =>
+        val ki = idx(c)
+        row => row(ki) match {
+          case l: Long => ks.contains(l)
+          case i: Int => ks.contains(i.toLong)
+          case _ => false
+        }
+      case None => row => filters.forall(KvRowEval.eval(_, idx, row))
+    }
+  }
+
+  /** Stage the `i`-th vector of a write under `_staging` (nothing is
+    * written for no ordinals); returns its name. */
+  private def stageDv(dir: String, nonce: String, i: Int,
+      ords: Array[Long]): String = {
+    val dvName = KvDv.name(nonce, i)
+    if (ords.nonEmpty) {
+      val staging = new File(dir, "_staging")
+      staging.mkdirs()
+      KvDv.write(staging.toPath.resolve(dvName), ords)
+    }
+    dvName
+  }
+
+  /** The vectors [[stageVectors]] staged, as members to publish. */
+  private def vectors(dir: String, hits: Seq[(String, String, Long)]): Seq[KvMember] =
+    hits.map { case (data, dvName, _) =>
+      KvStagedDv(data, Paths.get(dir, "_staging", dvName))
+    }
+
+  /** Land `df` through the sink's own 2PC writer (full stats discipline)
+    * in the hidden scratch store `_<tag>` under `dir`, and hand `commit`
+    * its committed files to adopt, with their row count. The scratch
+    * store is gone afterwards. */
+  private def withScratch(dir: String, tag: String, df: DataFrame,
+      bloomCols: Seq[String] = Nil)(
+      commit: (Seq[KvMember], Long) => Mutation): Mutation = {
+    val scratch = Paths.get(dir, s"_$tag")
+    try {
+      df.write.format("graft.sources.KvSinkProvider")
+        .option("path", scratch.toString)
+        .option("bloomColumns", bloomCols.mkString(","))
+        .mode("append").save()
+      val files = KvCommitLog.liveFiles(scratch).toSeq.sorted
+      commit(files.map(n => KvAdopted(scratch.resolve(n))),
+        files.flatMap(n => KvZoneMap.read(scratch.resolve(n).toFile))
+          .map(_.rows).sum)
+    } finally KvCommitLog.rmTree(scratch.toFile)
+  }
+
   /** Per-file doomed ordinals for a wide delta, computed distributedly:
     * candidate files are scanned by executors into (file, ordinal, key)
     * rows (live ordinals only — existing vectors applied, empty lines
@@ -145,20 +238,14 @@ object KvStore {
         val parsed = StructType.fromDDL(ddl)
         val types = parsed.fields.map(_.dataType)
         val ki = parsed.fieldNames.indexOf(keyCol)
-        val cursor = new KvDv.Cursor(
-          KvDv.merged(dvNames.map(v => Paths.get(dir).resolve(v))))
         val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-        val src = scala.io.Source.fromFile(new File(dir, name), "UTF-8")
-        var ord = -1L
-        try src.getLines().foreach { line =>
-          ord += 1
-          if (line.nonEmpty && !cursor.deleted(ord))
-            KvRowEval.parse(line, types)(ki) match {
-              case l: Long => buf += ((name, ord, l))
-              case i2: Int => buf += ((name, ord, i2.toLong))
-              case _ => () // NULL key matches no merge key
-            }
-        } finally src.close()
+        liveLines(dir, name, dvNames) { (ord, line) =>
+          KvRowEval.parse(line, types)(ki) match {
+            case l: Long => buf += ((name, ord, l))
+            case i2: Int => buf += ((name, ord, i2.toLong))
+            case _ => () // NULL key matches no merge key
+          }
+        }
         buf
       }.toDF("__f", "__ord", "__k")
     fileRows.join(keysDf, "__k")
@@ -195,37 +282,13 @@ object KvStore {
     require(filters.nonEmpty,
       "graft kv store: deletion-vector TRUNCATE is pure overhead — use " +
         "deleteWhere for an unconditional delete")
-    val dirPath = Paths.get(dir)
-    val base = expectedBase.getOrElse(KvCommitLog.latestVersion(dirPath))
-    require(base > 0, s"graft kv store: no commit log at $dir — not a store")
-    val (live, dvs) = KvCommitLog.stateAsOf(dirPath, base)
-    val candidates = live.toSeq.sorted.filter { name =>
-      KvZoneMap.read(new File(dir, name)) match {
-        case Some(st) => KvZonePrune.keeps(st, filters, Map.empty)
-        case None => true
-      }
-    }
-    if (candidates.isEmpty) return Mutation(base, 0, 0, live.size, 0L, 0L)
-    val nonce = java.lang.Long.toUnsignedString(
-      java.util.concurrent.ThreadLocalRandom.current().nextLong(), 36)
-    val hit = stageVectors(spark, dir, schema, candidates, dvs, nonce,
+    val base = baseOf(dir, expectedBase)
+    val (live, dvs) = KvCommitLog.stateAsOf(Paths.get(dir), base)
+    val hit = stageVectors(spark, dir, schema,
+      candidates(dir, live.toSeq.sorted, filters), dvs, KvCommitLog.nonce(),
       filters, None)
-    if (hit.isEmpty) return Mutation(base, 0, 0, live.size, 0L, 0L)
-    val stagingDir = dirPath.resolve("_staging")
-    hit.foreach { case (_, dvName, _) =>
-      Files.move(stagingDir.resolve(dvName), dirPath.resolve(dvName))
-    }
-    if (!KvCommitLog.tryAttachDvsAt(dirPath, base,
-        hit.map { case (data, dvName, _) => (data, dvName) })) {
-      hit.foreach { case (_, dvName, _) =>
-        Files.deleteIfExists(dirPath.resolve(dvName)): Unit
-      }
-      throw new IllegalStateException(
-        s"concurrent commit at $dir superseded the version-$base snapshot " +
-          "this deletion-vector delete was derived from; staged vectors " +
-          "rolled back — re-run the delete against the new head")
-    }
-    Mutation(base + 1, 0, 0, live.size, hit.map(_._3).sum, 0L)
+    Mutation(KvCommitLog.publish(Paths.get(dir), Some(base), vectors(dir, hit)),
+      0, 0, live.size, hit.map(_._3).sum, 0L)
   }
 
   /** RESTORE the store to the content of an earlier version, as a NEW
@@ -243,13 +306,10 @@ object KvStore {
     * concurrent commit aborts the restore (nothing staged to clean). */
   def restore(dir: String, toVersion: Int): Mutation = {
     val dirPath = Paths.get(dir)
-    val base = KvCommitLog.latestVersion(dirPath)
-    require(base > 0, s"graft kv store: no commit log at $dir — not a store")
+    val base = baseOf(dir)
     require(toVersion >= 1 && toVersion <= base,
       s"graft kv store: restore target $toVersion out of committed " +
         s"range [1, $base] at $dir")
-    if (toVersion == base) return Mutation(base, 0, 0,
-      KvCommitLog.filesAsOf(dirPath, base).size, 0L, 0L)
     val (curLive, curDvs) = KvCommitLog.stateAsOf(dirPath, base)
     val (oldLive, oldDvs) = KvCommitLog.stateAsOf(dirPath, toVersion)
     // every restored file must still exist — vacuum may have reclaimed
@@ -264,21 +324,15 @@ object KvStore {
     // re-add — '-name' sorts before 'name', so the net is a clean
     // re-insert), then the target snapshot's vectors re-attach. Files
     // with identical vectors need no lines at all — re-emitting their
-    // `#dv` lines would double-attach.
+    // `#dv` lines would double-attach. Restoring the head changes
+    // nothing and so publishes nothing.
     val churned = oldLive.filter(f => curLive(f) &&
       curDvs.getOrElse(f, Nil) != oldDvs.getOrElse(f, Nil))
     val removes = ((curLive -- oldLive) ++ churned).toSeq.sorted
     val adds = ((oldLive -- curLive) ++ churned).toSeq.sorted
-    val dvLines = adds.flatMap(d =>
-      oldDvs.getOrElse(d, Nil).map(v => s"#dv,$d,$v")).sorted
-    val lines = removes.map("-" + _) ++ adds ++ dvLines
-    if (removes.isEmpty && adds.isEmpty)
-      return Mutation(base, 0, 0, curLive.size, 0L, 0L)
-    if (!KvCommitLog.tryAppendAt(dirPath, base + 1, lines))
-      throw new IllegalStateException(
-        s"concurrent commit at $dir superseded the version-$base head " +
-          "this restore was derived from — re-run")
-    Mutation(base + 1, 0, 0, oldLive.size, 0L, 0L)
+    val v = KvCommitLog.publish(dirPath, Some(base), adds.map(KvPresent(_)),
+      removes, adds.flatMap(d => oldDvs.getOrElse(d, Nil).map(d -> _)))
+    Mutation(v, 0, 0, oldLive.size, 0L, 0L)
   }
 
   /** Executor fan-out shared by the merge-on-read writers: one task per
@@ -292,49 +346,23 @@ object KvStore {
       dvs: Map[String, Seq[String]], nonce: String,
       filters: Seq[Filter], keys: Option[(String, Set[Long])])
       : Seq[(String, String, Long)] = {
+    if (candidates.isEmpty) return Nil
     val ddl = schema.toDDL
-    val staged: Seq[(String, String, Long)] = spark.sparkContext
+    spark.sparkContext
       .parallelize(candidates.zipWithIndex,
         math.min(candidates.size, spark.sparkContext.defaultParallelism))
       .map { case (name, i) =>
         val parsed = StructType.fromDDL(ddl)
         val types = parsed.fields.map(_.dataType)
-        val idx = parsed.fieldNames.zipWithIndex.toMap
-        val keyIdx = keys.map { case (c, ks) => (idx(c), ks) }
-        val existing = dvs.getOrElse(name, Nil)
-          .map(v => Paths.get(dir).resolve(v))
-        val cursor = new KvDv.Cursor(KvDv.merged(existing))
-        val hits = scala.collection.mutable.ArrayBuffer.empty[Long]
-        val src = scala.io.Source.fromFile(new File(dir, name), "UTF-8")
-        var ord = -1L
-        try src.getLines().foreach { line =>
-          ord += 1
-          if (line.nonEmpty && !cursor.deleted(ord)) {
-            val doomed = keyIdx match {
-              // a NULL key matches no merge key (SQL null semantics)
-              case Some((ki, ks)) =>
-                KvRowEval.parse(line, types)(ki) match {
-                  case l: Long => ks.contains(l)
-                  case i2: Int => ks.contains(i2.toLong)
-                  case _ => false
-                }
-              case None =>
-                val row = KvRowEval.parse(line, types)
-                filters.forall(KvRowEval.eval(_, idx, row))
-            }
-            if (doomed) hits += ord
-          }
-        } finally src.close()
-        val dvName = KvDv.name(nonce, i)
-        if (hits.nonEmpty) {
-          val stagingDir = new File(dir, "_staging")
-          stagingDir.mkdirs()
-          KvDv.write(stagingDir.toPath.resolve(dvName), hits.toArray)
+        val doomed = doomedBy(parsed, filters, keys)
+        val hits = scala.collection.mutable.ArrayBuilder.make[Long]
+        liveLines(dir, name, dvs.getOrElse(name, Nil)) { (ord, line) =>
+          if (doomed(KvRowEval.parse(line, types))) hits += ord
         }
-        (name, dvName, hits.size.toLong)
+        val ords = hits.result()
+        (name, stageDv(dir, nonce, i, ords), ords.length.toLong)
       }
-      .collect().toSeq
-    staged.filter(_._3 > 0L)
+      .collect().toSeq.filter(_._3 > 0L)
   }
 
   /** MERGE via DELETION VECTORS (merge-on-read CDC upsert): store rows
@@ -369,82 +397,36 @@ object KvStore {
     val narrowKeys = boundedKeys(upserts, keyCol, keyCollectMax(spark))
       .map(_ ++ deleteKeys)
     lastMergeKeysDistributed = narrowKeys.isEmpty
-    val dirPath = Paths.get(dir)
-    val base = expectedBase.getOrElse(KvCommitLog.latestVersion(dirPath))
-    require(base > 0, s"graft kv store: no commit log at $dir — not a store")
-    val (live, dvs) = KvCommitLog.stateAsOf(dirPath, base)
-    val nonce = java.lang.Long.toUnsignedString(
-      java.util.concurrent.ThreadLocalRandom.current().nextLong(), 36)
+    val base = baseOf(dir, expectedBase)
+    val (live, dvs) = KvCommitLog.stateAsOf(Paths.get(dir), base)
+    val nonce = KvCommitLog.nonce()
     val hit: Seq[(String, String, Long)] = narrowKeys match {
       case Some(affected) =>
-        val runtimeKeys = Map(keyCol -> affected)
-        val candidates = live.toSeq.sorted.filter { name =>
-          KvZoneMap.read(new File(dir, name)) match {
-            case Some(st) => KvZonePrune.keeps(st, Nil, runtimeKeys)
-            case None => true
-          }
-        }
-        if (candidates.isEmpty || affected.isEmpty) Nil
-        else stageVectors(spark, dir, schema, candidates, dvs, nonce, Nil,
-          Some(keyCol -> affected))
+        if (affected.isEmpty) Nil
+        else stageVectors(spark, dir, schema,
+          candidates(dir, live.toSeq.sorted, Nil, Map(keyCol -> affected)),
+          dvs, nonce, Nil, Some(keyCol -> affected))
       case None =>
         import spark.implicits._
         val keysDf = keysFrame(upserts, keyCol, deleteKeys)
-        val candidates =
-          rangeCandidates(dir, live.toSeq.sorted, keyCol, keysDf)
-        if (candidates.isEmpty) Nil
+        val cands = rangeCandidates(dir, live.toSeq.sorted, keyCol, keysDf)
+        if (cands.isEmpty) Nil
         else {
-          val idxOf = candidates.zipWithIndex.toMap
-          distributedHits(spark, dir, schema, keyCol, candidates, dvs, keysDf)
+          val idxOf = cands.zipWithIndex.toMap
+          // stage the vector IN THE TASK: the ordinal list never crosses
+          // to the driver
+          distributedHits(spark, dir, schema, keyCol, cands, dvs, keysDf)
             .map { case (name, ords) =>
-              // stage the vector IN THE TASK (the ordinal list never
-              // crosses to the driver), same staging protocol as
-              // stageVectors
-              val stagingDir = new File(dir, "_staging")
-              stagingDir.mkdirs()
-              val dvName = KvDv.name(nonce, idxOf(name))
-              KvDv.write(stagingDir.toPath.resolve(dvName), ords.toArray)
-              (name, dvName, ords.size.toLong)
+              (name, stageDv(dir, nonce, idxOf(name), ords.toArray),
+                ords.size.toLong)
             }.collect().toSeq.sortBy(_._1)
         }
     }
-    // the upsert half rides the sink's full 2PC/stats discipline into a
-    // hidden scratch store, then its committed files are adopted (the
-    // KvStore.merge pattern)
-    val scratch = dirPath.resolve(s"_mergedv-$nonce")
-    upserts.write.format("graft.sources.KvSinkProvider")
-      .option("path", scratch.toString).mode("append").save()
-    var rowsAdded = 0L
-    val addNames = KvCommitLog.liveFiles(scratch).toSeq.sorted.map { n =>
-      rowsAdded += KvZoneMap.read(scratch.resolve(n).toFile).map(_.rows).getOrElse(0L)
-      Files.move(scratch.resolve(KvZoneMap.sidecarName(n)),
-        dirPath.resolve(KvZoneMap.sidecarName(n)))
-      Files.move(scratch.resolve(n), dirPath.resolve(n))
-      n
+    withScratch(dir, s"mergedv-$nonce", upserts) { (added, rowsAdded) =>
+      Mutation(KvCommitLog.publish(Paths.get(dir), Some(base),
+          vectors(dir, hit) ++ added),
+        0, 0, live.size, hit.map(_._3).sum, rowsAdded)
     }
-    KvCommitLog.rmTree(scratch.toFile)
-    if (hit.isEmpty && addNames.isEmpty)
-      return Mutation(base, 0, 0, live.size, 0L, 0L)
-    val stagingDir = dirPath.resolve("_staging")
-    hit.foreach { case (_, dvName, _) =>
-      Files.move(stagingDir.resolve(dvName), dirPath.resolve(dvName))
-    }
-    val lines = hit.map { case (data, dvName, _) => s"#dv,$data,$dvName" } ++
-      addNames
-    if (!KvCommitLog.tryAppendAt(dirPath, base + 1, lines.sorted)) {
-      hit.foreach { case (_, dvName, _) =>
-        Files.deleteIfExists(dirPath.resolve(dvName)): Unit
-      }
-      addNames.foreach { n =>
-        Files.deleteIfExists(dirPath.resolve(n)): Unit
-        Files.deleteIfExists(dirPath.resolve(KvZoneMap.sidecarName(n))): Unit
-      }
-      throw new IllegalStateException(
-        s"concurrent commit at $dir superseded the version-$base snapshot " +
-          "this merge-on-read was derived from; staged changes rolled " +
-          "back — re-run the merge against the new head")
-    }
-    Mutation(base + 1, 0, 0, live.size, hit.map(_._3).sum, rowsAdded)
   }
 
   /** MATERIALIZE deletion vectors: rewrite ONLY the vector-carrying
@@ -455,46 +437,17 @@ object KvStore {
     * materializes). Vector files themselves stay on disk for time
     * travel until [[vacuum]]. */
   def purgeDvs(spark: SparkSession, dir: String, schema: StructType): Mutation = {
-    val dirPath = Paths.get(dir)
-    val base = KvCommitLog.latestVersion(dirPath)
-    require(base > 0, s"graft kv store: no commit log at $dir — not a store")
-    val (live, dvs) = KvCommitLog.stateAsOf(dirPath, base)
+    val base = baseOf(dir)
+    val (live, dvs) = KvCommitLog.stateAsOf(Paths.get(dir), base)
     val targets = dvs.keys.toSeq.sorted
     if (targets.isEmpty) return Mutation(base, 0, 0, live.size, 0L, 0L)
-    val nonce = java.lang.Long.toUnsignedString(
-      java.util.concurrent.ThreadLocalRandom.current().nextLong(), 36)
-    val ddl = schema.toDDL
-    val rewrites: Seq[Rewrite] = spark.sparkContext
-      .parallelize(targets.zipWithIndex,
-        math.min(targets.size, spark.sparkContext.defaultParallelism))
-      .map { case (name, i) =>
-        rewriteOne(dir, name, ddl, Nil, None, s"purge-$nonce-$i.csv",
-          dvs.getOrElse(name, Nil), purgeOnly = true)
-      }
-      .collect().toSeq
-    val staging = dirPath.resolve("_staging")
-    val (emptied, replaced) = rewrites.partition(_.kept == 0L)
-    emptied.foreach(r =>
-      Files.deleteIfExists(staging.resolve(r.staged)): Unit)
-    replaced.foreach { r =>
-      KvZoneMap.write(dirPath, r.staged, r.kept, r.stats, r.dstats, r.sstats,
-        r.sums, r.nulls, r.blooms)
-      Files.move(staging.resolve(r.staged), dirPath.resolve(r.staged),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-    if (!KvCommitLog.tryReplaceAt(dirPath, base,
-        replaced.map(_.staged).sorted, targets)) {
-      replaced.foreach { r =>
-        Files.deleteIfExists(dirPath.resolve(r.staged)): Unit
-        Files.deleteIfExists(dirPath.resolve(KvZoneMap.sidecarName(r.staged))): Unit
-      }
-      throw new IllegalStateException(
-        s"concurrent commit at $dir superseded the version-$base snapshot " +
-          "this vector purge was derived from; staged files rolled back — " +
-          "re-run")
-    }
-    Mutation(base + 1, replaced.size, emptied.size, live.size - targets.size,
-      0L, 0L)
+    val rewrites = rewriteFiles(spark, dir, schema, targets, dvs,
+      s"purge-${KvCommitLog.nonce()}", Nil, None, purge = true)
+    val (emptied, replaced) = rewrites.partition(_.staged.rows == 0L)
+    emptied.foreach(discard)
+    Mutation(KvCommitLog.publish(Paths.get(dir), Some(base),
+        replaced.map(_.staged), targets),
+      replaced.size, emptied.size, live.size - targets.size, 0L, 0L)
   }
 
   /** MERGE a change batch into the store, keyed on integer `keyCol`:
@@ -550,10 +503,8 @@ object KvStore {
   def compact(spark: SparkSession, dir: String, schema: StructType,
       targetFiles: Int): Mutation = {
     require(targetFiles >= 1, s"graft kv store: target_files $targetFiles < 1")
-    val dirPath = Paths.get(dir)
-    val base = KvCommitLog.latestVersion(dirPath)
-    require(base > 0, s"graft kv store: no commit log at $dir — not a store")
-    val live = KvCommitLog.filesAsOf(dirPath, base).toSeq.sorted
+    val base = baseOf(dir)
+    val live = KvCommitLog.filesAsOf(Paths.get(dir), base).toSeq.sorted
     if (live.size <= targetFiles)
       return Mutation(base, 0, 0, live.size, 0L, 0L) // already compact
     // CLUSTERING-PRESERVING (r15): a store that paid for a z-order
@@ -590,10 +541,8 @@ object KvStore {
     require(zOrderable(schema, cols),
       s"graft kv store: z-order columns '${cols._1},${cols._2}' must be " +
         "integer schema columns")
-    val dirPath = Paths.get(dir)
-    val base = KvCommitLog.latestVersion(dirPath)
-    require(base > 0, s"graft kv store: no commit log at $dir — not a store")
-    val live = KvCommitLog.filesAsOf(dirPath, base).toSeq.sorted
+    val base = baseOf(dir)
+    val live = KvCommitLog.filesAsOf(Paths.get(dir), base).toSeq.sorted
     if (live.isEmpty) return Mutation(base, 0, 0, 0, 0L, 0L)
     val m = rewriteSnapshot(spark, dir, schema, base, live, "zorder",
       zLayout(spark, cols, targetFiles))
@@ -604,7 +553,7 @@ object KvStore {
     // not versioned content — restore/time-travel below the z-order
     // leaves it in place, and the worst a stale spec can cause is a
     // re-cluster that is content-invariant by construction.
-    writeClustering(dirPath, cols)
+    writeClustering(Paths.get(dir), cols)
     m
   }
 
@@ -650,365 +599,174 @@ object KvStore {
   /** Shared transactional core of the maintenance rewrites ([[compact]],
     * [[zorder]]): read the pinned `base` snapshot, lay it out with
     * `layout`, land through the sink's own 2PC writer into a scratch
-    * store, adopt the files (sidecar first — a visible file always has
-    * its stats), and publish removes(all live) + adds(rewritten) as ONE
-    * manifest CASed at `base+1`. Presence-derived Bloom propagation: the
-    * rewritten files re-bloom every column ANY folded member bloomed.
-    * Content invariance is the caller's gate; a concurrent commit aborts
-    * the rewrite (staged files rolled back), never the concurrent
-    * writer. Time travel below the rewrite serves the old files until
-    * [[vacuum]]; deletion vectors are materialized by the rewrite. */
+    * store, and publish removes(all live) + adds(rewritten, adopted) as
+    * ONE manifest CASed at `base+1`. Presence-derived Bloom propagation:
+    * the rewritten files re-bloom every column ANY folded member
+    * bloomed. Content invariance is the caller's gate; a concurrent
+    * commit aborts the rewrite (staged files rolled back), never the
+    * concurrent writer. Time travel below the rewrite serves the old
+    * files until [[vacuum]]; deletion vectors are materialized by the
+    * rewrite. */
   private def rewriteSnapshot(spark: SparkSession, dir: String,
       schema: StructType, base: Int, live: Seq[String], opName: String,
       layout: DataFrame => DataFrame): Mutation = {
-    val dirPath = Paths.get(dir)
-    val nonce = java.lang.Long.toUnsignedString(
-      java.util.concurrent.ThreadLocalRandom.current().nextLong(), 36)
-    val scratch = dirPath.resolve(s"_$opName-$nonce")
     val bloomCols = live.flatMap(n =>
-      KvZoneMap.read(dirPath.resolve(n).toFile).map(_.blooms.keySet)
+      KvZoneMap.read(new File(dir, n)).map(_.blooms.keySet)
         .getOrElse(Set.empty))
       .distinct.filter(schema.fieldNames.contains).sorted
-    layout(spark.read.format("graft.sources.KvSourceProvider")
-        .option("path", dir).option("schema", schema.toDDL)
-        .option("asOfCommit", base.toString) // pin the snapshot being folded
-        .load())
-      .write.format("graft.sources.KvSinkProvider")
-      .option("path", scratch.toString)
-      .option("bloomColumns", bloomCols.mkString(","))
-      .mode("append").save()
-    var rows = 0L
-    val adopted = KvCommitLog.liveFiles(scratch).toSeq.sorted.map { n =>
-      rows += KvZoneMap.read(scratch.resolve(n).toFile).map(_.rows).getOrElse(0L)
-      Files.move(scratch.resolve(KvZoneMap.sidecarName(n)),
-        dirPath.resolve(KvZoneMap.sidecarName(n)))
-      Files.move(scratch.resolve(n), dirPath.resolve(n))
-      n
+    val folded = layout(spark.read.format("graft.sources.KvSourceProvider")
+      .option("path", dir).option("schema", schema.toDDL)
+      .option("asOfCommit", base.toString) // pin the snapshot being folded
+      .load())
+    withScratch(dir, s"$opName-${KvCommitLog.nonce()}", folded, bloomCols) {
+      (adopted, rows) =>
+        Mutation(KvCommitLog.publish(Paths.get(dir), Some(base), adopted, live),
+          adopted.size, 0, 0, 0L, rows)
     }
-    KvCommitLog.rmTree(scratch.toFile)
-    if (!KvCommitLog.tryReplaceAt(dirPath, base, adopted, live)) {
-      adopted.foreach { n =>
-        Files.deleteIfExists(dirPath.resolve(n)): Unit
-        Files.deleteIfExists(dirPath.resolve(KvZoneMap.sidecarName(n))): Unit
-      }
-      throw new IllegalStateException(
-        s"concurrent commit at $dir superseded the version-$base snapshot " +
-          s"this $opName rewrite folded; staged files rolled back — re-run")
-    }
-    Mutation(base + 1, adopted.size, 0, 0, 0L, rows)
   }
 
   // ---- the copy-on-write engine -------------------------------------
 
-  /** One rewritten file's outcome, shipped back from the executor.
-    * `dvSkipped` counts rows the file's deletion vectors had ALREADY
-    * deleted — physically dropped by this rewrite but not a semantic
-    * change (they were invisible before it). */
+  /** One rewritten file's outcome, shipped back from the executor: the
+    * staged replacement of `original` with its statistics. `dvSkipped`
+    * counts rows the file's deletion vectors had ALREADY deleted —
+    * physically dropped by this rewrite but not a semantic change (they
+    * were invisible before it). */
   private final case class Rewrite(
-      original: String, staged: String, kept: Long, dropped: Long,
-      stats: Seq[(String, Long, Long)], dstats: Seq[(String, Double, Double)],
-      sstats: Seq[(String, String, String)], sums: Seq[(String, Long)],
-      nulls: Seq[(String, Long)],
-      blooms: Seq[(String, Int, Int, Array[Long])] = Nil,
-      dvSkipped: Long = 0L)
+      original: String, staged: KvStagedFile, dropped: Long, dvSkipped: Long)
+
+  private def discard(r: Rewrite): Unit =
+    Files.deleteIfExists(Paths.get(r.staged.stagedFile)): Unit
 
   /** `expectedBase` pins the snapshot this mutation derives from (OCC:
     * the commit CASes into exactly expectedBase+1, so ANY commit that
-    * landed since — even before this call — aborts it); None derives
-    * from the current head. */
+    * landed since — even before this call — aborts it, with its staged
+    * adds rolled back, and the caller re-runs against the new head);
+    * None derives from the current head. */
   private def mutate(spark: SparkSession, dir: String, schema: StructType,
       filters: Seq[Filter], keys: Option[(String, Set[Long])],
       adds: Option[DataFrame], expectedBase: Option[Int],
       wideKeys: Option[(String, DataFrame)] = None): Mutation = {
-    val dirPath = Paths.get(dir)
-    val base = expectedBase.getOrElse(KvCommitLog.latestVersion(dirPath))
-    require(base > 0, s"graft kv store: no commit log at $dir — not a store")
-    val (liveSet, dvState) = KvCommitLog.stateAsOf(dirPath, base)
+    val base = baseOf(dir, expectedBase)
+    val (liveSet, dvs) = KvCommitLog.stateAsOf(Paths.get(dir), base)
     val live = liveSet.toSeq.sorted
-    val nonce = java.lang.Long.toUnsignedString(
-      java.util.concurrent.ThreadLocalRandom.current().nextLong(), 36)
-    val ddl = schema.toDDL
-    // distributed rewrite: one task per candidate file (the store's own
-    // parallelism unit); executors share the filesystem — the same
-    // precondition the sink's staged-file commit already assumes
+    val nonce = KvCommitLog.nonce()
     val rewrites: Seq[Rewrite] = wideKeys match {
       case Some((keyCol, keysDf)) =>
         // wide-delta merge (r16): range-targeted candidates, doomed
         // ordinals from the distributed key join, one rewrite task per
         // HIT file with its ordinals as a per-file vector — the key set
         // never exists anywhere, and miss files are never rewritten
-        import spark.implicits._
-        val candidates = rangeCandidates(dir, live, keyCol, keysDf)
-        if (candidates.isEmpty) Nil
+        val cands = rangeCandidates(dir, live, keyCol, keysDf)
+        if (cands.isEmpty) Nil
         else {
-          val idxOf = candidates.zipWithIndex.toMap
-          distributedHits(spark, dir, schema, keyCol, candidates,
-              dvState, keysDf)
-            .map { case (name, ords) =>
-              rewriteOne(dir, name, ddl, Nil, None,
-                s"rw-$nonce-${idxOf(name)}.csv",
-                dvState.getOrElse(name, Nil) /* dvPaths */,
-                purgeOnly = false, doomedOrds = ords.toArray)
+          val idxOf = cands.zipWithIndex.toMap
+          val ddl = schema.toDDL
+          distributedHits(spark, dir, schema, keyCol, cands, dvs, keysDf)
+            .rdd.map { case (name, ords) =>
+              rewriteOne(dir, name, ddl, s"rw-$nonce-${idxOf(name)}.csv",
+                dvs.getOrElse(name, Nil), Nil, None, ords.toArray)
             }.collect().toSeq.sortBy(_.original)
         }
       case None =>
-        val runtimeKeys = keys.map { case (c, ks) => Map(c -> ks) }
-          .getOrElse(Map.empty[String, Set[Long]])
-        // zone-map targeting: a file whose sidecar PROVES no row can match
-        // is untouched; files without a sidecar must be rewritten (never
-        // guess). Vector-carrying files' sidecars describe a SUPERSET of
-        // their live rows — "cannot match" stays proven
-        val candidates = live.filter { name =>
-          KvZoneMap.read(new File(dir, name)) match {
-            case Some(st) => KvZonePrune.keeps(st, filters, runtimeKeys)
-            case None => true
-          }
-        }
-        if (candidates.isEmpty) Nil
-        else {
-          val fseq = candidates.zipWithIndex
-          spark.sparkContext
-            .parallelize(fseq, math.min(fseq.size,
-              spark.sparkContext.defaultParallelism))
-            .map { case (name, i) =>
-              rewriteOne(dir, name, ddl, filters, keys, s"rw-$nonce-$i.csv",
-                dvState.getOrElse(name, Nil))
-            }
-            .collect().toSeq
-        }
+        rewriteFiles(spark, dir, schema, candidates(dir, live, filters,
+            keys.map { case (c, ks) => Map(c -> ks) }.getOrElse(Map.empty)),
+          dvs, s"rw-$nonce", filters, keys, purge = false)
     }
-    val untouchedCandidates = rewrites.filter(_.dropped == 0L)
-    // a candidate that lost no row keeps its ORIGINAL file byte-identical
-    untouchedCandidates.foreach(r =>
-      Files.deleteIfExists(dirPath.resolve("_staging").resolve(r.staged)): Unit)
-    val changed = rewrites.filter(_.dropped > 0L)
-    val (emptied, replaced) = changed.partition(_.kept == 0L)
-    emptied.foreach(r =>
-      Files.deleteIfExists(dirPath.resolve("_staging").resolve(r.staged)): Unit)
+    // a candidate that lost no row keeps its ORIGINAL file byte-identical;
+    // an emptied one is removed with nothing in its place
+    val (changed, same) = rewrites.partition(_.dropped > 0L)
+    val (emptied, replaced) = changed.partition(_.staged.rows == 0L)
+    (same ++ emptied).foreach(discard)
+    def commit(added: Seq[KvMember], rowsAdded: Long) = Mutation(
+      KvCommitLog.publish(Paths.get(dir), Some(base),
+        replaced.map(_.staged) ++ added, changed.map(_.original)),
+      replaced.size, emptied.size, live.size - changed.size,
+      changed.map(_.dropped).sum, rowsAdded)
+    // the merge's INSERT half rides into the same commit
+    adds match {
+      case Some(df) => withScratch(dir, s"merge-$nonce", df)(commit)
+      case None => commit(Nil, 0L)
+    }
+  }
 
-    // the merge's INSERT half: write the change batch through the sink
-    // itself (full stats/2PC discipline) into a hidden scratch store,
-    // then adopt its committed files into this commit
-    var addNames = Seq.empty[String]
-    var rowsAdded = 0L
-    adds.foreach { df =>
-      val scratch = dirPath.resolve(s"_merge-$nonce")
-      df.write.format("graft.sources.KvSinkProvider")
-        .option("path", scratch.toString).mode("append").save()
-      val names = KvCommitLog.liveFiles(scratch)
-      addNames = names.toSeq.sorted.map { n =>
-        rowsAdded += KvZoneMap.read(scratch.resolve(n).toFile).map(_.rows).getOrElse(0L)
-        // sidecar first, then data — a visible file always has its stats
-        Files.move(scratch.resolve(KvZoneMap.sidecarName(n)),
-          dirPath.resolve(KvZoneMap.sidecarName(n)))
-        Files.move(scratch.resolve(n), dirPath.resolve(n))
-        n
+  /** The distributed rewrite: one task per file (the store's own
+    * parallelism unit), staged as `<tag>-<i>.csv`; executors share the
+    * filesystem — the same precondition the sink's staged-file commit
+    * already assumes. `purge` dooms no row: the rewrite only
+    * materializes the files' vectors. */
+  private def rewriteFiles(spark: SparkSession, dir: String,
+      schema: StructType, files: Seq[String], dvs: Map[String, Seq[String]],
+      tag: String, filters: Seq[Filter], keys: Option[(String, Set[Long])],
+      purge: Boolean): Seq[Rewrite] = {
+    if (files.isEmpty) return Nil
+    val ddl = schema.toDDL
+    spark.sparkContext
+      .parallelize(files.zipWithIndex,
+        math.min(files.size, spark.sparkContext.defaultParallelism))
+      .map { case (name, i) =>
+        rewriteOne(dir, name, ddl, s"$tag-$i.csv", dvs.getOrElse(name, Nil),
+          filters, keys, if (purge) Array.emptyLongArray else null)
       }
-      KvCommitLog.rmTree(scratch.toFile)
-    }
-
-    // publish replacements: sidecar, then data file (same order as the sink)
-    val staging = dirPath.resolve("_staging")
-    replaced.foreach { r =>
-      KvZoneMap.write(dirPath, r.staged, r.kept, r.stats, r.dstats, r.sstats,
-        r.sums, r.nulls, r.blooms)
-      Files.move(staging.resolve(r.staged), dirPath.resolve(r.staged),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-
-    val removes = changed.map(_.original)
-    val addLines = replaced.map(_.staged) ++ addNames
-    if (removes.isEmpty && addLines.isEmpty)
-      return Mutation(base, 0, 0, live.size, 0L, 0L) // no-op: nothing matched
-    // CAS at exactly base+1: the rewrite was DERIVED from snapshot `base`,
-    // so any concurrent commit invalidates it — abort, clean up our adds
-    // (they are unnamed orphans otherwise), and let the caller re-run
-    val lines = removes.sorted.map("-" + _) ++ addLines.sorted
-    if (!KvCommitLog.tryAppendAt(dirPath, base + 1, lines)) {
-      (addLines).foreach { n =>
-        Files.deleteIfExists(dirPath.resolve(n)): Unit
-        Files.deleteIfExists(dirPath.resolve(KvZoneMap.sidecarName(n))): Unit
-      }
-      throw new IllegalStateException(
-        s"concurrent commit at $dir superseded the version-$base snapshot " +
-          "this mutation was derived from; staged changes rolled back — " +
-          "re-run the mutation against the new head")
-    }
-    Mutation(base + 1, replaced.size, emptied.size,
-      live.size - changed.size, changed.map(_.dropped).sum, rowsAdded)
+      .collect().toSeq
   }
 
   /** Executor-side rewrite of one store file: drop rows matching the
     * delete condition (all `filters` true, or key ∈ the merge key set),
     * re-emit surviving LINES VERBATIM (escapes and formatting preserved
-    * bit-for-bit), and accumulate fresh sidecar stats with the sink's
-    * exact semantics. Rows the file's deletion vectors (`dvPaths`,
+    * bit-for-bit), and accumulate fresh sidecar stats in the sink's own
+    * [[KvZoneAcc]]. Rows the file's deletion vectors (`dvNames`,
     * relative names) already deleted are invisible here — never matched,
     * never re-emitted — so a CoW mutation over a vector-carrying file
-    * materializes its vectors as a side effect; `purgeOnly` makes that
-    * materialization the WHOLE job (no row is newly doomed). */
-  /** `doomedOrds` (wide-delta merges): a precomputed ascending vector of
-    * this file's newly-doomed LIVE ordinals — the doomed decision is then
-    * a monotonic cursor probe instead of a key-set lookup, so the rewrite
-    * task never holds the merge key set. */
+    * materializes its vectors as a side effect. `doomedOrds`, when
+    * given, is an ascending vector of this file's newly-doomed LIVE
+    * ordinals that replaces the condition: a wide-delta merge's
+    * distributed key join computed it, so the task never holds the key
+    * set; empty, it dooms nothing (a vector purge). */
   private def rewriteOne(dir: String, name: String, schemaDdl: String,
-      filters: Seq[Filter], keys: Option[(String, Set[Long])],
-      stagedName: String, dvPaths: Seq[String] = Nil,
-      purgeOnly: Boolean = false, doomedOrds: Array[Long] = null): Rewrite = {
+      stagedName: String, dvNames: Seq[String], filters: Seq[Filter],
+      keys: Option[(String, Set[Long])], doomedOrds: Array[Long]): Rewrite = {
     val schema = StructType.fromDDL(schemaDdl)
     val types = schema.fields.map(_.dataType)
-    val idx = schema.fieldNames.zipWithIndex.toMap
-    val keyIdx = keys.map { case (c, ks) => (idx(c), ks) }
-    val doomedCursor =
-      if (doomedOrds == null) null else new KvDv.Cursor(doomedOrds)
-    val statIdx = schema.fields.zipWithIndex.collect {
-      case (f, i) if f.dataType == LongType || f.dataType == IntegerType => i
-    }
-    val dStatIdx = schema.fields.zipWithIndex.collect {
-      case (f, i) if f.dataType == DoubleType => i
-    }
-    val sStatIdx = schema.fields.zipWithIndex.collect {
-      case (f, i) if f.dataType == StringType => i
-    }
-    val mins = Array.fill(statIdx.length)(Long.MaxValue)
-    val maxs = Array.fill(statIdx.length)(Long.MinValue)
-    val sums = Array.fill(statIdx.length)(0L)
-    val sumBad = Array.fill(statIdx.length)(false)
-    val nullCnt = Array.fill(schema.fields.length)(0L)
-    val dMins = Array.fill(dStatIdx.length)(Double.MaxValue)
-    val dMaxs = Array.fill(dStatIdx.length)(Double.MinValue)
-    val dNaN = Array.fill(dStatIdx.length)(false)
-    val sMins = Array.fill[String](sStatIdx.length)(null)
-    val sMaxs = Array.fill[String](sStatIdx.length)(null)
+    val doomed: (Long, Array[Any]) => Boolean =
+      if (doomedOrds != null) {
+        val cursor = new KvDv.Cursor(doomedOrds)
+        (ord, _) => cursor.deleted(ord)
+      } else {
+        val p = doomedBy(schema, filters, keys)
+        (_, row) => p(row)
+      }
     // Bloom propagation is PRESENCE-derived, config-free: whichever
     // columns the ORIGINAL file's sidecar bloomed, the rewrite re-blooms
     // over the kept rows — a CoW mutation never silently downgrades a
     // store's point-lookup pruning tier
-    val bloomIdx: Array[Int] =
-      KvZoneMap.read(new File(dir, name)).map(_.blooms.keySet).getOrElse(Set.empty)
-        .toArray.sorted.flatMap(c => idx.get(c).toArray)
-    val bloomHashes = Array.fill(bloomIdx.length)(
-      scala.collection.mutable.ArrayBuffer.empty[Long])
-    var kept = 0L
+    val zone = new KvZoneAcc(schema,
+      KvZoneMap.read(new File(dir, name)).map(_.blooms.keySet)
+        .getOrElse(Set.empty).toSeq.sorted.filter(schema.fieldNames.contains))
     var dropped = 0L
-    var dvSkipped = 0L
-    val dvCursor = new KvDv.Cursor(
-      KvDv.merged(dvPaths.map(v => new File(dir, v).toPath)))
-    var ord = -1L
-    val staging = new File(dir, "_staging")
-    staging.mkdirs()
-    val out = new java.io.BufferedWriter(
-      new java.io.FileWriter(new File(staging, stagedName)))
-    val src = scala.io.Source.fromFile(new File(dir, name), "UTF-8")
-    try {
-      src.getLines().filter { l => ord += 1; l.nonEmpty }.foreach { line =>
-        if (dvCursor.deleted(ord)) dvSkipped += 1
-        else {
-        val row = KvRowEval.parse(line, types)
-        val doomed = !purgeOnly &&
-          (if (doomedCursor != null) doomedCursor.deleted(ord)
-           else keyIdx match {
-             // a NULL key matches no merge key (SQL null semantics)
-             case Some((i, ks)) => row(i) match {
-               case l: Long => ks.contains(l)
-               case i2: Int => ks.contains(i2.toLong)
-               case _ => false
-             }
-             case None => filters.forall(KvRowEval.eval(_, idx, row))
-           })
-        if (doomed) dropped += 1
-        else {
-          kept += 1
-          var c = 0
-          while (c < row.length) {
-            if (row(c) == null) nullCnt(c) += 1
-            c += 1
+    val staged = new File(new File(dir, "_staging"), stagedName)
+    staged.getParentFile.mkdirs()
+    val out = new java.io.BufferedWriter(new java.io.FileWriter(staged))
+    val dvSkipped = try liveLines(dir, name, dvNames) { (ord, line) =>
+      val row = KvRowEval.parse(line, types)
+      if (doomed(ord, row)) dropped += 1
+      else {
+        var c = 0
+        while (c < row.length) {
+          row(c) match {
+            case null => zone.nullAt(c)
+            case l: Long => zone.long(c, l)
+            case i: Int => zone.long(c, i.toLong)
+            case d: Double => zone.double(c, d)
+            case s: String => zone.string(c, s)
           }
-          var j = 0
-          while (j < statIdx.length) {
-            row(statIdx(j)) match {
-              case null => ()
-              case raw =>
-                val v = raw match {
-                  case l: Long => l
-                  case i2: Int => i2.toLong
-                }
-                if (v < mins(j)) mins(j) = v
-                if (v > maxs(j)) maxs(j) = v
-                if (!sumBad(j)) {
-                  try sums(j) = Math.addExact(sums(j), v)
-                  catch { case _: ArithmeticException => sumBad(j) = true }
-                }
-            }
-            j += 1
-          }
-          j = 0
-          while (j < dStatIdx.length) {
-            row(dStatIdx(j)) match {
-              case null => ()
-              case raw =>
-                val d = raw.asInstanceOf[Double]
-                val v = if (d == 0.0) 0.0 else d
-                if (java.lang.Double.isNaN(v)) dNaN(j) = true
-                else {
-                  if (v < dMins(j)) dMins(j) = v
-                  if (v > dMaxs(j)) dMaxs(j) = v
-                }
-            }
-            j += 1
-          }
-          j = 0
-          while (j < sStatIdx.length) {
-            row(sStatIdx(j)) match {
-              case null => ()
-              case raw =>
-                val v = raw.asInstanceOf[String]
-                if (sMins(j) == null || KvEscape.cpCompare(v, sMins(j)) < 0) sMins(j) = v
-                if (sMaxs(j) == null || KvEscape.cpCompare(v, sMaxs(j)) > 0) sMaxs(j) = v
-            }
-            j += 1
-          }
-          j = 0
-          while (j < bloomIdx.length) {
-            row(bloomIdx(j)) match {
-              case null => ()
-              case l: Long => bloomHashes(j) += KvBloom.hashLong(l)
-              case i2: Int => bloomHashes(j) += KvBloom.hashLong(i2.toLong)
-              case s: String => bloomHashes(j) += KvBloom.hashString(s)
-              case _ => ()
-            }
-            j += 1
-          }
-          out.write(line)
-          out.newLine()
+          c += 1
         }
-        }
+        zone.row()
+        out.write(line)
+        out.newLine()
       }
-    } finally { src.close(); out.close() }
-    val empty = kept == 0L
-    // bounds/sums only for columns with >=1 non-null kept value (the
-    // writer's r13 discipline); null counts published for every column
-    Rewrite(name, stagedName, kept, dropped,
-      if (empty) Nil else statIdx.indices
-        .filter(j => mins(j) <= maxs(j))
-        .map(j => (schema.fields(statIdx(j)).name, mins(j), maxs(j))).toSeq,
-      if (empty) Nil else dStatIdx.indices
-        .filter(j => !dNaN(j) && dMins(j) <= dMaxs(j))
-        .map(j => (schema.fields(dStatIdx(j)).name, dMins(j), dMaxs(j))).toSeq,
-      if (empty) Nil else sStatIdx.indices
-        .filter(j => sMins(j) != null)
-        .map(j => (schema.fields(sStatIdx(j)).name, sMins(j), sMaxs(j))).toSeq,
-      if (empty) Nil else statIdx.indices
-        .filter(j => !sumBad(j) && mins(j) <= maxs(j))
-        .map(j => (schema.fields(statIdx(j)).name, sums(j))).toSeq,
-      if (empty) Nil else schema.fields.indices
-        .map(c => (schema.fields(c).name, nullCnt(c))).toSeq,
-      if (empty) Nil else bloomIdx.indices
-        .filter(j => bloomHashes(j).nonEmpty)
-        .map { j =>
-          val b = KvBloom.build(bloomHashes(j).toArray)
-          (schema.fields(bloomIdx(j)).name, b.k, b.m, b.bits)
-        }.toSeq,
-      dvSkipped)
+    } finally out.close()
+    Rewrite(name, zone.finish(staged.getAbsolutePath), dropped, dvSkipped)
   }
 }

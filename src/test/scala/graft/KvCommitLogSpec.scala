@@ -154,9 +154,11 @@ class KvCommitLogSpec extends AnyFunSuite with SparkSessionFixture {
     val base = KvCommitLog.latestVersion(dir)
     val removedAtBase = KvCommitLog.filesAsOf(dir, base).toSeq
     // writer A commits its overwrite first (same base snapshot)
-    assert(KvCommitLog.tryReplaceAt(dir, base, Seq("a.csv"), removedAtBase))
+    assert(scala.util.Try(KvCommitLog.publish(dir, Some(base),
+      Seq(graft.sources.KvPresent("a.csv")), removedAtBase)).isSuccess)
     // writer B read the SAME base — its remove list is stale, must lose
-    assert(!KvCommitLog.tryReplaceAt(dir, base, Seq("b.csv"), removedAtBase),
+    assert(!scala.util.Try(KvCommitLog.publish(dir, Some(base),
+      Seq(graft.sources.KvPresent("b.csv")), removedAtBase)).isSuccess,
       "second overwrite of the same base must conflict, not union")
     // and the full sink path surfaces the conflict: start an overwrite
     // whose base is pre-A by committing A's manifest between liveFiles
