@@ -116,18 +116,49 @@ object Graft {
     *     here runs on bounded inputs (top-k'd `.limit(20)` results, small
     *     domain aggregates; audited in the r14 verdict);
     *   - ResolveWriteToStream checkpoint-deletion notice — Verify/Bench
-    *     stream gates use throwaway checkpoints by design.
+    *     stream gates use throwaway checkpoints by design;
+    *   - DAGScheduler "Failed to cancel job group <id>. Cannot find active
+    *     jobs for it." — logged twice by every stopped stream query, whose
+    *     own job group has already finished. Only that message is
+    *     dropped, by a filter on that logger; its level is untouched, so
+    *     every other DAGScheduler WARN still shows.
     * Uses the log4j2 Configurator (Spark 4's logging backend) and is
     * deliberately narrow: everything else stays at WARN. */
   def silenceKnownBenignWarnings(): Unit = {
-    import org.apache.logging.log4j.Level
-    import org.apache.logging.log4j.core.config.Configurator
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.LoggerContext
+    import org.apache.logging.log4j.core.config.{Configurator, LoggerConfig}
     Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec", Level.ERROR)
     Configurator.setLevel(
       "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
       Level.ERROR)
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val config = ctx.getConfiguration
+    val name = "org.apache.spark.scheduler.DAGScheduler"
+    val own = Option(config.getLoggers.get(name)).getOrElse {
+      // a null level inherits the parent's, so the logger's level is unchanged
+      val c = new LoggerConfig(name, null, true)
+      config.addLogger(name, c)
+      c
+    }
+    val filtered = own.getFilter match {
+      case c: org.apache.logging.log4j.core.filter.CompositeFilter =>
+        c.getFiltersArray.contains(CancelledJobGroupFilter)
+      case f => f eq CancelledJobGroupFilter
+    }
+    if (!filtered) {
+      own.addFilter(CancelledJobGroupFilter)
+      ctx.updateLoggers()
+    }
   }
+
+  /** The one DAGScheduler message [[silenceKnownBenignWarnings]] drops. */
+  private lazy val CancelledJobGroupFilter =
+    org.apache.logging.log4j.core.filter.RegexFilter.createFilter(
+      "Failed to cancel job group \\S+\\. Cannot find active jobs for it\\.", null,
+      false, org.apache.logging.log4j.core.Filter.Result.DENY,
+      org.apache.logging.log4j.core.Filter.Result.NEUTRAL)
 
   /** Parquet schema per path, inferred ONCE per JVM (r17):
     * `spark.read.parquet` with no schema runs a footer-reading Spark job

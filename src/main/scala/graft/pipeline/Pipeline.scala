@@ -1,9 +1,13 @@
 package graft.pipeline
 
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.reflect.classTag
 
-import org.apache.spark.sql.{Dataset, Encoder, KeyValueGroupedDataset, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, KeyValueGroupedDataset, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.{encoderFor, AgnosticEncoder, ExpressionEncoder}
+import org.apache.spark.sql.catalyst.encoders.AgnosticEncoders.{IterableEncoder, ProductEncoder}
 import org.apache.spark.sql.functions.col
 
 /** Typed pipeline compat API — the reference's user surface
@@ -15,9 +19,16 @@ import org.apache.spark.sql.functions.col
   *     lowered to `ds.flatMap` (whole-partition `concatMap`, exactly the
   *     reference's `toM` lift at MapReduceC.hs:31-33).
   *   - reference `Reducer k v1 v2 = k -> [v1] -> [v2]` (multi-output!) →
-  *     [[Pipeline.reducer]] lowered to a grouping on the key column,
-  *     `groupBy(col(_1)).as[K, (K, V)].flatMapGroups` — the only faithful
-  *     mapping, since SQL agg can't emit 0..n rows per key.
+  *     [[Pipeline.reducer]] lowered to an in-task grouping, then a
+  *     grouping on the key column,
+  *     `groupBy(col(_1)).as[K, (K, Seq[V])].flatMapGroups` — the only
+  *     faithful mapping, since SQL agg can't emit 0..n rows per key. Each
+  *     task first gathers its values per key in a hash table that holds
+  *     at most [[Pipeline.FoldCap]] values, emitting one `(key, values)`
+  *     row per held key when full and at the end; the key-column grouping
+  *     joins a key's partial groups and calls `f` once, with all of that
+  *     key's values. The shuffle so carries one row per (task, key, flush)
+  *     instead of one per record.
   *   - [[Pipeline.combiner]] (no reference counterpart) lowered to a
   *     bounded per-task hash fold, then the same key-column grouping's
   *     `reduceGroups` (partial + final aggregation).
@@ -25,9 +36,12 @@ import org.apache.spark.sql.functions.col
   *     stage is the input type of the next, checked by scalac like the
   *     reference's `Serializable2 k2 v2 =>` constraint chain.
   *   - the hash-shuffle between stages (Partition.hs:53-57) is implicit in
-  *     the key-column grouping; [[Pipeline.repartitionByKey]] hashes on
-  *     that same column, so when it precedes a reducer or combiner it *is*
-  *     that stage's shuffle and the grouping adds none.
+  *     the key-column grouping. [[Pipeline.repartitionByKey]] directly
+  *     before a reducer or combiner is applied after that stage's in-task
+  *     pass, on the columns the grouping groups on: it *is* that stage's
+  *     shuffle, with its partition count, and the grouping adds none.
+  *     Before a mapper, or at the end of a pipeline, it repartitions
+  *     where it stands.
   *
   * Each pipeline also carries its own naive evaluator ([[Pipeline.runLocal]])
   * — the analog of the reference's `naiveEvaluator` (MapReduceC.hs:65-74),
@@ -39,35 +53,45 @@ import org.apache.spark.sql.functions.col
   *
   * Value order within a key is unspecified — in the reference it depends on
   * shuffle arrival order (`fromListWith (++)` reverses encounter order,
-  * Util.hs:21-22), in Spark on partitioning. Reducers must therefore be
-  * insensitive to value order, and result comparison sorts, exactly as the
-  * reference's own tests do (test/Generator.hs:86-87).
+  * Util.hs:21-22), in Spark on partitioning and on the in-task tables'
+  * flushes. Reducers must therefore be insensitive to value order, and
+  * result comparison sorts, exactly as the reference's own tests do
+  * (test/Generator.hs:86-87).
   */
 final class Pipeline[K1, V1, K2, V2] private (
     val length: Int,
     private val runDs: Dataset[(K1, V1)] => Dataset[(K2, V2)],
-    private val local: Seq[(K1, V1)] => Seq[(K2, V2)]) {
+    private val local: Seq[(K1, V1)] => Seq[(K2, V2)],
+    private val partitions: Option[Int] = None) {
+
+  /** `runDs` with a trailing [[repartitionByKey]] applied where it stands. */
+  private def output(ds: Dataset[(K1, V1)]): Dataset[(K2, V2)] = {
+    val d = runDs(ds)
+    partitions.fold(d)(d.repartition(_, col(d.columns.head)))
+  }
 
   /** Append a flatMap stage: one record in, 0..n records out. */
   def mapper[K3, V3](f: ((K2, V2)) => IterableOnce[(K3, V3)])(
       implicit enc: Encoder[(K3, V3)]): Pipeline[K1, V1, K3, V3] =
     new Pipeline(length + 1,
-      ds => runDs(ds).flatMap(f),
+      ds => output(ds).flatMap(f),
       xs => local(xs).flatMap(f(_).iterator))
 
   /** Append a per-key reducer stage emitting 0..n values per key. */
   def reducer[V3](f: (K2, Seq[V2]) => Seq[V3])(
       implicit enc: Encoder[(K2, V3)], kenc: Encoder[K2]): Pipeline[K1, V1, K2, V3] =
     new Pipeline(length + 1,
-      ds => Pipeline.groupOnKey(runDs(ds))
-        .flatMapGroups((k, it) => f(k, it.map(_._2).toSeq).iterator.map((k, _))),
-      xs => {
-        // Stable grouping in first-encounter key order; value order is
-        // contractually irrelevant (see class doc).
-        val ys = local(xs)
-        val keys = ys.map(_._1).distinct
-        keys.flatMap(k => f(k, ys.collect { case (`k`, v) => v }).map((k, _)))
-      })
+      ds => {
+        val d = runDs(ds)
+        val inTask =
+          d.mapPartitions(Pipeline.groupInTask[K2, V2])(Pipeline.groupedEncoder(d.encoder))
+        Pipeline.groupOnKey(inTask, partitions).flatMapGroups { (k, parts) =>
+          val vs = ArraySeq.untagged.newBuilder[V2]
+          parts.foreach(p => vs ++= p._2)
+          f(k, vs.result()).iterator.map((k, _))
+        }
+      },
+      xs => Pipeline.groupLocal(local(xs)).flatMap { case (k, vs) => f(k, vs).map((k, _)) })
 
   /** Append an associative-commutative combine stage: one value per key,
     * folded MAP-SIDE before the shuffle — the combiner the reference's
@@ -88,34 +112,28 @@ final class Pipeline[K1, V1, K2, V2] private (
     new Pipeline(length + 1,
       ds => {
         val d = runDs(ds)
-        Pipeline.groupOnKey(d.mapPartitions(Pipeline.foldInTask(f))(d.encoder))
+        Pipeline.groupOnKey(d.mapPartitions(Pipeline.foldInTask(f))(d.encoder), partitions)
           .reduceGroups((a, b) => (a._1, f(a._2, b._2)))
           .map(_._2)
       },
-      xs => {
-        val ys = local(xs)
-        val keys = ys.map(_._1).distinct
-        keys.map(k => k -> ys.collect { case (`k`, v) => v }.reduce(f))
-      })
+      xs => Pipeline.groupLocal(local(xs)).map { case (k, vs) => k -> vs.reduce(f) })
 
   /** Explicit hash repartition on the key — the reference's
     * between-stage shuffle (Partition.hs:53-57) surfaced as an operator.
+    * Directly before a reducer or combiner it becomes that stage's
+    * shuffle (see the class doc); a later `repartitionByKey` replaces
+    * it, as two adjacent repartitions collapse into the last in Spark.
     * Local semantics: identity (partitioning is not observable). */
   def repartitionByKey(n: Int): Pipeline[K1, V1, K2, V2] =
-    new Pipeline(length,
-      ds => {
-        val d = runDs(ds)
-        d.repartition(n, col(d.columns.head))
-      },
-      local)
+    new Pipeline(length, runDs, local, Some(n))
 
   /** Run distributed on Spark. */
   def run(input: Seq[(K1, V1)])(implicit spark: SparkSession,
       enc: Encoder[(K1, V1)]): Seq[(K2, V2)] =
-    runDs(spark.createDataset(input)).collect().toSeq
+    output(spark.createDataset(input)).collect().toSeq
 
   /** Run on an existing Dataset (for large / file-backed inputs). */
-  def apply(ds: Dataset[(K1, V1)]): Dataset[(K2, V2)] = runDs(ds)
+  def apply(ds: Dataset[(K1, V1)]): Dataset[(K2, V2)] = output(ds)
 
   /** The naive single-threaded evaluator — the semantic oracle. */
   def runLocal(input: Seq[(K1, V1)]): Seq[(K2, V2)] = local(input)
@@ -123,22 +141,36 @@ final class Pipeline[K1, V1, K2, V2] private (
 
 object Pipeline {
 
-  /** Entries the in-task combiner fold holds before it flushes. */
+  /** What one task's in-task table holds before it flushes: entries for
+    * the combiner's fold, values for the reducer's grouping. */
   val FoldCap: Int = 1 << 12
 
   /** Group on the Dataset's first column, the key itself: no per-row key
     * lambda, no appended key column, and a preceding hash repartition on
     * that column already satisfies the grouping's distribution. A key
     * the encoder writes as top-level columns (a tuple or case class) is
-    * grouped on its fields, the columns its deserializer reads. */
-  private def groupOnKey[K, V](d: Dataset[(K, V)])(
+    * grouped on its fields, the columns its deserializer reads.
+    * `partitions` hash-repartitions on those same columns first, so that
+    * repartition is the grouping's only exchange. */
+  private def groupOnKey[K, V](d: Dataset[(K, V)], partitions: Option[Int])(
       implicit kenc: Encoder[K]): KeyValueGroupedDataset[K, (K, V)] = {
     val key = col(d.columns.head)
     val keyCols =
       if (encoderFor(kenc).isSerializedAsStructForTopLevel)
         kenc.schema.fieldNames.toSeq.map(n => key.getField(n).as(n))
       else Seq(key)
-    d.groupBy(keyCols: _*).as[K, (K, V)](kenc, d.encoder)
+    partitions.fold(d)(d.repartition(_, keyCols: _*))
+      .groupBy(keyCols: _*).as[K, (K, V)](kenc, d.encoder)
+  }
+
+  /** The encoder of the reducer's in-task rows, `(key, values)`, from the
+    * stage input's `(key, value)` encoder. */
+  private def groupedEncoder[K, V](enc: Encoder[(K, V)]): Encoder[(K, Seq[V])] = {
+    val fields = encoderFor(enc).encoder.asInstanceOf[ProductEncoder[(K, V)]].fields
+    val k = fields(0).enc.asInstanceOf[AgnosticEncoder[K]]
+    val v = fields(1).enc.asInstanceOf[AgnosticEncoder[V]]
+    Encoders.tuple(ExpressionEncoder(k),
+      ExpressionEncoder(IterableEncoder(classTag[Seq[V]], v, v.nullable, false)))
   }
 
   /** A key's running fold. The table holds cells, not values, so a key
@@ -161,6 +193,33 @@ object Pipeline {
       }
       acc.entrySet.iterator.asScala.map(e => (e.getKey, e.getValue.value))
     }.takeWhile(_.hasNext).flatten
+
+  /** The reducer's map-side grouping: gathers one task's values per key
+    * in a hash table of at most [[FoldCap]] values, emitting one
+    * `(key, values)` row per held key and starting a new table when full
+    * and at the end. Any flush point is safe because the reduce side
+    * joins a key's rows before calling the reducer. The values go out as
+    * an indexed `Seq`, which the row encoder walks by position. */
+  private def groupInTask[K, V](records: Iterator[(K, V)]): Iterator[(K, Seq[V])] =
+    Iterator.continually {
+      val acc = new java.util.HashMap[K, mutable.ArrayBuffer[V]]()
+      var held = 0
+      while (records.hasNext && held < FoldCap) {
+        val (k, v) = records.next()
+        val vs = acc.get(k)
+        if (vs == null) acc.put(k, mutable.ArrayBuffer(v)) else vs += v
+        held += 1
+      }
+      acc.entrySet.iterator.asScala.map(e => (e.getKey, ArraySeq.untagged.from(e.getValue)))
+    }.takeWhile(_.hasNext).flatten
+
+  /** The naive evaluator's grouping, in one pass: keys in first-encounter
+    * order, each key's values in encounter order. */
+  private def groupLocal[K, V](ys: Seq[(K, V)]): Seq[(K, Seq[V])] = {
+    val acc = mutable.LinkedHashMap.empty[K, mutable.ArrayBuffer[V]]
+    ys.foreach { case (k, v) => acc.getOrElseUpdate(k, mutable.ArrayBuffer.empty[V]) += v }
+    acc.iterator.map { case (k, vs) => (k, vs.toSeq) }.toSeq
+  }
 
   /** The identity pipeline — the reference's `MrOut` terminator. */
   def apply[K, V](): Pipeline[K, V, K, V] =

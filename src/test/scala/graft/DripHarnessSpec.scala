@@ -95,6 +95,39 @@ class DripHarnessSpec extends AnyFunSuite with SparkSessionFixture {
     }
   }
 
+  test("a drip gate run logs no cancelled-job-group WARN; DAGScheduler's others still show") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val dag = "org.apache.spark.scheduler.DAGScheduler"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("dag-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName == dag) seen.add(e.getMessage.getFormattedMessage): Unit
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(capture, null, null)
+    ctx.updateLoggers()
+    try {
+      SparkEntry.queries("q_stream_live")(spark, sf)
+      // the scheduler handles the stopped query's cancels before this job
+      spark.range(1).count()
+      LogManager.getLogger(dag).warn(
+        "Failed to cancel job group g-1. Cannot find active jobs for it.")
+      LogManager.getLogger(dag).warn("Some other scheduler warning.")
+    } finally {
+      root.removeAppender(capture.getName)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    val lines = seen.toArray(Array.empty[String]).toSeq
+    assert(!lines.exists(_.startsWith("Failed to cancel job group")), lines)
+    assert(lines.contains("Some other scheduler warning."), lines)
+  }
+
   test("Streaming.scala lands no drop and names no temp dir; Drip owns the loop") {
     def src(f: String) = Files.readString(Paths.get(s"src/main/scala/graft/$f"))
     val streaming = src("queries/Streaming.scala")

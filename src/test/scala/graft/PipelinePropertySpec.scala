@@ -109,4 +109,34 @@ class PipelinePropertySpec extends AnyFunSuite with SparkSessionFixture {
       pipe.run(data).sorted == pipe.runLocal(data).sorted
     })
   }
+
+  test("reducer past the in-task cap: Spark == naive evaluator and closed form") {
+    implicit val s = spark
+    import s.implicits._
+    // one partition holding 3.5 caps of values over half a cap of keys,
+    // each key once per round: every flush re-meets keys it already emitted
+    val keys = (0 until Pipeline.FoldCap / 2).map(i => s"k$i")
+    val rounds = 7
+    val data = (0 until rounds).flatMap(r => keys.map(k => (k, r)))
+    val pipe = Pipeline[String, Int]().reducer[Int]((_, vs) => Seq(vs.sum, vs.size))
+    val got = pipe(spark.createDataset(data).coalesce(1)).collect().toSeq.sorted
+    assert(got == pipe.runLocal(data).sorted)
+    val sum = rounds * (rounds - 1) / 2
+    assert(got == keys.flatMap(k => Seq((k, sum), (k, rounds))).sorted)
+  }
+
+  test("reducer over null values: Spark == naive evaluator (sorted)") {
+    implicit val s = spark
+    import s.implicits._
+    val genNullable: Gen[List[(String, String)]] = genData.map(_.map {
+      case (k, v) => (k, if (v.length % 3 == 0) null else v)
+    })
+    // multi-output and order-insensitive: the null count, then the
+    // non-null values in sorted order
+    val pipe = Pipeline[String, String]().reducer[String]((_, vs) =>
+      Seq(vs.count(_ == null).toString, vs.filter(_ != null).sorted.mkString(",")))
+    check(Prop.forAll(genNullable) { data =>
+      pipe.run(data).sorted == pipe.runLocal(data).sorted
+    })
+  }
 }

@@ -56,6 +56,45 @@ class PipelineSpec extends AnyFunSuite with SparkSessionFixture {
       s"expected exactly one hash exchange in:\n$plan")
   }
 
+  test("repartitionByKey(n) before a reducer or combiner is that stage's one exchange") {
+    implicit val s = spark
+    import s.implicits._
+    val mapped = Pipeline
+      .mapper[String, String, String, Int](WordCount.runLength)
+      .repartitionByKey(3)
+    val input = spark.createDataset(Seq(("", "hello")))
+    val tupleKeyed = Pipeline[(Int, String), Int]().repartitionByKey(3)
+      .reducer[Int]((_, vs) => Seq(vs.sum))
+    val plans = Seq(
+      mapped.reducer[Int]((_, vs) => Seq(vs.sum)).apply(input),
+      mapped.combiner(_ + _).apply(input),
+      tupleKeyed(spark.createDataset(Seq(((1, "a"), 2), ((1, "a"), 3))))
+    ).map(_.queryExecution.executedPlan.toString)
+    plans.foreach { plan =>
+      val exchanges = "Exchange hashpartitioning\\(.*, (\\d+)\\)".r
+        .findAllMatchIn(plan).map(_.group(1)).toSeq
+      assert(exchanges == Seq("3"),
+        s"expected exactly one hash exchange, of 3 partitions, in:\n$plan")
+    }
+    assert(mapped.combiner(_ + _).run(Seq(("", "hello"))).sorted ==
+      Seq(("e", 1), ("h", 1), ("l", 2), ("o", 1)))
+    assert(tupleKeyed.run(Seq(((1, "a"), 2), ((1, "a"), 3), ((2, "b"), 5))).sorted ==
+      Seq(((1, "a"), 5), ((2, "b"), 5)))
+  }
+
+  test("reducer groups each task's values below its exchange") {
+    implicit val s = spark
+    import s.implicits._
+    val p = Pipeline[String, Int]().reducer[Int]((_, vs) => Seq(vs.sum))
+    val ds = p(spark.createDataset(Seq(("a", 1), ("a", 2), ("b", 3))))
+    val lines = ds.queryExecution.executedPlan.toString.split("\n").toSeq
+    val exchange = lines.indexWhere(_.contains("Exchange hashpartitioning"))
+    val inTask = lines.indexWhere(_.contains("MapPartitions"))
+    assert(exchange >= 0 && inTask > exchange,
+      s"no in-task grouping below the exchange in:\n${lines.mkString("\n")}")
+    assert(ds.collect().sorted.toSeq == Seq(("a", 3), ("b", 3)))
+  }
+
   test("empty input yields empty output") {
     implicit val s = spark
     import s.implicits._
