@@ -2278,11 +2278,11 @@ object Llm extends QueryGroup {
         .filter(col("cnt") >= 2)
         .select("g")
       val covered = grams.join(dupg, "g")
-        .select(col("doc_id"),
+        .select(col("doc_id").as("covered_doc"),
           explode(sequence(col("i"), col("i") + lit(k - 1))).as("idx"))
         .distinct()
       val kept = toks
-        .join(covered, toks("doc_id") === covered("doc_id") &&
+        .join(covered, toks("doc_id") === covered("covered_doc") &&
           toks("i") === covered("idx"), "left_anti")
         .withColumn("th", graft.functions.GraftFunctions.charHashNative(col("t")))
       val keptAgg = kept.groupBy("doc_id")

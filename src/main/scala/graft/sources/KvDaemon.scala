@@ -3,6 +3,7 @@ package graft.sources
 import java.io.{BufferedReader, BufferedWriter, File, InputStreamReader, OutputStreamWriter}
 import java.net.{InetAddress, InetSocketAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Paths
 
 import scala.collection.mutable
 
@@ -22,8 +23,10 @@ import scala.collection.mutable
   *  - **SCAN cursor count [pattern]** pages field NAMES hscan-style: a
   *    stateless numeric cursor into the sorted listing, `0` reply cursor
   *    meaning exhausted (Redis convention), suffix `pattern` narrowing
-  *    what the SERVER returns (the `*pat` match analog);
-  *  - **GET field** streams one field's lines (`L <line>`... `END`) — the
+  *    what the SERVER returns (the `*pat` match analog); each reply line
+  *    `F <version> <field>` pins the field at its directory's log head;
+  *  - **GET version field** streams one field's lines (`L <line>`...
+  *    `END`) with the vectors live at that version applied — the
   *    per-split data fetch an executor makes, bounded by one task's
   *    committed output.
   *
@@ -66,28 +69,20 @@ object KvDaemon {
     ss.getLocalPort
   }
 
-  /** Committed (visible) files under `root`, as sorted relative paths,
-    * suffix-filtered — the hscan match analog, applied server-side. A
-    * directory with a commit log serves ITS manifests' live view (REMOVE
-    * lines from row-level delete/overwrite honored — a removed file is
-    * not a field, even though it stays on disk for time travel). */
+  /** Committed (visible) files under `root` as `<version> <field>`
+    * references sorted by field: the field is the file's relative path,
+    * suffix-filtered — the hscan match analog, applied server-side — and
+    * the version is its directory's log head (0 when log-less). A
+    * directory with a commit log serves ITS live view
+    * ([[KvSnapshot.walk]]: REMOVE lines from row-level delete/overwrite
+    * honored — a removed file is not a field, even though it stays on
+    * disk for time travel). */
   private def listFields(root: File, pattern: String): Seq[String] = {
-    def visible(f: File) =
-      !f.getName.startsWith("_") && !f.getName.startsWith(".")
-    def walk(d: File, prefix: String): Seq[String] = {
-      val live: File => Boolean =
-        if (KvCommitLog.latestVersion(d.toPath) > 0) {
-          val names = KvCommitLog.liveFiles(d.toPath)
-          f => names(f.getName)
-        } else _ => true
-      Option(d.listFiles()).getOrElse(Array.empty[File]).toSeq
-        .filter(visible)
-        .flatMap { f =>
-          if (f.isFile) { if (live(f)) Seq(prefix + f.getName) else Nil }
-          else walk(f, prefix + f.getName + "/")
-        }
-    }
-    walk(root, "").filter(_.endsWith(pattern)).sorted
+    val base = root.getAbsoluteFile.toPath
+    KvSnapshot.walk(root.getPath, recursive = true)
+      .map { case (f, v) => (base.relativize(Paths.get(f.file)).toString, v) }
+      .filter(_._1.endsWith(pattern)).sortBy(_._1)
+      .map { case (field, v) => s"$v $field" }
   }
 
   /** Traversal/hidden-path guard shared by GET and STATS. */
@@ -116,24 +111,27 @@ object KvDaemon {
             page.foreach(f => out.write(s"F $f\n"))
             out.write("END\n")
           case "GET" =>
-            val name = line.substring(4)
-            if (badField(name)) {
-              out.write("ERR bad field name\n")
-            } else {
-              // deletion vectors apply server-side: a field of a store
-              // with `#dv` attachments serves only its live rows — the
-              // client never sees vector-deleted data (KvDv)
-              val data = new File(dir, name)
-              val owner = data.getParentFile.toPath
-              val dvs = KvCommitLog.dvsAsOf(owner,
-                  KvCommitLog.latestVersion(owner))
-                .getOrElse(data.getName, Nil)
-                .map(v => owner.resolve(v))
-              val src = scala.io.Source.fromFile(data, "UTF-8")
-              try KvDv.filterLines(src.getLines(), dvs)
-                .foreach(l => out.write(s"L $l\n"))
-              finally src.close()
-              out.write("END\n")
+            // `GET <version> <field>`: deletion vectors apply server-side
+            // at the version SCAN listed the field at — the client never
+            // sees vector-deleted data (KvDv), and a commit between
+            // planning and reading (purge_dvs, compact, a CoW delete)
+            // cannot tear the read
+            line.substring(4).split(" ", 2) match {
+              case Array(v, name) if v.nonEmpty && v.forall(_.isDigit) &&
+                  !badField(name) =>
+                try {
+                  val data = new File(dir, name)
+                  val lines = KvSnapshot.lines(
+                    KvSnapshot.file(data.getParent, data.getName, v.toInt))
+                  try lines.foreach(l => out.write(s"L $l\n"))
+                  finally lines.close()
+                  out.write("END\n")
+                } catch { case e: Exception =>
+                  // e.g. the version was vacuumed: fail the read loudly
+                  out.write(s"ERR ${String.valueOf(e.getMessage)
+                    .replace('\n', ' ')}\n")
+                }
+              case _ => out.write("ERR bad field name\n")
             }
           case "STATS" =>
             // serve a field's committed zone-map sidecar (server-side
@@ -180,7 +178,8 @@ object KvDaemon {
   }
 
   /** Full field listing via cursor paging — the driver-side split
-    * planning call. Pages until the server returns cursor 0. */
+    * planning call. Pages until the server returns cursor 0. Each entry
+    * is a `<version> <field>` reference (see [[listFields]]). */
   def scanFields(endpoint: String, pattern: String): Seq[String] = {
     val (sock, in, out) = connect(endpoint)
     try {
@@ -204,27 +203,6 @@ object KvDaemon {
       out.write("QUIT\n")
       out.flush()
       fields.toSeq
-    } finally sock.close()
-  }
-
-  /** One field's committed zone-map stats, served by the daemon — the
-    * driver-side pruning call at split planning. None when the field has
-    * no sidecar (never prune without stats). */
-  def statsFor(endpoint: String, field: String): Option[KvZoneMap.Stats] = {
-    val (sock, in, out) = connect(endpoint)
-    try {
-      out.write(s"STATS $field\n")
-      out.flush()
-      val lines = mutable.ArrayBuffer[String]()
-      var l = in.readLine()
-      while (l != null && l != "END") {
-        require(l.startsWith("S "), s"kv daemon: bad stats line $l")
-        lines += l.substring(2)
-        l = in.readLine()
-      }
-      out.write("QUIT\n")
-      out.flush()
-      if (lines.isEmpty) None else KvZoneMap.parseLines(lines.iterator)
     } finally sock.close()
   }
 
@@ -261,10 +239,10 @@ object KvDaemon {
   /** Streaming line fetch of one field — the per-task data read. The
     * returned iterator holds the socket open until exhausted or
     * `close()`d. */
-  final class FieldLines(endpoint: String, field: String)
+  final class FieldLines(endpoint: String, field: String, version: Int)
       extends Iterator[String] with AutoCloseable {
     private val (sock, in, out) = connect(endpoint)
-    out.write(s"GET $field\n")
+    out.write(s"GET $version $field\n")
     out.flush()
     private var nextLine: String = advance()
 

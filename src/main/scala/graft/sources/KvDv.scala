@@ -29,7 +29,8 @@ import java.nio.file.{Files, Path}
   *    JVM, then answers from memory.
   *  - **readers**: every scan shape (plain, grouped, aggregate-pushed,
   *    change-feed, streaming snapshot, row-level-op group scan, daemon
-  *    GET) skips attached ordinals; zone-map pruning stays sound
+  *    GET) skips attached ordinals, through [[KvSnapshot]] — the one
+  *    module that resolves a file's vectors and opens its lines; zone-map pruning stays sound
   *    unchanged (stats describe a SUPERSET of the live rows — a file
   *    that cannot match still cannot match), while stats-ANSWERED
   *    aggregates and exact plan row counts account for the vectors

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.io.File
 import java.nio.file.Paths
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -31,7 +30,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    file must surface every row so unmatched rows are copied, not
   *    dropped (the `ignoreResiduals` discipline of every CoW format).
   *  - **static targeting** (UPDATE/DELETE WHERE): the pruned set is
-  *    decided by [[KvZonePrune.keeps]] — the same proven predicate the
+  *    decided by [[KvSnapshot.keeps]] — the same proven predicate the
   *    API path and split planning use, so "file cannot match ⇒ left
   *    byte-identical" holds verbatim through SQL.
   *  - **runtime targeting** (MERGE, whose ON condition references the
@@ -85,7 +84,7 @@ class KvRowLevelOperation(dir: String, schema: StructType,
     extends RowLevelOperation {
 
   /** The snapshot every piece of this operation derives from: scan plans
-    * `filesAsOf(base)`, commit CASes into `base+1`. */
+    * [[KvSnapshot.at]] `base`, commit CASes into `base+1`. */
   private[sources] val base: Int = KvCommitLog.latestVersion(Paths.get(dir))
   require(base > 0,
     s"graft kv catalog: no committed data at $dir — nothing to $cmd")
@@ -219,24 +218,15 @@ class KvCoWScan(op: KvRowLevelOperation, dir: String,
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val (liveSet, dvs) = KvCommitLog.stateAsOf(Paths.get(dir), op.base)
-    val live = liveSet.toSeq.sorted
-    val kept = live.filter { name =>
-      matchedFiles.forall(_.contains(name)) && {
-        KvZoneMap.read(new File(dir, name)) match {
-          case Some(st) => KvZonePrune.keeps(st, prunable.toSeq, Map.empty)
-          case None => true // no stats ⇒ never skip
-        }
-      }
-    }
-    KvPruneStats.record(dir, live.size, kept.size)
-    op.scannedFiles = kept
     // deletion vectors apply to the group scan too: a vector-deleted row
     // must not resurrect through a SQL UPDATE/MERGE rewrite (the commit
     // REMOVES the scanned file, dropping its attachments with it)
-    kept.map(n => KvFilePartition(new File(dir, n).getAbsolutePath,
-      dvs.getOrElse(n, Nil).map(v => new File(dir, v).getAbsolutePath))
-      : InputPartition).toArray
+    val live = KvSnapshot.at(dir, op.base)
+    val kept = live.filter(f => matchedFiles.forall(_.contains(f.name)) &&
+      KvSnapshot.keeps(f.stats, prunable.toSeq))
+    KvPruneStats.record(dir, live.size, kept.size)
+    op.scannedFiles = kept.map(_.name)
+    kept.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -382,19 +382,14 @@ object KvZonePrune {
   }
 }
 
-/** One data-file split. `dvs` (absolute paths of the file's live
-  * deletion vectors, [[KvDv]]) mark ordinals the reader must skip. */
-case class KvFilePartition(file: String, dvs: Seq[String] = Nil)
-    extends InputPartition
-
 /** One change-feed split: a committed (or removed-but-not-vacuumed)
   * file read as whole-row `insert` or `delete` events of one commit.
-  * `skip` = deletion vectors already applied to the file at this event's
-  * version (those rows are NOT part of the event — they were deleted
-  * earlier); `only` = emit ONLY these vectors' ordinals (the precise
-  * delete events of a `#dv` commit). */
-case class KvCdfPartition(file: String, insert: Boolean, version: Int,
-    skip: Seq[String] = Nil, only: Seq[String] = Nil)
+  * `data.dvs` are the deletion vectors already applied to the file at
+  * this event's version (those rows are NOT part of the event — they
+  * were deleted earlier); with `only`, the event is ONLY those vectors'
+  * ordinals (the precise delete events of a `#dv` commit). */
+case class KvCdfPartition(data: KvFilePartition, insert: Boolean,
+    version: Int, only: Boolean = false)
     extends InputPartition
 
 /** The CHANGE DATA FEED column contract (`readChangeFeed=true`):
@@ -429,46 +424,40 @@ object KvChangeFeed {
 object KvChangeFeedPlan {
   def partitions(path: String, dir: java.nio.file.Path, from: Int, to: Int,
       pattern: String, pushed: Seq[Filter]): Array[InputPartition] = {
-    def keep(name: String): Boolean = name.endsWith(pattern) && {
-      KvZoneMap.read(new File(path, name)) match {
-        case Some(st) => KvZonePrune.keeps(st, pushed, Map.empty)
-        case None => true // no stats ⇒ never skip
-      }
-    }
-    def abs(name: String): String = new File(path, name).getAbsolutePath
-    if (to <= from) Array.empty
-    else if (from == 0) {
+    val events: Seq[KvCdfPartition] =
+      if (to <= from) Nil
       // converged snapshot: live files with their vectors subtracted —
       // vector-deleted rows are not content at the fold horizon
-      val (live, dvs) = KvCommitLog.stateAsOf(dir, to)
-      live.toSeq.sorted.filter(keep).map(n =>
-        KvCdfPartition(abs(n), insert = true, to,
-          skip = dvs.getOrElse(n, Nil).map(abs)): InputPartition).toArray
-    } else {
-      // per-version exact events, with a RUNNING vector state so that
-      // (a) a `#dv` commit feeds exactly its newly-deleted rows as
-      // deletes, and (b) a later REMOVE of a vector-carrying file feeds
-      // only its still-live rows — nothing is ever deleted twice
-      var dvs = KvCommitLog.dvsAsOf(dir, from)
-      KvCommitLog.changesBetween(dir, from, to).flatMap {
-        case (v, adds, removes, attaches) =>
-          val parts: Seq[InputPartition] =
-            adds.sorted.filter(keep).map(n =>
-              KvCdfPartition(abs(n), insert = true, v)) ++
-            removes.sorted.filter(keep).map(n =>
-              KvCdfPartition(abs(n), insert = false, v,
-                skip = dvs.getOrElse(n, Nil).map(abs))) ++
-            attaches.sortBy(_._1).filter(a => keep(a._1)).map { case (d, vec) =>
-              KvCdfPartition(abs(d), insert = false, v, only = Seq(abs(vec)))
+      else if (from == 0)
+        KvSnapshot.at(path, to).map(KvCdfPartition(_, insert = true, to))
+      else {
+        // per-version exact events, with a RUNNING vector state so that
+        // (a) a `#dv` commit feeds exactly its newly-deleted rows as
+        // deletes, and (b) a later REMOVE of a vector-carrying file feeds
+        // only its still-live rows — nothing is ever deleted twice
+        var dvs = KvCommitLog.dvsAsOf(dir, from)
+        KvCommitLog.changesBetween(dir, from, to).flatMap {
+          case (v, adds, removes, attaches) =>
+            val parts =
+              adds.sorted.map(n =>
+                KvCdfPartition(KvSnapshot.entry(path, n), insert = true, v)) ++
+              removes.sorted.map(n =>
+                KvCdfPartition(KvSnapshot.entry(path, n, dvs.getOrElse(n, Nil)),
+                  insert = false, v)) ++
+              attaches.sortBy(_._1).map { case (d, vec) =>
+                KvCdfPartition(KvSnapshot.entry(path, d, Seq(vec)),
+                  insert = false, v, only = true)
+              }
+            removes.foreach(n => dvs -= n)
+            adds.foreach(n => dvs -= n)
+            attaches.foreach { case (d, vec) =>
+              dvs = dvs.updated(d, dvs.getOrElse(d, Nil) :+ vec)
             }
-          removes.foreach(n => dvs -= n)
-          adds.foreach(n => dvs -= n)
-          attaches.foreach { case (d, vec) =>
-            dvs = dvs.updated(d, dvs.getOrElse(d, Nil) :+ vec)
-          }
-          parts
-      }.toArray
-    }
+            parts
+        }
+      }
+    events.filter(e => e.data.name.endsWith(pattern) &&
+      KvSnapshot.keeps(e.data.stats, pushed)).toArray
   }
 }
 
@@ -499,8 +488,11 @@ object KvListStats {
 }
 
 /** A network split: one committed field served by a [[KvDaemon]] at
-  * `endpoint` — the executor fetches it with a streaming GET. */
-case class KvNetPartition(endpoint: String, field: String) extends InputPartition
+  * `endpoint`, pinned at `version` of its directory's log (the one its
+  * SCAN listed it at) — the executor fetches it with a streaming GET,
+  * and the daemon applies the vectors live at that version. */
+case class KvNetPartition(endpoint: String, field: String, version: Int)
+    extends InputPartition
 
 /** A stats-answered aggregate "split": the reader folds the files'
   * committed sidecars (opening a data file only when its sidecar is
@@ -508,17 +500,16 @@ case class KvNetPartition(endpoint: String, field: String) extends InputPartitio
   * sum fold OVERFLOW-CHECKED, matching Spark's ANSI sum raising instead
   * of wrapping — per-file sums themselves never wrap (the writer
   * withholds an overflowed `#sum`, forcing the parse fallback). */
-case class KvAggPartition(files: Seq[String], kinds: Seq[KvAggKind],
-    groupCol: Option[String] = None, ansi: Boolean = false,
-    dvs: Map[String, Seq[String]] = Map.empty)
+case class KvAggPartition(files: Seq[KvFilePartition], kinds: Seq[KvAggKind],
+    groupCol: Option[String] = None, ansi: Boolean = false)
     extends InputPartition
 
 /** One partition VALUE of a value-partitioned store: every file whose
   * committed sidecar pins the partition column to `value`. Carrying the
   * key ([[HasPartitionKey]]) is what lets Spark line partitions up across
   * two co-partitioned stores without shuffling either. */
-case class KvGroupPartition(value: Long, isLong: Boolean, files: Seq[String],
-    dvs: Map[String, Seq[String]] = Map.empty)
+case class KvGroupPartition(value: Long, isLong: Boolean,
+    files: Seq[KvFilePartition])
     extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow =
     InternalRow(if (isLong) value else value.toInt)
@@ -557,6 +548,40 @@ class KvScan(
       skipChangeCommits, changeFeed)
   }
 
+  /** The files this scan parses, planned ONCE from [[KvSnapshot]] —
+    * visible files that match the suffix pattern, each with its
+    * deletion vectors; every consumer (splits, statistics, aggregate
+    * folds) sees this one snapshot.
+    *
+    * MANIFEST-FIRST (r12): a committed flat store is planned from its
+    * commit log — one `stateAsOf` fold, at `asOfCommit` when set, else
+    * at the latest version — with ZERO directory traversal. At millions
+    * of files that walk is the classic lakehouse driver bottleneck; here
+    * listing cost becomes O(log size), metadata-only. Resolving the file
+    * list and the vector attachments in one fold is the point: a scan
+    * that resolved them separately could straddle a concurrent
+    * `purge_dvs`/compact/zorder commit — reading a still-on-disk
+    * version-N file with version-N+1's (empty) attachments, silently
+    * resurrecting vector-deleted rows.
+    *
+    * The tree walk remains for log-less directories (where an asOf
+    * snapshot names no file) and the RECURSIVE layout
+    * (`path/batch=N/…`), where each subdirectory's own log applies.
+    * `_staging` and any other hidden entries are never data. Not used
+    * in net mode, which plans from the daemon's SCAN. */
+  private lazy val files: Seq[KvFilePartition] = {
+    val latest = KvCommitLog.latestVersion(java.nio.file.Paths.get(path))
+    val manifest = !recursive && latest > 0
+    KvListStats.record(path, if (manifest) "manifest" else "walk")
+    val planned =
+      if (manifest) KvSnapshot.at(path, asOfCommit.getOrElse(latest))
+      else if (asOfCommit.isDefined) Nil
+      else KvSnapshot.walk(path, recursive).map(_._1)
+    // manifests may name non-file entries in foreign layouts
+    // (artifact-store member directories); a scan parses files only
+    planned.filter(f => f.name.endsWith(pattern) && new File(f.file).isFile)
+  }
+
   /** Plan-time statistics from commit metadata: exact row count folded
     * from the zone-map sidecars, bytes from the file listing — no data
     * read. This is what lets Catalyst make the RIGHT join strategy call
@@ -565,76 +590,21 @@ class KvScan(
     * kilobyte dimension and shuffling a fact table. Files without a
     * sidecar contribute size only (row count stays unknown overall,
     * matching the "never guess" discipline). */
-  /** The PINNED snapshot for this scan: (live file set, deletion-vector
-    * attachments) resolved in ONE `stateAsOf` fold, at `asOfCommit` when
-    * set, else at whatever `latestVersion` is when the scan first needs
-    * it. `None` for net/recursive/log-less layouts (those plan from the
-    * daemon or the directory walk).
-    *
-    * Resolving ONCE is the point: an unpinned scan that asked
-    * `latestVersion` separately for the file listing and the vector
-    * attachments could straddle a concurrent `purge_dvs`/compact/zorder
-    * commit — reading a still-on-disk version-N file with version-N+1's
-    * (empty) attachments, silently resurrecting vector-deleted rows.
-    * Both [[listDataFiles]] and [[dvState]] derive from this single
-    * fold, so every consumer (splits, statistics, aggregate folds) sees
-    * one consistent version. */
-  private lazy val pinnedState
-      : Option[(Set[String], Map[String, Seq[String]])] = {
-    if (path.startsWith("net://") || recursive) None
-    else {
-      val dirPath = java.nio.file.Paths.get(path)
-      val latest = KvCommitLog.latestVersion(dirPath)
-      if (latest <= 0) None
-      else Some(KvCommitLog.stateAsOf(dirPath, asOfCommit.getOrElse(latest)))
-    }
-  }
-
-  /** Live deletion-vector attachments for the planned snapshot
-    * ([[KvDv]]): file name → vector names. Non-empty only for flat
-    * committed local stores — the only layout the DV write path commits
-    * to. Derived from [[pinnedState]]. */
-  private lazy val dvState: Map[String, Seq[String]] =
-    pinnedState.map(_._2).getOrElse(Map.empty)
-
-  private def dvPathsOf(name: String): Seq[String] =
-    dvState.getOrElse(name, Nil).map(v => new File(path, v).getAbsolutePath)
-
-  /** Per-file vector lookup that also covers RECURSIVE layouts: a
-    * sub-store's `#dv` attachments come from ITS own commit log (the
-    * same discipline the walk already applies to remove lines) — a
-    * vector-deleted row must not resurrect through a parent-directory
-    * read. Per-directory state memoized for the plan's lifetime. */
-  private val dirDvCache =
-    scala.collection.mutable.Map.empty[String, Map[String, Seq[String]]]
-  private def dvFor(f: File): Seq[String] = {
-    if (!recursive) return dvPathsOf(f.getName)
-    val parent = f.getParentFile
-    val m = dirDvCache.getOrElseUpdate(parent.getAbsolutePath, {
-      val p = parent.toPath
-      val latest = KvCommitLog.latestVersion(p)
-      if (latest <= 0) Map.empty else KvCommitLog.dvsAsOf(p, latest)
-    })
-    m.getOrElse(f.getName, Nil).map(v => new File(parent, v).getAbsolutePath)
-  }
-
   override def estimateStatistics(): Statistics = {
     if (path.startsWith("net://"))
       return new Statistics {
         override def sizeInBytes() = java.util.OptionalLong.empty()
         override def numRows() = java.util.OptionalLong.empty()
       }
-    val files = listDataFiles()
-    val bytes = files.map(_.length()).sum
+    val bytes = files.map(f => new File(f.file).length()).sum
     var rows = 0L
     var allKnown = true
     files.foreach { f =>
-      KvZoneMap.read(f) match {
+      f.stats match {
         case Some(st) =>
           // vector-deleted rows are not content: exact statistics
           // subtract them (vectors are tiny, cached, and disjoint)
-          rows += st.rows - KvDv.count(
-            dvFor(f).map(java.nio.file.Paths.get(_)))
+          rows += st.rows - KvDv.count(f.dvs.map(java.nio.file.Paths.get(_)))
         case None => allKnown = false
       }
     }
@@ -713,29 +683,24 @@ class KvScan(
   private lazy val groupedByValue: Array[InputPartition] = {
     val col = partitionedBy.get
     val isLong = dataSchema(col).dataType == LongType
-    val groups = listDataFiles()
+    val groups = files
       .flatMap { f =>
-        val st = KvZoneMap.read(f).getOrElse(throw new IllegalStateException(
-          s"graft kv source: partitionedBy=$col but ${f.getName} has no " +
+        val st = f.stats.getOrElse(throw new IllegalStateException(
+          s"graft kv source: partitionedBy=$col but ${f.name} has no " +
             "stats sidecar — not a value-partitioned store"))
         if (st.rows == 0L) None // an empty file belongs to no value
         else {
           val (mn, mx) = st.cols.getOrElse(col, throw new IllegalStateException(
-            s"graft kv source: no stats for partition column $col in ${f.getName}"))
+            s"graft kv source: no stats for partition column $col in ${f.name}"))
           require(mn == mx,
-            s"graft kv source: ${f.getName} spans $col in [$mn,$mx] — the store " +
+            s"graft kv source: ${f.name} spans $col in [$mn,$mx] — the store " +
               s"was not written with partitionColumn=$col")
           Some((mn, f))
         }
       }
       .groupBy(_._1).toSeq.sortBy(_._1)
     groups.map { case (v, fs) =>
-      val files = fs.map(_._2.getAbsolutePath).sorted
-      val dvs = fs.flatMap { case (_, f) =>
-        val ps = dvFor(f)
-        if (ps.isEmpty) None else Some(f.getAbsolutePath -> ps)
-      }.toMap
-      KvGroupPartition(v, isLong, files, dvs): InputPartition
+      KvGroupPartition(v, isLong, fs.map(_._2)): InputPartition
     }.toArray
   }
 
@@ -775,82 +740,6 @@ class KvScan(
     }
   }
 
-  /** Does any pushed static filter or runtime key set rule out a file
-    * whose column bounds span the sidecar's [min,max] ranges? */
-  private def zoneMapKeeps(f: File): Boolean =
-    KvZoneMap.read(f) match {
-      case None => true // no stats ⇒ never skip
-      case Some(st) => KvZonePrune.keeps(st, pushed.toSeq, runtimeKeys)
-    }
-
-  /** One split per committed file; `_staging` and any other hidden
-    * (underscore/dot-prefixed) entries are not data — at EVERY level when
-    * `recursive` (the per-batch/partitioned kv layout: `path/batch=N/…`).
-    * Listing is sorted so split planning is deterministic.
-    *
-    * A `net://host:port` path plans against a live [[KvDaemon]] instead:
-    * one hscan-style SCAN paging pass fetches the committed field NAMES
-    * (the daemon applies the suffix pattern and hidden-path discipline
-    * server-side, and is always recursive); each name becomes one
-    * network split. */
-  /** The directory view a scan parses: visible (non-hidden) files that
-    * match the suffix pattern, within the asOf snapshot when set.
-    *
-    * MANIFEST-FIRST (r12): a committed flat store is planned from its
-    * commit log — the manifests already name every live file, so the
-    * latest view (and any asOf snapshot) needs ZERO directory traversal.
-    * At millions of files that walk is the classic lakehouse driver
-    * bottleneck; here listing cost becomes O(log size), metadata-only.
-    * The walk remains for log-less directories, and the RECURSIVE layout
-    * walks the tree but consults each subdirectory's own log where one
-    * exists (so a sub-store's REMOVE lines — row-level delete, overwrite
-    * — are honored instead of resurrected by the listing). */
-  private def listDataFiles(): Seq[File] = {
-    def visible(f: File) =
-      !f.getName.startsWith("_") && !f.getName.startsWith(".")
-    val root = new File(path)
-    // committed flat store: the live set comes from the SAME pinned fold
-    // as the deletion-vector attachments (pinnedState) — never a second
-    // latestVersion resolution that could straddle a concurrent commit
-    pinnedState.foreach { case (live, _) =>
-      KvListStats.record(path, "manifest")
-      return live.toSeq.sorted
-        .filter(_.endsWith(pattern))
-        .map(n => new File(root, n))
-        // manifests may name non-file entries in foreign layouts
-        // (artifact-store member directories); a scan parses files only
-        .filter(_.isFile)
-    }
-    def walk(d: File): Seq[File] = {
-      val kids = Option(d.listFiles()).getOrElse(Array.empty[File]).toSeq
-        .filter(visible)
-      // a committed subdirectory's live view comes from ITS log (remove
-      // lines honored); file entries not in the live set are not data
-      val live: File => Boolean =
-        if (KvCommitLog.latestVersion(d.toPath) > 0) {
-          val names = KvCommitLog.liveFiles(d.toPath)
-          f => names(f.getName)
-        } else _ => true
-      kids.flatMap { f =>
-        if (f.isFile) { if (live(f)) Seq(f) else Nil }
-        else if (recursive && f.isDirectory) walk(f)
-        else Nil
-      }
-    }
-    // Snapshot view over a LOG-LESS flat directory can only be empty
-    // (asOfCommit with no log names no files) — the committed case
-    // returned above; recursive asOf is rejected at construction.
-    val snapshot: File => Boolean = asOfCommit match {
-      case Some(v) =>
-        val named = KvCommitLog.filesAsOf(java.nio.file.Paths.get(path), v)
-        f => named(f.getName)
-      case None => _ => true
-    }
-    KvListStats.record(path, "walk")
-    walk(root)
-      .filter(f => f.getName.endsWith(pattern) && snapshot(f))
-  }
-
   override def planInputPartitions(): Array[InputPartition] = {
     // BATCH change feed (`table_changes(from, to)` shape): per-version
     // exact above `changesFrom`; from 0 the initial content is one
@@ -876,9 +765,12 @@ class KvScan(
     }
     if (path.startsWith("net://")) {
       val endpoint = path.stripPrefix("net://")
-      val listed = KvDaemon.scanFields(endpoint, pattern)
+      val listed = KvDaemon.scanFields(endpoint, pattern).map { ref =>
+        val Array(v, field) = ref.split(" ", 2)
+        KvNetPartition(endpoint, field, v.toInt)
+      }
       // server-side zone maps: the daemon serves each field's committed
-      // sidecar (STATS), and the same pure skip decision drops fields a
+      // sidecar (STATS), and the same zone-map filter drops fields a
       // pushed or runtime predicate can never match — file skipping
       // without a filesystem, the way a remote KV cluster would answer
       // from its own metadata. Statless fields are never skipped.
@@ -888,43 +780,29 @@ class KvScan(
           // one connection for ALL sidecars (not one connect/QUIT per
           // field): planning a filtered scan of an n-field store is one
           // socket round, not n sequential driver round trips
-          val stats = KvDaemon.statsForMany(endpoint, listed)
-          listed.filter { f =>
-            stats.getOrElse(f, None) match {
-              case Some(st) => KvZonePrune.keeps(st, pushed.toSeq, runtimeKeys)
-              case None => true
-            }
-          }
+          val stats = KvDaemon.statsForMany(endpoint, listed.map(_.field))
+          listed.filter(p => KvSnapshot.keeps(stats.getOrElse(p.field, None),
+            pushed.toSeq, runtimeKeys))
         }
       KvPruneStats.record(path, listed.length, kept.length)
-      return kept.map(KvNetPartition(endpoint, _): InputPartition).toArray
+      return kept.toArray
     }
     // value-partitioned layout: one split per partition value, planned
     // once (outputPartitioning's split count must stay consistent)
     if (partitionedBy.isDefined) return groupedByValue
-    val listed = listDataFiles()
     // stats-answered aggregate: one partition folding the sidecars (no
     // pushed filters by construction, so no pruning interplay); a
     // vector-carrying file's sidecar over-counts, so its vectors ride
     // along and force the reader's exact parse fallback for that file
     agg.foreach { p =>
-      val aggDvs = listed.flatMap { f =>
-        val ps = dvFor(f)
-        if (ps.isEmpty) None else Some(f.getAbsolutePath -> ps)
-      }.toMap
-      return Array(KvAggPartition(
-        listed.map(_.getAbsolutePath).sorted, p.kinds, p.groupCol,
-        org.apache.spark.sql.internal.SQLConf.get.ansiEnabled, aggDvs))
+      return Array(KvAggPartition(files, p.kinds, p.groupCol,
+        org.apache.spark.sql.internal.SQLConf.get.ansiEnabled))
     }
     // zone-map file skipping: static pushed predicates and runtime join
     // keys against each file's committed min/max sidecar (absent ⇒ keep)
-    val kept = listed.filter(zoneMapKeeps)
-    KvPruneStats.record(path, listed.length, kept.length)
-    kept
-      .sortBy(_.getAbsolutePath)
-      .map(f => KvFilePartition(f.getAbsolutePath, dvFor(f))
-        : InputPartition)
-      .toArray
+    val kept = files.filter(f => KvSnapshot.keeps(f.stats, pushed.toSeq, runtimeKeys))
+    KvPruneStats.record(path, files.length, kept.length)
+    kept.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -995,28 +873,13 @@ class KvMicroBatchStream(path: String, dataSchema: StructType,
     // would); delta batches are pure adds — fresh files have no vectors
     // at their add version, and a later `#dv` commit is a change commit
     // (fail or skip whole, per the contract above)
-    val (names, dvs) =
-      if (s == 0) {
-        val (live, d) = KvCommitLog.stateAsOf(dir, e)
-        (live.toSeq, d)
-      } else
-        (KvCommitLog.addsBetween(dir, s, e, skipChangeCommits),
-          Map.empty[String, Seq[String]])
-    names.sorted
-      .filter(_.endsWith(pattern))
-      .map(n => new File(path, n))
-      .filter(_.isFile)
-      // zone-map file skipping works per delta batch too
-      .filter { f =>
-        KvZoneMap.read(f) match {
-          case Some(st) => KvZonePrune.keeps(st, pushed.toSeq, Map.empty)
-          case None => true
-        }
-      }
-      .map(f => KvFilePartition(f.getAbsolutePath,
-        dvs.getOrElse(f.getName, Nil)
-          .map(v => new File(path, v).getAbsolutePath)): InputPartition)
-      .toArray
+    val files =
+      if (s == 0) KvSnapshot.at(path, e)
+      else KvCommitLog.addsBetween(dir, s, e, skipChangeCommits).sorted
+        .map(KvSnapshot.entry(path, _))
+    // zone-map file skipping works per delta batch too
+    files.filter(f => f.name.endsWith(pattern) && new File(f.file).isFile &&
+      KvSnapshot.keeps(f.stats, pushed.toSeq)).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -1184,13 +1047,11 @@ class KvReaderFactory(
       else if (parts(i).isEmpty || parts(i) == KvEscape.NullToken) null
       else parts(i)
     val cntIdx = cntCols.toSeq.map(c => (c, dataSchema.fieldNames.indexOf(c)))
-    p.files.foreach { fp =>
-      val f = new File(fp)
+    p.files.foreach { f =>
       // a vector-carrying file's sidecar over-counts its live rows —
       // never let it answer; the parse fallback subtracts exactly
-      val fileDvs = p.dvs.getOrElse(fp, Nil).map(java.nio.file.Paths.get(_))
-      KvZoneMap.read(f) match {
-        case Some(st) if fileDvs.isEmpty && (st.rows == 0L ||
+      f.stats match {
+        case Some(st) if f.dvs.isEmpty && (st.rows == 0L ||
             (p.groupCol.forall(c => st.cols.get(c).exists(b => b._1 == b._2)) &&
               sumCols.forall(sumOk(st, _)) &&
               cntCols.forall(countFromStats(st, _).isDefined))) =>
@@ -1208,9 +1069,8 @@ class KvReaderFactory(
           // count/sum the stats cannot decide, or live deletion vectors:
           // parse and bucket row-by-row — exact either way (nulls skipped
           // like Spark's own aggregates skip them)
-          val src = scala.io.Source.fromFile(f, "UTF-8")
-          try KvDv.filterLines(src.getLines(), fileDvs)
-            .filter(_.nonEmpty).foreach { line =>
+          val lines = KvSnapshot.lines(f)
+          try lines.filter(_.nonEmpty).foreach { line =>
             val parts = line.split(",", -1)
             val acc = accFor(groupIdx.map { case (i, isLong) =>
               if (isLong) parts(i).toLong else parts(i).toInt.toLong
@@ -1228,7 +1088,7 @@ class KvReaderFactory(
               if (fieldOf(parts, i) != null)
                 acc.cnts(c) = acc.cnts.getOrElse(c, 0L) + 1L
             }
-          } finally src.close()
+          } finally lines.close()
       }
     }
     def rowOf(group: Option[Long], acc: Acc): InternalRow = {
@@ -1262,8 +1122,8 @@ class KvReaderFactory(
       case p: KvAggPartition => return aggReader(p)
       case _ => ()
     }
-    // same parse/filter/project pipeline over either line stream: a
-    // local committed file or a daemon-served network fetch. `fileOf`
+    // same parse/filter/project pipeline over either line stream: local
+    // committed files or a daemon-served network fetch. `currentFile`
     // names the entry the CURRENT line came from — the `_file` metadata
     // column (row-level CoW group identity; also exposed to users like
     // input_file_name); for net splits the daemon field is the analog.
@@ -1271,48 +1131,31 @@ class KvReaderFactory(
     // change-feed constants for this split (KvCdfPartition only)
     var cdfType: UTF8String = null
     var cdfVersion: Long = -1L
-    def dvp(paths: Seq[String]): Seq[java.nio.file.Path] =
-      paths.map(java.nio.file.Paths.get(_))
     val (lineSrc, closer): (Iterator[String], () => Unit) = partition match {
-      case KvFilePartition(file, dvs) =>
-        currentFile = new File(file).getName
-        val src = scala.io.Source.fromFile(file, "UTF-8")
-        (KvDv.filterLines(src.getLines(), dvp(dvs)), () => src.close())
-      case KvCdfPartition(file, insert, version, skip, only) =>
-        currentFile = new File(file).getName
-        cdfType = UTF8String.fromString(if (insert) "insert" else "delete")
-        cdfVersion = version.toLong
-        val f = new File(file)
-        require(f.isFile, s"graft kv source: change-feed file $file is " +
-          "gone — vacuumed below the feed's horizon; keep vacuum above " +
-          "any change-feed reader's replay range")
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        val lines =
-          if (only.nonEmpty) KvDv.filterLines(src.getLines(), dvp(only), only = true)
-          else KvDv.filterLines(src.getLines(), dvp(skip))
-        (lines, () => src.close())
-      case KvNetPartition(endpoint, field) =>
+      case KvNetPartition(endpoint, field, version) =>
         currentFile = field
-        val fl = new KvDaemon.FieldLines(endpoint, field)
+        val fl = new KvDaemon.FieldLines(endpoint, field, version)
         (fl, () => fl.close())
-      case KvGroupPartition(_, _, files, dvs) =>
-        // one value's files, parsed sequentially; each source closes as
-        // it exhausts, the closer covers an abandoned (partial) read
-        var open: scala.io.Source = null
-        val it = files.iterator.flatMap { fp =>
-          val src = scala.io.Source.fromFile(fp, "UTF-8")
-          open = src
-          currentFile = new File(fp).getName
-          val raw = new Iterator[String] {
-            private val lines = src.getLines()
-            override def hasNext: Boolean = {
-              val h = lines.hasNext
-              if (!h) src.close()
-              h
-            }
-            override def next(): String = lines.next()
-          }
-          KvDv.filterLines(raw, dvp(dvs.getOrElse(fp, Nil)))
+      case local =>
+        val (files, only) = local match {
+          case f: KvFilePartition => (Seq(f), false)
+          case g: KvGroupPartition => (g.files, false)
+          case KvCdfPartition(data, insert, version, only) =>
+            cdfType = UTF8String.fromString(if (insert) "insert" else "delete")
+            cdfVersion = version.toLong
+            require(new File(data.file).isFile, s"graft kv source: change-" +
+              s"feed file ${data.file} is gone — vacuumed below the feed's " +
+              "horizon; keep vacuum above any change-feed reader's replay range")
+            (Seq(data), only)
+        }
+        // the files in turn (a value's files for a group split); each
+        // closes as its lines run out, the closer covers an abandoned read
+        var open: AutoCloseable = null
+        val it = files.iterator.flatMap { f =>
+          currentFile = f.name
+          val ls = KvSnapshot.lines(f, only)
+          open = ls
+          ls
         }
         (it, () => if (open != null) open.close())
     }

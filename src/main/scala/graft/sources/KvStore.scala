@@ -98,27 +98,19 @@ object KvStore {
      else base.unionAll(deleteKeys.toDF("__k"))).distinct()
   }
 
-  /** Wide-delta candidate targeting: live files whose keyCol zone range
-    * intersects the delta's [min, max] key span (files without a sidecar
-    * are always candidates — never guess). One scalar aggregation of the
-    * keys frame; per-key Bloom pruning is deliberately forfeited here —
-    * it needs the key set, and read amplification (more candidate files
-    * scanned by the distributed join) is the sound direction. */
-  private def rangeCandidates(dir: String, live: Seq[String],
-      keyCol: String, keysDf: DataFrame): Seq[String] = {
+  /** Wide-delta candidate targeting: the delta's [min, max] key span as
+    * the filters `keyCol >= min AND keyCol <= max`, for [[candidates]];
+    * None for an empty delta (nothing can match). One scalar
+    * aggregation of the keys frame; per-key Bloom pruning is
+    * deliberately forfeited here — it needs the key set, and read
+    * amplification (more candidate files scanned by the distributed
+    * join) is the sound direction. */
+  private def keySpan(keyCol: String, keysDf: DataFrame): Option[Seq[Filter]] = {
     import org.apache.spark.sql.functions.{max => fmax, min => fmin, col}
     val b = keysDf.agg(fmin(col("__k")), fmax(col("__k"))).head()
-    if (b.isNullAt(0)) return Nil // empty delta: nothing can match
-    val (kmin, kmax) = (b.getLong(0), b.getLong(1))
-    live.filter { name =>
-      KvZoneMap.read(new File(dir, name)) match {
-        case Some(st) => st.cols.get(keyCol) match {
-          case Some((mn, mx)) => kmax >= mn && kmin <= mx
-          case None => true
-        }
-        case None => true
-      }
-    }
+    if (b.isNullAt(0)) None
+    else Some(Seq(GreaterThanOrEqual(keyCol, b.getLong(0)),
+      LessThanOrEqual(keyCol, b.getLong(1))))
   }
 
   /** The version a mutation derives from: `expected`, or the head. */
@@ -128,27 +120,23 @@ object KvStore {
     base
   }
 
-  /** Zone-map targeting: the files of `live` whose sidecar does not PROVE
-    * that no row can match `filters` and `keys` — a file without a
-    * sidecar is always a candidate (never guess). Vector-carrying files'
-    * sidecars describe a SUPERSET of their live rows, so "cannot match"
-    * stays proven. */
-  private def candidates(dir: String, live: Seq[String],
-      filters: Seq[Filter], keys: Map[String, Set[Long]] = Map.empty): Seq[String] =
-    live.filter(n => KvZoneMap.read(new File(dir, n))
-      .forall(KvZonePrune.keeps(_, filters, keys)))
+  /** Zone-map targeting: the files the zone-map filter keeps for
+    * `filters` and `keys` ([[KvSnapshot.keeps]]). */
+  private[graft] def candidates(files: Seq[KvFilePartition],
+      filters: Seq[Filter], keys: Map[String, Set[Long]] = Map.empty)
+      : Seq[KvFilePartition] =
+    files.filter(f => KvSnapshot.keeps(f.stats, filters, keys))
 
   /** Scan one store file's LIVE rows: `f(ordinal, line)` for every
-    * non-empty line its deletion vectors `dvNames` do not delete (the
-    * ordinal is the physical line number from 0). Returns how many rows
-    * the vectors deleted. */
-  private def liveLines(dir: String, name: String, dvNames: Seq[String])(
+    * non-empty line its deletion vectors do not delete (the ordinal is
+    * the physical line number from 0). Returns how many rows the vectors
+    * deleted. */
+  private def liveLines(file: KvFilePartition)(
       f: (Long, String) => Unit): Long = {
-    val cursor = new KvDv.Cursor(
-      KvDv.merged(dvNames.map(v => Paths.get(dir).resolve(v))))
+    val cursor = new KvDv.Cursor(KvDv.merged(file.dvs.map(Paths.get(_))))
     var ord = -1L
     var dvDeleted = 0L
-    val src = scala.io.Source.fromFile(new File(dir, name), "UTF-8")
+    val src = scala.io.Source.fromFile(file.file, "UTF-8")
     try src.getLines().foreach { line =>
       ord += 1
       if (line.nonEmpty) {
@@ -223,26 +211,24 @@ object KvStore {
     * DATASET of (file, ascending ordinals) — callers stage vectors or
     * rewrites from its TASKS; only per-file names/counts ever reach the
     * driver. */
-  private def distributedHits(spark: SparkSession, dir: String,
-      schema: StructType, keyCol: String, candidates: Seq[String],
-      dvs: Map[String, Seq[String]], keysDf: DataFrame)
+  private def distributedHits(spark: SparkSession, schema: StructType,
+      keyCol: String, candidates: Seq[KvFilePartition], keysDf: DataFrame)
       : org.apache.spark.sql.Dataset[(String, Seq[Long])] = {
     import org.apache.spark.sql.functions.{col, collect_list, sort_array}
     import spark.implicits._
     val ddl = schema.toDDL
-    val withDvs = candidates.map(n => (n, dvs.getOrElse(n, Nil)))
     val fileRows = spark.sparkContext
-      .parallelize(withDvs, math.min(math.max(candidates.size, 1),
+      .parallelize(candidates, math.min(math.max(candidates.size, 1),
         spark.sparkContext.defaultParallelism))
-      .flatMap { case (name, dvNames) =>
+      .flatMap { file =>
         val parsed = StructType.fromDDL(ddl)
         val types = parsed.fields.map(_.dataType)
         val ki = parsed.fieldNames.indexOf(keyCol)
         val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-        liveLines(dir, name, dvNames) { (ord, line) =>
+        liveLines(file) { (ord, line) =>
           KvRowEval.parse(line, types)(ki) match {
-            case l: Long => buf += ((name, ord, l))
-            case i2: Int => buf += ((name, ord, i2.toLong))
+            case l: Long => buf += ((file.name, ord, l))
+            case i2: Int => buf += ((file.name, ord, i2.toLong))
             case _ => () // NULL key matches no merge key
           }
         }
@@ -283,10 +269,9 @@ object KvStore {
       "graft kv store: deletion-vector TRUNCATE is pure overhead — use " +
         "deleteWhere for an unconditional delete")
     val base = baseOf(dir, expectedBase)
-    val (live, dvs) = KvCommitLog.stateAsOf(Paths.get(dir), base)
-    val hit = stageVectors(spark, dir, schema,
-      candidates(dir, live.toSeq.sorted, filters), dvs, KvCommitLog.nonce(),
-      filters, None)
+    val live = KvSnapshot.at(dir, base)
+    val hit = stageVectors(spark, dir, schema, candidates(live, filters),
+      KvCommitLog.nonce(), filters, None)
     Mutation(KvCommitLog.publish(Paths.get(dir), Some(base), vectors(dir, hit)),
       0, 0, live.size, hit.map(_._3).sum, 0L)
   }
@@ -314,11 +299,11 @@ object KvStore {
     val (oldLive, oldDvs) = KvCommitLog.stateAsOf(dirPath, toVersion)
     // every restored file must still exist — vacuum may have reclaimed
     // history even though the manifests fold (fail loudly, not partially)
-    val gone = oldLive.filter(n => !Files.isRegularFile(dirPath.resolve(n))) ++
-      oldDvs.values.flatten.filter(n => !Files.isRegularFile(dirPath.resolve(n)))
+    val gone = KvSnapshot.at(dir, toVersion).flatMap(f => f.file +: f.dvs)
+      .map(new File(_)).filterNot(_.isFile).map(_.getName)
     require(gone.isEmpty,
       s"graft kv store: cannot restore $dir to version $toVersion — " +
-        s"vacuum reclaimed ${gone.toSeq.sorted.mkString(", ")}")
+        s"vacuum reclaimed ${gone.distinct.sorted.mkString(", ")}")
     // a file kept live but whose vector set drifted is CHURNED: removed
     // and re-added in this one manifest (the fold clears attachments on
     // re-add — '-name' sorts before 'name', so the net is a clean
@@ -342,8 +327,7 @@ object KvStore {
     * [[rewriteOne]]), and stages a new vector under `_staging`. Returns
     * only the files that had hits. */
   private def stageVectors(spark: SparkSession, dir: String,
-      schema: StructType, candidates: Seq[String],
-      dvs: Map[String, Seq[String]], nonce: String,
+      schema: StructType, candidates: Seq[KvFilePartition], nonce: String,
       filters: Seq[Filter], keys: Option[(String, Set[Long])])
       : Seq[(String, String, Long)] = {
     if (candidates.isEmpty) return Nil
@@ -351,16 +335,16 @@ object KvStore {
     spark.sparkContext
       .parallelize(candidates.zipWithIndex,
         math.min(candidates.size, spark.sparkContext.defaultParallelism))
-      .map { case (name, i) =>
+      .map { case (file, i) =>
         val parsed = StructType.fromDDL(ddl)
         val types = parsed.fields.map(_.dataType)
         val doomed = doomedBy(parsed, filters, keys)
         val hits = scala.collection.mutable.ArrayBuilder.make[Long]
-        liveLines(dir, name, dvs.getOrElse(name, Nil)) { (ord, line) =>
+        liveLines(file) { (ord, line) =>
           if (doomed(KvRowEval.parse(line, types))) hits += ord
         }
         val ords = hits.result()
-        (name, stageDv(dir, nonce, i, ords), ords.length.toLong)
+        (file.name, stageDv(dir, nonce, i, ords), ords.length.toLong)
       }
       .collect().toSeq.filter(_._3 > 0L)
   }
@@ -398,24 +382,25 @@ object KvStore {
       .map(_ ++ deleteKeys)
     lastMergeKeysDistributed = narrowKeys.isEmpty
     val base = baseOf(dir, expectedBase)
-    val (live, dvs) = KvCommitLog.stateAsOf(Paths.get(dir), base)
+    val live = KvSnapshot.at(dir, base)
     val nonce = KvCommitLog.nonce()
     val hit: Seq[(String, String, Long)] = narrowKeys match {
       case Some(affected) =>
         if (affected.isEmpty) Nil
         else stageVectors(spark, dir, schema,
-          candidates(dir, live.toSeq.sorted, Nil, Map(keyCol -> affected)),
-          dvs, nonce, Nil, Some(keyCol -> affected))
+          candidates(live, Nil, Map(keyCol -> affected)),
+          nonce, Nil, Some(keyCol -> affected))
       case None =>
         import spark.implicits._
         val keysDf = keysFrame(upserts, keyCol, deleteKeys)
-        val cands = rangeCandidates(dir, live.toSeq.sorted, keyCol, keysDf)
+        val cands = keySpan(keyCol, keysDf).fold(Seq.empty[KvFilePartition])(
+          candidates(live, _))
         if (cands.isEmpty) Nil
         else {
-          val idxOf = cands.zipWithIndex.toMap
+          val idxOf = cands.map(_.name).zipWithIndex.toMap
           // stage the vector IN THE TASK: the ordinal list never crosses
           // to the driver
-          distributedHits(spark, dir, schema, keyCol, cands, dvs, keysDf)
+          distributedHits(spark, schema, keyCol, cands, keysDf)
             .map { case (name, ords) =>
               (name, stageDv(dir, nonce, idxOf(name), ords.toArray),
                 ords.size.toLong)
@@ -438,15 +423,15 @@ object KvStore {
     * travel until [[vacuum]]. */
   def purgeDvs(spark: SparkSession, dir: String, schema: StructType): Mutation = {
     val base = baseOf(dir)
-    val (live, dvs) = KvCommitLog.stateAsOf(Paths.get(dir), base)
-    val targets = dvs.keys.toSeq.sorted
+    val live = KvSnapshot.at(dir, base)
+    val targets = live.filter(_.dvs.nonEmpty)
     if (targets.isEmpty) return Mutation(base, 0, 0, live.size, 0L, 0L)
-    val rewrites = rewriteFiles(spark, dir, schema, targets, dvs,
+    val rewrites = rewriteFiles(spark, dir, schema, targets,
       s"purge-${KvCommitLog.nonce()}", Nil, None, purge = true)
     val (emptied, replaced) = rewrites.partition(_.staged.rows == 0L)
     emptied.foreach(discard)
     Mutation(KvCommitLog.publish(Paths.get(dir), Some(base),
-        replaced.map(_.staged), targets),
+        replaced.map(_.staged), targets.map(_.name)),
       replaced.size, emptied.size, live.size - targets.size, 0L, 0L)
   }
 
@@ -504,7 +489,7 @@ object KvStore {
       targetFiles: Int): Mutation = {
     require(targetFiles >= 1, s"graft kv store: target_files $targetFiles < 1")
     val base = baseOf(dir)
-    val live = KvCommitLog.filesAsOf(Paths.get(dir), base).toSeq.sorted
+    val live = KvSnapshot.at(dir, base)
     if (live.size <= targetFiles)
       return Mutation(base, 0, 0, live.size, 0L, 0L) // already compact
     // CLUSTERING-PRESERVING (r15): a store that paid for a z-order
@@ -542,7 +527,7 @@ object KvStore {
       s"graft kv store: z-order columns '${cols._1},${cols._2}' must be " +
         "integer schema columns")
     val base = baseOf(dir)
-    val live = KvCommitLog.filesAsOf(Paths.get(dir), base).toSeq.sorted
+    val live = KvSnapshot.at(dir, base)
     if (live.isEmpty) return Mutation(base, 0, 0, 0, 0L, 0L)
     val m = rewriteSnapshot(spark, dir, schema, base, live, "zorder",
       zLayout(spark, cols, targetFiles))
@@ -608,10 +593,9 @@ object KvStore {
     * files until [[vacuum]]; deletion vectors are materialized by the
     * rewrite. */
   private def rewriteSnapshot(spark: SparkSession, dir: String,
-      schema: StructType, base: Int, live: Seq[String], opName: String,
+      schema: StructType, base: Int, live: Seq[KvFilePartition], opName: String,
       layout: DataFrame => DataFrame): Mutation = {
-    val bloomCols = live.flatMap(n =>
-      KvZoneMap.read(new File(dir, n)).map(_.blooms.keySet)
+    val bloomCols = live.flatMap(_.stats.map(_.blooms.keySet)
         .getOrElse(Set.empty))
       .distinct.filter(schema.fieldNames.contains).sorted
     val folded = layout(spark.read.format("graft.sources.KvSourceProvider")
@@ -620,7 +604,8 @@ object KvStore {
       .load())
     withScratch(dir, s"$opName-${KvCommitLog.nonce()}", folded, bloomCols) {
       (adopted, rows) =>
-        Mutation(KvCommitLog.publish(Paths.get(dir), Some(base), adopted, live),
+        Mutation(KvCommitLog.publish(Paths.get(dir), Some(base), adopted,
+            live.map(_.name)),
           adopted.size, 0, 0, 0L, rows)
     }
   }
@@ -648,8 +633,7 @@ object KvStore {
       adds: Option[DataFrame], expectedBase: Option[Int],
       wideKeys: Option[(String, DataFrame)] = None): Mutation = {
     val base = baseOf(dir, expectedBase)
-    val (liveSet, dvs) = KvCommitLog.stateAsOf(Paths.get(dir), base)
-    val live = liveSet.toSeq.sorted
+    val live = KvSnapshot.at(dir, base)
     val nonce = KvCommitLog.nonce()
     val rewrites: Seq[Rewrite] = wideKeys match {
       case Some((keyCol, keysDf)) =>
@@ -657,21 +641,24 @@ object KvStore {
         // ordinals from the distributed key join, one rewrite task per
         // HIT file with its ordinals as a per-file vector — the key set
         // never exists anywhere, and miss files are never rewritten
-        val cands = rangeCandidates(dir, live, keyCol, keysDf)
+        val cands = keySpan(keyCol, keysDf).fold(Seq.empty[KvFilePartition])(
+          candidates(live, _))
         if (cands.isEmpty) Nil
         else {
-          val idxOf = cands.zipWithIndex.toMap
+          val byName =
+            cands.zipWithIndex.map { case (f, i) => f.name -> (f, i) }.toMap
           val ddl = schema.toDDL
-          distributedHits(spark, dir, schema, keyCol, cands, dvs, keysDf)
+          distributedHits(spark, schema, keyCol, cands, keysDf)
             .rdd.map { case (name, ords) =>
-              rewriteOne(dir, name, ddl, s"rw-$nonce-${idxOf(name)}.csv",
-                dvs.getOrElse(name, Nil), Nil, None, ords.toArray)
+              val (file, i) = byName(name)
+              rewriteOne(dir, file, ddl, s"rw-$nonce-$i.csv", Nil, None,
+                ords.toArray)
             }.collect().toSeq.sortBy(_.original)
         }
       case None =>
-        rewriteFiles(spark, dir, schema, candidates(dir, live, filters,
+        rewriteFiles(spark, dir, schema, candidates(live, filters,
             keys.map { case (c, ks) => Map(c -> ks) }.getOrElse(Map.empty)),
-          dvs, s"rw-$nonce", filters, keys, purge = false)
+          s"rw-$nonce", filters, keys, purge = false)
     }
     // a candidate that lost no row keeps its ORIGINAL file byte-identical;
     // an emptied one is removed with nothing in its place
@@ -696,17 +683,17 @@ object KvStore {
     * already assumes. `purge` dooms no row: the rewrite only
     * materializes the files' vectors. */
   private def rewriteFiles(spark: SparkSession, dir: String,
-      schema: StructType, files: Seq[String], dvs: Map[String, Seq[String]],
-      tag: String, filters: Seq[Filter], keys: Option[(String, Set[Long])],
+      schema: StructType, files: Seq[KvFilePartition], tag: String,
+      filters: Seq[Filter], keys: Option[(String, Set[Long])],
       purge: Boolean): Seq[Rewrite] = {
     if (files.isEmpty) return Nil
     val ddl = schema.toDDL
     spark.sparkContext
       .parallelize(files.zipWithIndex,
         math.min(files.size, spark.sparkContext.defaultParallelism))
-      .map { case (name, i) =>
-        rewriteOne(dir, name, ddl, s"$tag-$i.csv", dvs.getOrElse(name, Nil),
-          filters, keys, if (purge) Array.emptyLongArray else null)
+      .map { case (file, i) =>
+        rewriteOne(dir, file, ddl, s"$tag-$i.csv", filters, keys,
+          if (purge) Array.emptyLongArray else null)
       }
       .collect().toSeq
   }
@@ -715,16 +702,16 @@ object KvStore {
     * delete condition (all `filters` true, or key ∈ the merge key set),
     * re-emit surviving LINES VERBATIM (escapes and formatting preserved
     * bit-for-bit), and accumulate fresh sidecar stats in the sink's own
-    * [[KvZoneAcc]]. Rows the file's deletion vectors (`dvNames`,
-    * relative names) already deleted are invisible here — never matched,
+    * [[KvZoneAcc]]. Rows the file's deletion vectors already deleted
+    * are invisible here — never matched,
     * never re-emitted — so a CoW mutation over a vector-carrying file
     * materializes its vectors as a side effect. `doomedOrds`, when
     * given, is an ascending vector of this file's newly-doomed LIVE
     * ordinals that replaces the condition: a wide-delta merge's
     * distributed key join computed it, so the task never holds the key
     * set; empty, it dooms nothing (a vector purge). */
-  private def rewriteOne(dir: String, name: String, schemaDdl: String,
-      stagedName: String, dvNames: Seq[String], filters: Seq[Filter],
+  private def rewriteOne(dir: String, file: KvFilePartition, schemaDdl: String,
+      stagedName: String, filters: Seq[Filter],
       keys: Option[(String, Set[Long])], doomedOrds: Array[Long]): Rewrite = {
     val schema = StructType.fromDDL(schemaDdl)
     val types = schema.fields.map(_.dataType)
@@ -741,13 +728,13 @@ object KvStore {
     // over the kept rows — a CoW mutation never silently downgrades a
     // store's point-lookup pruning tier
     val zone = new KvZoneAcc(schema,
-      KvZoneMap.read(new File(dir, name)).map(_.blooms.keySet)
+      file.stats.map(_.blooms.keySet)
         .getOrElse(Set.empty).toSeq.sorted.filter(schema.fieldNames.contains))
     var dropped = 0L
     val staged = new File(new File(dir, "_staging"), stagedName)
     staged.getParentFile.mkdirs()
     val out = new java.io.BufferedWriter(new java.io.FileWriter(staged))
-    val dvSkipped = try liveLines(dir, name, dvNames) { (ord, line) =>
+    val dvSkipped = try liveLines(file) { (ord, line) =>
       val row = KvRowEval.parse(line, types)
       if (doomed(ord, row)) dropped += 1
       else {
@@ -767,6 +754,6 @@ object KvStore {
         out.newLine()
       }
     } finally out.close()
-    Rewrite(name, zone.finish(staged.getAbsolutePath), dropped, dvSkipped)
+    Rewrite(file.name, zone.finish(staged.getAbsolutePath), dropped, dvSkipped)
   }
 }

@@ -63,15 +63,11 @@ object KvTableFiles {
         s"$name: catalog '${parts.head}' is not a table catalog")
     }
 
-    val dirPath = Paths.get(dir)
-    val head = KvCommitLog.latestVersion(dirPath)
-    val (live, dvs) = KvCommitLog.stateAsOf(dirPath, head)
-    val rows = live.toSeq.sorted.map { n =>
-      val f = new java.io.File(dir, n)
-      val st = KvZoneMap.read(f)
-      val vecs = dvs.getOrElse(n, Nil)
-      val dvRows = KvDv.count(vecs.map(dirPath.resolve(_)))
-      (n, st.map(_.rows), f.length(), dvRows, vecs.size,
+    val head = KvCommitLog.latestVersion(Paths.get(dir))
+    val rows = KvSnapshot.at(dir, head).map { f =>
+      val st = f.stats
+      (f.name, st.map(_.rows), new java.io.File(f.file).length(),
+        KvDv.count(f.dvs.map(Paths.get(_))), f.dvs.size,
         st.map(s0 => s0.cols.size + s0.dcols.size + s0.scols.size),
         st.map(_.blooms.size))
     }

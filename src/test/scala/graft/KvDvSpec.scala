@@ -553,4 +553,27 @@ class KvDvSpec extends AnyFunSuite with SparkSessionFixture {
       .load().select("k").collect().map(_.getLong(0)).sorted.toSeq
     assert(rows == (50L until 100L))
   }
+
+  test("net splits read the snapshot they were planned at: a purge_dvs between planning and reading resurrects nothing") {
+    val store = freshDir("netpin")
+    append(store, 0, 100, files = 2)
+    KvStore.deleteWhereDV(spark, store, Schema, del(10, 20)) // v2: vectors
+    val port = graft.sources.KvDaemon.ensure(store)
+    val table = new graft.sources.KvSourceProvider().getTable(Schema,
+      Array.empty, java.util.Map.of("endpoint", s"127.0.0.1:$port"))
+    val batch = table.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
+      .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+      .build().toBatch
+    val splits = batch.planInputPartitions()
+    // the vector-carrying file leaves the live set, still on disk
+    assert(KvStore.purgeDvs(spark, store, Schema).version == 3)
+    val factory = batch.createReaderFactory()
+    val keys = splits.toSeq.flatMap { p =>
+      val r = factory.createReader(p)
+      try Iterator.continually(r.next()).takeWhile(identity)
+        .map(_ => r.get().getLong(0)).toList
+      finally r.close()
+    }
+    assert(keys.sorted == ((0L until 10L) ++ (20L until 100L)))
+  }
 }
