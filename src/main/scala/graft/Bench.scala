@@ -1,5 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
+
+import graft.core.QueryProfile
+
 /** Benchmark main: runs every registry query against SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Each query is executed with a noop-format write —
   * the same full materialization Verify pays (count() would let Catalyst
@@ -70,6 +73,25 @@ import org.apache.spark.sql.SparkSession
   * SPARK_GRAFT_OUT) — commit that file alongside the round's BENCH
   * record, and promote it with tools/promote_baseline.py (canary-
   * normalized per-query minimums) to arm the guard.
+  *
+  * Every timed run goes through [[graft.core.QueryProfile.measure]], and
+  * the detail file (not the stdout lines) carries, under "profile", the
+  * profile of each query's fastest timed run — the run whose time is
+  * published:
+  *  - "wall_s": that run's time; "jobs", "stages", "tasks": Spark jobs
+  *    started, stages and tasks run;
+  *  - "job_ms": the union of the job intervals; "gap_ms": wall minus
+  *    job_ms, the driver time between jobs; "task_run_ms": executor run
+  *    time summed over tasks;
+  *  - "shuffle_read_bytes", "shuffle_write_bytes", "spill_disk_bytes",
+  *    "peak_stage_shuffle_write" (the largest one-stage shuffle write);
+  *  - "per_job": one {"ms","stages","label"} per job, labelled with its
+  *    `spark.job.description` or its call site.
+  * The listener bus is drained (bounded, 60 s) before the listener is
+  * attached and again before it is read, outside the timed body, so the
+  * counts hold exactly the run's own events. A scale run is this main on
+  * a replica from tools/scale_testdata.py:
+  * `SPARK_GRAFT_SF_DIR=<replica> SPARK_GRAFT_ONLY=q_a,q_b`.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -125,16 +147,20 @@ object Bench {
         .foreach { case (n, c) => System.err.println(s"[threads] $tag $c $n") }
     }
 
+    // The profile of each query's fastest timed run: the run whose time
+    // is published. Cleared when the warmup ends.
+    val best = scala.collection.mutable.Map.empty[String, QueryProfile.Profile]
     def timeOne(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9 }
-      catch { case e: Throwable =>
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
+      try {
+        val (_, p) = QueryProfile.measure(spark, name)(
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+        if (best.get(name).forall(_.wallSeconds > p.wallSeconds)) best(name) = p
+        p.wallSeconds
+      } catch { case e: Throwable =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         -1.0
       }
-    }
 
     // Machine-speed canaries, published with the record: median empty
     // RDD-job latency and empty SQL-execution latency. The r9 postmortem
@@ -166,6 +192,7 @@ object Bench {
       }
     def jmap(kv: Seq[(String, String)]): String =
       kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    def profiles: String = jmap(best.toSeq.sortBy(_._1).map { case (n, p) => n -> p.json })
 
     // Progress state shared with the shutdown hook: everything measured
     // so far, so a SIGTERM mid-sweep still publishes a partial record.
@@ -209,6 +236,7 @@ object Bench {
     }
 
     phase = "timed"
+    best.clear()
     val loadStart = loadavg
     val sweep0 = System.nanoTime()
     val firstPass = selected.zipWithIndex.map { case ((name, fn), i) =>
@@ -220,7 +248,7 @@ object Bench {
         f"[bench] timed ${i + 1}/${selected.size} $name ${ts.min}%.2fs wall=$wall%.0fs")
       probeLine(s"timed:$name", ts.min, wall)
       // incremental detail: a kill at any point leaves the full map so far
-      writeDetail(s"""{"metric":"total_detail","partial":true,"unit":"sec","queries":${jmap(done.toArray(Array.empty[(String, Double)]).toSeq.map { case (n, v) => n -> v.toString })},"iters":$iters,"env_sql_ms":$envSqlMs,"sf":"$sfDir"}""")
+      writeDetail(s"""{"metric":"total_detail","partial":true,"unit":"sec","queries":${jmap(done.toArray(Array.empty[(String, Double)]).toSeq.map { case (n, v) => n -> v.toString })},"iters":$iters,"env_sql_ms":$envSqlMs,"sf":"$sfDir","profile":$profiles}""")
       (name, fn, ts)
     }
     val loadEnd = loadavg
@@ -364,14 +392,14 @@ object Bench {
       .map(p => f""","regressed_vs":"$p","baseline_ratio_median":$medianRatio%.3f,"canary_ratio":$canaryRatio%.3f,"flag_cleared":${jarr(flagCleared)},"flag_unadjudicated":${jarr(unadjudicated.toSeq)},"rebench_skipped_env":$envContended""")
       .getOrElse("")
     val envJson = f""""loadavg_start":$loadStart%.2f,"loadavg_end":$loadEnd%.2f,"env_job_ms":$envJobMs%.1f,"env_sql_ms":$envSqlMs%.1f,"env_sql_ms_end":$envSqlMsEnd%.1f,"cpus":$cpus"""
-    val detail = s"""{"metric":"total_detail","value":$total,"unit":"sec","queries":$qs,"spread":$spreads,"contended":$contendedJson,"failed":$failedJson,"regressed":$regressedJson$regressedVs,"iters":$iters,$envJson,"sf":"$sfDir"}"""
+    val detailFields = s""""metric":"total_detail","value":$total,"unit":"sec","queries":$qs,"spread":$spreads,"contended":$contendedJson,"failed":$failedJson,"regressed":$regressedJson$regressedVs,"iters":$iters,$envJson,"sf":"$sfDir""""
     // Full detail line first (may exceed a tail-capture window at 88+
     // queries — r01/r02 both came back parsed:null from head truncation),
     // then a compact summary as the LAST stdout line so any tail window
     // still contains one complete parseable JSON object. Since r17 the
     // compact line carries the FULL per-query map at ms precision (see
     // the comment at the print below).
-    println(detail)
+    println(s"{$detailFields}")
     System.out.flush()
     // ...and the same full record to a FILE, because the driver's capture
     // keeps only a 2 KB stdout tail: bench_detail.json is the durable
@@ -379,8 +407,9 @@ object Bench {
     // to arm the next round's regression guard).
     // Subset runs (SPARK_GRAFT_ONLY) default to a separate file so a
     // quick single-query iteration cannot clobber the durable full-sweep
-    // record a later baseline promotion would read.
-    writeDetail(detail)
+    // record a later baseline promotion would read. Only the file carries
+    // the profiles.
+    writeDetail(s"""{$detailFields,"profile":$profiles}""")
     // "queries" on the compact line carries the FULL per-query map (r17;
     // the r16 verdict's top item: the slowest-8 truncation left the
     // driver's cross-round comparison with n_common=0 and an empty

@@ -24,8 +24,9 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.core.Graft.session(s"local[$cpus]", cpus.toInt)
     // Marks this session as an oracle-gate run: bench-only knobs that
-    // would drift gated results away from their static oracles (e.g.
-    // spark.graft.kmeans.k) fail fast instead of silently diverging.
+    // would drift gated results away from their static oracles (the
+    // band caps of operators/BandCap) fail fast instead of silently
+    // diverging.
     spark.conf.set("spark.graft.oracle.gate", "true")
     new java.io.File(outDir).mkdirs()
 

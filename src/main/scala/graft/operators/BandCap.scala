@@ -28,8 +28,7 @@ import org.apache.spark.sql.functions._
   * generation under a cap is a strict subset, so a capped run can drop
   * pairs whose only overlap is the degenerate value — under the oracle
   * gate (`spark.graft.oracle.gate`) a set knob fails fast instead of
-  * silently drifting the gated results (the `kmeans.k` discipline,
-  * queries/Clustering.scala). */
+  * silently drifting the gated results. */
 object BandCap {
 
   /** Parse `spark.graft.minhash.bandCap` / `spark.graft.phash.bandCap`

@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 /** Minimal access shim: `Dataset.ofRows` (DataFrame from a LogicalPlan) is
   * `private[sql]`, and wrapping a custom logical operator into a user-facing
   * DataFrame is exactly its purpose — the same door SparkSessionExtensions
-  * users and spark-connect planners go through. Nothing else from the
-  * private surface is touched. */
+  * users and spark-connect planners go through. The other members each
+  * open one more `private[spark]` call and say why. */
 object GraftDatasetShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): org.apache.spark.sql.DataFrame =
     Dataset.ofRows(spark, plan)
@@ -40,4 +40,11 @@ object GraftDatasetShim {
     * here registers the endpoint up front. */
   def ensureStateStoreCoordinator(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.asInstanceOf[SparkSession].streams.stateStoreCoordinator: Unit
+
+  /** Block until every listener has seen every event posted so far, or
+    * throw `TimeoutException` after `timeoutMs`. `SparkContext.listenerBus`
+    * is `private[spark]`; without this drain a listener's counts can only
+    * be read after a guessed sleep. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext, timeoutMs: Long): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
 }

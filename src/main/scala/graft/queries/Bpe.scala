@@ -40,30 +40,6 @@ object Bpe extends QueryGroup {
   private val Rounds = 4
   private val DocCap = 200L
 
-  /** Training-sample knob (`spark.graft.bpe.doccap`, default 200 — the
-    * value the oracle is generated for; set it to a huge value to train
-    * over the whole corpus). ScaleBench-only lever for measuring the
-    * corpus-scale cost of the pair-count rounds; under the oracle gate
-    * (Verify marks its session) a non-default value fails fast instead
-    * of silently drifting the gated result off its fixed-cap oracle —
-    * the same discipline as spark.graft.kmeans.k. */
-  private def docCapOf(s: org.apache.spark.sql.SparkSession): Long =
-    s.conf.getOption("spark.graft.bpe.doccap").map { v =>
-      val c = try v.toLong catch {
-        case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"spark.graft.bpe.doccap must be a positive integer, got '$v'")
-      }
-      require(c > 0, s"spark.graft.bpe.doccap out of range: $c")
-      if (c != DocCap &&
-          s.conf.getOption("spark.graft.oracle.gate").contains("true"))
-        throw new IllegalStateException(
-          s"spark.graft.bpe.doccap=$c conflicts with the oracle-gated BPE " +
-            s"query (oracle is fixed at $DocCap docs); unset the knob for " +
-            "gate runs — it is a ScaleBench-only lever")
-      c
-    }.getOrElse(DocCap)
-
   /** Adjacent-pair counts over space-delimited symbol strings. Words
     * with a single symbol contribute nothing (sequence guard ==
     * DuckDB's empty generate_series). */
@@ -197,7 +173,7 @@ object Bpe extends QueryGroup {
     "q_bpe_encode",
     (s, dir) => {
       import graft.functions.GraftFunctions.bpeMergeNative
-      var words = table(s, dir, "documents").filter(col("doc_id") < docCapOf(s))
+      var words = table(s, dir, "documents").filter(col("doc_id") < DocCap)
         .select(explode(split(lower(col("text")), " ")).as("w"))
         .filter(length(col("w")) > 0)
         .select(concat(lit(" "),
@@ -315,7 +291,7 @@ object Bpe extends QueryGroup {
       // bounded by the word vocabulary); the merge loop is driver-side
       // over that metadata-sized table — the production trainer split
       val wordFreqs = table(s, dir, "documents")
-        .filter(col("doc_id") < docCapOf(s))
+        .filter(col("doc_id") < DocCap)
         .select(explode(split(lower(col("text")), " ")).as("w"))
         .filter(length(col("w")) > 0)
         .groupBy(col("w")).agg(count(lit(1)).as("f"))
@@ -375,7 +351,7 @@ object Bpe extends QueryGroup {
     (s, dir) => {
       import graft.functions.GraftFunctions.bpeMergeAllNative
       val wordFreqs = table(s, dir, "documents")
-        .filter(col("doc_id") < docCapOf(s))
+        .filter(col("doc_id") < DocCap)
         .select(explode(split(lower(col("text")), " ")).as("w"))
         .filter(length(col("w")) > 0)
         .groupBy(col("w")).agg(count(lit(1)).as("f"))
@@ -405,7 +381,7 @@ object Bpe extends QueryGroup {
     "q_bpe_train",
     (s, dir) => {
       import graft.functions.GraftFunctions.bpeMergeNative
-      var words = table(s, dir, "documents").filter(col("doc_id") < docCapOf(s))
+      var words = table(s, dir, "documents").filter(col("doc_id") < DocCap)
         .select(explode(split(lower(col("text")), " ")).as("w"))
         .filter(length(col("w")) > 0)
         .select(concat(lit(" "),

@@ -26,38 +26,6 @@ object Clustering extends QueryGroup {
   private val SeedLo = 200L
   private val SeedHi = SeedLo + K - 1
 
-  /** Cluster-count knob (`spark.graft.kmeans.k`, default 8 — the value
-    * the oracles are written for; the driver gate never sets it). At
-    * corpus scale the SemDeDup rule is K ∝ N (constant expected cluster
-    * size ⇒ the within-cluster pair join stays ~N·clusterSize);
-    * ScaleBench sets this per replication factor to measure exactly
-    * that path. Seeds are the data rows [SeedLo, SeedLo+k): they must
-    * exist in the base corpus. Beyond K ≈ a few hundred the
-    * literal-centroid assignment should switch to a broadcast-join
-    * formulation (codegen method-size limits) — not needed at gate
-    * scales. */
-  private def kOf(s: org.apache.spark.sql.SparkSession): Int =
-    s.conf.getOption("spark.graft.kmeans.k").map { v =>
-      val k = try v.toInt catch {
-        case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"spark.graft.kmeans.k must be a positive integer, got '$v'")
-      }
-      require(k > 0 && k <= 512, s"spark.graft.kmeans.k out of range: $k")
-      // The oracles in this file are generated for K=8 (SeedHi is fixed);
-      // a session that sets the bench knob and then runs the gated
-      // queries would silently diverge from them. Verify marks its
-      // session with spark.graft.oracle.gate — fail fast there instead
-      // of letting four gates drift.
-      if (k != K &&
-          s.conf.getOption("spark.graft.oracle.gate").contains("true"))
-        throw new IllegalStateException(
-          s"spark.graft.kmeans.k=$k conflicts with the oracle-gated " +
-            s"clustering queries (oracles are fixed at K=$K); unset the " +
-            "knob for gate runs — it is a ScaleBench-only lever")
-      k
-    }.getOrElse(K)
-
   /** Shared fit: quantize, seed from the deterministic data-derived rows
     * vec_id ∈ [200, 207] (cid = vec_id − 200; the same convention as
     * q_sim_ivf's coarse quantizer), run three Lloyd passes. Returns the
@@ -72,7 +40,7 @@ object Clustering extends QueryGroup {
       else KMeansQuant.quantize(col("embedding"))
     val data = e.withColumn("qv", qv)
     val seeds = data.filter(
-        col("vec_id").between(SeedLo, SeedLo + kOf(s) - 1))
+        col("vec_id").between(SeedLo, SeedHi))
       .orderBy("vec_id")
       .select("qv").as[Seq[Long]].collect().toSeq
     KMeansQuant.fit(s, data, "qv", seeds, Rounds, Dim)

@@ -256,7 +256,7 @@ object Functions extends QueryGroup {
   private val qAggSketchIncremental = Q(
     "q_agg_sketch_incremental",
     (s, dir) => {
-      val stage = sys.props("java.io.tmpdir") + "/graft-stages/sketch_incremental"
+      val stage = artifactDir(s, "stages", "sketch_incremental")
       val o = table(s, dir, "orders")
         .withColumn("month", date_trunc("month", col("o_orderdate")))
       o.groupBy(col("month"))

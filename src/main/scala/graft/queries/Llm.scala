@@ -1958,7 +1958,7 @@ object Llm extends QueryGroup {
     "q_llm_clean_pipeline_staged",
     (s, dir) => {
       import graft.functions.GraftFunctions._
-      val stageRoot = sys.props("java.io.tmpdir") + "/graft-stages/clean_pipeline"
+      val stageRoot = artifactDir(s, "stages", "clean_pipeline")
       def materialize(df: DataFrame, name: String): DataFrame = {
         val path = s"$stageRoot/$name"
         df.write.mode("overwrite").parquet(path)
@@ -2822,11 +2822,7 @@ object Llm extends QueryGroup {
   private val qIngestNeardupPhash = Q(
     "q_ingest_neardup_phash",
     (s, dir) => {
-      val store = sys.props("java.io.tmpdir") +
-        "/graft-kvsink/q_ingest_neardup_phash"
-      val fs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(store), true)
+      val store = artifactDir(s, "kvsink", "q_ingest_neardup_phash")
       val docs = table(s, dir, "documents")
       phashBandedDocs(docs.filter(col("doc_id") % 3 =!= 0))
         .select("bk").distinct()

@@ -226,9 +226,6 @@ object Sources extends QueryGroup {
             FROM (SELECT unnest(range(89999993, 90000000)) AS i)
             ORDER BY id DESC"""))
 
-  private def cleanDir(out: String): Unit =
-    graft.sources.KvCommitLog.rmTree(new java.io.File(out))
-
   /** Custom DataSource V2 SINK + SOURCE round trip (sources/KvSink →
     * sources/KvSource): per-nation customer counts written through the
     * two-phase-commit kv sink, read back through the kv SOURCE connector
@@ -240,8 +237,7 @@ object Sources extends QueryGroup {
   private val qSinkDsv2 = Q(
     "q_sink_dsv2",
     (s, dir) => {
-      val out = sys.props("java.io.tmpdir") + "/graft-kvsink/q_sink_dsv2"
-      cleanDir(out) // clean target so re-runs don't accumulate committed files
+      val out = artifactDir(s, "kvsink", "q_sink_dsv2")
       table(s, dir, "customer")
         .groupBy(col("c_nationkey"))
         .agg(count(lit(1)).as("n"))
@@ -267,8 +263,7 @@ object Sources extends QueryGroup {
   private val qSourceKv = Q(
     "q_source_kv",
     (s, dir) => {
-      val out = sys.props("java.io.tmpdir") + "/graft-kvsink/q_source_kv"
-      cleanDir(out)
+      val out = artifactDir(s, "kvsink", "q_source_kv")
       table(s, dir, "customer")
         .groupBy(col("c_nationkey"), col("c_mktsegment"))
         .agg(count(lit(1)).as("n"))
@@ -302,8 +297,7 @@ object Sources extends QueryGroup {
   private val qSourceKvZonemap = Q(
     "q_source_kv_zonemap",
     (s, dir) => {
-      val out = sys.props("java.io.tmpdir") + "/graft-kvsink/q_source_kv_zonemap"
-      cleanDir(out)
+      val out = artifactDir(s, "kvsink", "q_source_kv_zonemap")
       table(s, dir, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey").as("cust"),
           col("o_orderpriority").as("prio"))
@@ -336,8 +330,7 @@ object Sources extends QueryGroup {
   private val qSourceKvAgg = Q(
     "q_source_kv_agg",
     (s, dir) => {
-      val out = sys.props("java.io.tmpdir") + "/graft-kvsink/q_source_kv_agg"
-      cleanDir(out)
+      val out = artifactDir(s, "kvsink", "q_source_kv_agg")
       table(s, dir, "lineitem")
         .select(col("l_orderkey").as("k"), col("l_partkey").as("pk"),
           col("l_quantity").cast("long").as("qty"))
@@ -371,8 +364,7 @@ object Sources extends QueryGroup {
   private val qSourceKvZonemapTyped = Q(
     "q_source_kv_zonemap_typed",
     (s, dir) => {
-      val out = sys.props("java.io.tmpdir") + "/graft-kvsink/q_source_kv_zonemap_typed"
-      cleanDir(out)
+      val out = artifactDir(s, "kvsink", "q_source_kv_zonemap_typed")
       table(s, dir, "orders")
         .select(col("o_orderkey").as("k"), col("o_totalprice").as("price"),
           col("o_orderpriority").as("prio"))
@@ -414,8 +406,7 @@ object Sources extends QueryGroup {
   private val qSourceKvBloom = Q(
     "q_source_kv_bloom",
     (s, dir) => {
-      val out = sys.props("java.io.tmpdir") + "/graft-kvsink/q_source_kv_bloom"
-      cleanDir(out)
+      val out = artifactDir(s, "kvsink", "q_source_kv_bloom")
       table(s, dir, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey").as("cust"),
           col("o_orderpriority").as("prio"))
@@ -454,8 +445,7 @@ object Sources extends QueryGroup {
   private val qSourceKvAggGrouped = Q(
     "q_source_kv_agg_grouped",
     (s, dir) => {
-      val out = sys.props("java.io.tmpdir") + "/graft-kvsink/q_source_kv_agg_grouped"
-      cleanDir(out)
+      val out = artifactDir(s, "kvsink", "q_source_kv_agg_grouped")
       table(s, dir, "customer")
         .select(col("c_nationkey").as("nk"), col("c_custkey").as("ck"))
         .repartition(8, col("nk"))
@@ -488,8 +478,7 @@ object Sources extends QueryGroup {
   private val qSourceKvRuntimePrune = Q(
     "q_source_kv_runtime_prune",
     (s, dir) => {
-      val out = sys.props("java.io.tmpdir") + "/graft-kvsink/q_source_kv_runtime"
-      cleanDir(out)
+      val out = artifactDir(s, "kvsink", "q_source_kv_runtime")
       table(s, dir, "lineitem")
         .select(col("l_orderkey").as("k"),
           // TPC-H quantities are whole numbers carried as double — cast
@@ -533,9 +522,8 @@ object Sources extends QueryGroup {
   private val qSourceKvSpj = Q(
     "q_source_kv_spj",
     (s, dir) => {
-      val outC = sys.props("java.io.tmpdir") + "/graft-kvsink/q_spj_cust"
-      val outS = sys.props("java.io.tmpdir") + "/graft-kvsink/q_spj_supp"
-      cleanDir(outC); cleanDir(outS)
+      val outC = artifactDir(s, "kvsink", "q_spj_cust")
+      val outS = artifactDir(s, "kvsink", "q_spj_supp")
       table(s, dir, "customer")
         .select(col("c_nationkey").as("k"), col("c_custkey").as("ck"))
         .repartition(8, col("k"))
@@ -584,9 +572,8 @@ object Sources extends QueryGroup {
   private val qSourceKvSpjBucketed = Q(
     "q_source_kv_spj_bucketed",
     (s, dir) => {
-      val outO = sys.props("java.io.tmpdir") + "/graft-kvsink/q_spjb_orders"
-      val outL = sys.props("java.io.tmpdir") + "/graft-kvsink/q_spjb_lineitem"
-      cleanDir(outO); cleanDir(outL)
+      val outO = artifactDir(s, "kvsink", "q_spjb_orders")
+      val outL = artifactDir(s, "kvsink", "q_spjb_lineitem")
       table(s, dir, "orders")
         .select(col("o_orderkey").as("k"), (col("o_orderkey") % 32L).as("b"),
           col("o_custkey").as("cust"))
@@ -643,8 +630,7 @@ object Sources extends QueryGroup {
   private val qSourceKvNet = Q(
     "q_source_kv_net",
     (s, dir) => {
-      val out = sys.props("java.io.tmpdir") + "/graft-kvsink/q_source_kv_net"
-      cleanDir(out)
+      val out = artifactDir(s, "kvsink", "q_source_kv_net")
       table(s, dir, "customer")
         .groupBy(col("c_nationkey"), col("c_mktsegment"))
         .agg(count(lit(1)).as("n"))
@@ -710,8 +696,7 @@ object Sources extends QueryGroup {
   private val qZonemapPrune = Q(
     "q_zonemap_prune",
     (s, dir) => {
-      val root = sys.props("java.io.tmpdir") + "/graft-zonemap/q_zonemap_prune"
-      cleanDir(root)
+      val root = artifactDir(s, "zonemap", "q_zonemap_prune")
       graft.operators.ZoneMaps.writeLayout(
         table(s, dir, "orders"), "o_orderkey", 8, root)
       val (_, _, pruned) = graft.operators.ZoneMaps.prunedRead(
@@ -781,8 +766,7 @@ object Sources extends QueryGroup {
   private val qStoreTimetravel = Q(
     "q_store_timetravel",
     (s, dir) => {
-      val out = sys.props("java.io.tmpdir") + "/graft-kvsink/q_store_timetravel"
-      cleanDir(out)
+      val out = artifactDir(s, "kvsink", "q_store_timetravel")
       val counts = table(s, dir, "customer")
         .groupBy(col("c_nationkey"))
         .agg(count(lit(1)).as("n"))
@@ -821,8 +805,7 @@ object Sources extends QueryGroup {
   private val qStoreTimediff = Q(
     "q_store_timediff",
     (s, dir) => {
-      val out = sys.props("java.io.tmpdir") + "/graft-kvsink/q_store_timediff"
-      cleanDir(out)
+      val out = artifactDir(s, "kvsink", "q_store_timediff")
       val counts = table(s, dir, "customer")
         .groupBy(col("c_nationkey"))
         .agg(count(lit(1)).as("v"))
@@ -883,8 +866,7 @@ object Sources extends QueryGroup {
     "q_store_delete",
     (s, dir) => {
       import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
-      val out = sys.props("java.io.tmpdir") + "/graft-kvsink/q_store_delete"
-      cleanDir(out)
+      val out = artifactDir(s, "kvsink", "q_store_delete")
       table(s, dir, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey").as("cust"),
           col("o_orderpriority").as("prio"))
@@ -932,8 +914,7 @@ object Sources extends QueryGroup {
   private val qStoreMerge = Q(
     "q_store_merge",
     (s, dir) => {
-      val out = sys.props("java.io.tmpdir") + "/graft-kvsink/q_store_merge"
-      cleanDir(out)
+      val out = artifactDir(s, "kvsink", "q_store_merge")
       val counts = table(s, dir, "customer")
         .groupBy(col("c_nationkey"))
         .agg(count(lit(1)).as("v"))
@@ -1050,7 +1031,7 @@ object Sources extends QueryGroup {
   private val qSourceCorrupt = Q(
     "q_source_corrupt",
     (s, dir) => {
-      val stage = sys.props("java.io.tmpdir") + "/graft-stages/corrupt_csv"
+      val stage = artifactDir(s, "stages", "corrupt_csv")
       val docs = table(s, dir, "documents").select("doc_id", "n_chars")
       docs.select(concat_ws(",", col("doc_id"),
           when(col("doc_id") % 5 === 2, lit("notanumber"))
@@ -1102,7 +1083,7 @@ object Sources extends QueryGroup {
     "q_store_dpo",
     (s, dir) => {
       import graft.functions.GraftFunctions.charHashNative
-      val stage = sys.props("java.io.tmpdir") + "/graft-stages/dpo"
+      val stage = artifactDir(s, "stages", "dpo")
       val docs = table(s, dir, "documents").select("doc_id", "lang", "text")
       docs.write.partitionBy("lang").mode("overwrite").parquet(stage)
       val delta = docs.filter(col("lang") === "en" && col("doc_id") % 2 === 0)
@@ -1179,8 +1160,7 @@ object Sources extends QueryGroup {
     "q_store_delete_dv",
     (s, dir) => {
       import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
-      val out = sys.props("java.io.tmpdir") + "/graft-kvsink/q_store_delete_dv"
-      cleanDir(out)
+      val out = artifactDir(s, "kvsink", "q_store_delete_dv")
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "k LONG, cust LONG, prio STRING")
       table(s, dir, "orders")
@@ -1234,8 +1214,7 @@ object Sources extends QueryGroup {
     "q_store_cdf_dv",
     (s, dir) => {
       import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
-      val out = sys.props("java.io.tmpdir") + "/graft-kvsink/q_store_cdf_dv"
-      cleanDir(out)
+      val out = artifactDir(s, "kvsink", "q_store_cdf_dv")
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "k LONG, cust LONG")
       table(s, dir, "orders")
@@ -1290,8 +1269,7 @@ object Sources extends QueryGroup {
   private val qStoreMergeDv = Q(
     "q_store_merge_dv",
     (s, dir) => {
-      val out = sys.props("java.io.tmpdir") + "/graft-kvsink/q_store_merge_dv"
-      cleanDir(out)
+      val out = artifactDir(s, "kvsink", "q_store_merge_dv")
       val schema = org.apache.spark.sql.types.StructType.fromDDL("k LONG, v LONG")
       val counts = table(s, dir, "customer")
         .groupBy(col("c_nationkey"))
@@ -1344,9 +1322,8 @@ object Sources extends QueryGroup {
     "q_store_mv_incremental",
     (s, dir) => {
       import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
-      val base = sys.props("java.io.tmpdir") + "/graft-kvsink/q_store_mv_base"
-      val mv = sys.props("java.io.tmpdir") + "/graft-kvsink/q_store_mv_view"
-      cleanDir(base); cleanDir(mv)
+      val base = artifactDir(s, "kvsink", "q_store_mv_base")
+      val mv = artifactDir(s, "kvsink", "q_store_mv_view")
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "k LONG, cust LONG")
       table(s, dir, "orders")

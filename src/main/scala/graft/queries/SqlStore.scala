@@ -21,8 +21,7 @@ object SqlStore extends QueryGroup {
     * gates a clean per-query table namespace. */
   private def cat(s: SparkSession): Unit = {
     s.conf.set("spark.sql.catalog.graftkv", "graft.sources.KvCatalog")
-    s.conf.set("spark.sql.catalog.graftkv.warehouse",
-      sys.props("java.io.tmpdir") + "/graft-kvcat")
+    s.conf.set("spark.sql.catalog.graftkv.warehouse", appDir(s, "kvcat"))
     s.sql("CREATE NAMESPACE IF NOT EXISTS graftkv.cat")
   }
 

@@ -820,8 +820,7 @@ object Training extends QueryGroup {
   private val qIngestIncremental = Q(
     "q_ingest_incremental",
     (s, dir) => {
-      val store = sys.props("java.io.tmpdir") + "/graft-kvsink/q_ingest_incremental"
-      graft.sources.KvCommitLog.rmTree(new java.io.File(store))
+      val store = artifactDir(s, "kvsink", "q_ingest_incremental")
       val docs = table(s, dir, "documents")
       val fp = graft.operators.PortableHash.charHash(col("text"))
       // bootstrap the Store with the historical fingerprint set
@@ -903,8 +902,7 @@ object Training extends QueryGroup {
   private val qIngestNeardup = Q(
     "q_ingest_neardup",
     (s, dir) => {
-      val store = sys.props("java.io.tmpdir") + "/graft-kvsink/q_ingest_neardup"
-      graft.sources.KvCommitLog.rmTree(new java.io.File(store))
+      val store = artifactDir(s, "kvsink", "q_ingest_neardup")
       val docs = table(s, dir, "documents")
       bandedDocs(docs.filter(col("doc_id") % 3 =!= 0))
         .select("bk").distinct()
@@ -985,8 +983,7 @@ object Training extends QueryGroup {
   private val qStoreCompact = Q(
     "q_store_compact",
     (s, dir) => {
-      val root = sys.props("java.io.tmpdir") + "/graft-kvsink/q_store_compact"
-      graft.sources.KvCommitLog.rmTree(new java.io.File(root))
+      val root = artifactDir(s, "kvsink", "q_store_compact")
       val docs = table(s, dir, "documents")
       val fp = graft.operators.PortableHash.charHash(col("text"))
       // three ingestion-era batches (disjoint thirds of the corpus)
@@ -1032,8 +1029,7 @@ object Training extends QueryGroup {
   private val qStoreForget = Q(
     "q_store_forget",
     (s, dir) => {
-      val root = sys.props("java.io.tmpdir") + "/graft-forget/q_store_forget"
-      graft.sources.KvCommitLog.rmTree(new java.io.File(root))
+      val root = artifactDir(s, "forget", "q_store_forget")
       val docs = table(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("text"))
       graft.operators.ZoneMaps.writeLayout(docs, "doc_id", 8, s"$root/layout")
@@ -1067,8 +1063,7 @@ object Training extends QueryGroup {
   private val qAggIncrementalView = Q(
     "q_agg_incremental_view",
     (s, dir) => {
-      val state = sys.props("java.io.tmpdir") + "/graft-view/q_agg_incremental_view"
-      graft.sources.KvCommitLog.rmTree(new java.io.File(state))
+      val state = artifactDir(s, "view", "q_agg_incremental_view")
       val o = table(s, dir, "orders")
       def partials(df: org.apache.spark.sql.DataFrame) =
         df.groupBy(col("o_orderstatus"))

@@ -29,8 +29,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *    — the quadratic term measurably gone — while the output is still
   *    a (97/115) subset, quantifying the recall trade the knob's
   *    documentation states;
-  *  - the knob fails fast on junk values and under the oracle gate
-  *    (the `kmeans.k` discipline), so gated results can never drift.
+  *  - the knob fails fast on junk values and under the oracle gate,
+  *    so gated results can never drift.
   */
 class BandCapSpec extends AnyFunSuite with SparkSessionFixture {
 

@@ -4,11 +4,11 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.QueryProfile
 import graft.operators.{ConnectedComponents, Fixpoint, KMeansQuant}
 import graft.queries.Advanced
 
@@ -18,8 +18,8 @@ import graft.queries.Advanced
   *
   *   - Under [[Fixpoint.Local]], one run of each algorithm on a fixed
   *     small input launches no more Spark jobs than the hand-written
-  *     loops it replaced (their counts, measured with this spec's
-  *     listener, are the bounds below). k-means' centroid table is
+  *     loops it replaced (their counts, measured with
+  *     [[QueryProfile]], are the bounds below). k-means' centroid table is
   *     driver-side state, so no round spends a job materializing it.
   *   - Under [[Fixpoint.Durable]], storage is O(1) rounds: a converged
   *     checkpoint dir holds exactly one `round_*` directory, the run's
@@ -49,34 +49,9 @@ class FixpointSpec extends AnyFunSuite with SparkSessionFixture with TempDirs {
     (data, init)
   }
 
-  /** Spark jobs started while `body` runs. The listener bus delivers
-    * events in the order they were posted, so once the closing marker
-    * job has been seen, every job `body` started has been counted. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(p =>
-          Option(p.getProperty("graft.spec.marker"))).getOrElse("job")): Unit
-    }
-    def marker(m: String): Unit = {
-      sc.setLocalProperty("graft.spec.marker", m)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("graft.spec.marker", null)
-      ()
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("begin")
-      body
-      marker("end")
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!seen.contains("end") && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(seen.contains("end"), "listener never saw the closing marker job")
-      seen.asScala.toSeq.dropWhile(_ != "begin").drop(1).takeWhile(_ != "end").size
-    } finally sc.removeSparkListener(listener)
-  }
+  /** Spark jobs started while `body` runs. */
+  private def jobsOf(body: => Unit): Int =
+    QueryProfile.measure(spark, "fixpoint run")(body)._2.jobs
 
   test("Local runs launch no more jobs than the loops they replaced") {
     val (verts, edges) = pathGraph

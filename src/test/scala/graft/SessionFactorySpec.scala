@@ -84,14 +84,26 @@ class SessionFactorySpec extends AnyFunSuite with SparkSessionFixture {
     }
   }
 
-  test("src/main/scala has exactly one SparkSession.builder") {
+  /** One entry per occurrence of `pattern` in a `src/main/scala` file,
+    * naming the file, sorted. */
+  private def mainSourcesMatching(pattern: String): Seq[String] = {
     import scala.jdk.CollectionConverters._
     val files = Files.walk(Paths.get("src/main/scala")).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
-    val hits = files.flatMap { p =>
-      "SparkSession\\.builder".r.findAllIn(Files.readString(p)).map(_ => p.toString)
-    }
+    files.flatMap { p =>
+      pattern.r.findAllIn(Files.readString(p)).map(_ => p.toString)
+    }.sorted
+  }
+
+  test("src/main/scala has exactly one SparkSession.builder") {
+    val hits = mainSourcesMatching("SparkSession\\.builder")
     assert(hits == Seq("src/main/scala/graft/core/Graft.scala"), hits)
+  }
+
+  test("src/main/scala adds listeners only in QueryProfile and the app-dir cleanup") {
+    val hits = mainSourcesMatching("addSparkListener")
+    assert(hits == Seq("src/main/scala/graft/core/Graft.scala",
+      "src/main/scala/graft/core/QueryProfile.scala"), hits)
   }
 
   test("a scoped setting gives back the value the session already had") {

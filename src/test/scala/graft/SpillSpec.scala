@@ -1,11 +1,10 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.core.QueryProfile
 
 /** Spill-awareness differential: under memory pressure the engine must
   * DEGRADE (window buffer + sorter spill to disk), not fail or
@@ -58,17 +57,9 @@ class SpillSpec extends AnyFunSuite with SparkSessionFixture {
       "spark.sql.windowExec.buffer.spill.threshold" -> "1000",
       "spark.shuffle.spill.numElementsForceSpillThreshold" -> "5000"))
     try {
-      val spilled = new AtomicLong(0)
-      tiny.sparkContext.addSparkListener(new SparkListener {
-        override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-          val m = e.stageInfo.taskMetrics
-          if (m != null) spilled.addAndGet(m.diskBytesSpilled): Unit
-        }
-      })
-      val got = workload(tiny)
-      // listener bus is async; ScaleBench uses the same settle pattern
-      Thread.sleep(2000)
-      assert(spilled.get() > 0,
+      val (got, profile) = QueryProfile.measure(tiny, "spill workload")(workload(tiny))
+      val spilled = profile.spillDiskBytes
+      assert(spilled > 0,
         "the starved run never spilled — the test exercised nothing")
       assert(got.toSeq == want.toSeq,
         "spilled execution changed the result")
